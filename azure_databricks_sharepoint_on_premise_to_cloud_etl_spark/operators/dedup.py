@@ -33,6 +33,7 @@ from ..functions import (
     portable_hash64,
     word_tokens,
 )
+from ..scope import persist
 
 
 def normalized_text(col: str = "text") -> F.Column:
@@ -834,14 +835,14 @@ def incremental_dedup_against(
     candidate verification each consume a slice of the same frame, and
     without materialization each branch would re-normalize and
     re-shingle the increment text — three scans instead of one.  The
-    persisted footprint is O(increment), never O(corpus).  Call
-    ``graph.release_components(result)`` after consuming the result to
-    free it (the standard release-hook convention)."""
+    persisted footprint is O(increment), never O(corpus); the caller's
+    scope frees it."""
     from pyspark import StorageLevel
 
-    wide = artifact_frame(
-        new_df, id_col, text_col, k, num_hashes, portable
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    wide = persist(
+        artifact_frame(new_df, id_col, text_col, k, num_hashes, portable),
+        StorageLevel.MEMORY_AND_DISK,
+    )
     new_arts = _arts_from_wide(wide, id_col, num_hashes, bands)
     new_digests = new_arts["digests"].withColumnRenamed(id_col, "new_id")
     ref_digests = ref["digests"].withColumnRenamed(id_col, "ref_id")
@@ -915,7 +916,7 @@ def incremental_dedup_against(
         .agg(F.min("ref_id").alias("near_match"))
     )
 
-    result = (
+    return (
         new_df.select(F.col(id_col).alias("new_id"))
         .join(exact, "new_id", "left")
         .join(near, "new_id", "left")
@@ -928,10 +929,6 @@ def incremental_dedup_against(
             F.coalesce("exact_match", "near_match").alias("match_id"),
         )
     )
-    # release hook: graph.release_components(result) unpersists the
-    # increment-side artifact frame once the result is consumed
-    result._persisted_intermediates = [wide]
-    return result
 
 
 def fuzzy_value_pairs(
@@ -1079,8 +1076,7 @@ def sorted_neighborhood_pairs(
     two-phase prefix-sum rank (``windows.global_rank`` — no
     single-task window), positions replicate ×``window`` by an
     explode of literal offsets, and the pair join is ONE equi-join on
-    the shifted position.  Call ``graph.release_components(result)``
-    after consuming (the rank's staged frame is persisted).  Returns
+    the shifted position.  Returns
     ``(id_a, id_b, key_a, key_b, pos_gap)`` with ``id_a``'s sort
     position strictly below ``id_b``'s.
     """
@@ -1100,7 +1096,7 @@ def sorted_neighborhood_pairs(
         (F.col("__pos") + F.col("__o")).alias("__pos"),
         F.col("__o").alias("pos_gap"),
     )
-    result = probes.join(
+    return probes.join(
         ranked.select(
             F.col("__id").alias("id_b"),
             F.col("__k").alias("key_b"),
@@ -1108,10 +1104,6 @@ def sorted_neighborhood_pairs(
         ),
         "__pos",
     ).select("id_a", "id_b", "key_a", "key_b", "pos_gap")
-    result._persisted_intermediates = getattr(
-        ranked, "_persisted_intermediates", None
-    )
-    return result
 
 
 def plan_lsh(

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..scope import checkpoint
+
 
 def funnel_times(
     df: DataFrame,
@@ -1155,8 +1157,6 @@ def markov_journey_edges(
     order = [F.col(time_col).asc()]
     if tiebreak_col is not None:
         order.append(F.col(tiebreak_col).asc())
-    from pyspark.sql import Observation
-
     # Converter-cardinality table referenced TWICE (the touches join
     # and the bare-converter anti-join — each re-derivation a corpus
     # filter+aggregate); one eager checkpoint runs it once.  The
@@ -1169,15 +1169,13 @@ def markov_journey_edges(
     # silently dropped converters whose conversion events all carry
     # NULL timestamps — the r13 advice item; this restores the
     # distinct-entity semantics for free).
-    conv_obs = Observation()
-    conv_ts = (
+    conv_ts, m = checkpoint(
         df.filter((F.col(channel_col) == conversion) & e.isNotNull())
         .groupBy(e.alias("__e"))
-        .agg(F.min(time_col).alias("__cts"))
-        .observe(conv_obs, F.count(F.lit(1)).alias("__n_conv"))
-        .localCheckpoint(eager=True)
+        .agg(F.min(time_col).alias("__cts")),
+        observe=F.count(F.lit(1)).alias("__n_conv"),
     )
-    n_converters = int(conv_obs.get["__n_conv"] or 0)
+    n_converters = int(m["__n_conv"] or 0)
     base = df.filter(
         e.isNotNull()
         & F.col(channel_col).isNotNull()
@@ -1209,13 +1207,11 @@ def markov_journey_edges(
     # mids, ends, and — via touches — the bare-converter anti-join);
     # without materialization the conv-time join + ordered window
     # pipeline re-executes per reference.  One eager checkpoint of the
-    # windowed sequence runs the corpus pass once (guide §1.2); the
-    # caller releases it through the result's _extra_ckpts hook.
-    seq = (
+    # windowed sequence runs the corpus pass once (guide §1.2).
+    seq = checkpoint(
         touches.withColumn("__rn", F.row_number().over(w))
         .withColumn("__nxt", F.lead("__ch").over(w))
         .withColumn("__n", F.count(F.lit(1)).over(w_all))
-        .localCheckpoint(eager=True)
     )
     starts = seq.filter(F.col("__rn") == 1).select(
         F.lit(MARKOV_START).alias("src"), F.col("__ch").alias("dst")
@@ -1252,7 +1248,6 @@ def markov_journey_edges(
             6,
         ),
     )
-    result._extra_ckpts = [seq, conv_ts]
     result._n_converters = n_converters
     return result
 
@@ -1335,12 +1330,6 @@ def markov_attribution(
     # point: (k+2)^2 rows, never corpus grain)
     rows_c = cells.collect()
     probs = {(r["src"], r["dst"]): float(r["p"]) for r in rows_c}
-    # the edge builder's windowed-sequence checkpoint is fully
-    # consumed by the collect — free it now
-    from .graph import _release_local_checkpoint
-
-    for _h in getattr(cells, "_extra_ckpts", None) or []:
-        _release_local_checkpoint(_h)
     # Distinct-converter count (the oracle's count(DISTINCT entity)
     # over conversion events): rides the edge builder's conv_ts
     # checkpoint job as an Observation, so it costs no extra pass.

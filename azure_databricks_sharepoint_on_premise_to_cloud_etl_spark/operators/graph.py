@@ -25,145 +25,27 @@ generation the endpoints are a small fraction of the corpus, and
 nodes outside any pair are trivially their own component, re-attached
 by one left join at the end; carrying the full node set per round
 would shuffle the non-duplicate majority every iteration.
-Every generation is eagerly checkpointed (iterative plans otherwise
-embed all prior joins and exhaust driver/executor memory):
+Every generation is eagerly checkpointed with ``scope.checkpoint``
+(iterative plans otherwise embed all prior joins and
+exhaust driver/executor memory).  ``connected_components`` takes
+``reliable=True`` to write its generations under the SparkContext's
+checkpoint dir, which the deployment sets; the default keeps blocks on
+executors only, which is fastest but loses the job with an executor.
 
-- default (``checkpoint_dir=None``): ``localCheckpoint`` — fastest,
-  but blocks live on executors only, so a lost executor kills the job;
-  fine for tests and on-demand clusters, wrong for preemptible fleets;
-- ``checkpoint_dir=...``: reliable ``checkpoint`` to that path —
-  generations survive executor loss; the superseded generation's files
-  are deleted as soon as the next one is materialized, and the
-  SparkContext's previous checkpoint dir is restored on exit.
-
-The PREVIOUS generation's storage is released each round by
-unpersisting the checkpointed RDD itself (reaching through the
-``LogicalRDD`` plan node — a plain ``DataFrame.unpersist()`` only
-clears cache-manager entries and is a no-op for checkpoints), bounding
-local-mode storage at two label-table copies for real.  Release
-happens strictly AFTER the next generation is eagerly materialized:
-unpersisting a localCheckpoint's blocks is unrecoverable by design.
+Each round frees the PREVIOUS generation with ``scope.release`` strictly
+AFTER the next one is materialised (a released checkpoint cannot be
+recomputed), bounding storage at two generations.  Everything a result
+still reads (the final generation, static edge tables) lives until the
+caller's ``with Scope():`` exits, so wrap the query and its consumption
+in one.
 """
 
 from __future__ import annotations
 
-import os
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_CC_DEBUG = os.environ.get("CC_DEBUG", "") not in ("", "0")
-
-
-def _delete_reliable_checkpoint(df: DataFrame) -> None:
-    """Delete a reliable-checkpointed DataFrame's files NOW.
-
-    Spark's ReferenceTracking cleaner removes checkpoint files only on
-    JVM GC of the RDD object and only when
-    ``spark.cleaner.referenceTracking.cleanCheckpoints`` is set; an
-    iterative algorithm that checkpoints every round would otherwise
-    grow storage linearly with iteration count.  Best-effort: on any
-    reflection surprise the files are left for the cleaner/caller.
-    """
-    try:
-        jrdd = df._jdf.queryExecution().analyzed().rdd()
-        opt = jrdd.getCheckpointFile()
-        if not opt.isDefined():
-            return
-        sc = df.sparkSession.sparkContext
-        path = sc._jvm.org.apache.hadoop.fs.Path(opt.get())
-        fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
-        fs.delete(path, True)
-    except Exception:
-        pass
-
-
-def _release_local_checkpoint(df: DataFrame) -> None:
-    """Free a localCheckpoint-ed DataFrame's blocks NOW.
-
-    ``df.unpersist()`` does not do this — localCheckpoint persists the
-    underlying RDD outside the cache manager, and its blocks are
-    otherwise only freed when the JVM RDD object is GC'd.  Reach the
-    RDD through the analyzed ``LogicalRDD`` node and unpersist it
-    directly.  Best-effort: on any reflection surprise we fall back to
-    GC-based cleanup (correct, just lazier).
-    """
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
-
-
-# serializes the session-global AQE toggle inside _ckpt_keyed /
-# _ckpt_preserve (r13 advice: composed queries submit jobs from driver
-# thread pools)
-import threading as _threading
-
-_AQE_TOGGLE_LOCK = _threading.Lock()
-
-
-def _ckpt_keyed(df: DataFrame, *keys: str, sort: bool = True) -> DataFrame:
-    """Eagerly localCheckpoint ``df`` hash-partitioned (and, by
-    default, sorted) by ``keys``, temporarily disabling AQE around the
-    checkpoint so the resulting ``LogicalRDD`` RETAINS its
-    outputPartitioning/outputOrdering — under AQE the captured final
-    plan reports ``UnknownPartitioning`` and the partitioning
-    knowledge is lost (measured: every downstream join re-shuffles
-    the checkpointed side).
-
-    This is the optimization-guide §2.4 "share one exchange" shape
-    for iterative operators: a static edge table referenced by k
-    per-round joins on the same key pays ONE shuffle+sort at build
-    instead of k shuffles+sorts at iteration time — a sort-merge join
-    then consumes this side with no Exchange and no Sort (partition
-    count is pinned to the session's shuffle partitions so the other
-    side's exchange lands on the same layout).
-
-    AQE is only off for the checkpoint job itself (a repartition —
-    nothing AQE would improve); every downstream query still plans
-    adaptively.
-
-    Thread safety (r13 advice): the AQE toggle mutates SESSION-global
-    conf, so concurrent driver threads (the composed-query thread
-    pools) planning a query while it is off would silently get a
-    non-adaptive plan.  ``_AQE_TOGGLE_LOCK`` serializes the toggle
-    window; callers submitting jobs from several threads remain
-    responsible for not planning OTHER queries concurrently with a
-    keyed checkpoint (the lock protects the helpers against each
-    other, not against arbitrary concurrent planning).
-    """
-    spark = df.sparkSession
-    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    with _AQE_TOGGLE_LOCK:
-        prev = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            plan = df.repartition(n, *[F.col(k) for k in keys])
-            if sort:
-                plan = plan.sortWithinPartitions(*keys)
-            return plan.localCheckpoint(eager=True)
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", prev)
-
-
-def _ckpt_preserve(df: DataFrame) -> DataFrame:
-    """Eagerly localCheckpoint ``df`` WITHOUT an extra repartition,
-    with AQE disabled around the checkpoint so whatever partitioning/
-    ordering the plan naturally ends with (e.g. the grouping key of a
-    final aggregate, the join key of a final join) is retained by the
-    ``LogicalRDD`` instead of decaying to ``UnknownPartitioning``.
-    Use when the plan already ends in the layout the next round needs;
-    use :func:`_ckpt_keyed` to force one.  Shares
-    ``_AQE_TOGGLE_LOCK`` — see the thread-safety note there."""
-    spark = df.sparkSession
-    with _AQE_TOGGLE_LOCK:
-        prev = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            return df.localCheckpoint(eager=True)
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", prev)
+from ..scope import checkpoint, release
 
 
 def _strip_inherited_stats(df: DataFrame) -> DataFrame:
@@ -256,20 +138,16 @@ def connected_components(
     dst_col: str = "id_b",
     node_col: str = "doc_id",
     max_iterations: int = 25,
-    checkpoint_dir: str | None = None,
+    reliable: bool = False,
     fused_levels: int = 1,
-    fast_round_threshold: int = 100_000,
     driver_finish_edges: int = 1_000_000,
 ) -> DataFrame:
     """Label every node with the minimum node id reachable from it.
 
     ``edges`` are undirected pairs; ``nodes`` is the full vertex set
     (isolated nodes label themselves).  Returns (node_col, component).
-    ``checkpoint_dir`` selects reliable checkpoints (see module
-    docstring) — default localCheckpoint.  If a checkpoint dir was
-    already set on the SparkContext it is restored on exit (success or
-    raise); if none was set, the caller's dir remains set afterwards —
-    SparkContext has no public way to UNset it.
+    ``reliable`` writes every generation under the SparkContext's
+    checkpoint dir (see module docstring); default localCheckpoint.
     Raises RuntimeError if ``max_iterations`` rounds don't converge —
     with pointer jumping that bound covers diameters ~2^25, so hitting
     it means something is genuinely wrong; silent wrong components
@@ -282,24 +160,6 @@ def connected_components(
     at sf0.1 but tripled per-round cost — net loss), more can pay on a
     cluster where the per-round barrier is expensive relative to
     broadcast joins.
-
-    ``fast_round_threshold`` enables a runtime-informed planner
-    bypass: the Observation that rides every checkpoint job reports
-    the frontier size for free, so when the NEXT round's frontier is
-    known to be broadcast-small (≤ threshold rows), the round is built
-    with explicit ``broadcast()`` hints on the frontier-sized frames
-    (frontier filter, per-level jump maps, the frontier-incident
-    delta aggregates — bounded by the frontier's one-hop
-    neighborhood, so size the threshold with mean degree in mind) and
-    AQE disabled for exactly that round's checkpoint action — non-AQE
-    execution skips AQE's per-exchange stage-materialization jobs.
-    Rounds with big frontiers keep the AQE path — broadcast safety
-    there depends on runtime sizes only AQE knows — so at cluster
-    scale the early heavy rounds stay adaptive and only the long
-    cheap tail (frontiers shrink geometrically) takes the bypass.
-    The AQE conf is flipped only around the snapshot action and
-    restored in a ``finally``; pass ``0`` to disable the bypass.
-    Measured effect at sf0.1 is recorded in BASELINE.md (round 9).
 
     ``driver_finish_edges`` selects the SMALL-GRAPH regime: the
     symmetrized-distinct edge count rides the edge-table checkpoint
@@ -320,14 +180,6 @@ def connected_components(
     Pass ``0`` to force the distributed loop (tests do, to exercise
     it on small fixtures).
     """
-    spark = edges.sparkSession
-    prev_ckpt_dir = None
-    if checkpoint_dir is not None:
-        # save/restore: setCheckpointDir mutates global SparkContext
-        # state that would otherwise leak past this call
-        opt = spark.sparkContext._jsc.sc().getCheckpointDir()
-        prev_ckpt_dir = opt.get() if opt.isDefined() else None
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
 
     def snapshot(df: DataFrame) -> tuple[DataFrame, int]:
         # piggyback the convergence check on the materializing job:
@@ -335,38 +187,19 @@ def connected_components(
         # during the SAME job, so no separate isEmpty/count action runs
         # per round (measured ~0.1-0.2 s of job-launch overhead saved
         # per round in local mode)
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        dfo = df.observe(
-            obs, F.sum(F.col("changed").cast("long")).alias("__nc")
+        ckpt, m = checkpoint(
+            df,
+            observe=F.sum(F.col("changed").cast("long")).alias("__nc"),
+            reliable=reliable,
         )
-        if checkpoint_dir is not None:
-            ckpt = dfo.checkpoint(eager=True)
-        else:
-            ckpt = dfo.localCheckpoint(eager=True)
-        n_changed = int(obs.get["__nc"] or 0)
         # strip the inherited size estimate (see _strip_inherited_stats:
         # without this, join-multiplied estimates compound per round and
         # the driver stalls for minutes in BigInteger math while
-        # planning round ~10+).  Keep the real checkpointed frame on the
-        # wrapper so release() can still reach the persisted RDD.
-        out = _strip_inherited_stats(ckpt)
-        out._ckpt_handle = ckpt
-        return out, n_changed
+        # planning round ~10+); scope.release finds the checkpoint
+        # behind the rewrap
+        return _strip_inherited_stats(ckpt), int(m["__nc"] or 0)
 
-    def release(df: DataFrame) -> None:
-        df = getattr(df, "_ckpt_handle", df)
-        if checkpoint_dir is None:
-            _release_local_checkpoint(df)
-        else:
-            # delete the superseded generation's checkpoint files NOW:
-            # Spark's reference-tracking cleaner only reclaims them on
-            # JVM GC (and only with cleanCheckpoints=true), so a long
-            # CC run otherwise accumulates one generation per round
-            _delete_reliable_checkpoint(df)
-
-    # symmetrize once and materialize via eager localCheckpoint, NOT
+    # symmetrize once and materialize via eager checkpoint, NOT
     # cache: a cached plan keeps its pre-AQE output partitioning
     # (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning is
     # false by default), so the distinct's 32 shuffle partitions would
@@ -375,31 +208,21 @@ def connected_components(
     # materializes with AQE's size-coalesced partitioning (1 partition
     # for a small candidate graph, proportionally more at scale) and
     # cuts lineage to the whole upstream LSH pipeline, which the
-    # per-round plans would otherwise re-embed.
-    sym_plan = (
+    # per-round plans would otherwise re-embed.  The symmetrized-distinct
+    # row count rides the same job as an Observation — it decides the
+    # driver-finish regime for free.  Reliable mode keeps sym reliable
+    # too (an executor loss mid-iteration must not kill the run on
+    # preemptible fleets).
+    sym, m = checkpoint(
         edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
         .unionByName(
             edges.select(F.col(dst_col).alias("a"), F.col(src_col).alias("b"))
         )
-        .distinct()
+        .distinct(),
+        observe=F.count(F.lit(1)).alias("__n_sym"),
+        reliable=reliable,
     )
-    # the symmetrized-distinct row count rides the checkpoint job as an
-    # Observation — it decides the driver-finish regime for free
-    from pyspark.sql import Observation
-
-    sym_obs = Observation()
-    sym_plan = sym_plan.observe(
-        sym_obs, F.count(F.lit(1)).alias("__n_sym")
-    )
-    # reliable-checkpoint mode keeps sym reliable too (an executor loss
-    # mid-iteration must not kill the run on preemptible fleets)
-    sym = (
-        sym_plan.checkpoint(eager=True)
-        if checkpoint_dir is not None
-        else sym_plan.localCheckpoint(eager=True)
-    )
-    n_sym = int(sym_obs.get["__n_sym"] or 0)
-    if n_sym <= driver_finish_edges:
+    if int(m["__n_sym"] or 0) <= driver_finish_edges:
         # SMALL-GRAPH regime: the whole candidate graph fits on the
         # driver — finish with union-find instead of distributed rounds
         # (see docstring).  One collect of the materialized checkpoint,
@@ -407,13 +230,8 @@ def connected_components(
         try:
             labels = _driver_union_find_labels(sym)
         finally:
-            if checkpoint_dir is None:
-                _release_local_checkpoint(sym)
-            else:
-                _delete_reliable_checkpoint(sym)
-            if prev_ckpt_dir is not None:
-                spark.sparkContext.setCheckpointDir(prev_ckpt_dir)
-        result = nodes.select(F.col(node_col)).join(
+            release(sym)
+        return nodes.select(F.col(node_col)).join(
             F.broadcast(labels.withColumnRenamed("node", node_col)),
             node_col,
             "left",
@@ -423,11 +241,6 @@ def connected_components(
                 "component"
             ),
         )
-        # no checkpoint generation backs this result — release hook is
-        # a safe no-op, kept for caller-code symmetry
-        result._cc_final_generation = None
-        result._cc_checkpoint_dir = checkpoint_dir
-        return result
     try:
         # Iterate ONLY over edge endpoints: after LSH, candidate pairs
         # touch a small fraction of the corpus, while every node outside
@@ -459,23 +272,6 @@ def connected_components(
         for _round in range(max_iterations):
             if converged:
                 break
-            _t0 = time.time() if _CC_DEBUG else 0.0
-            # fast-round bypass: n_changed (from the PREVIOUS round's
-            # Observation, a free byproduct of its checkpoint job) is
-            # exactly this round's frontier size.  When it is
-            # broadcast-small, the round's plan is fully determined —
-            # every join side that matters is frontier-sized — so AQE's
-            # stage-by-stage materialization (one job per exchange,
-            # ~14 jobs/round measured at sf0.1) buys nothing.  Build
-            # the round with explicit broadcast() hints and AQE off:
-            # non-AQE execution runs it as a handful of broadcast-build
-            # jobs plus the checkpoint.  Big-frontier rounds keep AQE —
-            # broadcast safety there depends on runtime sizes only AQE
-            # knows — so at cluster scale the early heavy rounds stay
-            # adaptive and only the geometrically-shrinking tail takes
-            # the bypass.
-            use_fast = 0 < n_changed <= fast_round_threshold
-            _bc = F.broadcast if use_fast else (lambda df: df)
             # 1. delta propagate: labels only decrease, so a node's
             #    neighbor-min can only drop via a neighbor whose label
             #    changed LAST round — every older label was already
@@ -490,12 +286,10 @@ def connected_components(
             # identical child plan, so the physical planner emits a
             # single BroadcastExchange + ReusedExchange — one collect
             # job per round, not two.
-            fr = _bc(
-                labels.filter("changed").select(
-                    F.col("node").alias("f_n"), F.col("component").alias("f_c")
-                )
+            fr = labels.filter("changed").select(
+                F.col("node").alias("f_n"), F.col("component").alias("f_c")
             )
-            delta_min = _bc(
+            delta_min = (
                 sym.join(fr, sym["b"] == fr["f_n"])
                 .groupBy("a")
                 .agg(F.min("f_c").alias("nbr_min"))
@@ -556,12 +350,10 @@ def connected_components(
                 # improved at the PREVIOUS level (vs round start for
                 # level 2 — level-1 improvers were never delivered):
                 base = "old" if lvl == 2 else f"l{lvl - 1}"
-                jmap = _bc(
-                    cur.filter(F.col(prev) < F.col(base)).select(
-                        F.col("node").alias(jn), F.col(prev).alias(jc)
-                    )
+                jmap = cur.filter(F.col(prev) < F.col(base)).select(
+                    F.col("node").alias(jn), F.col(prev).alias(jc)
                 )
-                delta_l = _bc(
+                delta_l = (
                     sym.join(jmap, sym["b"] == jmap[jn])
                     .groupBy(F.col("a").alias(an))
                     .agg(F.min(jc).alias(nb))
@@ -585,29 +377,12 @@ def connected_components(
                 F.col(prev).alias("component"),
                 (F.col(prev) < F.col("old")).alias("changed"),
             )
-            if use_fast:
-                # AQE reads the conf when the action builds the physical
-                # plan (inside snapshot's eager checkpoint) — flip it for
-                # exactly that window, restore on every exit path
-                _aqe_key = "spark.sql.adaptive.enabled"
-                _aqe_prev = spark.conf.get(_aqe_key, "true")
-                spark.conf.set(_aqe_key, "false")
-                try:
-                    new_labels, n_changed = snapshot(round_plan)
-                finally:
-                    spark.conf.set(_aqe_key, _aqe_prev)
-            else:
-                new_labels, n_changed = snapshot(round_plan)
+            new_labels, n_changed = snapshot(round_plan)
             # convergence = empty frontier: nothing changed, so nothing
             # can change next round either.  The changed count rides the
             # snapshot job via Observation — no extra action.
             release(labels)  # new generation is materialized; prev never read again
             labels = new_labels
-            if _CC_DEBUG:
-                print(
-                    f"[cc] round {_round}: {time.time() - _t0:.2f}s"
-                    f" n_changed={n_changed} fast={use_fast}"
-                )
             if n_changed == 0:
                 converged = True
                 break
@@ -617,72 +392,16 @@ def connected_components(
                 "iterations — graph larger/stranger than the safety bound"
             )
     finally:
-        if checkpoint_dir is None:
-            _release_local_checkpoint(sym)
-        else:
-            _delete_reliable_checkpoint(sym)
-        if prev_ckpt_dir is not None:
-            # restored on every exit path, including the convergence
-            # raise; an originally-UNSET dir cannot be restored (no
-            # public unset API) — documented above
-            spark.sparkContext.setCheckpointDir(prev_ckpt_dir)
+        release(sym)
     # re-attach isolated nodes: anything outside the edge set is its
-    # own component (one left join, no per-round cost)
-    result = nodes.select(F.col(node_col)).join(
+    # own component (one left join, no per-round cost).  The result
+    # reads the FINAL generation, which the caller's scope frees.
+    return nodes.select(F.col(node_col)).join(
         labels.withColumnRenamed("node", node_col), node_col, "left"
     ).select(
         node_col,
         F.coalesce(F.col("component"), F.col(node_col)).alias("component"),
     )
-    # The result plan reads the FINAL checkpointed generation, which
-    # stays persisted until the JVM GCs it — a long-lived session
-    # calling connected_components repeatedly accumulates one
-    # generation per call.  Hand the caller an explicit release hook:
-    # consume the result (collect/write), then release_components(df).
-    result._cc_final_generation = labels
-    result._cc_checkpoint_dir = checkpoint_dir
-    return result
-
-
-def release_components(result: DataFrame) -> bool:
-    """Free executor-side state backing a consumed result DataFrame:
-    the final label generation of a ``connected_components`` result
-    AND/OR any persisted intermediates an operator attached as
-    ``result._persisted_intermediates`` (e.g. the tokenized corpus
-    ``text.remove_repeated_ngrams`` caches between its two passes).
-    Call AFTER the result has been fully consumed (collected or
-    written) — the plan still references this state, so a released
-    result cannot be re-computed.  Returns True if anything was
-    released; False (no-op) for DataFrames carrying neither — safe to
-    call unconditionally in cleanup paths."""
-    released = False
-    gen = getattr(result, "_cc_final_generation", None)
-    if gen is not None:
-        handle = getattr(gen, "_ckpt_handle", gen)
-        if getattr(result, "_cc_checkpoint_dir", None) is None:
-            _release_local_checkpoint(handle)
-        else:
-            _delete_reliable_checkpoint(handle)
-        result._cc_final_generation = None
-        released = True
-    extras = getattr(result, "_persisted_intermediates", None)
-    if extras:
-        for df in extras:
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # session already stopped — nothing left to free
-        result._persisted_intermediates = None
-        released = True
-    # additional localCheckpoint handles beyond the primary generation
-    # (e.g. pagerank's degree table)
-    ckpts = getattr(result, "_extra_ckpts", None)
-    if ckpts:
-        for df in ckpts:
-            _release_local_checkpoint(getattr(df, "_ckpt_handle", df))
-        result._extra_ckpts = None
-        released = True
-    return released
 
 
 def triangle_counts(
@@ -705,26 +424,23 @@ def triangle_counts(
     iteration.  Isolated and triangle-free nodes are absent from the
     output (count 0).
 
-    The canonical edge set is eagerly ``localCheckpoint``-ed: the
-    degree attach, wedge build, and closing-edge probe reference it
-    five times, and without cutting lineage each reference re-executes
-    the caller's whole upstream pipeline (for the LSH candidate graph,
-    five MinHash passes over the corpus) — a plain ``persist`` leaves
-    the expanded subtree in every downstream plan.  Call
-    ``release_components(result)`` after consuming the result to free
-    the checkpointed blocks (same contract as connected_components).
+    The canonical edge set is eagerly checkpointed: the degree attach,
+    wedge build, and closing-edge probe reference it five times, and
+    without cutting lineage each reference re-executes the caller's
+    whole upstream pipeline (for the LSH candidate graph, five MinHash
+    passes over the corpus) — a plain ``persist`` leaves the expanded
+    subtree in every downstream plan.  The caller's scope frees it.
 
     Returns (node, n_triangles).
     """
     # canonical undirected edge set (a < b), self-loops dropped
     a, b = F.col(src), F.col(dst)
-    e = (
+    e = checkpoint(
         edges.select(
             F.least(a, b).alias("a"), F.greatest(a, b).alias("b")
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     deg = (
         e.select(F.col("a").alias("node"))
@@ -762,18 +478,13 @@ def triangle_counts(
     tri = wedges.join(closing, ["x", "y"], "left_semi").select(
         "u", "x", "y"
     )
-    result = (
+    return (
         tri.select(F.col("u").alias("node"))
         .unionAll(tri.select(F.col("x").alias("node")))
         .unionAll(tri.select(F.col("y").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("n_triangles"))
     )
-    # release_components() frees the checkpointed edge blocks through
-    # the same handle convention connected_components uses
-    result._cc_final_generation = e
-    result._cc_checkpoint_dir = None
-    return result
 
 
 def pagerank(
@@ -789,7 +500,7 @@ def pagerank(
     representative when quality signals tie).
 
     Scale shape: the symmetrized edge+degree table is built ONCE and
-    eagerly ``localCheckpoint``-ed (every iteration and the final
+    eagerly checkpointed (every iteration and the final
     output reference it; without cutting lineage each reference
     re-runs the caller's candidate-generation pipeline).  Each
     iteration is one equi-join (ranks onto edge sources) + one
@@ -802,12 +513,12 @@ def pagerank(
     mass.  Returns (node, rank) with rank rounded to 6.
     """
     a, b = F.col(src), F.col(dst)
-    # NOTE (r13 optimization round): pre-partitioning sym by u (the
-    # _ckpt_keyed shape) was measured ~1.6x SLOWER for this unrolled
+    # NOTE (r13 optimization round): pre-partitioning sym by u (a
+    # key-partitioned checkpoint) was measured ~1.6x SLOWER for this unrolled
     # LAZY recurrence — one adaptive query where AQE runtime-converts
     # the per-iteration joins to broadcast-hash and coalesces the
     # small exchanges; static 32-partition SMJs disabled both.
-    sym = (
+    sym = checkpoint(
         edges.select(a.alias("u"), b.alias("v"))
         .filter(F.col("u") != F.col("v"))
         .unionAll(
@@ -816,12 +527,11 @@ def pagerank(
             )
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     n_nodes = deg.agg(F.count(F.lit(1)).alias("__n"))
     # degree + node count in one broadcastable side table
-    base = deg.crossJoin(F.broadcast(n_nodes)).localCheckpoint(eager=True)
+    base = checkpoint(deg.crossJoin(F.broadcast(n_nodes)))
     ranks = base.select(
         F.col("u").alias("node"), (F.lit(1.0) / F.col("__n")).alias("r")
     )
@@ -844,13 +554,7 @@ def pagerank(
             "node",
             (teleport / F.col("__n") + F.lit(damping) * F.col("__s")).alias("r"),
         )
-    result = ranks.select("node", F.round("r", 6).alias("rank"))
-    result._cc_final_generation = sym
-    result._persisted_intermediates = []
-    result._cc_checkpoint_dir = None
-    # base is a second checkpoint; free it through the same hook
-    result._extra_ckpts = [base]
-    return result
+    return ranks.select("node", F.round("r", 6).alias("rank"))
 
 
 def k_core(
@@ -875,7 +579,7 @@ def k_core(
     round is linear in the remaining edges and the edge table only
     ever shrinks.  The peel set is degree-table-sized (node-bounded),
     so AQE broadcasts the anti-joins after round 1.  Each generation
-    is eagerly localCheckpoint-ed (iterative lineage would otherwise
+    is eagerly checkpointed (iterative lineage would otherwise
     embed every prior round's joins) and the superseded generation's
     blocks are released immediately — storage is bounded at two edge
     generations, same contract as connected_components.
@@ -892,19 +596,14 @@ def k_core(
     is equivalent whenever the fixpoint is reached within the unroll
     depth — which this function guarantees by raising otherwise.
     """
-    from pyspark.sql import Observation
-
     a, b = F.col(src), F.col(dst)
-    e_obs = Observation()
-    e = (
+    e, m = checkpoint(
         edges.select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
         .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .observe(e_obs, F.count(F.lit(1)).alias("__n_e"))
-        .localCheckpoint(eager=True)
+        .distinct(),
+        observe=F.count(F.lit(1)).alias("__n_e"),
     )
-    n_e = int(e_obs.get["__n_e"] or 0)
-    spark = edges.sparkSession
+    n_e = int(m["__n_e"] or 0)
 
     def degrees(ed: DataFrame) -> DataFrame:
         return (
@@ -925,29 +624,24 @@ def k_core(
     for _ in range(max_iterations):
         deg = degrees(e)
         low = deg.filter(F.col("core_deg") < k).select("node")
-        obs = Observation()
-        nxt = (
+        nxt, m = checkpoint(
             e.join(
                 F.broadcast(low.withColumnRenamed("node", "a")), "a", "left_anti"
             )
             .join(
                 F.broadcast(low.withColumnRenamed("node", "b")), "b", "left_anti"
             )
-            .select("a", "b")
-            .observe(obs, F.count(F.lit(1)).alias("__n_nxt"))
-            .localCheckpoint(eager=True)
+            .select("a", "b"),
+            observe=F.count(F.lit(1)).alias("__n_nxt"),
         )
-        n_nxt = int(obs.get["__n_nxt"] or 0)
-        _release_local_checkpoint(e)
+        n_nxt = int(m["__n_nxt"] or 0)
+        release(e)
         e = nxt
         if n_nxt == n_e:
             # nothing peeled — e is the k-core edge set (identical row
             # set to the previous generation, so returning its degree
             # table is the same result the two-job form returned)
-            result = degrees(e)
-            result._cc_final_generation = e
-            result._cc_checkpoint_dir = None
-            return result
+            return degrees(e)
         n_e = n_nxt
     raise RuntimeError(
         f"k_core did not reach its fixpoint in {max_iterations} peels — "
@@ -977,8 +671,8 @@ def bfs_distances(
     join.  The frontier is broadcast-sized after the first hops in
     typical expansions, and the hop count is a hard cap — cost is
     O(edges incident to reached nodes), never O(V·E).  Distance table
-    generations are localCheckpoint-ed and superseded generations
-    released, bounding storage at two generations (same contract as
+    generations are checkpointed and superseded generations released,
+    bounding storage at two generations (same contract as
     connected_components).
     """
     a, b = F.col(src), F.col(dst)
@@ -987,26 +681,22 @@ def bfs_distances(
     e0 = edges.select(a.alias("u"), b.alias("v")).filter(
         F.col("u") != F.col("v")
     )
-    # NOTE (r13 optimization round): pre-partitioned checkpoints
-    # (_ckpt_keyed) measured NO gain here — the frontier/distance
+    # NOTE (r13 optimization round): key-partitioned checkpoints
+    # measured NO gain here — the frontier/distance
     # tables are small enough that AQE broadcast-joins them, so the
     # static edge table is never shuffled per hop in the first place
     # and the extra repartition per generation is pure cost.  Keep
     # the plain checkpoints and let AQE plan each hop.
-    sym = (
+    sym = checkpoint(
         e0.unionAll(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    dist = (
+    dist = checkpoint(
         sources.select(F.col(node_col).alias("node"))
         .distinct()
         .withColumn("hops", F.lit(0))
-        .localCheckpoint(eager=True)
     )
     frontier = dist.select("node")
-    from pyspark.sql import Observation
-
     for h in range(1, max_hops + 1):
         neigh = (
             sym.join(frontier.withColumnRenamed("node", "u"), "u")
@@ -1019,27 +709,16 @@ def bfs_distances(
         # the settled probe rides the checkpoint job as an Observation
         # (the connected_components snapshot trick): one job per hop,
         # not two — job barriers are the floor for iterative ops
-        obs = Observation()
-        nxt = (
-            dist.unionAll(fresh)
-            .observe(
-                obs, F.sum((F.col("hops") == h).cast("long")).alias("__nf")
-            )
-            .localCheckpoint(eager=True)
+        nxt, m = checkpoint(
+            dist.unionAll(fresh),
+            observe=F.sum((F.col("hops") == h).cast("long")).alias("__nf"),
         )
-        settled = int(obs.get["__nf"] or 0) == 0
-        _release_local_checkpoint(dist)
+        release(dist)
         dist = nxt
-        if settled:
+        if int(m["__nf"] or 0) == 0:
             break
         frontier = dist.filter(F.col("hops") == h).select("node")
-    result = dist
-    result._cc_final_generation = sym
-    # the final distance generation backs the result itself; route it
-    # through the same release hook so nothing leaks after consumption
-    result._extra_ckpts = [dist]
-    result._cc_checkpoint_dir = None
-    return result
+    return dist
 
 
 def shortest_path_costs(
@@ -1067,9 +746,9 @@ def shortest_path_costs(
     the reached set, and the hop cap bounds the rounds.  A round that improves
     nothing ends the iteration early (the remaining rounds would be
     identities, which is what makes a fixed-depth SQL unroll an exact
-    oracle).  Distance generations are localCheckpoint-ed and
-    superseded generations released (storage bounded at two
-    generations, the connected_components contract).
+    oracle).  Distance generations are checkpointed and superseded
+    generations released (storage bounded at two generations, the
+    connected_components contract).
 
     Negative weights are permitted per Bellman–Ford but the hop cap is
     then a semantic parameter, not just a cost bound.  Determinism:
@@ -1077,22 +756,21 @@ def shortest_path_costs(
     engine-independent; float weights share the usual last-ulp
     caveat.
     """
-    # NOTE (r13 optimization round): pre-partitioned checkpoints
-    # (_ckpt_keyed) measured NO gain here — the distance table is
+    # NOTE (r13 optimization round): key-partitioned checkpoints
+    # measured NO gain here — the distance table is
     # small enough that AQE broadcast-joins it onto the static edge
     # table each round, so e is never re-shuffled anyway and the
     # extra repartition per generation is pure cost.
-    e = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v"), F.col(weight_col).alias("w")
-    ).localCheckpoint(eager=True)
-    dist = (
+    e = checkpoint(
+        edges.select(
+            F.col(src).alias("u"), F.col(dst).alias("v"), F.col(weight_col).alias("w")
+        )
+    )
+    dist = checkpoint(
         sources.select(F.col(node_col).alias("node"))
         .distinct()
         .withColumn("cost", F.lit(0).cast("long"))
-        .localCheckpoint(eager=True)
     )
-    from pyspark.sql import Observation
-
     # r13 optimization round — DELTA relaxation (the queue form of
     # Bellman–Ford): a node's cost can only improve through a
     # neighbor whose cost improved LAST round (an unimproved
@@ -1117,8 +795,7 @@ def shortest_path_costs(
             .groupBy("node")
             .agg(F.min("__new").alias("__new"))
         )
-        obs = Observation()
-        nxt = (
+        nxt, m = checkpoint(
             dist.withColumnRenamed("cost", "__old")
             .join(candmin, "node", "full_outer")
             .select(
@@ -1130,28 +807,17 @@ def shortest_path_costs(
                 )
                 .cast("long")
                 .alias("__chg"),
-            )
-            .observe(obs, F.sum("__chg").alias("__n_improved"))
-            .localCheckpoint(eager=True)
+            ),
+            observe=F.sum("__chg").alias("__n_improved"),
         )
-        improved = int(obs.get["__n_improved"] or 0) > 0
-        # dist is a .select() wrapper from the previous round — release
-        # must target the checkpointed generation behind it (the
-        # _ckpt_handle), not the Project node, or the unpersist no-ops
-        # and generations pile up past the two-generation bound
-        _release_local_checkpoint(getattr(dist, "_ckpt_handle", dist))
+        # dist is a .select() of the previous generation; release
+        # reaches the checkpoint behind it
+        release(dist)
         dist = nxt.select("node", "cost")
-        dist._ckpt_handle = nxt
         frontier = nxt.filter(F.col("__chg") == 1).select("node", "cost")
-        if not improved:
+        if int(m["__n_improved"] or 0) == 0:
             break
-    result = dist
-    result._cc_final_generation = e
-    # the final distance generation backs the result itself; its
-    # _ckpt_handle routes the release through the same hook
-    result._extra_ckpts = [dist]
-    result._cc_checkpoint_dir = None
-    return result
+    return dist
 
 
 def label_spreading(
@@ -1180,21 +846,17 @@ def label_spreading(
     static checkpointed edge table, a map-side-combinable
     (node, label) count, and a single-struct min to pick the
     plurality — no windows, no global sorts.  Label generations are
-    localCheckpoint-ed and the superseded generation released, so
-    storage stays bounded at two generations.  Release with
-    ``release_components``.
+    checkpointed and the superseded generation released, so storage
+    stays bounded at two generations.
     """
     # NOTE (r13 optimization round): a u-keyed pre-partitioned
-    # checkpoint (_ckpt_keyed) measured NO gain — the label table is
-    # node-sized, AQE broadcast-joins it each round and e never
-    # re-shuffles; keep the plain checkpoint.
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint(
-        eager=True
-    )
-    sd = (
+    # checkpoint measured NO gain — the label table is node-sized, AQE
+    # broadcast-joins it each round and e never re-shuffles; keep the
+    # plain checkpoint.
+    e = checkpoint(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
+    sd = checkpoint(
         seeds.select(F.col(node_col).alias("node"), F.col(label_col).alias("label"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     lab = sd
     for _ in range(rounds):
@@ -1212,21 +874,13 @@ def label_spreading(
             )
             .select("node", F.col("s.l").alias("label"))
         )
-        nxt = (
+        nxt = checkpoint(
             sd.unionAll(picked.join(sd.select("node"), "node", "left_anti"))
-            .localCheckpoint(eager=True)
         )
         if lab is not sd:
-            _release_local_checkpoint(lab)
+            release(lab)
         lab = nxt
-    result = lab
-    result._cc_final_generation = e
-    # seeds table and the final label generation stay pinned past the
-    # loop; release_components walks _extra_ckpts, so route both
-    # through it (lab IS the result — released only after consumption)
-    result._extra_ckpts = [sd, lab] if lab is not sd else [sd]
-    result._cc_checkpoint_dir = None
-    return result
+    return lab
 
 
 def personalized_pagerank(
@@ -1255,12 +909,11 @@ def personalized_pagerank(
     full-outer recombination with the seed restart vector.  A fixed
     small ``iterations`` keeps the plan static and the unrolled SQL an
     exact-shape oracle (float last-ulp caveat as for pagerank).
-    Release with ``release_components``.
     """
     a, b = F.col(src), F.col(dst)
     # unrolled lazy recurrence — same reasoning as pagerank: AQE's
     # runtime broadcast conversion beats static co-partitioning here
-    sym = (
+    sym = checkpoint(
         edges.select(a.alias("u"), b.alias("v"))
         .filter(F.col("u") != F.col("v"))
         .unionAll(
@@ -1269,20 +922,16 @@ def personalized_pagerank(
             )
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg")).localCheckpoint(
-        eager=True
-    )
+    deg = checkpoint(sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg")))
     n_seeds = seeds.select(F.col(node_col)).distinct().agg(
         F.count(F.lit(1)).alias("__ns")
     )
-    seedw = (
+    seedw = checkpoint(
         seeds.select(F.col(node_col).alias("node"))
         .distinct()
         .crossJoin(F.broadcast(n_seeds))
         .select("node", (F.lit(1.0) / F.col("__ns")).alias("__sm"))
-        .localCheckpoint(eager=True)
     )
     ranks = seedw.select("node", F.col("__sm").alias("r"))
     for _ in range(iterations):
@@ -1306,11 +955,33 @@ def personalized_pagerank(
                 ).alias("r"),
             )
         )
-    result = ranks.select("node", F.round("r", 6).alias("score"))
-    result._cc_final_generation = sym
-    result._cc_checkpoint_dir = None
-    result._extra_ckpts = [deg, seedw]
-    return result
+    return ranks.select("node", F.round("r", 6).alias("score"))
+
+
+def _symmetrized(e: DataFrame, max_degree: int | None) -> DataFrame:
+    """Checkpointed symmetric, self-loop-free, distinct (u, v) edge
+    table; with ``max_degree``, nodes above the cap are pruned from the
+    graph entirely and the pre-prune table is freed at once."""
+    sym = checkpoint(
+        e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
+    )
+    if max_degree is None:
+        return sym
+    keep = (
+        sym.groupBy("u")
+        .agg(F.count(F.lit(1)).alias("deg"))
+        .filter(F.col("deg") <= max_degree)
+        .select("u")
+    )
+    pruned = checkpoint(
+        sym.join(F.broadcast(keep), "u")
+        .join(F.broadcast(keep.select(F.col("u").alias("v"))), "v")
+        .select("u", "v")
+    )
+    release(sym)
+    return pruned
 
 
 def neighbor_jaccard(
@@ -1340,45 +1011,23 @@ def neighbor_jaccard(
     aggregate, the center-keyed wedge self-join (equi-join on the
     center, AQE-skew-splittable), a (u,v)-keyed count, and two
     broadcast-sized degree joins.  The (pruned) symmetrized edge
-    table is eagerly ``localCheckpoint``-ed — the degree aggregate
-    and both wedge copies reference it, and without cutting lineage
-    each reference re-executes the caller's whole upstream pipeline
-    (for a co-purchase graph, the basket self-join) once per
-    reference.  Call ``release_components(result)`` after consuming
-    the result to free the checkpointed blocks (same contract as
-    connected_components / triangle_counts).  Returns ``(u, v,
-    n_common, jaccard)`` with ``u < v``, jaccard rounded to 6
-    decimals.
+    table is eagerly checkpointed — the degree aggregate and both
+    wedge copies reference it, and without cutting lineage each
+    reference re-executes the caller's whole upstream pipeline (for a
+    co-purchase graph, the basket self-join) once per reference.
+    Returns ``(u, v, n_common, jaccard)`` with ``u < v``, jaccard
+    rounded to 6 decimals.
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     # NOTE (r13 optimization round): a v-keyed pre-partitioned
-    # checkpoint (_ckpt_keyed) measured ~1.5x SLOWER here — the wedge
+    # checkpoint measured ~1.5x SLOWER here — the wedge
     # self-join's two sides are byte-identical exchange subtrees that
     # runtime exchange reuse already collapses to ONE shuffle, with
     # AQE free to coalesce; the forced static-partition SMJ gave that
     # up and paid an extra repartition+sort at build.  Keep the plain
     # checkpoint.
-    sym = (
-        e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    ckpts = [sym]
+    sym = _symmetrized(e, max_degree)
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-    if max_degree is not None:
-        keep = deg.filter(F.col("deg") <= max_degree).select("u")
-        sym = (
-            sym.join(F.broadcast(keep), "u")
-            .join(F.broadcast(keep.select(F.col("u").alias("v"))), "v")
-            .select("u", "v")
-            .localCheckpoint(eager=True)
-        )
-        # the pre-prune table is only needed to build the pruned one —
-        # free it NOW rather than carrying it to release time
-        _release_local_checkpoint(ckpts.pop())
-        ckpts.append(sym)
-        deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     wedges = (
         sym.select(F.col("v").alias("w"), F.col("u").alias("a"))
         .join(sym.select(F.col("v").alias("w"), F.col("u").alias("b")), "w")
@@ -1389,7 +1038,7 @@ def neighbor_jaccard(
     ).filter(F.col("n_common") >= min_common)
     da = deg.select(F.col("u").alias("a"), F.col("deg").alias("__da"))
     db = deg.select(F.col("u").alias("b"), F.col("deg").alias("__db"))
-    result = (
+    return (
         common.join(da, "a")
         .join(db, "b")
         .select(
@@ -1403,8 +1052,6 @@ def neighbor_jaccard(
             ).alias("jaccard"),
         )
     )
-    result._extra_ckpts = ckpts
-    return result
 
 
 def adamic_adar(
@@ -1430,35 +1077,16 @@ def adamic_adar(
     GRAPH (edges, degrees, wedges all agree), bounding the d·(d−1)/2
     wedge blow-up exactly as in neighbor_jaccard.
 
-    The (pruned) symmetrized edge table is eagerly
-    ``localCheckpoint``-ed (three references); call
-    ``release_components(result)`` after consuming.  Returns
-    ``(u, v, n_common, aa_score)`` with ``u < v``, score rounded to
-    6 decimals.
+    The (pruned) symmetrized edge table is eagerly checkpointed
+    (three references).  Returns ``(u, v, n_common, aa_score)`` with
+    ``u < v``, score rounded to 6 decimals.
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     # plain checkpoint — same measurement as neighbor_jaccard: the
     # wedge join's identical exchange subtrees are runtime-reused, a
     # forced static partitioning was ~1.5x slower
-    sym = (
-        e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    ckpts = [sym]
+    sym = _symmetrized(e, max_degree)
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-    if max_degree is not None:
-        keep = deg.filter(F.col("deg") <= max_degree).select("u")
-        sym = (
-            sym.join(F.broadcast(keep), "u")
-            .join(F.broadcast(keep.select(F.col("u").alias("v"))), "v")
-            .select("u", "v")
-            .localCheckpoint(eager=True)
-        )
-        _release_local_checkpoint(ckpts.pop())
-        ckpts.append(sym)
-        deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     # center-keyed edge list carrying the center's ln-degree weight.
     # Degree-1 centers can't form wedges — drop them BEFORE the weight
     # so 1/ln(1) never evaluates (ANSI mode raises DIVIDE_BY_ZERO; the
@@ -1473,7 +1101,7 @@ def adamic_adar(
     wedges = centered.join(
         sym.select(F.col("v").alias("w"), F.col("u").alias("b")), "w"
     ).filter(F.col("a") < F.col("b"))
-    result = (
+    return (
         wedges.groupBy("a", "b")
         .agg(
             F.count(F.lit(1)).alias("n_common"),
@@ -1487,8 +1115,6 @@ def adamic_adar(
             F.round(F.col("__aa"), 6).alias("aa_score"),
         )
     )
-    result._extra_ckpts = ckpts
-    return result
 
 
 def clustering_coefficient(
@@ -1505,30 +1131,25 @@ def clustering_coefficient(
     the hub-safe wedge enumeration) with one degree aggregate and a
     left join so triangle-free nodes report 0.0 rather than vanish.
     Degree-1 nodes (no neighbor pairs) report 0.0 by convention.
-    Inherits triangle_counts' checkpointed edge table; call
-    ``release_components(result)`` after consuming.  Returns
-    ``(node, deg, n_triangles, coeff)`` with coeff rounded to 6
+    Returns ``(node, deg, n_triangles, coeff)`` with coeff rounded to 6
     decimals.
     """
     a, b = F.col(src), F.col(dst)
-    e = (
+    e = checkpoint(
         edges.select(
             F.least(a, b).alias("a"), F.greatest(a, b).alias("b")
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     tri = triangle_counts(e, "a", "b")
-    # triangle_counts checkpoints ITS canonical copy of e; chain both
-    # handles so one release call frees everything
     deg = (
         e.select(F.col("a").alias("node"))
         .unionAll(e.select(F.col("b").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("deg"))
     )
-    result = deg.join(tri, "node", "left").select(
+    return deg.join(tri, "node", "left").select(
         "node",
         "deg",
         F.coalesce(F.col("n_triangles"), F.lit(0)).alias("n_triangles"),
@@ -1543,10 +1164,6 @@ def clustering_coefficient(
         )
         .alias("coeff"),
     )
-    result._cc_final_generation = getattr(tri, "_cc_final_generation", None)
-    result._cc_checkpoint_dir = None
-    result._extra_ckpts = [e]
-    return result
 
 
 def contract_edges(
@@ -1648,7 +1265,7 @@ def hits(
     On a bipartite purchase graph (customer → part) hubs are the
     broad buyers and authorities the widely-bought items.
 
-    Scale shape: the deduped edge table is eagerly localCheckpoint-ed
+    Scale shape: the deduped edge table is eagerly checkpointed
     once (every iteration references it); each half-step is ONE
     equi-join (scores onto the matching edge endpoint) + one keyed sum
     with map-side partials, and each final L1 norm is ONE scalar
@@ -1667,10 +1284,8 @@ def hits(
     # edge exchanges, beating static co-partitioning; forcing 32-
     # static-partition SMJs disabled both.  Keep the single
     # unpartitioned checkpoint and let AQE plan the joins.
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    e = checkpoint(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).distinct()
     )
     hub = e.select("u").distinct().select("u", F.lit(1.0).alias("h"))
     auth = None
@@ -1700,7 +1315,7 @@ def hits(
     auth = auth.crossJoin(F.broadcast(na)).select(
         "v", (F.col("a") / F.col("__na")).alias("a")
     )
-    result = hub.select(
+    return hub.select(
         F.col("u").alias("node"),
         F.lit("hub").alias("side"),
         F.round("h", 6).alias("score"),
@@ -1711,11 +1326,6 @@ def hits(
             F.round("a", 6).alias("score"),
         )
     )
-    result._cc_final_generation = e
-    result._persisted_intermediates = []
-    result._cc_checkpoint_dir = None
-    result._extra_ckpts = []
-    return result
 
 
 def degree_assortativity(
@@ -1739,12 +1349,10 @@ def degree_assortativity(
     ints; sum(d_u * d_v) over E edges at degree ≤ 1e6 stays inside
     DECIMAL(38,0) headroom by ~20 orders) with the correlation
     assembled in doubles on the single output row — engine-exact.
-    The symmetrized edge table is eagerly ``localCheckpoint``-ed —
-    degree, pair, and node-count stages all reference it, and without
-    cutting lineage each reference re-executes the caller's upstream
-    edge build (for a co-purchase graph, the basket self-join).  Call
-    ``release_components(result)`` after consuming the single output
-    row to free the checkpointed blocks.
+    The symmetrized edge table is eagerly checkpointed — degree, pair,
+    and node-count stages all reference it, and without cutting
+    lineage each reference re-executes the caller's upstream edge
+    build (for a co-purchase graph, the basket self-join).
 
     Returns one row: (n_nodes, n_directed_edges, assortativity).
     """
@@ -1753,11 +1361,10 @@ def degree_assortativity(
         .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
         .filter(F.col("u") != F.col("v"))
     )
-    sym = (
+    sym = checkpoint(
         e.select("u", "v")
         .union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     du = deg.select(F.col("u"), F.col("d").alias("du"))
@@ -1784,13 +1391,11 @@ def degree_assortativity(
     num = n * sxy - sx * sy
     den2 = (n * sx2 - sx * sx) * (n * sy2 - sy * sy)
     r = F.when(den2 > 0, num / F.sqrt(den2))
-    result = joined.select(
+    return joined.select(
         "n_nodes",
         "n_directed_edges",
         F.round(r, 6).alias("assortativity"),
     )
-    result._extra_ckpts = [sym]
-    return result
 
 
 def harmonic_centrality(
@@ -1819,14 +1424,13 @@ def harmonic_centrality(
     node-cardinality instead of (source × node) — the k-fold shuffle
     and storage reduction that makes a bigger source sample
     affordable.  The edge table and the state generations are
-    plain eager localCheckpoints — an in-session A/B showed the
+    plain eager checkpoints — an in-session A/B showed the
     keyed partition-preserving form ~1.3x slower here (the frontier
     is broadcastable and AQE coalesces the node-grain exchanges);
     the settled probe rides each hop's checkpoint as an Observation.  First-discovery
     hops per (source, node) are identical to the labeled-BFS form:
     ``new = expansion & ~seen`` admits a source bit exactly once, at
-    its minimum hop distance.  Call ``release_components(result)``
-    after consuming.
+    its minimum hop distance.
 
     Returns ``(node, n_sources, harmonic)`` for every node reached by
     at least one source at distance >= 1 (sources do not score
@@ -1841,23 +1445,21 @@ def harmonic_centrality(
     )
     # plain eager checkpoint — the keyed partition-preserving form was
     # measured ~1.3x slower here and reverted (see docstring)
-    sym = (
+    sym = checkpoint(
         e0.unionAll(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    from pyspark.sql import Observation, Window
+    from pyspark.sql import Window
 
     # deterministic bit index per distinct source (the sample is a
     # bounded input by contract, so the k-row global window is fine)
-    idx = (
+    idx = checkpoint(
         sources.select(F.col(node_col).alias("node"))
         .distinct()
         .select(
             "node",
             (F.row_number().over(Window.orderBy("node")) - 1).alias("__i"),
         )
-        .localCheckpoint(eager=True)
     )
     # control-plane scalar (sample-sized): fixes the mask width
     k = idx.count()
@@ -1873,14 +1475,16 @@ def harmonic_centrality(
 
     # state: per node the already-seen source mask, the fresh-frontier
     # mask, and the running (n_sources, harmonic) accumulators
-    state = idx.select(
-        "node",
-        *[word(w).alias(f"__s{w}") for w in range(nw)],
-        *[word(w).alias(f"__f{w}") for w in range(nw)],
-        F.lit(0).cast("long").alias("n_sources"),
-        F.lit(0.0).alias("harmonic"),
-    ).localCheckpoint(eager=True)
-    _release_local_checkpoint(idx)
+    state = checkpoint(
+        idx.select(
+            "node",
+            *[word(w).alias(f"__s{w}") for w in range(nw)],
+            *[word(w).alias(f"__f{w}") for w in range(nw)],
+            F.lit(0).cast("long").alias("n_sources"),
+            F.lit(0.0).alias("harmonic"),
+        )
+    )
+    release(idx)
     for h in range(1, max_hops + 1):
         frontier = state.filter(
             _reduce(_or, [F.col(f"__f{w}") != 0 for w in range(nw)])
@@ -1918,8 +1522,7 @@ def harmonic_centrality(
             lambda x, y: x + y,
             [F.bit_count(F.col(f"__n{w}")) for w in range(nw)],
         ).cast("long")
-        obs = Observation()
-        nxt = (
+        nxt, m = checkpoint(
             merged.select(
                 "node",
                 *[
@@ -1935,22 +1538,15 @@ def harmonic_centrality(
                     + popc.cast("double") / F.lit(float(h))
                 ).alias("harmonic"),
                 popc.alias("__new"),
-            )
-            .observe(obs, F.sum("__new").alias("__nf"))
-            .localCheckpoint(eager=True)
+            ),
+            observe=F.sum("__new").alias("__nf"),
         )
-        settled = int(obs.get["__nf"] or 0) == 0
-        # state may be a .drop() wrapper from the previous round —
-        # release the checkpointed generation behind it
-        _release_local_checkpoint(getattr(state, "_ckpt_handle", state))
+        # state may be a .drop() of the previous generation; release
+        # reaches the checkpoint behind it
+        release(state)
         state = nxt.drop("__new")
-        state._ckpt_handle = nxt
-        if settled:
+        if int(m["__nf"] or 0) == 0:
             break
-    result = state.filter(F.col("n_sources") > 0).select(
+    return state.filter(F.col("n_sources") > 0).select(
         "node", "n_sources", F.round("harmonic", 6).alias("harmonic")
     )
-    result._cc_final_generation = sym
-    result._extra_ckpts = [state]
-    result._cc_checkpoint_dir = None
-    return result

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import prefix_path
+from ..scope import checkpoint, release
 
 
 def hierarchical_fallback_join(
@@ -120,7 +121,7 @@ def bom_rollup(
 
     Scale shape: level-synchronous frontier iteration — each level is
     ONE equi-join of the current frontier against the static
-    ``localCheckpoint``-ed edge table keyed on the parent, with a
+    checkpointed edge table keyed on the parent, with a
     (root, node) pre-aggregate per level so parallel paths collapse
     BEFORE the next multiply (the frontier never exceeds distinct
     (root, component) pairs).  Every level is checkpointed too —
@@ -128,35 +129,31 @@ def bom_rollup(
     predecessors once per downstream reference, turning d levels into
     O(d²) re-scans of the caller's edge build.  Quantities ride as
     DECIMAL(38,0) products of integer per-unit counts — exact at any
-    depth that fits 38 digits.  Call
-    ``graph.release_components(result)`` after consuming to free the
-    checkpointed level blocks.
+    depth that fits 38 digits.
 
     Returns (root, component, total_qty) for every component strictly
     below a root, all path contributions summed.
     """
     if max_depth < 1:
         raise ValueError(f"max_depth must be >= 1, got {max_depth}")
-    e = edges.select(
-        F.col(parent_col).alias("__p"),
-        F.col(child_col).alias("__c"),
-        F.col(qty_col).cast("decimal(38,0)").alias("__q"),
-    ).localCheckpoint(eager=True)
+    e = checkpoint(
+        edges.select(
+            F.col(parent_col).alias("__p"),
+            F.col(child_col).alias("__c"),
+            F.col(qty_col).cast("decimal(38,0)").alias("__q"),
+        )
+    )
     frontier = roots.select(
         F.col(root_col).alias("__root"),
         F.col(root_col).alias("__node"),
         F.lit(1).cast("decimal(38,0)").alias("__mult"),
     )
-    ckpts = [e]
     steps = []
-    from pyspark.sql import Observation
-
     for _ in range(max_depth):
         # the emptiness probe rides the checkpoint job as an
         # Observation (the bfs_distances trick) so frontier
         # exhaustion stops the loop without a second job per level
-        obs = Observation()
-        step = (
+        step, m = checkpoint(
             frontier.join(e, frontier["__node"] == e["__p"])
             .select(
                 "__root",
@@ -164,13 +161,12 @@ def bom_rollup(
                 (F.col("__mult") * F.col("__q")).alias("__mult"),
             )
             .groupBy("__root", "__node")
-            .agg(F.sum("__mult").alias("__mult"))
-            .observe(obs, F.count(F.lit(1)).alias("__n"))
-            .localCheckpoint(eager=True)
+            .agg(F.sum("__mult").alias("__mult")),
+            observe=F.count(F.lit(1)).alias("__n"),
         )
-        if int(obs.get["__n"] or 0) == 0:
+        if int(m["__n"] or 0) == 0:
+            release(step)
             break
-        ckpts.append(step)
         steps.append(step)
         frontier = step
     if not steps:
@@ -179,7 +175,7 @@ def bom_rollup(
     total = steps[0]
     for step in steps[1:]:
         total = total.unionAll(step)
-    result = (
+    return (
         total.groupBy("__root", "__node")
         .agg(F.sum("__mult").alias("total_qty"))
         .select(
@@ -188,5 +184,3 @@ def bom_rollup(
             F.col("total_qty").cast("long").alias("total_qty"),
         )
     )
-    result._extra_ckpts = ckpts
-    return result

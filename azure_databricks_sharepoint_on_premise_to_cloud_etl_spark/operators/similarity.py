@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..scope import checkpoint
+
 
 def dot(a: Column, b: Column) -> Column:
     """Dot product of two array<float/double> columns, in double."""
@@ -893,7 +895,6 @@ def mmr_rerank(
     per-round driver barrier the r13 verdict flagged); the cogroup
     form is O(1) jobs and its per-group work is bounded by the
     candidate set, exactly the §2.6 shape a 100 TB query batch needs.
-    Call ``graph.release_components(result)`` after consuming.
 
     Determinism: similarities and relevances are rounded to 6 dp in
     the JVM (bit-identical to the r13 form); round scores replicate
@@ -910,12 +911,14 @@ def mmr_rerank(
     if not 0.0 <= lam <= 1.0:
         raise ValueError(f"lam {lam} outside [0, 1]")
     q, c = query_col, id_col
-    cand = candidates.select(
-        F.col(q).alias("__q"),
-        F.col(c).alias("__c"),
-        F.col(emb_col).alias("__e"),
-        F.round(F.col(rel_col), 6).alias("__r"),
-    ).localCheckpoint(eager=True)
+    cand = checkpoint(
+        candidates.select(
+            F.col(q).alias("__q"),
+            F.col(c).alias("__c"),
+            F.col(emb_col).alias("__e"),
+            F.round(F.col(rel_col), 6).alias("__r"),
+        )
+    )
     a = cand.select(
         "__q", F.col("__c").alias("__a"), F.col("__e").alias("__ea")
     )
@@ -1070,13 +1073,11 @@ def mmr_rerank(
             rows, columns=[query_col, "rank", id_col, "mmr_score"]
         )
 
-    result = (
+    return (
         sims.groupby("__q")
         .cogroup(rel.groupby("__qr"))
         .applyInPandas(_greedy, schema=out_schema)
     )
-    result._extra_ckpts = [cand]
-    return result
 
 
 def rbo_overlap(

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ...scope import checkpoint
+
 
 def group_percentiles_exact(
     df: DataFrame,
@@ -245,7 +247,9 @@ def histogram(
         .filter(v.isNotNull())
         .crossJoin(F.broadcast(bounds))
         .select(
-            F.when(F.col("__hi") == F.col("__lo"), F.lit(0))
+            # guard the computed width, not hi == lo: a subnormal range
+            # divided by bins underflows to 0.0 (ANSI: DIVIDE_BY_ZERO)
+            F.when(width == 0, F.lit(0))
             .otherwise(bin_id)
             .alias("bin"),
             "__lo",
@@ -1734,7 +1738,7 @@ def abc_classification(
     share = F.when(
         F.col("__total") > 0, F.col("__cum") / F.col("__total")
     )
-    out = out.select(
+    return out.select(
         "key",
         "value",
         F.round(share, 6).alias("cum_share"),
@@ -1743,10 +1747,6 @@ def abc_classification(
         .otherwise(F.lit("C"))
         .alias("abc_class"),
     )
-    out._persisted_intermediates = getattr(
-        run, "_persisted_intermediates", []
-    )
-    return out
 
 
 def robust_zscore_anomalies(
@@ -2101,7 +2101,7 @@ def lorenz_deciles(
     cum = F.when(
         F.col("__total") > 0, F.col("__cum") / F.col("__total")
     )
-    out = (
+    return (
         per_tile.withColumn("__total", total)
         .withColumn("__cum", F.sum("tile_value").over(w_cum))
         .select(
@@ -2112,10 +2112,6 @@ def lorenz_deciles(
             F.round(cum, 6).alias("cum_share"),
         )
     )
-    out._persisted_intermediates = getattr(
-        tiled, "_persisted_intermediates", []
-    )
-    return out
 
 
 def quantile_normalize(
@@ -2206,7 +2202,7 @@ def spearman_corr(
     # parquet scans each behind its own round-robin Exchange (guide
     # §1.2: don't compute things twice).  Narrow projection first so
     # the checkpoint holds 3 columns, not the row.
-    base = (
+    base = checkpoint(
         df.filter(
             g.isNotNull()
             & F.col(x_col).isNotNull()
@@ -2217,7 +2213,6 @@ def spearman_corr(
             F.col(x_col).alias("__x"),
             F.col(y_col).alias("__y"),
         )
-        .localCheckpoint(eager=True)
     )
 
     def _ranks(col: str, out: str) -> DataFrame:
@@ -2258,15 +2253,11 @@ def spearman_corr(
     vx = n * sxx - sx * sx
     vy = n * syy - sy * sy
     rho = F.when((vx > 0) & (vy > 0), cov / F.sqrt(vx * vy))
-    result = moments.select(
+    return moments.select(
         F.col("__g").alias(group_col),
         "n",
         F.round(rho, 6).alias("rho"),
     )
-    # the checkpointed base backs the whole plan; bench/batch callers
-    # free it via release_components after consuming
-    result._extra_ckpts = [base]
-    return result
 
 
 def anova_f(df: DataFrame, value_col: str, group_col: str) -> DataFrame:
@@ -2630,16 +2621,16 @@ def feature_info_gain(
             "__f", "__lo", "__hi"
         )
     ).filter(F.col("__lo").isNotNull())
+    # guard the computed width, not hi > lo: a subnormal range divided
+    # by bins underflows to 0.0 (ANSI: DIVIDE_BY_ZERO)
+    width = (F.col("__hi") - F.col("__lo")) / bins
     binned = melted.join(F.broadcast(ranges), "__f").select(
         "__f",
         "__y",
         F.when(
-            F.col("__hi") > F.col("__lo"),
+            width > 0,
             F.least(
-                F.floor(
-                    (F.col("__v") - F.col("__lo"))
-                    / ((F.col("__hi") - F.col("__lo")) / bins)
-                ).cast("int"),
+                F.floor((F.col("__v") - F.col("__lo")) / width).cast("int"),
                 F.lit(bins - 1),
             ),
         )

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ...scope import checkpoint, persist, release
 from .descriptive import (
     _LEHMER_M,
     _NORM_B,
@@ -1196,9 +1197,8 @@ def mann_kendall(
     # is referenced FOUR times (both pair-join sides, n, ties) — each
     # reference re-ran the caller's corpus-collapsing aggregate.  One
     # eager checkpoint of the series-grain table replaces four corpus
-    # passes (guide §1.2: don't compute things twice); callers release
-    # via release_components.
-    pts = (
+    # passes (guide §1.2: don't compute things twice).
+    pts = checkpoint(
         df.filter(
             g.isNotNull()
             & F.col(time_col).isNotNull()
@@ -1209,7 +1209,6 @@ def mann_kendall(
             F.col(time_col).alias("__t"),
             F.col(value_col).cast("double").alias("__v"),
         )
-        .localCheckpoint(eager=True)
     )
     lhs = pts.select(
         F.col("__g"), F.col("__t").alias("__t1"), F.col("__v").alias("__v1")
@@ -1265,15 +1264,13 @@ def mann_kendall(
         (F.col("var_s") > 0) & (s < 0),
         (s + 1) / F.sqrt(F.col("var_s")),
     ).when(F.col("var_s") > 0, F.lit(0.0))
-    result = m.select(
+    return m.select(
         F.col("grp").alias(group_col),
         "n",
         "s_stat",
         "var_s",
         F.round(z, 4).alias("z"),
     )
-    result._extra_ckpts = [pts]
-    return result
 
 
 def page_hinkley(
@@ -4079,9 +4076,7 @@ def cronbach_alpha(
         .filter((F.col("__ki") == k) & (F.col("__ni") == k))
         .select("__subj")
     )
-    scored = base.join(ok, s == F.col("__subj"), "inner").localCheckpoint(
-        eager=True
-    )
+    scored = checkpoint(base.join(ok, s == F.col("__subj"), "inner"))
     n_total = int(obs.get["__n_total"] or 0)
     item_var = (
         scored.groupBy(it.alias("__item"))
@@ -4109,7 +4104,7 @@ def cronbach_alpha(
             6,
         ),
     )
-    result = combined.select(
+    return combined.select(
         "n_subjects",
         (F.lit(int(n_total)) - F.col("n_subjects"))
         .cast("long")
@@ -4119,8 +4114,6 @@ def cronbach_alpha(
         "total_var",
         alpha.alias("alpha"),
     )
-    result._extra_ckpts = [scored]
-    return result
 
 
 def wilcoxon_signed_rank(
@@ -4643,12 +4636,9 @@ def seasonal_mann_kendall(
         .when(s < 0, F.round((s + 1) / sd, 6))
         .otherwise(F.lit(0.0))
     )
-    result = red.select(
+    return red.select(
         group_col, "n", "n_seasons", "s_stat", "var_s", z.alias("z")
     )
-    # propagate the delegate's checkpoint handle so callers can free it
-    result._extra_ckpts = getattr(per_season, "_extra_ckpts", [])
-    return result
 
 
 def neyman_allocation(
@@ -4917,7 +4907,7 @@ def bradley_terry(
     # spill rather than OOM before the raise fires.
     from pyspark import StorageLevel
 
-    cells = cells.persist(StorageLevel.MEMORY_AND_DISK)
+    cells = persist(cells, StorageLevel.MEMORY_AND_DISK)
     try:
         probe = (
             cells.select(F.col("__w").alias("__it"))
@@ -4933,7 +4923,7 @@ def bradley_terry(
             )
         rows = cells.collect()
     finally:
-        cells.unpersist()
+        release(cells)
     items = sorted({r["__w"] for r in rows} | {r["__l"] for r in rows})
     idx = {it: i for i, it in enumerate(items)}
     k = len(items)

@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import portable_hash64, word_tokens
+from ..scope import checkpoint, persist
 
 # Tiny per-language stopword marker sets for the n-gram/stopword
 # heuristic language ID.  Deliberately small and public-knowledge; at
@@ -278,9 +279,8 @@ def remove_repeated_ngrams(
     Scale shape: the corpus is TOKENIZED ONCE into a persisted
     (MEMORY_AND_DISK, spillable) token table that both the gram-digest
     pass and the final strike pass read — re-tokenizing per pass would
-    double the dominant linear term; call
-    ``graph.release_components(result)`` after consuming the result to
-    free it (persisting token arrays costs roughly one corpus copy of
+    double the dominant linear term; the caller's scope frees it
+    (persisting token arrays costs roughly one corpus copy of
     executor storage, traded for one full tokenization pass).  The
     only corpus-wide exchange is the (doc, digest)-distinct +
     digest-count aggregate — 8-byte digests with map-side partial
@@ -303,9 +303,10 @@ def remove_repeated_ngrams(
     """
     from pyspark import StorageLevel
 
-    toked = docs.select(
-        F.col(id_col), word_tokens(text_col).alias("__toks")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    toked = persist(
+        docs.select(F.col(id_col), word_tokens(text_col).alias("__toks")),
+        StorageLevel.MEMORY_AND_DISK,
+    )
     gram_digest = lambda i: portable_hash64(  # noqa: E731
         F.array_join(F.slice(F.col("__toks"), i + 1, n), " ")
     )
@@ -373,7 +374,7 @@ def remove_repeated_ngrams(
             ),
         )
     )
-    result = (
+    return (
         toked.join(starts, id_col, "left")
         .withColumn(
             "__starts",
@@ -387,8 +388,6 @@ def remove_repeated_ngrams(
             F.array_join(kept, " ").alias("cleaned_text"),
         )
     )
-    result._persisted_intermediates = [toked]
-    return result
 
 
 def bpe_merge_step(
@@ -884,9 +883,8 @@ def tfidf_doc_similarity(
     # read it, and without materialization the tokenize/gram/df
     # pipeline executes twice (measured 8.7s -> the recompute is about
     # half).  Spillable MEMORY_AND_DISK costs roughly one banded-
-    # posting copy of executor storage; release via
-    # graph.release_components(result) after consuming the result.
-    w = (
+    # posting copy of executor storage, freed by the caller's scope.
+    w = persist(
         td.join(dfreq, "__t")
         .select(
             id_col,
@@ -895,8 +893,8 @@ def tfidf_doc_similarity(
                 "__w"
             ),
         )
-        .withColumn("__norm", norm_w)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .withColumn("__norm", norm_w),
+        StorageLevel.MEMORY_AND_DISK,
     )
     if not prefix_filter:
         a = w.select(
@@ -907,7 +905,7 @@ def tfidf_doc_similarity(
             F.col(id_col).alias("id_b"), "__t",
             F.col("__w").alias("__wb"), F.col("__norm").alias("__nb"),
         )
-        result = (
+        return (
             a.join(b, "__t")
             .filter(F.col("id_a") < F.col("id_b"))
             .groupBy("id_a", "id_b")
@@ -920,8 +918,6 @@ def tfidf_doc_similarity(
             )
             .filter(F.col("cosine") >= threshold)
         )
-        result._persisted_intermediates = [w]
-        return result
 
     # Prefix-filtered form (AllPairs-style, the published sparse-join
     # pruning): each doc partitions its terms into INDEX terms and a
@@ -971,7 +967,7 @@ def tfidf_doc_similarity(
         F.col(id_col).alias("id_b"), "__t",
         F.col("__w").alias("__wb"), F.col("__norm").alias("__nb"),
     )
-    result = (
+    return (
         cands.join(va, "id_a")
         .join(vb, ["id_b", "__t"])
         .groupBy("id_a", "id_b")
@@ -984,8 +980,6 @@ def tfidf_doc_similarity(
         )
         .filter(F.col("cosine") >= threshold)
     )
-    result._persisted_intermediates = [w]
-    return result
 
 
 def token_entropy(
@@ -1053,16 +1047,14 @@ def source_kl_divergence(
     # per-source totals, the grid join) — each reference re-ran the
     # corpus tokenize+explode, the only corpus-grain work in the
     # operator.  One eager checkpoint of the (source × vocab)-sized
-    # count table runs it once (guide §1.2); released via
-    # release_components on the result.
-    st = (
+    # count table runs it once (guide §1.2).
+    st = checkpoint(
         docs.select(
             F.col(group_col).alias("grp"),
             F.explode(word_tokens(text_col)).alias("__t"),
         )
         .groupBy("grp", "__t")
         .agg(F.count(F.lit(1)).alias("__c"))
-        .localCheckpoint(eager=True)
     )
     # dense (source x vocab) grid so absent terms get smoothed mass
     vocab = st.groupBy("__t").agg(F.sum("__c").alias("__ct"))
@@ -1085,15 +1077,10 @@ def source_kl_divergence(
     )
     p = (F.col("__c") + alpha) / (F.col("__ng") + F.lit(alpha) * F.col("__v"))
     q = (F.col("__ct") + alpha) / (F.col("__nc") + F.lit(alpha) * F.col("__v"))
-    result = (
-        grid.groupBy(F.col("grp").alias(group_col))
-        .agg(
-            F.count(F.lit(1)).alias("n_terms"),
-            F.round(F.sum(p * F.log(p / q)), 6).alias("kl_nats"),
-        )
+    return grid.groupBy(F.col("grp").alias(group_col)).agg(
+        F.count(F.lit(1)).alias("n_terms"),
+        F.round(F.sum(p * F.log(p / q)), 6).alias("kl_nats"),
     )
-    result._extra_ckpts = [st]
-    return result
 
 
 def pmi_collocations(
@@ -1127,11 +1114,8 @@ def pmi_collocations(
     # r13 optimization round: the bigram counts, unigram counts and
     # bigram total each re-tokenized the corpus (three regex-split
     # passes over the text); one eager checkpoint of the token arrays
-    # feeds all three (guide §1.2).  Released via release_components
-    # on the result.
-    base = docs.select(word_tokens(text_col).alias("__toks")).localCheckpoint(
-        eager=True
-    )
+    # feeds all three (guide §1.2).
+    base = checkpoint(docs.select(word_tokens(text_col).alias("__toks")))
     bg = (
         base.select(F.explode(pairs).alias("__p"))
         .select(F.col("__p.w1").alias("w1"), F.col("__p.w2").alias("w2"))
@@ -1154,15 +1138,13 @@ def pmi_collocations(
         (F.col("pair_count") / F.col("__tb"))
         / ((F.col("__c1") / F.col("__tu")) * (F.col("__c2") / F.col("__tu")))
     )
-    result = (
+    return (
         bg.join(F.broadcast(u1), "w1")
         .join(F.broadcast(u2), "w2")
         .crossJoin(F.broadcast(tot_b))
         .crossJoin(F.broadcast(tot_u))
         .select("w1", "w2", "pair_count", F.round(pmi, 6).alias("pmi"))
     )
-    result._extra_ckpts = [base]
-    return result
 
 
 def score_linear_model(
@@ -1370,7 +1352,7 @@ def unigram_sampling_table(
         weighted, order, {"__w": "__cum"}, partitions=partitions
     )
     total = weighted.agg(F.sum("__w").alias("__total"))
-    out = run.crossJoin(F.broadcast(total)).select(
+    return run.crossJoin(F.broadcast(total)).select(
         "word",
         "tf",
         F.round(
@@ -1389,10 +1371,6 @@ def unigram_sampling_table(
             round_to,
         ).alias("cum_hi"),
     )
-    out._persisted_intermediates = getattr(
-        run, "_persisted_intermediates", []
-    )
-    return out
 
 
 def readability_score(

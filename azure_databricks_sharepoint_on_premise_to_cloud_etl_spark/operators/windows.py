@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..scope import persist
+
 
 def top1_per_group(
     df: DataFrame, partition_cols: list[str], order_col: str, latest: bool = True
@@ -159,14 +161,12 @@ def global_cumsum(
     shuffle files, never re-sampling boundaries.  MEMORY_AND_DISK with
     LRU eviction bounds the cost.  Spark's cache manager holds the
     relation until explicit unpersist or session end — NOT JVM GC —
-    so the handle is attached to the result as
-    ``_persisted_intermediates`` (the repo convention): callers that
-    run many cumsums in one session should
-    ``graph.release_components(out)`` after consuming each result.
+    so callers that run many cumsums in one session should consume
+    each result inside a ``with Scope():``, which unpersists it.
     """
     srcs = list(values)
     part = df.repartitionByRange(partitions, *order)
-    staged = part.withColumn("__pid", F.spark_partition_id()).persist()
+    staged = persist(part.withColumn("__pid", F.spark_partition_id()))
     w_local = (
         Window.partitionBy("__pid")
         .orderBy(*order)
@@ -199,11 +199,9 @@ def global_cumsum(
         out = out.withColumn(
             values[s], F.col(f"__off_{s}") + F.col(f"__loc_{s}")
         )
-    out = out.drop(
+    return out.drop(
         "__pid", *[f"__loc_{s}" for s in srcs], *[f"__off_{s}" for s in srcs]
     )
-    out._persisted_intermediates = [staged]
-    return out
 
 
 def global_rank(
@@ -221,11 +219,7 @@ def global_rank(
     summed = global_cumsum(
         staged, order, {"__one": rank_col}, partitions=partitions
     )
-    out = summed.drop("__one")
-    # .drop() builds a fresh DataFrame — re-attach the cache handle so
-    # release_components(out) still reaches the staged frame
-    out._persisted_intermediates = summed._persisted_intermediates
-    return out
+    return summed.drop("__one")
 
 
 def global_ntile_pct(
@@ -254,14 +248,12 @@ def global_ntile_pct(
     pct = F.when(F.col("__n") > 1, (F.col("__r") - 1) / (F.col("__n") - 1)).otherwise(
         F.lit(0.0)
     )
-    out = (
+    return (
         ranked.join(F.broadcast(n_tbl), how="cross")
         .withColumn(tile_col, tile.cast("int"))
         .withColumn(pct_col, pct)
         .drop("__r", "__n")
     )
-    out._persisted_intermediates = ranked._persisted_intermediates
-    return out
 
 
 def asof_join(
@@ -536,18 +528,16 @@ def skyline_2d(
     min broadcasts back as each slice's offset.  No single-task
     window, no quadratic dominance join; the staged frame is persisted
     so both branches share one range shuffle (see global_cumsum's
-    determinism note) and the handle rides ``result.
-    _persisted_intermediates`` for ``graph.release_components``.
+    determinism note).
     """
     pts = (
         df.select(F.col(x_col).alias("__x"), F.col(y_col).alias("__y"))
         .filter(F.col("__x").isNotNull() & F.col("__y").isNotNull())
         .distinct()
     )
-    staged = (
+    staged = persist(
         pts.repartitionByRange(partitions, F.col("__x").asc(), F.col("__y").asc())
         .withColumn("__pid", F.spark_partition_id())
-        .persist()
     )
     w_local = (
         Window.partitionBy("__pid")
@@ -561,13 +551,11 @@ def skyline_2d(
         "__pid", F.min("__pmin").over(w_off).alias("__premin")
     )
     prev_min = F.least(F.col("__locmin"), F.col("__premin"))
-    out = (
+    return (
         local.join(F.broadcast(offs), "__pid")
         .filter(prev_min.isNull() | (F.col("__y") < prev_min))
         .select(F.col("__x").alias(x_col), F.col("__y").alias(y_col))
     )
-    out._persisted_intermediates = [staged]
-    return out
 
 
 def seasonal_naive_backtest(

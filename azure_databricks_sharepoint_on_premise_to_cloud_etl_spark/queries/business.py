@@ -12,6 +12,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..scope import checkpoint
 from ..sources.registry import load_table, rebalance, register_temp_views
 
 from .core import (
@@ -763,10 +764,10 @@ def q_rfm_segments_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and range-shuffles the full wide row three times; here each
     # range shuffle moves only (key, metric).  The base aggregate is
     # referenced ~7× (each machine's staged + count paths + the final
-    # join), so it is eagerly localCheckpoint-ed — the
-    # triangle_counts precedent: lineage-cut guarantees ONE orders
-    # scan regardless of cache eviction, released via _extra_ckpts.
-    base = base.localCheckpoint()
+    # join), so it is eagerly checkpointed — the triangle_counts
+    # precedent: lineage-cut guarantees ONE orders scan regardless of
+    # cache eviction.
+    base = checkpoint(base)
     scores = []
     for metric, order, col_name in (
         ("recency_days", F.col("recency_days").desc(), "r_score"),
@@ -797,7 +798,7 @@ def q_rfm_segments_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(F.lit("regular"))
     )
-    out = t3.select(
+    return t3.select(
         "o_custkey",
         "recency_days",
         "frequency",
@@ -807,13 +808,6 @@ def q_rfm_segments_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "m_score",
         seg.alias("segment"),
     )
-    out._persisted_intermediates = [
-        p
-        for t in scores
-        for p in getattr(t, "_persisted_intermediates", [])
-    ]
-    out._extra_ckpts = [base]
-    return out
 
 
 ORACLE_RFM_DISTRIBUTED = """
@@ -856,7 +850,7 @@ def q_sequence_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = rebalance(load_table(spark, sf_dir, "lineitem"))
     keys = li.select(F.col("l_orderkey").alias("k")).distinct()
     ranked = global_rank(keys, [F.col("k").asc()], rank_col="__r")
-    out = (
+    return (
         ranked.withColumn("__grp", F.col("k") - F.col("__r"))
         .groupBy("__grp")
         .agg(
@@ -867,10 +861,6 @@ def q_sequence_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("__grp")
         .select("island_start", "island_end", "n_keys")
     )
-    out._persisted_intermediates = getattr(
-        ranked, "_persisted_intermediates", []
-    )
-    return out
 
 
 ORACLE_SEQUENCE_GAPS = """

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..scope import checkpoint, concurrently
+
 from .core import _stream_events
 from .curation import AUX_ORACLES, AUX_QUERIES
 from .retrieval import STREAMING_PLAN_BUILDERS
@@ -344,56 +346,23 @@ def q_source_health(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # each panel is a source-cardinality table (tens of rows); eager
-    # localCheckpoints materialize every panel exactly once — without
+    # checkpoints materialize every panel exactly once — without
     # them the five-way join re-derives the corpus per reference and
     # the plan audit reads 26 parquet-scan references (the
     # training_shard_pipeline stage-boundary discipline).
     # r13 optimization round: the five corpus-collapsing panels are
-    # INDEPENDENT, so they materialize from a small thread pool
-    # instead of serially — Spark happily runs concurrent jobs inside
-    # one application, and each panel's tail stragglers back-fill the
-    # idle cores the next panel's scan wants (guide §2.6 "overlap
+    # INDEPENDENT, so they materialize concurrently instead of
+    # serially — Spark happily runs concurrent jobs inside one
+    # application, and each panel's tail stragglers back-fill the idle
+    # cores the next panel's scan wants (guide §2.6 "overlap
     # independent jobs"); results are unchanged, only the job overlap
     # is new.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from ..operators.graph import _release_local_checkpoint
-
-    # r13 advice: if one panel's checkpoint job fails, release every
-    # sibling checkpoint that DID materialize (and the KL operator's
-    # internal corpus-grain checkpoint) before re-raising — otherwise
-    # the executor storage leaks for the session.  Explicit futures,
-    # not pool.map: map's iterator drops completed results once any
-    # task raises, making them unreleasable.
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = [
-            pool.submit(lambda f=f: f.localCheckpoint(eager=True))
-            for f in (vol, kl, ks, nov, dup)
-        ]
-        panels = []
-        first_err = None
-        for fu in futs:
-            try:
-                panels.append(fu.result())
-            except BaseException as e:  # noqa: BLE001 — release-then-reraise
-                first_err = first_err or e
-        if first_err is not None:
-            for p in panels:
-                _release_local_checkpoint(p)
-            for _h in getattr(kl_raw, "_extra_ckpts", None) or []:
-                _release_local_checkpoint(_h)
-            raise first_err
-    # the KL operator checkpoints its internal (source × vocab) count
-    # table; the kl panel has fully consumed it — free it now
-    for _h in getattr(kl_raw, "_extra_ckpts", None) or []:
-        _release_local_checkpoint(_h)
+    panels = concurrently(
+        *[lambda f=f: checkpoint(f) for f in (vol, kl, ks, nov, dup)]
+    )
     out = panels[0]
     for f in panels[1:]:
         out = out.join(f, "source")
-    # localCheckpoint blocks are freed via _release_local_checkpoint,
-    # not DataFrame.unpersist — hence _extra_ckpts, not
-    # _persisted_intermediates
-    out._extra_ckpts = panels
     return out
 
 
@@ -605,8 +574,8 @@ def q_diverse_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: both candidate legs collapse the corpus to rank-
     bounded lists before anything joins; fusion and MMR run on
-    N=20 candidates (pair sims are N² = 400 rows, localCheckpointed
-    inside the operator — release via ``release_components``)."""
+    N=20 candidates (pair sims are N² = 400 rows, checkpointed inside
+    the operator)."""
     from ..operators import similarity, text
     from ..operators.similarity import mmr_rerank
     from ..sources.registry import load_table, rebalance
@@ -645,32 +614,10 @@ def q_diverse_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 optimization round: the lexical and semantic legs are
     # independent corpus passes that only meet at the RRF fusion —
     # materialize both rank-bounded lists (≤ _RRF_TOPN rows each)
-    # concurrently from a 2-thread pool (guide §2.6) so the BM25 scan
-    # and the brute-force cosine scan overlap instead of running
-    # serially; the fusion then joins two checkpointed 25-row tables.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from ..operators.graph import _release_local_checkpoint
-
-    # explicit futures + release-on-failure (r13 advice): a failed leg
-    # must not leak its sibling's materialized checkpoint
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [
-            pool.submit(lambda f=f: f.localCheckpoint(eager=True))
-            for f in (lex, sem)
-        ]
-        done = []
-        first_err = None
-        for fu in futs:
-            try:
-                done.append(fu.result())
-            except BaseException as e:  # noqa: BLE001 — release-then-reraise
-                first_err = first_err or e
-        if first_err is not None:
-            for p in done:
-                _release_local_checkpoint(p)
-            raise first_err
-        lex, sem = done
+    # concurrently (guide §2.6) so the BM25 scan and the brute-force
+    # cosine scan overlap instead of running serially; the fusion then
+    # joins two checkpointed 25-row tables.
+    lex, sem = concurrently(lambda: checkpoint(lex), lambda: checkpoint(sem))
     fused = lex.join(sem, "doc_id", "full_outer").select(
         "doc_id",
         F.round(
@@ -699,16 +646,10 @@ def q_diverse_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("rrf").alias("rel"),
         )
     )
-    result = mmr_rerank(
+    return mmr_rerank(
         cands, "query_id", "cand_id", "embedding", "rel",
         k=_DIV_K, lam=_MMR_LAM,
     )
-    # chain the leg checkpoints onto the MMR result's release hook so
-    # release_components frees them with the operator's own blocks
-    result._extra_ckpts = (
-        getattr(result, "_extra_ckpts", None) or []
-    ) + [lex, sem]
-    return result
 
 
 def _diverse_retrieval_oracle() -> str:
@@ -1177,7 +1118,7 @@ def q_crawl_refresh_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the corpus appears in exactly three row-grain
     passes — the CDC full-outer key join (delta-collapsed
-    immediately and localCheckpointed: ops/health/increment all
+    immediately and checkpointed: ops/health/increment all
     branch off the materialized delta), the standing-side digest/band
     artifact derivation inside incremental_dedup (lazy, column-pruned
     per branch), and the old-volume aggregate; everything downstream
@@ -1198,10 +1139,10 @@ def q_crawl_refresh_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     old, new = _crawl_refresh_frames(spark, sf_dir)
     # 1. CDC: ONE full-outer key join; the feed is delta-sized and is
     # consumed by three branches (op mix, churn, increment) — eager
-    # localCheckpoint materializes the join exactly once
-    feed = scd.snapshot_diff(
-        old, new, "doc_id", ["source", "text"]
-    ).localCheckpoint(eager=True)
+    # checkpoint materializes the join exactly once
+    feed = checkpoint(
+        scd.snapshot_diff(old, new, "doc_id", ["source", "text"])
+    )
     ops = feed.agg(
         F.sum((F.col("change_type") == "insert").cast("long")).alias(
             "n_inserts"
@@ -1238,35 +1179,26 @@ def q_crawl_refresh_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 3. the gated increment (NEW text), judged against the standing
     # corpus; increment is re-read by the novel-survivor join below,
     # so checkpoint the (delta-sized) frame once
-    increment = (
+    increment = checkpoint(
         feed.filter(F.col("change_type").isin("insert", "update"))
         .join(F.broadcast(healthy), "source", "left_semi")
         .select("doc_id", "source", "text")
-        .localCheckpoint(eager=True)
     )
     # statuses is increment-sized and feeds TWO branches (the status
-    # mix and the novel-survivor semi-join); eager localCheckpoint
+    # mix and the novel-survivor semi-join); eager checkpoint
     # materializes the whole sig/band/verify pipeline ONCE — without
     # it both branches re-derive the corpus-side artifacts (the plan
     # audit reads the dedup's 12 scan references twice)
-    raw_statuses = dedup.incremental_dedup(
-        increment,
-        old,
-        k=_MINHASH_K,
-        num_hashes=_MINHASH_N,
-        bands=_MINHASH_BANDS,
-        threshold=_INC_THRESHOLD,
+    statuses = checkpoint(
+        dedup.incremental_dedup(
+            increment,
+            old,
+            k=_MINHASH_K,
+            num_hashes=_MINHASH_N,
+            bands=_MINHASH_BANDS,
+            threshold=_INC_THRESHOLD,
+        )
     )
-    statuses = raw_statuses.localCheckpoint(eager=True)
-    # the eager checkpoint has fully consumed the dedup result, so the
-    # operator's internal state — the persisted increment artifact
-    # frame AND (r14) the reference-artifact + candidate checkpoints —
-    # can be freed NOW: localCheckpoint returns a new DataFrame
-    # without the release hooks, so without this they would leak per
-    # call (r13 review)
-    from ..operators.graph import release_components as _release_comps
-
-    _release_comps(raw_statuses)
     dd = statuses.agg(
         F.sum((F.col("status") == "exact_dup").cast("long")).alias(
             "n_exact_dup"
@@ -1303,7 +1235,7 @@ def q_crawl_refresh_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     summary = (
         ops.crossJoin(n_healthy).crossJoin(dd)
     )
-    out = (
+    return (
         packed.groupBy("shard", "pack_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -1314,8 +1246,6 @@ def q_crawl_refresh_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .crossJoin(F.broadcast(summary))
     )
-    out._extra_ckpts = [feed, increment, statuses]
-    return out
 
 
 def _crawl_refresh_oracle() -> str:

@@ -31,6 +31,7 @@ from ..operators import (
     text,
     windows,
 )
+from ..scope import persist
 from ..sources.registry import load_table, rebalance, register_temp_views
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -104,8 +105,8 @@ GROUP BY f.c_nationkey, f.o_orderdate
 # after del + gc.collect()), so the weak machinery and the
 # per-generation finalize below are best-effort backstops — a process
 # that churns sessions must call release_flagship_cache(session)
-# explicitly (mirroring graph.release_components), or the JVM-side
-# cached fact lives until the SparkContext stops.
+# explicitly, or the JVM-side cached fact lives until the SparkContext
+# stops.
 import weakref
 
 # session -> one-element mutable holder [current jdf or None].  The
@@ -478,7 +479,7 @@ def q_hierarchical_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one scan of facts, one join) — proven row-equivalent to the
     union-of-3-joins form in tests/test_operators.py; facts cached
     since the dim levels derive from it 3 ways."""
-    facts = _location_facts(spark, sf_dir).cache()
+    facts = persist(_location_facts(spark, sf_dir))
     exact = facts.filter(F.col("c_custkey") % 11 == 0).select(
         F.col("location").alias("zone_loc"), F.lit("exact").alias("zone_lvl")
     )
@@ -1753,10 +1754,9 @@ def _stream_events(
     ts -> TIMESTAMP and cast window bounds back when ts_was_ntz."""
     import os
 
-    from ..sources.registry import decode_event_ts
+    from ..sources.registry import decode_event_ts, pin_read_confs
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    pin_read_confs(spark)
     raw_schema = spark.read.parquet(
         os.path.join(sf_dir, "events.parquet")
     ).schema
@@ -1979,7 +1979,7 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The result is backed by the CC iteration's final checkpoint
     generation; long-lived sessions calling this repeatedly should
-    ``graph.release_components(df)`` after consuming each result.
+    consume each result inside a ``with Scope():``.
     """
     from ..operators.graph import connected_components
 
@@ -2717,12 +2717,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         [F.col("quality").desc(), F.col("doc_id").asc()],
         1,
     )
-    out = best.select("component", F.col("doc_id").alias("kept_doc_id"), "quality")
-    # propagate the CC release hook to the query's output frame so
-    # graph.release_components(result) frees the final generation
-    out._cc_final_generation = comps._cc_final_generation
-    out._cc_checkpoint_dir = comps._cc_checkpoint_dir
-    return out
+    return best.select("component", F.col("doc_id").alias("kept_doc_id"), "quality")
 
 
 def _keep_best_oracle() -> str:

@@ -12,6 +12,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..scope import checkpoint, concurrently, persist, release
 from ..sources.registry import load_table, rebalance, register_temp_views
 
 from .core import (
@@ -614,16 +615,12 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage's x10 rehearsal cost dropped ~2× and its scaling exponent
     normalized once the double-compute was cut).  The cached frame is
     16 bytes/doc — at 100 TB corpus scale it is the SCORES that
-    persist, never the text.  The handle rides the result as
-    ``_persisted_intermediates`` (released by
-    ``graph.release_components``)."""
+    persist, never the text; the caller's scope unpersists it."""
     d = rebalance(load_table(spark, sf_dir, "documents"))
     kept = dedup.exact_dedup(d)
     en = kept.filter(F.col("lang") == F.lit("en"))
-    scored = (
-        text.quality_score(en.select("doc_id", "text"))
-        .select("doc_id", "quality")
-        .persist()
+    scored = persist(
+        text.quality_score(en.select("doc_id", "text")).select("doc_id", "quality")
     )
     thr = scored.agg(
         F.round(
@@ -636,13 +633,11 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     flags = text.contamination_flags(
         d, d.filter(F.col("doc_id") < _CONTAM_EVAL_IDS), k=_PIPE_CONTAM_K
     )
-    out = (
+    return (
         gated.join(flags, "doc_id")
         .filter(~F.col("contaminated"))
         .select("doc_id", "quality")
     )
-    out._persisted_intermediates = [scored]
-    return out
 
 
 def _curation_pipeline_oracle() -> str:
@@ -2825,24 +2820,23 @@ def q_training_shard_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         portable_hash64(dedup.normalized_text("text")).alias("content_hash"),
         F.length(dedup.normalized_text("text")).alias("content_len"),
     ).distinct()
-    fresh_ids = (
+    fresh_ids = persist(
         canon.withColumn(
             "content_hash", portable_hash64(dedup.normalized_text("text"))
         )
         .withColumn("content_len", F.length(dedup.normalized_text("text")))
         .join(ref_digests, ["content_hash", "content_len"], "left_anti")
         .select("doc_id")
-        .persist()
     )
     fresh = d.join(fresh_ids, "doc_id", "left_semi")
 
     # 3. quality gate at the batch 40th percentile; (doc_id, quality)
     # persisted at the branch point — the threshold aggregate and the
     # gate filter both read it
-    scored = (
-        text.quality_score(fresh.select("doc_id", "text"))
-        .select("doc_id", "quality")
-        .persist()
+    scored = persist(
+        text.quality_score(fresh.select("doc_id", "text")).select(
+            "doc_id", "quality"
+        )
     )
     thr = scored.agg(
         F.round(
@@ -2854,14 +2848,14 @@ def q_training_shard_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # The curated batch collapses to (doc_id, source, tokens) —
     # ~20 bytes/doc, the text is DONE after tokenization — and is
-    # CHECKPOINTED here (eager localCheckpoint): mixing branches off
+    # CHECKPOINTED here (eager checkpoint): mixing branches off
     # it 3 ways and packing once more, and a real 100 TB shard build
     # writes survivors between curation and packing anyway, so the
     # stage boundary is materialized rather than recomputed 4×.  The
     # shard key divides the ingest-split modulus out of doc_id first:
     # the batch is doc_id % 4 == 0, so sharding on raw doc_id % 8
     # would populate only shards {0, 4}.
-    curated = (
+    curated = checkpoint(
         fresh.join(scored, "doc_id")
         .crossJoin(F.broadcast(thr))
         .filter(F.col("quality") >= F.col("qthr"))
@@ -2876,11 +2870,10 @@ def q_training_shard_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("shard"),
             F.size(word_tokens("text")).alias("tokens"),
         )
-        .localCheckpoint(eager=True)
     )
     # upstream intermediates are fully consumed by the checkpoint
-    fresh_ids.unpersist()
-    scored.unpersist()
+    release(fresh_ids)
+    release(scored)
 
     # 4. temperature-scaled domain mixing over the checkpointed frame
     mixed = sampling.temperature_mix(
@@ -2899,18 +2892,13 @@ def q_training_shard_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         budget=_PACK_BUDGET,
         shard_col="shard",
     )
-    out = packed.groupBy("shard", "pack_id").agg(
+    return packed.groupBy("shard", "pack_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("tokens").cast("long").alias("pack_tokens"),
         F.countDistinct("source").cast("long").alias("n_sources"),
         F.min("doc_id").cast("long").alias("first_doc"),
         F.max("doc_id").cast("long").alias("last_doc"),
     )
-    # localCheckpoints are NOT freed by DataFrame.unpersist() — they
-    # ride _extra_ckpts so release_components goes through
-    # _release_local_checkpoint (the graph-operator convention)
-    out._extra_ckpts = [curated]
-    return out
 
 
 def _training_shard_oracle() -> str:
@@ -3030,11 +3018,10 @@ def q_eval_safe_split_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: signatures and banding are narrow HOFs + one
     band-keyed equi-join; CC label propagation is the checkpointed
-    iterative operator (its final generation rides the result for
-    ``release_components``); eval grams broadcast; the split is a pure
+    iterative operator; eval grams broadcast; the split is a pure
     expression on the component id; the manifest is one hash
     aggregate.  The corpus text never shuffles."""
-    from ..operators.graph import connected_components, release_components
+    from ..operators.graph import connected_components
 
     d = rebalance(load_table(spark, sf_dir, "documents"))
     sigs = dedup.minhash_signatures(d, k=_MINHASH_K, num_hashes=_MINHASH_N)
@@ -3050,35 +3037,12 @@ def q_eval_safe_split_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14 (guide §2.6): the contamination gram pass (~1 s warm at
     # sf0.1) is independent of the LSH→CC chain (~2 s of sequential
     # driver-blocked rounds) and they only meet at the quarantine
-    # join — materialize the contaminated-doc id list from a
-    # background thread so its one job back-fills cores the CC
-    # rounds leave idle.  Submitted BEFORE the CC loop starts so it
-    # plans while AQE is still on (the CC fast-round bypass briefly
-    # toggles the session conf).  Release-on-failure mirrors the
-    # source_health pool discipline.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from ..operators.graph import _release_local_checkpoint
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut = pool.submit(
-            lambda: contam.filter(F.col("contaminated"))
-            .select("doc_id")
-            .localCheckpoint(eager=True)
-        )
-        try:
-            comps = connected_components(pairs, d.select("doc_id"))
-        except BaseException:
-            try:
-                _release_local_checkpoint(fut.result())
-            except BaseException:
-                pass
-            raise
-        try:
-            contam_ids = fut.result()
-        except BaseException:
-            release_components(comps)
-            raise
+    # join — materialize the contaminated-doc id list concurrently
+    # so its one job back-fills cores the CC rounds leave idle.
+    contam_ids, comps = concurrently(
+        lambda: checkpoint(contam.filter(F.col("contaminated")).select("doc_id")),
+        lambda: connected_components(pairs, d.select("doc_id")),
+    )
     bad = (
         comps.join(contam_ids, "doc_id", "left_semi")
         .select("component")
@@ -3091,7 +3055,7 @@ def q_eval_safe_split_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = text.token_counts(d.select("doc_id", "source", "text")).select(
         "doc_id", "source", "ws_tokens"
     )
-    out = (
+    return (
         split.join(toks, "doc_id")
         .groupBy("split", "source")
         .agg(
@@ -3100,12 +3064,6 @@ def q_eval_safe_split_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("ws_tokens").cast("long").alias("n_tokens"),
         )
     )
-    # propagate the CC release hook (the q_dedup_keep_best convention)
-    # plus the overlapped contamination checkpoint
-    out._cc_final_generation = comps._cc_final_generation
-    out._cc_checkpoint_dir = comps._cc_checkpoint_dir
-    out._extra_ckpts = [contam_ids]
-    return out
 
 
 def _eval_safe_split_oracle() -> str:

@@ -268,10 +268,6 @@ def q_dedup_canonical_by_size(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_docs",
         F.col("n_chars").alias("kept_chars"),
     )
-    # propagate the CC release handle so bench/long-lived sessions can
-    # free the final checkpointed generation (release_components)
-    out._cc_final_generation = comp._cc_final_generation
-    out._cc_checkpoint_dir = comp._cc_checkpoint_dir
     return out
 
 
@@ -777,7 +773,7 @@ def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixpoint over the id-level pair set (dedup.fuzzy_name_pairs'
     contract), pinning the collapsed form against the expanded one."""
     from ..functions import normalize_text
-    from ..operators.graph import connected_components, release_components
+    from ..operators.graph import connected_components
 
     p = rebalance(load_table(spark, sf_dir, "part")).select("p_partkey", "p_name")
     # Value-collapsed closure: blocking, the banded levenshtein verify
@@ -843,8 +839,6 @@ def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             "canonical_name",
         )
     )
-    out._cc_final_generation = getattr(comp, "_cc_final_generation", None)
-    out._cc_checkpoint_dir = getattr(comp, "_cc_checkpoint_dir", None)
     return out
 
 
@@ -2807,7 +2801,6 @@ def q_spatial_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("n_members") >= 2)
     )
-    out._cc_source = comp  # released by the harness if it knows to
     return out
 
 
@@ -2904,11 +2897,6 @@ def q_entity_resolution_sn(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p_partkey",
         F.col("component").alias("entity_id"),
         "canonical_name",
-    )
-    out._cc_final_generation = getattr(comp, "_cc_final_generation", None)
-    out._cc_checkpoint_dir = getattr(comp, "_cc_checkpoint_dir", None)
-    out._persisted_intermediates = getattr(
-        cand, "_persisted_intermediates", None
     )
     return out
 

@@ -2472,16 +2472,12 @@ def q_quality_deciles_distributed(
         tile_col="decile",
         pct_col="__pct",
     )
-    res = out.select(
+    return out.select(
         "doc_id",
         "quality",
         "decile",
         F.round("__pct", 6).alias("pct_rank"),
     )
-    # propagate the staged-frame cache handle so the bench/driver's
-    # release_components call frees it (select() builds a new frame)
-    res._persisted_intermediates = out._persisted_intermediates
-    return res
 
 
 def q_roc_auc_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -12,7 +12,12 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.registry import load_table, rebalance, register_temp_views
+from ..sources.registry import (
+    load_table,
+    pin_read_confs,
+    rebalance,
+    register_temp_views,
+)
 
 from .business import (
     _ABC_A_CUT,
@@ -64,7 +69,7 @@ def _stream_plan_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     (state = four scalars per key)."""
     from ..streaming.stateful import streaming_page_hinkley
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    pin_read_confs(spark)
     src = _ph_series_stream_dir(spark, sf_dir)
     stream = spark.readStream.schema(
         "series_key STRING, t TIMESTAMP, x DOUBLE"

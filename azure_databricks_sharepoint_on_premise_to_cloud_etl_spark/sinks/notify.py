@@ -32,9 +32,10 @@ class CapturingMailer:
 
 
 def smtp_mailer(host: str, port: int = 25) -> Callable[[EmailMessage], None]:
-    """Real SMTP sender (import-guarded; never used in tests)."""
+    """Real SMTP sender: the production transport for the failure and
+    expiration alerts (``smtplib`` is imported per send)."""
 
-    def send(msg: EmailMessage) -> None:  # pragma: no cover - needs a server
+    def send(msg: EmailMessage) -> None:
         import smtplib
         from email.mime.multipart import MIMEMultipart
         from email.mime.text import MIMEText

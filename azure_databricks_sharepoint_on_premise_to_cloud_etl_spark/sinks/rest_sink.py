@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.batching import BatchReport, run_batched_with_retry
+from ..scope import checkpoint
 
 # transport(url, json_body) -> (status_code, response_text)
 Transport = Callable[[str, str], tuple[int, str]]
@@ -141,7 +142,7 @@ def post_rows_distributed(
     ledger = df.mapInPandas(
         run, schema="n_posted LONG, failed_row STRING, error STRING"
     )
-    return ledger.localCheckpoint(eager=True)
+    return checkpoint(ledger)
 
 
 def post_then_audit_distributed(

@@ -13,7 +13,6 @@ oracle tests need (SURVEY 7.5 risk 5): the clock and user are
 from __future__ import annotations
 
 import datetime as _dt
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -92,12 +91,6 @@ def export_latest_snapshot(
     ).write.mode("overwrite").parquet(out_path)
 
 
-def overwrite_table(df: DataFrame, path: str) -> None:
-    """Plain overwrite (reference mode='overwrite' path,
-    code/ukg_stf_matrx.py:169-179)."""
-    df.write.mode("overwrite").parquet(path)
-
-
 def read_table(
     spark: SparkSession, path: str, merge_schema: bool = False
 ) -> DataFrame:
@@ -108,9 +101,3 @@ def read_table(
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
     return reader.parquet(path)
-
-
-def table_exists(spark: SparkSession, path: str) -> bool:
-    return os.path.isdir(path) and any(
-        f.endswith(".parquet") or f == "_SUCCESS" for f in os.listdir(path)
-    )

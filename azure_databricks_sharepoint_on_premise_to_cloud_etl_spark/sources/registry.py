@@ -27,22 +27,32 @@ TPCH_TABLES = (
 )
 
 
+def pin_read_confs(spark: SparkSession) -> None:
+    """Pin the two session confs every read of these tables relies on.
+
+    They are set at runtime so the engine works under ANY
+    caller-provided SparkSession, not just sessions from session.py.  This is the package's only runtime conf
+    write:
+
+    - ``spark.sql.legacy.parquet.nanosAsLong``: the events table stores
+      parquet TIMESTAMP(NANOS), which vanilla Spark rejects; as a long
+      of nanos it is decoded by :func:`decode_event_ts`;
+    - ``spark.sql.session.timeZone=UTC``: a non-UTC session shifts
+      every collected timestamp relative to the (timezone-naive)
+      DuckDB oracle.
+    """
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one table (S3 analog). Lazy; no action triggered.
 
-    The events table stores parquet TIMESTAMP(NANOS); with
-    ``spark.sql.legacy.parquet.nanosAsLong=true`` it surfaces as a long
-    of nanos, converted here to a microsecond TimestampType (floor
-    division — matches DuckDB's ns->us truncation).  The conf is set at
-    runtime so the engine works under ANY caller-provided SparkSession
-    (the driver builds its own), not just sessions from session.py.
+    Pins the read confs (:func:`pin_read_confs`); the events table's
+    nanos column is converted to a microsecond TimestampType (floor
+    division — matches DuckDB's ns->us truncation).
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Pin the session timezone for every consumer of these tables: the
-    # caller may hand us a session without session.py's UTC default,
-    # and a non-UTC session shifts every collected timestamp relative
-    # to the (timezone-naive) DuckDB oracle.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    pin_read_confs(spark)
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         df = decode_event_ts(df)
@@ -86,11 +96,6 @@ def rebalance(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     if width < target:
         return df.repartition(target)
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Scan every testdata table into a dict keyed by name."""
-    return {t: load_table(spark, sf_dir, t) for t in TPCH_TABLES}
 
 
 def register_temp_views(

@@ -493,7 +493,7 @@ def main() -> None:
         ).collect()[0]
         return row["n"]
 
-    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.graph import release_components
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.scope import Scope
 
     # Median-of-REPS warm timing: round 4 showed untouched queries
     # swinging up to 2.1× between rounds with a single warm run — the
@@ -608,20 +608,20 @@ def main() -> None:
         # running_sum, time_reanchor, simhash) live in AUX_QUERIES
         fn = q.QUERIES.get(name) or q.AUX_QUERIES[name]
         try:
+            # each run's checkpoints and persists are freed as its
+            # scope exits, outside the timed region
             t0 = time.time()
-            df = fn(spark, sf_dir)
-            materialize(df)
-            cold = time.time() - t0
-            release_components(df)  # free CC final generation (no-op otherwise)
+            with Scope():
+                materialize(fn(spark, sf_dir))
+                cold = time.time() - t0
             runs: list[float] = []
             n = 0
             target = volatile_reps.get(name, reps)
             while len(runs) < target:
                 t0 = time.time()
-                df = fn(spark, sf_dir)
-                n = materialize(df)
-                runs.append(time.time() - t0)
-                release_components(df)
+                with Scope():
+                    n = materialize(fn(spark, sf_dir))
+                    runs.append(time.time() - t0)
                 # adaptive floor: once the row is known-cheap, widen
                 # the rep budget so the median can absorb 2 bad reps
                 # trigger on the MIN, not the median: a cheap row

@@ -20,6 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession  # noqa: E402
 
 from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark import queries as q  # noqa: E402
+from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.scope import Scope  # noqa: E402
 
 
 def main() -> None:
@@ -44,18 +45,19 @@ def main() -> None:
     print("== ops: is the lineitem join key skewed?")
     q.AUX_QUERIES["key_skew_profile"](spark, sf_dir).show(truncate=False)
 
+    # Queries that checkpoint or persist intermediates are consumed
+    # inside a Scope, which frees that storage when the block exits.
     print("== curation: end-to-end pipeline survivors")
-    kept = q.AUX_QUERIES["curation_pipeline"](spark, sf_dir)
-    print(f"   {kept.count()} documents survive the full curation pass\n")
+    with Scope():
+        kept = q.AUX_QUERIES["curation_pipeline"](spark, sf_dir)
+        print(f"   {kept.count()} documents survive the full curation pass\n")
 
     print("== dedup: near-dup clusters (top 5 by size)")
-    comps = q.QUERIES["dedup_components"](spark, sf_dir)
-    comps.groupBy("component").count().orderBy(
-        "count", ascending=False
-    ).show(5)
-    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.graph import release_components
-
-    release_components(comps)
+    with Scope():
+        comps = q.QUERIES["dedup_components"](spark, sf_dir)
+        comps.groupBy("component").count().orderBy(
+            "count", ascending=False
+        ).show(5)
 
     print("== retrieval: hybrid BM25 + embedding fusion (top 10)")
     q.AUX_QUERIES["hybrid_retrieval"](spark, sf_dir).show(truncate=False)

@@ -40,7 +40,18 @@ SLOW_MODULES = {
 
 
 def pytest_collection_modifyitems(config, items):
+    # a slow module named on the command line is not marked, so
+    # `pytest tests/test_aux_queries.py` runs its cases instead of
+    # deselecting all of them; `pytest tests/` still skips the tier
+    named = {
+        os.path.splitext(os.path.basename(a.split("::")[0]))[0]
+        for a in config.args
+    }
     for item in items:
         mod = getattr(item, "module", None)
-        if mod is not None and mod.__name__ in SLOW_MODULES:
+        if (
+            mod is not None
+            and mod.__name__ in SLOW_MODULES
+            and mod.__name__ not in named
+        ):
             item.add_marker(pytest.mark.slow)

@@ -61,18 +61,16 @@ def duck():
 
 @pytest.mark.parametrize("name", sorted(q.AUX_ORACLES))
 def test_aux_query_matches_oracle(spark, duck, name):
-    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.graph import (
-        release_components,
-    )
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.scope import Scope
 
-    sdf = q.AUX_QUERIES[name](spark, SF_DIR)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
     # free operator-persisted intermediates/checkpoints and cached
     # plans NOW: 80+ parameterized runs in one session would otherwise
     # accumulate storage, and leftover cache entries change how later
     # tests' plans print (the plan-audit suite-order flake)
-    release_components(sdf)
+    with Scope():
+        sdf = q.AUX_QUERIES[name](spark, SF_DIR)
+        scols = sdf.columns
+        srows = [tuple(r) for r in sdf.collect()]
     spark.catalog.clearCache()
 
     res = duck.execute(q.AUX_ORACLES[name])

@@ -18,13 +18,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.graph import (
-    release_components,
-)
 from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.queries.composed import (
     _CRL_FRESH_OFF,
     q_crawl_refresh_loop,
 )
+from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.scope import Scope
 
 LONG = " ".join(f"w{i}token" for i in range(80))
 
@@ -53,9 +51,9 @@ def test_stage_semantics_on_planted_fixture(spark, tmp_path):
     for i in (4, 24, 44, 64):
         rows.append((i, "bad", f"{LONG} baddoc{i}", "en"))
     sf = _write_docs(spark, tmp_path, rows)
-    out = q_crawl_refresh_loop(spark, sf)
-    got = out.collect()
-    release_components(out)
+    with Scope():
+        out = q_crawl_refresh_loop(spark, sf)
+        got = out.collect()
     assert got, "manifest is empty — the mix gate dropped every novel doc"
     s = got[0]
     # CDC op mix: 4 bad + (4 rewritten + 1 changed) good = 9 updates;
@@ -82,9 +80,9 @@ def test_quarantined_source_pays_no_dedup_cost(spark, tmp_path):
     rows = [(i, "bad", f"{LONG} doc{i}", "en") for i in (4, 24, 44, 64)]
     rows += [(j, "bad2", f"{LONG} other{j}", "en") for j in (9, 29, 49, 69)]
     sf = _write_docs(spark, tmp_path, rows)
-    out = q_crawl_refresh_loop(spark, sf)
-    n = out.count()
-    release_components(out)
+    with Scope():
+        out = q_crawl_refresh_loop(spark, sf)
+        n = out.count()
     assert n == 0
 
 
@@ -96,9 +94,9 @@ def test_rewritten_page_survives_changed_page_skipped(spark, tmp_path):
     rows.append((2, "s", f"{LONG} rewrite-target", "en"))
     rows.append((3, "s", f"{LONG} light-edit-target", "en"))
     sf = _write_docs(spark, tmp_path, rows)
-    out = q_crawl_refresh_loop(spark, sf)
-    got = out.collect()
-    release_components(out)
+    with Scope():
+        out = q_crawl_refresh_loop(spark, sf)
+        got = out.collect()
     packed_ids = set()
     for r in got:
         packed_ids.add(r["first_doc"])

@@ -63,51 +63,3 @@ def test_fetch_distributed_maps_partitions(spark):
     fetched = sorted(q for r in rows for q in r["fetched"])
     assert fetched == sorted(f"org/q{i}" for i in range(20))
     assert all(len(r["fetched"]) <= 3 for r in rows)
-
-
-def test_ckpt_keyed_preserves_partitioning_and_ordering(spark):
-    """r13 optimization helper: _ckpt_keyed must yield a LogicalRDD
-    that RETAINS hashpartitioning(keys) + ordering, so a downstream
-    equi-join on the key needs no Exchange and no Sort on that side
-    (under AQE a plain localCheckpoint decays to UnknownPartitioning).
-    Values must be unchanged."""
-    from pyspark.sql import functions as F
-
-    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.graph import (
-        _ckpt_keyed,
-        _release_local_checkpoint,
-    )
-
-    base = spark.range(10_000).select(
-        (F.col("id") % 97).alias("u"), (F.col("id") % 7).alias("v")
-    )
-    ck = _ckpt_keyed(base, "u")
-    try:
-        # plan shape: in a forced sort-merge join on u, ONLY the other
-        # side needs an Exchange — the checkpointed side's retained
-        # partitioning and ordering are consumed as-is (a plain
-        # localCheckpoint would put Exchange+Sort above both sides)
-        other = spark.range(97).select(
-            F.col("id").alias("u"), F.lit(1.0).alias("w")
-        )
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            plan = ck.join(
-                other, "u"
-            )._jdf.queryExecution().executedPlan().toString()
-            plain = base.localCheckpoint(eager=True)
-            plan_plain = plain.join(
-                other, "u"
-            )._jdf.queryExecution().executedPlan().toString()
-        finally:
-            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        assert plan.count("Exchange") == 1, plan
-        assert plan_plain.count("Exchange") == 2, plan_plain
-        _release_local_checkpoint(plain)
-        # values unchanged
-        assert ck.count() == 10_000
-        assert ck.agg(F.sum("u")).collect()[0][0] == base.agg(
-            F.sum("u")
-        ).collect()[0][0]
-    finally:
-        _release_local_checkpoint(ck)

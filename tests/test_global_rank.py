@@ -53,13 +53,13 @@ def test_global_cumsum_matches_window(spark):
 
 def test_global_cumsum_releases_staged_cache(spark):
     """The staged (range-partitioned, pid-stamped) frame is persisted
-    for determinism; the handle must ride the result through every
-    wrapper (.drop in global_rank, the tile select in global_ntile_pct)
-    so release_components() actually unpersists it — Spark's cache
-    manager never releases on GC."""
-    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.graph import (
-        release_components,
-    )
+    for determinism; behind every wrapper (.drop in global_rank, the
+    tile select in global_ntile_pct) the enclosing Scope must actually
+    unpersist it — Spark's cache manager never releases on GC."""
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.scope import Scope
+
+    def stored() -> int:
+        return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
 
     df = _synthetic(spark, n=200)
     order = [F.col("v").asc(), F.col("id").asc()]
@@ -68,12 +68,12 @@ def test_global_cumsum_releases_staged_cache(spark):
         lambda: windows.global_rank(df, order, partitions=4),
         lambda: windows.global_ntile_pct(df, order, 4, partitions=4),
     ):
-        before = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
-        out = fn()
-        out.collect()
-        assert release_components(out) is True
-        after = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
-        assert after <= before
+        before = stored()
+        with Scope():
+            out = fn()
+            out.collect()
+            assert stored() > before  # the staged frame is cached
+        assert stored() <= before
 
 
 def test_global_rank_matches_row_number(spark):

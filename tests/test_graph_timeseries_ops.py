@@ -20,9 +20,9 @@ from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.funnels
 from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.graph import (
     bfs_distances,
     k_core,
-    release_components,
 )
 from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.windows import ewma_smooth
+from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.scope import Scope
 
 
 # ---------------------------------------------------------------- k-core
@@ -36,9 +36,9 @@ def test_k_core_cascade_peels_chain_keeps_clique(spark):
     k4 = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
     tail = [(4, 5), (5, 6), (6, 7)]
     edges = spark.createDataFrame(k4 + tail, ["src", "dst"])
-    out = k_core(edges, k=3)
-    got = {r["node"]: r["core_deg"] for r in out.collect()}
-    release_components(out)
+    with Scope():
+        out = k_core(edges, k=3)
+        got = {r["node"]: r["core_deg"] for r in out.collect()}
     assert got == {1: 3, 2: 3, 3: 3, 4: 3}
 
 
@@ -47,9 +47,9 @@ def test_k_core_empty_core_and_messy_input(spark):
     must not create one (canonicalization contract)."""
     star = [(1, 2), (2, 1), (1, 3), (1, 4), (1, 1)]
     edges = spark.createDataFrame(star, ["src", "dst"])
-    out = k_core(edges, k=2)
-    rows = out.collect()
-    release_components(out)
+    with Scope():
+        out = k_core(edges, k=2)
+        rows = out.collect()
     assert rows == []
     assert out.columns == ["node", "core_deg"]
 
@@ -73,9 +73,9 @@ def test_bfs_distances_path_and_hop_cap(spark):
     path = [(i, i + 1) for i in range(1, 6)]
     edges = spark.createDataFrame(path, ["src", "dst"])
     seeds = spark.createDataFrame([(1,)], ["node"])
-    out = bfs_distances(edges, seeds, max_hops=4)
-    got = {r["node"]: r["hops"] for r in out.collect()}
-    release_components(out)
+    with Scope():
+        out = bfs_distances(edges, seeds, max_hops=4)
+        got = {r["node"]: r["hops"] for r in out.collect()}
     assert got == {1: 0, 2: 1, 3: 2, 4: 3, 5: 4}
 
 
@@ -85,9 +85,9 @@ def test_bfs_distances_multi_source_min_and_unreachable(spark):
     path = [(i, i + 1) for i in range(1, 6)] + [(100, 101)]
     edges = spark.createDataFrame(path, ["src", "dst"])
     seeds = spark.createDataFrame([(1,), (6,)], ["node"])
-    out = bfs_distances(edges, seeds, max_hops=4)
-    got = {r["node"]: r["hops"] for r in out.collect()}
-    release_components(out)
+    with Scope():
+        out = bfs_distances(edges, seeds, max_hops=4)
+        got = {r["node"]: r["hops"] for r in out.collect()}
     assert got == {1: 0, 6: 0, 2: 1, 5: 1, 3: 2, 4: 2}
 
 
@@ -214,14 +214,14 @@ def test_shortest_path_prefers_cheap_two_hop_over_heavy_direct(spark):
         [(1, 2, 2), (2, 3, 3), (1, 3, 10)], ["src", "dst", "weight"]
     )
     seeds = spark.createDataFrame([(1,)], ["node"])
-    out = shortest_path_costs(edges, seeds, max_hops=4)
-    got = {r["node"]: r["cost"] for r in out.collect()}
-    release_components(out)
+    with Scope():
+        out = shortest_path_costs(edges, seeds, max_hops=4)
+        got = {r["node"]: r["cost"] for r in out.collect()}
     assert got == {1: 0, 2: 2, 3: 5}
 
-    out1 = shortest_path_costs(edges, seeds, max_hops=1)
-    got1 = {r["node"]: r["cost"] for r in out1.collect()}
-    release_components(out1)
+    with Scope():
+        out1 = shortest_path_costs(edges, seeds, max_hops=1)
+        got1 = {r["node"]: r["cost"] for r in out1.collect()}
     assert got1 == {1: 0, 2: 2, 3: 10}
 
 
@@ -236,9 +236,9 @@ def test_shortest_path_multi_source_and_directedness(spark):
         [(1, 2, 5), (9, 1, 1), (6, 2, 1)], ["src", "dst", "weight"]
     )
     seeds = spark.createDataFrame([(1,), (6,)], ["node"])
-    out = shortest_path_costs(edges, seeds, max_hops=3)
-    got = {r["node"]: r["cost"] for r in out.collect()}
-    release_components(out)
+    with Scope():
+        out = shortest_path_costs(edges, seeds, max_hops=3)
+        got = {r["node"]: r["cost"] for r in out.collect()}
     # node 2: min(5 via 1, 1 via 6) = 1; node 9 unreachable (edge points in)
     assert got == {1: 0, 6: 0, 2: 1}
 
@@ -261,9 +261,9 @@ def test_label_spreading_plurality_and_tie_break(spark):
     seeds = spark.createDataFrame(
         [(1, 10), (2, 10), (3, 20)], ["node", "label"]
     )
-    out = label_spreading(edges, seeds, rounds=1)
-    got = {r["node"]: r["label"] for r in out.collect()}
-    release_components(out)
+    with Scope():
+        out = label_spreading(edges, seeds, rounds=1)
+        got = {r["node"]: r["label"] for r in out.collect()}
     # seed 3 keeps B=20 though both its neighbors (1, 5-unlabeled) vote A
     assert got == {1: 10, 2: 10, 3: 20, 4: 10, 5: 10}
 
@@ -280,12 +280,12 @@ def test_label_spreading_round_bounded_reach(spark):
         und + [(b, a) for a, b in und], ["src", "dst"]
     )
     seeds = spark.createDataFrame([(1, 7)], ["node", "label"])
-    out1 = label_spreading(edges, seeds, rounds=1)
-    got1 = {r["node"] for r in out1.collect()}
-    release_components(out1)
-    out3 = label_spreading(edges, seeds, rounds=3)
-    got3 = {r["node"]: r["label"] for r in out3.collect()}
-    release_components(out3)
+    with Scope():
+        out1 = label_spreading(edges, seeds, rounds=1)
+        got1 = {r["node"] for r in out1.collect()}
+    with Scope():
+        out3 = label_spreading(edges, seeds, rounds=3)
+        got3 = {r["node"]: r["label"] for r in out3.collect()}
     assert got1 == {1, 2}
     assert got3 == {1: 7, 2: 7, 3: 7, 4: 7}
 
@@ -354,9 +354,9 @@ def test_skyline_2d_dominance_ties_and_duplicates(spark):
         (1, 5), (1, 5), (2, 5), (1, 9), (2, 3), (3, 4), (None, 1), (0, None),
     ]
     df = spark.createDataFrame(rows, ["x", "y"])
-    out = skyline_2d(df, "x", "y")
-    got = {(r["x"], r["y"]) for r in out.collect()}
-    release_components(out)
+    with Scope():
+        out = skyline_2d(df, "x", "y")
+        got = {(r["x"], r["y"]) for r in out.collect()}
     assert got == {(1, 5), (2, 3)}
 
 
@@ -371,9 +371,9 @@ def test_skyline_2d_cross_partition_prefix_min(spark):
     stairs = [(i, 100 - i) for i in range(0, 50)]          # all frontier
     tail = [(100 + i, 51 + i) for i in range(0, 50)]       # all dominated
     df = spark.createDataFrame(stairs + tail, ["x", "y"])
-    out = skyline_2d(df, "x", "y", partitions=3)
-    got = {(r["x"], r["y"]) for r in out.collect()}
-    release_components(out)
+    with Scope():
+        out = skyline_2d(df, "x", "y", partitions=3)
+        got = {(r["x"], r["y"]) for r in out.collect()}
     assert got == set(stairs)
 
 
@@ -562,9 +562,9 @@ def test_personalized_pagerank_mass_and_locality(spark):
     tri2 = [(10, 11), (11, 12), (12, 10)]
     edges = spark.createDataFrame(tri1 + tri2, ["src", "dst"])
     seeds = spark.createDataFrame([(1,)], ["node"])
-    out = personalized_pagerank(edges, seeds, iterations=3)
-    got = {r["node"]: r["score"] for r in out.collect()}
-    release_components(out)
+    with Scope():
+        out = personalized_pagerank(edges, seeds, iterations=3)
+        got = {r["node"]: r["score"] for r in out.collect()}
     assert set(got) == {1, 2, 3}
     assert abs(sum(got.values()) - 1.0) < 1e-4
     assert got[1] > got[2] == got[3]
@@ -579,9 +579,9 @@ def test_personalized_pagerank_restart_only_on_seeds(spark):
 
     edges = spark.createDataFrame([(1, 2), (2, 3)], ["src", "dst"])
     seeds = spark.createDataFrame([(1,)], ["node"])
-    out = personalized_pagerank(edges, seeds, iterations=2, damping=0.85)
-    got = {r["node"]: r["score"] for r in out.collect()}
-    release_components(out)
+    with Scope():
+        out = personalized_pagerank(edges, seeds, iterations=2, damping=0.85)
+        got = {r["node"]: r["score"] for r in out.collect()}
     # r0 = {1:1}; iter1: c = {2: 1/1}; r1 = {1:0.15, 2:0.85}
     # iter2: c = {2: 0.15, 1: 0.425, 3: 0.425}
     # r2 = {1: 0.15+0.85*0.425, 2: 0.85*0.15, 3: 0.85*0.425}

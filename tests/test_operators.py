@@ -254,12 +254,13 @@ def test_connected_components_long_chain(spark):
 
 
 def test_connected_components_reliable_checkpoint(spark, tmp_path):
-    """checkpoint_dir mode: same answer via reliable df.checkpoint()
+    """Reliable mode: same answer via reliable df.checkpoint()
     (survives executor loss at scale), and checkpoint files actually
-    land in the given directory."""
+    land in the SparkContext's checkpoint dir."""
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.graph import (
         connected_components,
     )
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.scope import Scope
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "id_a LONG, id_b LONG"
@@ -267,15 +268,15 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
     nodes = spark.createDataFrame(
         [(i,) for i in (1, 2, 3, 10, 11, 99)], "doc_id LONG"
     )
-    cpdir = str(tmp_path / "cc_ckpt")
-    out = connected_components(
-        edges, nodes, checkpoint_dir=cpdir, driver_finish_edges=0
-    )
-    got = {(r["doc_id"], r["component"]) for r in out.collect()}
+    cpdir = tmp_path / "cc_ckpt"
+    spark.sparkContext.setCheckpointDir(str(cpdir))
+    with Scope():
+        out = connected_components(
+            edges, nodes, reliable=True, driver_finish_edges=0
+        )
+        got = {(r["doc_id"], r["component"]) for r in out.collect()}
+        assert any(p.is_file() for p in cpdir.rglob("*"))  # files were written
     assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (99, 99)}
-    import pathlib
-
-    assert any(pathlib.Path(cpdir).rglob("*"))  # files were written
 
 
 def test_connected_components_releases_generations(spark):
@@ -365,16 +366,23 @@ def test_flagship_cache_is_session_scoped(spark):
         q.release_flagship_cache(spark)
 
 
-def test_release_components_bounds_repeated_calls(spark):
+def test_scope_bounds_repeated_connected_components(spark):
     """A long-lived session calling connected_components repeatedly
-    must not accumulate one final-generation RDD per call: with the
-    explicit release hook, persisted-RDD count stays flat."""
+    must not accumulate one final-generation RDD per call: with each
+    call consumed inside a Scope, persisted-RDD count stays flat."""
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.graph import (
         connected_components,
-        release_components,
+    )
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.scope import (
+        Scope,
+        release,
     )
 
     sc = spark.sparkContext
+
+    def stored() -> int:
+        return len(sc._jsc.sc().getRDDStorageInfo())
+
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(20)], "id_a LONG, id_b LONG"
     )
@@ -382,16 +390,20 @@ def test_release_components_bounds_repeated_calls(spark):
 
     counts = []
     for _ in range(3):
-        out = connected_components(edges, nodes, driver_finish_edges=0)
-        assert {r["component"] for r in out.collect()} == {0}
-        assert release_components(out) is True
-        assert release_components(out) is False  # idempotent no-op
-        counts.append(len(sc._jsc.sc().getRDDStorageInfo()))
-    # after each release, storage returns to the same level — no
-    # per-call growth (the un-released form grows by 1 per call)
+        before = stored()
+        with Scope():
+            out = connected_components(edges, nodes, driver_finish_edges=0)
+            assert {r["component"] for r in out.collect()} == {0}
+            assert stored() > before  # the final generation backs the result
+        counts.append(stored())
+        release(out)  # already freed by the scope: a safe no-op
+        assert stored() == counts[-1]
+    # after each scope, storage returns to the same level — no
+    # per-call growth (the unscoped form grows by 1 per call)
     assert counts[2] <= counts[0]
-    # a frame that never came from connected_components: safe no-op
-    assert release_components(edges) is False
+    # a frame backed by no materialisation: safe no-op
+    release(edges)
+    assert stored() == counts[-1]
 
 
 def test_connected_components_driver_finish_matches_distributed(spark):
@@ -404,8 +416,8 @@ def test_connected_components_driver_finish_matches_distributed(spark):
 
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.graph import (
         connected_components,
-        release_components,
     )
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.scope import Scope
 
     rng = random.Random(9)
     pairs = set()
@@ -427,10 +439,21 @@ def test_connected_components_driver_finish_matches_distributed(spark):
     edges = spark.createDataFrame(sorted(pairs), "id_a LONG, id_b LONG")
     nodes = spark.createDataFrame([(n,) for n in range(500)], "doc_id LONG")
 
-    driver = connected_components(edges, nodes)  # default: driver path
-    dist = connected_components(edges, nodes, driver_finish_edges=0)
-    got_driver = {(r["doc_id"], r["component"]) for r in driver.collect()}
-    got_dist = {(r["doc_id"], r["component"]) for r in dist.collect()}
+    def stored() -> int:
+        return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+    before = stored()
+    with Scope():
+        driver = connected_components(edges, nodes)  # default: driver path
+        got_driver = {(r["doc_id"], r["component"]) for r in driver.collect()}
+        # the union-find finish holds no checkpoint generation
+        assert stored() == before
+        dist = connected_components(edges, nodes, driver_finish_edges=0)
+        got_dist = {(r["doc_id"], r["component"]) for r in dist.collect()}
+        # the distributed result is backed by real state ...
+        assert stored() > before
+    # ... which the scope frees
+    assert stored() == before
     assert got_driver == got_dist
     # every label is the min member of its component
     by_comp: dict = {}
@@ -438,39 +461,6 @@ def test_connected_components_driver_finish_matches_distributed(spark):
         by_comp.setdefault(c, []).append(n)
     for c, members in by_comp.items():
         assert c == min(members)
-    # driver-path result has no checkpoint generation: release is a
-    # safe no-op; distributed result releases real state
-    assert release_components(driver) is False
-    assert release_components(dist) is True
-
-
-def test_connected_components_fast_round_bypass_matches(spark):
-    """The broadcast-hint/AQE-off fast-round bypass is plan-level
-    only: labels must match the pure-AQE path, and the session AQE
-    conf must be restored afterwards."""
-    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.graph import (
-        connected_components,
-    )
-
-    before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(30)] + [(100, 101), (101, 102)],
-        "id_a LONG, id_b LONG",
-    )
-    nodes = spark.createDataFrame(
-        [(i,) for i in range(31)] + [(100,), (101,), (102,)],
-        "doc_id LONG",
-    )
-    fast = connected_components(
-        edges, nodes, driver_finish_edges=0, fast_round_threshold=10**6
-    )
-    slow = connected_components(
-        edges, nodes, driver_finish_edges=0, fast_round_threshold=0
-    )
-    assert {(r["doc_id"], r["component"]) for r in fast.collect()} == {
-        (r["doc_id"], r["component"]) for r in slow.collect()
-    }
-    assert spark.conf.get("spark.sql.adaptive.enabled", "true") == before
 
 
 def test_redact_pii_positive_matches(spark):

@@ -1,6 +1,6 @@
 from __future__ import annotations
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators import batching
@@ -196,6 +196,8 @@ def test_hash_split_is_total_and_respects_zero_free_weights(spark, scale):
     ),
     st.integers(min_value=1, max_value=12),
 )
+# a subnormal range: (hi - lo) / bins underflows to 0.0
+@example(values=[0.0, 5e-324], bins=2)
 def test_histogram_partitions_all_rows(spark, values, bins):
     """Histogram invariants on arbitrary float columns: counts sum to
     the row count, bin ids stay inside [0, bins), bounds bracket the

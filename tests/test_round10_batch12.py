@@ -6,12 +6,12 @@ from pyspark.sql import functions as F
 
 from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.graph import (
     harmonic_centrality,
-    release_components,
 )
 from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.reshape import melt
 from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.windows import (
     rolling_slope,
 )
+from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.scope import Scope
 
 
 # ----------------------------------------------------------- harmonic
@@ -22,9 +22,9 @@ def test_harmonic_path_single_seed(spark):
         [(1, 2), (2, 3), (3, 4)], "src INT, dst INT"
     )
     seeds = spark.createDataFrame([(1,)], "node INT")
-    res = harmonic_centrality(edges, seeds, max_hops=4)
-    out = {r["node"]: r for r in res.collect()}
-    release_components(res)
+    with Scope():
+        res = harmonic_centrality(edges, seeds, max_hops=4)
+        out = {r["node"]: r for r in res.collect()}
     assert set(out) == {2, 3, 4}  # the seed itself does not score
     assert out[2]["harmonic"] == pytest.approx(1.0)
     assert out[3]["harmonic"] == pytest.approx(0.5)
@@ -37,9 +37,9 @@ def test_harmonic_two_seeds_sum(spark):
         [(1, 2), (2, 3), (3, 4)], "src INT, dst INT"
     )
     seeds = spark.createDataFrame([(1,), (4,)], "node INT")
-    res = harmonic_centrality(edges, seeds, max_hops=4)
-    out = {r["node"]: r for r in res.collect()}
-    release_components(res)
+    with Scope():
+        res = harmonic_centrality(edges, seeds, max_hops=4)
+        out = {r["node"]: r for r in res.collect()}
     # node 2: d=1 from seed1, d=2 from seed4 -> 1 + 0.5
     assert out[2]["harmonic"] == pytest.approx(1.5)
     assert out[2]["n_sources"] == 2
@@ -54,9 +54,9 @@ def test_harmonic_hop_cap(spark):
         [(i, i + 1) for i in range(1, 6)], "src INT, dst INT"
     )
     seeds = spark.createDataFrame([(1,)], "node INT")
-    res = harmonic_centrality(edges, seeds, max_hops=2)
-    out = {r["node"]: r["harmonic"] for r in res.collect()}
-    release_components(res)
+    with Scope():
+        res = harmonic_centrality(edges, seeds, max_hops=2)
+        out = {r["node"]: r["harmonic"] for r in res.collect()}
     assert set(out) == {2, 3}  # nodes beyond 2 hops unreached
 
 

@@ -141,12 +141,13 @@ def test_rfm_segments_distributed_scores_and_labels(spark):
     """The distributed-ntile RFM twin (global_ntile_pct machinery, no
     single-task window) — the quality_deciles_distributed pattern; the
     original funnels.rfm_segments row keeps its own oracle."""
-    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark import queries as q
+    from conftest import SF_DIR
 
-    out = q.AUX_QUERIES["rfm_segments_distributed"](
-        spark, "/root/testdata/sf0.001"
-    )
-    rows = out.collect()
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark import queries as q
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.scope import Scope
+
+    with Scope():
+        rows = q.AUX_QUERIES["rfm_segments_distributed"](spark, SF_DIR).collect()
     assert rows
     for r in rows:
         assert 1 <= r["r_score"] <= 5
@@ -154,31 +155,28 @@ def test_rfm_segments_distributed_scores_and_labels(spark):
         assert 1 <= r["m_score"] <= 5
         if r["r_score"] >= 4 and r["f_score"] >= 4:
             assert r["segment"] == "champion"
-    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.graph import release_components
-
-    release_components(out)
 
 
 def test_sequence_gaps_islands_hand_planted(spark):
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.windows import global_rank
-    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.graph import release_components
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.scope import Scope
 
     keys = spark.createDataFrame(
         [(k,) for k in [1, 2, 3, 7, 8, 12]], "k LONG"
     )
-    ranked = global_rank(keys, [F.col("k").asc()], rank_col="__r")
-    out = (
-        ranked.withColumn("__grp", F.col("k") - F.col("__r"))
-        .groupBy("__grp")
-        .agg(
-            F.min("k").alias("s"),
-            F.max("k").alias("e"),
-            F.count(F.lit(1)).alias("n"),
+    with Scope():
+        ranked = global_rank(keys, [F.col("k").asc()], rank_col="__r")
+        out = (
+            ranked.withColumn("__grp", F.col("k") - F.col("__r"))
+            .groupBy("__grp")
+            .agg(
+                F.min("k").alias("s"),
+                F.max("k").alias("e"),
+                F.count(F.lit(1)).alias("n"),
+            )
         )
-    )
-    got = sorted((r["s"], r["e"], r["n"]) for r in out.collect())
+        got = sorted((r["s"], r["e"], r["n"]) for r in out.collect())
     assert got == [(1, 3, 3), (7, 8, 2), (12, 12, 1)]
-    release_components(ranked)
 
 
 # ----------------------------------------------------- portable HLL

@@ -114,9 +114,7 @@ def test_empty_batch_yields_empty_manifest(spark, tmp_path):
 from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.queries.curation import (  # noqa: E402
     q_eval_safe_split_plan,
 )
-from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.graph import (  # noqa: E402
-    release_components,
-)
+from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.scope import Scope  # noqa: E402
 
 
 def test_eval_safe_split_quarantines_whole_cluster(spark, tmp_path):
@@ -150,9 +148,9 @@ def test_eval_safe_split_quarantines_whole_cluster(spark, tmp_path):
     spark.createDataFrame(
         rows, "doc_id LONG, source STRING, text STRING, lang STRING"
     ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    out = q_eval_safe_split_plan(spark, str(tmp_path))
-    rows_out = out.collect()
-    release_components(out)
+    with Scope():
+        out = q_eval_safe_split_plan(spark, str(tmp_path))
+        rows_out = out.collect()
     # eval doc 0 flags itself -> its cluster gone; docs 100/104 share
     # the benchmark 24-gram -> gone.  Survivors: 200, 204, 300.
     n_docs = sum(r["n_docs"] for r in rows_out)
@@ -282,16 +280,15 @@ def test_diverse_retrieval_diversifies(spark):
     relevance), scores weakly decrease is NOT required (MMR scores
     can rise when penalties shrink) — but every selected id must come
     from the fused candidate pool."""
-    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.graph import (
-        release_components,
-    )
+    from conftest import SF_DIR
+
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.queries.composed import (
         q_diverse_retrieval,
     )
 
-    out = q_diverse_retrieval(spark, "/root/testdata/sf0.001")
-    rows = sorted(out.collect(), key=lambda r: r["rank"])
-    release_components(out)
+    with Scope():
+        out = q_diverse_retrieval(spark, SF_DIR)
+        rows = sorted(out.collect(), key=lambda r: r["rank"])
     assert [r["rank"] for r in rows] == [1, 2, 3, 4, 5]
     ids = [r["cand_id"] for r in rows]
     assert len(set(ids)) == 5

@@ -304,6 +304,41 @@ def test_notify_capturing_mailer():
     assert "1 failure" in mailer.sent[1].subject
 
 
+def test_smtp_mailer_sends_html_message(monkeypatch):
+    """The production transport builds one HTML MIME message per alert
+    and hands it to an SMTP client on the configured host and port."""
+    import smtplib
+
+    calls = []
+
+    class FakeSMTP:
+        def __init__(self, host, port):
+            calls.append(("connect", host, port))
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            calls.append(("close",))
+            return False
+
+        def send_message(self, m):
+            calls.append(("send", m))
+
+    monkeypatch.setattr(smtplib, "SMTP", FakeSMTP)
+    mailer = notify.smtp_mailer("mail.example", port=2525)
+    notify.failure_alert(mailer, "a@x", ["b@x", "c@x"], [("q1", "timeout")], "staffing post")
+    assert [c[0] for c in calls] == ["connect", "send", "close"]
+    assert calls[0][1:] == ("mail.example", 2525)
+    m = calls[1][1]
+    assert m["From"] == "a@x"
+    assert m["To"] == "b@x, c@x"
+    assert m["Subject"] == "[engine] staffing post: 1 failure(s)"
+    (part,) = m.get_payload()
+    assert part.get_content_subtype() == "html"
+    assert "<b>q1</b>: timeout" in part.get_payload(decode=True).decode()
+
+
 def test_schema_evolution_merge_on_read(spark, tmp_path):
     """K2 on parquet: evolved appends need mergeSchema at READ time;
     the merged read sees the union schema with NULLs backfilled."""

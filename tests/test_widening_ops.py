@@ -251,14 +251,16 @@ def test_pagerank_matches_numpy_power_iteration(spark):
     symmetric graph with no dangling mass)."""
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.graph import (
         pagerank,
-        release_components,
     )
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.scope import Scope
 
     edges = [(0, 1), (1, 2), (2, 0), (2, 3)]  # triangle + pendant
     df = spark.createDataFrame(edges, ["src", "dst"])
-    out = pagerank(df, iterations=3, damping=0.85)
-    got = {r["node"]: r["rank"] for r in out.collect()}
-    release_components(out)
+    with Scope():
+        got = {
+            r["node"]: r["rank"]
+            for r in pagerank(df, iterations=3, damping=0.85).collect()
+        }
 
     nodes = sorted({n for e in edges for n in e})
     idx = {n: i for i, n in enumerate(nodes)}
@@ -870,16 +872,15 @@ def test_tfidf_prefix_filter_result_identical(spark):
     """The AllPairs-style prefix-filtered candidate path must return
     exactly the band-form pairs (completeness: a pair whose shared
     terms all sit in both low-mass suffixes has cos < t)."""
-    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.graph import release_components
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.scope import Scope
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.sources.registry import load_table, rebalance
 
     d = rebalance(load_table(spark, "/root/testdata/sf0.001", "documents"))
-    old = text.tfidf_doc_similarity(d, prefix_filter=False)
-    new = text.tfidf_doc_similarity(d, prefix_filter=True)
-    so = {(r["id_a"], r["id_b"], r["cosine"]) for r in old.collect()}
-    sn = {(r["id_a"], r["id_b"], r["cosine"]) for r in new.collect()}
-    release_components(old)
-    release_components(new)
+    with Scope():
+        old = text.tfidf_doc_similarity(d, prefix_filter=False)
+        new = text.tfidf_doc_similarity(d, prefix_filter=True)
+        so = {(r["id_a"], r["id_b"], r["cosine"]) for r in old.collect()}
+        sn = {(r["id_a"], r["id_b"], r["cosine"]) for r in new.collect()}
     assert so == sn and len(so) > 0
 
 
@@ -1291,15 +1292,15 @@ def test_clustering_coefficient_triangle_plus_tail(spark):
     closed pair ratio vs node 3's 1-of-3 pairs; pendant scores 0."""
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.graph import (
         clustering_coefficient,
-        release_components,
     )
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.scope import Scope
 
     df = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3), (3, 4)], "src LONG, dst LONG"
     )
-    res = clustering_coefficient(df, "src", "dst")
-    out = {r["node"]: r for r in res.collect()}
-    release_components(res)
+    with Scope():
+        res = clustering_coefficient(df, "src", "dst")
+        out = {r["node"]: r for r in res.collect()}
     assert out[1]["coeff"] == 1.0 and out[1]["n_triangles"] == 1
     assert out[2]["coeff"] == 1.0
     # node 3: deg 3, one closed pair of three -> 2*1/(3*2) = 1/3
@@ -1745,13 +1746,13 @@ def test_sorted_neighborhood_window_pairs(spark):
     sharing no token; volume is exactly window per record (minus the
     tail)."""
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.dedup import sorted_neighborhood_pairs
-    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.graph import release_components
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.scope import Scope
 
     rows = [(1, "smith"), (2, "smyth"), (3, "carter"), (4, "miller")]
     df = spark.createDataFrame(rows, "id LONG, name STRING")
-    res = sorted_neighborhood_pairs(df, "id", "name", window=2)
-    out = {(r["id_a"], r["id_b"]): r["pos_gap"] for r in res.collect()}
-    release_components(res)
+    with Scope():
+        res = sorted_neighborhood_pairs(df, "id", "name", window=2)
+        out = {(r["id_a"], r["id_b"]): r["pos_gap"] for r in res.collect()}
     # order: carter(3) miller(4) smith(1) smyth(2)
     assert out == {
         (3, 4): 1, (3, 1): 2,
@@ -1847,8 +1848,8 @@ def test_contract_edges_preserves_components(spark):
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.graph import (
         connected_components,
         contract_edges,
-        release_components,
     )
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.scope import Scope
 
     clique = list(itertools.combinations(range(1, 9), 2))       # 28 edges
     chain = [(i, i + 1) for i in range(20, 25)]                  # 5 edges
@@ -1864,10 +1865,9 @@ def test_contract_edges_preserves_components(spark):
     assert contracted.count() < len(clique + chain + pair)
 
     def comps(e):
-        c = connected_components(e, nodes)
-        out = {r["doc_id"]: r["component"] for r in c.collect()}
-        release_components(c)
-        return out
+        with Scope():
+            c = connected_components(e, nodes)
+            return {r["doc_id"]: r["component"] for r in c.collect()}
 
     assert comps(contracted) == comps(edges)
     # isolated node labels itself in both

@@ -38,9 +38,7 @@ def main() -> None:
 
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.session import get_spark
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark import queries as q
-    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.graph import (
-        release_components,
-    )
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.scope import Scope
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.sources.registry import (
         load_table,
     )
@@ -60,31 +58,30 @@ def main() -> None:
     for name in args.names:
         fn = q.QUERIES.get(name) or q.AUX_QUERIES[name]
         spark.sparkContext.setJobDescription(f"qtime:{name}")
-        df = fn(spark, args.sf)
-        if args.plan:
-            os.makedirs(args.plan, exist_ok=True)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
-            with open(
-                os.path.join(args.plan, f"{name}_{args.suffix}.txt"), "w"
-            ) as fh:
-                fh.write(plan)
-        if args.reps == 0:  # plan-only mode
-            release_components(df)
-            print(f"{name}: plan captured", flush=True)
-            continue
-        t0 = time.time()
-        n = materialize(df)
-        cold = time.time() - t0
-        release_components(df)
+        with Scope():
+            df = fn(spark, args.sf)
+            if args.plan:
+                os.makedirs(args.plan, exist_ok=True)
+                plan = df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted"
+                )
+                with open(
+                    os.path.join(args.plan, f"{name}_{args.suffix}.txt"), "w"
+                ) as fh:
+                    fh.write(plan)
+            if args.reps == 0:  # plan-only mode
+                print(f"{name}: plan captured", flush=True)
+                continue
+            t0 = time.time()
+            n = materialize(df)
+            cold = time.time() - t0
         runs = []
         for _ in range(args.reps):
             t0 = time.time()
-            df = fn(spark, args.sf)
-            n = materialize(df)
-            runs.append(time.time() - t0)
-            release_components(df)
+            with Scope():
+                df = fn(spark, args.sf)
+                n = materialize(df)
+                runs.append(time.time() - t0)
         if args.plan and args.final:
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"

@@ -658,9 +658,14 @@ def _curation_stages():
         dedup,
         text,
     )
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.scope import persist
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.sources.registry import (
+        load_table,
+        rebalance,
+    )
 
     def stage_dedup(spark, sf_dir):
-        d = q.rebalance(q.load_table(spark, sf_dir, "documents"))
+        d = rebalance(load_table(spark, sf_dir, "documents"))
         return dedup.exact_dedup(d).select("doc_id")
 
     def stage_quality_gate(spark, sf_dir):
@@ -668,26 +673,24 @@ def _curation_stages():
         # projection is persisted so the threshold and filter branches
         # share ONE quality_score pass (round-9 fix for the 0.76-alpha
         # double-compute this row diagnosed)
-        d = q.rebalance(q.load_table(spark, sf_dir, "documents"))
+        d = rebalance(load_table(spark, sf_dir, "documents"))
         en = dedup.exact_dedup(d).filter(F.col("lang") == F.lit("en"))
-        scored = (
-            text.quality_score(en.select("doc_id", "text"))
-            .select("doc_id", "quality")
-            .persist()
+        scored = persist(
+            text.quality_score(en.select("doc_id", "text")).select(
+                "doc_id", "quality"
+            )
         )
         thr = scored.agg(
             F.round(
                 F.expr("approx_percentile(quality, 0.5, 1000000)"), 6
             ).alias("__thr")
         )
-        out = scored.crossJoin(F.broadcast(thr)).filter(
+        return scored.crossJoin(F.broadcast(thr)).filter(
             F.col("quality") >= F.col("__thr")
         )
-        out._persisted_intermediates = [scored]
-        return out
 
     def stage_contamination(spark, sf_dir):
-        d = q.rebalance(q.load_table(spark, sf_dir, "documents"))
+        d = rebalance(load_table(spark, sf_dir, "documents"))
         return text.contamination_flags(
             d,
             d.filter(F.col("doc_id") < q._CONTAM_EVAL_IDS),
@@ -700,7 +703,7 @@ def _curation_stages():
         # positive: idf = log(nd/df) with df ≤ nd/10), so the output
         # row count is exactly the pair set the term-keyed join
         # aggregates — the quantity the band cap is supposed to bound
-        d = q.rebalance(q.load_table(spark, sf_dir, "documents"))
+        d = rebalance(load_table(spark, sf_dir, "documents"))
         return text.tfidf_doc_similarity(
             d.select("doc_id", "text"), threshold=0.0
         )
@@ -940,9 +943,7 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark import queries as q
-    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.graph import (
-        release_components,
-    )
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.scope import Scope
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.session import get_spark
 
     spark = get_spark("scale-rehearsal")
@@ -973,14 +974,12 @@ def main() -> int:
         for dname in disjoint:
             name = dname.split("@")[0]
             fn = q.QUERIES.get(name) or q.AUX_QUERIES[name]
-            df = fn(spark, sf_dir)
-            materialize(df)
-            release_components(df)
+            with Scope():
+                materialize(fn(spark, sf_dir))
             t0 = time.time()
-            df = fn(spark, sf_dir)
-            rows = materialize(df)
-            dt = time.time() - t0
-            release_components(df)
+            with Scope():
+                rows = materialize(fn(spark, sf_dir))
+                dt = time.time() - t0
             spark.catalog.clearCache()
             results[dname]["times"][factor] = round(dt, 3)
             results[dname]["rows"][factor] = rows
@@ -994,14 +993,12 @@ def main() -> int:
             fn = q.QUERIES.get(name) or q.AUX_QUERIES.get(name) or stages[name]
             # cold warm-up, then one timed run (these are long; the
             # signal is the cross-scale RATIO, not the absolute value)
-            df = fn(spark, sf_dir)
-            materialize(df)
-            release_components(df)
+            with Scope():
+                materialize(fn(spark, sf_dir))
             t0 = time.time()
-            df = fn(spark, sf_dir)
-            rows = materialize(df)
-            dt = time.time() - t0
-            release_components(df)
+            with Scope():
+                rows = materialize(fn(spark, sf_dir))
+                dt = time.time() - t0
             spark.catalog.clearCache()
             results[name]["times"][factor] = round(dt, 3)
             results[name]["rows"][factor] = rows

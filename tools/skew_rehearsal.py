@@ -123,10 +123,12 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark import queries as q
-    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.graph import (
-        release_components,
-    )
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.skew import salted_agg
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.scope import Scope
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.sources.registry import (
+        load_table,
+        rebalance,
+    )
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.session import get_spark
 
     spark = get_spark("skew-rehearsal")
@@ -140,10 +142,9 @@ def main() -> int:
         best = None
         for _ in range(reps + 1):
             t0 = time.time()
-            df = fn()
-            df.agg(F.count(F.lit(1))).collect()
-            dt = time.time() - t0
-            release_components(df)
+            with Scope():
+                fn().agg(F.count(F.lit(1))).collect()
+                dt = time.time() - t0
             spark.catalog.clearCache()
             if best is None or dt < best:
                 best = dt
@@ -157,10 +158,9 @@ def main() -> int:
         for _ in range(reps):
             for which, fn in (("a", fn_a), ("b", fn_b)):
                 t0 = time.time()
-                df = fn()
-                df.agg(F.count(F.lit(1))).collect()
-                dt = time.time() - t0
-                release_components(df)
+                with Scope():
+                    fn().agg(F.count(F.lit(1))).collect()
+                    dt = time.time() - t0
                 spark.catalog.clearCache()
                 if which == "a":
                     best_a = dt if best_a is None else min(best_a, dt)
@@ -171,7 +171,7 @@ def main() -> int:
     results: dict[str, dict] = {}
 
     # -- 1. salted vs plain aggregation on the hot key ------------------
-    ev = q.load_table(spark, skew_dir, "events")
+    ev = load_table(spark, skew_dir, "events")
 
     def plain_agg():
         return ev.groupBy("user_id").agg(
@@ -205,7 +205,7 @@ def main() -> int:
     # straggler AQE splits) from join-output blowup (which no engine
     # fixes - two sides hot on the same key is a data problem, and the
     # basket-cap leg below is the defense for that shape)
-    cust = q.load_table(spark, skew_dir, "customer")
+    cust = load_table(spark, skew_dir, "customer")
     # rebalance() is load-bearing here: AQE splits a skewed reduce
     # partition by MAP-OUTPUT RANGES, so a single-mapper scan (the
     # one-row-group fixture file) structurally cannot be split — at
@@ -213,7 +213,7 @@ def main() -> int:
     # unaided; the engine's rebalance() restores that shape locally.
     # The pad column keeps real bytes in the shuffle (a pruned-to-one-
     # int probe side compresses the hot partition to nothing).
-    evj = q.rebalance(ev).select(
+    evj = rebalance(ev).select(
         "user_id",
         "value",
         F.sha2(F.concat_ws("_", "event_id", "ts"), 256).alias("pad"),
@@ -298,8 +298,8 @@ def main() -> int:
     hot50_dir = build_skew_fixture(
         args.base, args.factor, args.root, hot_fraction=2, tag="skew50"
     )
-    ev50 = q.load_table(spark, hot50_dir, "events")
-    evj50 = q.rebalance(ev50).select(
+    ev50 = load_table(spark, hot50_dir, "events")
+    evj50 = rebalance(ev50).select(
         "user_id", "value", F.col("event_id").alias("pad")
     )
     expensive = F.sha2(F.concat_ws("_", "pad", "c_name"), 512)
