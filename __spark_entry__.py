@@ -5,7 +5,7 @@ each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash -> CORRECTNESS_r{N}.json).
 
-The registry is capped at the driver's 50-row capture; 335 further
+The registry is capped at the driver's 50-row capture; 341 further
 oracle-verified queries (streaming forms, the corpus-curation family,
 the widening batches — retrieval, sketches, graph analytics,
 robust/association/inferential statistics, behavioral analytics,
@@ -28,7 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 # work regardless of the caller's working directory
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark import queries as _q
+from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark import queries as _registry
+from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.queries import core as _q
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -38,9 +39,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator cluster from SURVEY.md §2."""
-    return dict(_q.QUERIES)
+    return dict(_registry.QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL twin for every query above."""
-    return _q.oracles()
+    return _registry.oracles()

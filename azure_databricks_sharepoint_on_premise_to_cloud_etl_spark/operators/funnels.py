@@ -1153,6 +1153,21 @@ def markov_journey_edges(
 
     Returns (src, dst, n_edges, p).
     """
+    return _markov_cells_and_converters(
+        df, entity_col, time_col, channel_col, conversion, tiebreak_col
+    )[0]
+
+
+def _markov_cells_and_converters(
+    df: DataFrame,
+    entity_col: str,
+    time_col: str,
+    channel_col: str,
+    conversion: str,
+    tiebreak_col: str | None,
+) -> tuple[DataFrame, int]:
+    """:func:`markov_journey_edges`'s cells and the distinct-converter
+    count, which markov_attribution scales its shares by."""
     e = F.col(entity_col)
     order = [F.col(time_col).asc()]
     if tiebreak_col is not None:
@@ -1248,8 +1263,7 @@ def markov_journey_edges(
             6,
         ),
     )
-    result._n_converters = n_converters
-    return result
+    return result, n_converters
 
 
 def _markov_value_iteration(
@@ -1322,9 +1336,8 @@ def markov_attribution(
         raise ValueError("conversion must not be listed in channels")
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
-    cells = markov_journey_edges(
-        df, entity_col, time_col, channel_col, conversion,
-        tiebreak_col=tiebreak_col,
+    cells, n_conv = _markov_cells_and_converters(
+        df, entity_col, time_col, channel_col, conversion, tiebreak_col
     )
     # driver-side solve on the bounded cell table (collect is the
     # point: (k+2)^2 rows, never corpus grain)
@@ -1336,7 +1349,6 @@ def markov_attribution(
     # r13 summed CONV-edge counts instead, which misclassified
     # converters whose conversion events all carry NULL timestamps
     # (they end in __NULL__, not __CONV__) — the r13 advice item.
-    n_conv = cells._n_converters
     base_v = _markov_value_iteration(probs, channels, None, iterations)
     rows = []
     res = []

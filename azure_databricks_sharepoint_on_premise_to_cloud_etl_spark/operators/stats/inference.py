@@ -4802,59 +4802,53 @@ def brier_decomposition(
         pr.alias("__p"),
         y.alias("__y"),
     )
+    # Every sum is exact: each row's and each bin's term is cast to a
+    # decimal before it is summed, so no output depends on the order in
+    # which partitions merge.  Double sums do: on the lineitem fixture
+    # at sf0.01 the Brier score is exactly 0.3332215, a rounding tie,
+    # and a double sum lands on either side of it.
+    def exact(c):
+        return c.cast("decimal(38,18)")
+
+    p, yy = F.col("__p"), F.col("__y")
     bins = base.groupBy("__b").agg(
         F.count(F.lit(1)).alias("__n"),
-        F.avg("__p").alias("__fp"),
-        F.avg("__y").alias("__oy"),
-        F.avg(F.col("__p") * F.col("__p")).alias("__fp2"),
-        F.avg((F.col("__p") - F.col("__y")) * (F.col("__p") - F.col("__y"))).alias(
-            "__bs"
-        ),
+        F.sum(exact(p)).alias("__sp"),
+        F.sum(exact(yy)).alias("__sy"),
+        F.sum(exact(p * p)).alias("__spp"),
+        F.sum(exact((p - yy) * (p - yy))).alias("__sbs"),
     )
+    n = F.col("__n")
+    fp = F.col("__sp").cast("double") / n
+    oy = F.col("__sy").cast("double") / n
+    fp2 = F.col("__spp").cast("double") / n
     red = bins.agg(
-        F.sum("__n").cast("long").alias("n"),
-        F.round(
-            F.sum(F.col("__n") * F.col("__oy")) / F.sum("__n"), 9
-        ).alias("__obar"),
-        F.round(
-            F.sum(F.col("__n") * F.col("__bs")) / F.sum("__n"), 6
-        ).alias("brier"),
-        F.round(
-            F.sum(
-                F.col("__n")
-                * (F.col("__fp") - F.col("__oy"))
-                * (F.col("__fp") - F.col("__oy"))
-            )
-            / F.sum("__n"),
-            6,
-        ).alias("reliability"),
-        F.sum(F.col("__n") * F.col("__oy")).alias("__so"),
-        F.sum(
-            F.col("__n")
-            * (F.col("__fp2") - F.col("__fp") * F.col("__fp"))
-        ).alias("__swb"),
-        F.sum(F.col("__n") * F.col("__oy") * F.col("__oy")).alias(
-            "__so2w"
-        ),
-        F.sum(F.col("__n")).alias("__nn"),
+        F.sum(n).cast("long").alias("n"),
+        F.sum("__sy").alias("__so"),
+        F.sum("__sbs").alias("__sbs"),
+        F.sum(exact(n * (fp - oy) * (fp - oy))).alias("__srel"),
+        F.sum(exact(n * (fp2 - fp * fp))).alias("__swb"),
+        F.sum(exact(n * oy * oy)).alias("__so2w"),
     )
-    obar = F.col("__obar")
+
+    def mean(total, digits):
+        return F.round(F.col(total) / F.col("n"), digits)
+
+    obar = mean("__so", 9).cast("double")
     res = F.round(
-        F.col("__so2w") / F.col("__nn")
-        - 2 * obar * F.col("__so") / F.col("__nn")
+        F.col("__so2w").cast("double") / F.col("n")
+        - 2 * obar * F.col("__so").cast("double") / F.col("n")
         + obar * obar,
         6,
     )
-    unc = F.round(obar * (1.0 - obar), 6)
-    wb = F.round(F.col("__swb") / F.col("__nn"), 6)
     return red.select(
         "n",
         F.round(obar, 6).alias("base_rate"),
-        "brier",
-        "reliability",
+        mean("__sbs", 6).cast("double").alias("brier"),
+        mean("__srel", 6).cast("double").alias("reliability"),
         res.alias("resolution"),
-        unc.alias("uncertainty"),
-        wb.alias("within_bin_var"),
+        F.round(obar * (1.0 - obar), 6).alias("uncertainty"),
+        mean("__swb", 6).cast("double").alias("within_bin_var"),
     )
 
 

@@ -1,921 +1,35 @@
-"""Named query catalog — the driver-facing coverage surface.
-Re-exports every top-level name of the former monolithic
-queries.py from its per-family modules (split round 11);
-`from pkg import queries` and `queries.<anything>` behave
-exactly as before.
+"""Named query catalog: the driver-facing coverage surface.
+
+Each family module registers its queries, each with its DuckDB oracle,
+in ``catalog``.  They are imported here in a fixed order, which fixes
+the registries' insertion order.  Query functions and oracle constants
+are imported from their family module (``queries.core``,
+``queries.curation``, ...), not from this package.
 """
-from .core import (  # noqa: F401
-    FLAGSHIP_SQL,
-    ORACLE_ACTUAL_PLAN,
-    ORACLE_AGG_COLLECT,
-    ORACLE_ANTI,
-    ORACLE_ASOF,
-    ORACLE_BIGRAM,
-    ORACLE_COALESCE,
-    ORACLE_CONTAINMENT,
-    ORACLE_COSINE_TOPK,
-    ORACLE_DROP_NA,
-    ORACLE_EARLIEST,
-    ORACLE_EXACT_DEDUP,
-    ORACLE_EXCEPT_INTERSECT,
-    ORACLE_FILTER_PROJECT,
-    ORACLE_HIERARCHICAL,
-    ORACLE_JACCARD,
-    ORACLE_JOIN_3WAY,
-    ORACLE_JSON,
-    ORACLE_LATEST_BATCH,
-    ORACLE_LATEST_SNAPSHOT,
-    ORACLE_LEAD,
-    ORACLE_MULTIMODAL,
-    ORACLE_NEAR_DUP,
-    ORACLE_NESTED,
-    ORACLE_PACK,
-    ORACLE_PACK_NATIVE,
-    ORACLE_PERCENTILES,
-    ORACLE_PERCENTILES_APPROX,
-    ORACLE_PRICING,
-    ORACLE_ROLLING,
-    ORACLE_ROLLUP,
-    ORACLE_RUNNING_SUM,
-    ORACLE_SCALAR_FUNCTIONS,
-    ORACLE_SEMI,
-    ORACLE_SESSIONIZE,
-    ORACLE_STABLE_SAMPLE,
-    ORACLE_STABLE_SAMPLE_FAST,
-    ORACLE_STRATIFIED_FAST,
-    ORACLE_STREAM_DEDUP,
-    ORACLE_STREAM_ENRICH,
-    ORACLE_TFIDF,
-    ORACLE_TIME_REANCHOR,
-    ORACLE_TOKEN_COUNT,
-    ORACLE_TOP1,
-    ORACLE_TUMBLING,
-    ORACLE_UNION,
-    ORACLE_WATERMARK,
-    QUERIES,
-    QueryFn,
-    _CONTAM_EVAL_IDS,
-    _CONTAM_K,
-    _DUCK_COSINE,
-    _DUCK_FAST_GATE,
-    _DUCK_NORM,
-    _EXTENSION_ORACLES,
-    _FLAGSHIP_FACT_SQL,
-    _FLAGSHIP_FINAL_SQL,
-    _LOC_SQL,
-    _LSH_DIM,
-    _LSH_PLANES,
-    _LSH_SEED,
-    _MINHASH_BANDS,
-    _MINHASH_K,
-    _MINHASH_N,
-    _NEARDUP_DIM,
-    _NEARDUP_PLANES,
-    _NEARDUP_SEED,
-    _NEARDUP_THRESHOLD,
-    _PACK_BUDGET,
-    _PACK_SHARDS,
-    _REP_N,
-    _SAMPLE_FRACTION,
-    _SAMPLE_SALT,
-    _SIMHASH_BITS,
-    _STRATA_DEFAULT,
-    _STRATA_FRACTIONS,
-    _ZONES_SQL,
-    _ann_oracle,
-    _components_oracle,
-    _contamination_oracle,
-    _duck_hash,
-    _event_zones,
-    _fingerprint_oracle,
-    _flagship_fact_cache,
-    _ivf_oracle,
-    _jaccard_oracle,
-    _keep_best_oracle,
-    _langid_oracle,
-    _location_facts,
-    _lsh_oracle,
-    _minhash_estimate_oracle,
-    _minhash_oracle,
-    _minhash_sig_sql,
-    _near_dup_oracle,
-    _quality_oracle,
-    _quality_quantile_oracle,
-    _repetition_oracle,
-    _simhash_oracle,
-    _simhash_pairs_oracle,
-    _stratified_oracle,
-    _stream_dir_for,
-    _stream_events,
-    _stream_plan_dedup,
-    _stream_plan_enrich,
-    _stream_plan_sliding,
-    _stream_plan_tumbling,
-    _unpersist_holder,
-    _unpersist_jdf,
-    dedup,
-    hierarchy,
-    intervals,
-    oracles,
-    q_actual_plan_label,
-    q_agg_collect,
-    q_anti_join,
-    q_asof_boundary_join,
-    q_bigram_freq,
-    q_coalesce_fallback,
-    q_contamination,
-    q_cosine_topk,
-    q_cosine_topk_ann,
-    q_cosine_topk_ivf,
-    q_cosine_topk_lsh,
-    q_dedup_components,
-    q_dedup_keep_best,
-    q_drop_na,
-    q_earliest_per_group,
-    q_embedding_near_dup,
-    q_exact_dedup,
-    q_except_intersect,
-    q_filter_project,
-    q_fingerprint,
-    q_flagship_census_count,
-    q_hierarchical_fallback,
-    q_interval_containment,
-    q_join_3way,
-    q_json_extract,
-    q_language_id,
-    q_latest_batch,
-    q_latest_snapshot,
-    q_minhash_jaccard_estimate,
-    q_minhash_lsh_pairs,
-    q_minhash_lsh_pairs_fast,
-    q_multimodal_meta,
-    q_nested_explode,
-    q_next_event_lead,
-    q_ngram_jaccard,
-    q_pack_sequences,
-    q_pack_sequences_native,
-    q_percentiles,
-    q_percentiles_approx,
-    q_pricing_summary,
-    q_quality_quantile_filter,
-    q_quality_score,
-    q_repetition_ratio,
-    q_rolling_window_expand,
-    q_rollup_agg,
-    q_running_sum,
-    q_scalar_functions,
-    q_semi_join,
-    q_sessionize,
-    q_simhash,
-    q_simhash_near_pairs,
-    q_stable_sample,
-    q_stable_sample_fast,
-    q_stratified_sample,
-    q_stratified_sample_fast,
-    q_streaming_dedup,
-    q_streaming_enrich,
-    q_streaming_sliding,
-    q_streaming_tumbling,
-    q_tfidf_top_terms,
-    q_time_reanchor,
-    q_token_count,
-    q_top1_latest_order,
-    q_tumbling_window,
-    q_union_distinct,
-    q_watermark_filter,
-    release_flagship_cache,
-    sampling,
-    similarity,
-    snapshots,
-    text,
-    weakref,
-    windows,
+from . import (  # noqa: F401
+    core,
+    curation,
+    retrieval,
+    graphs,
+    business,
+    stats_rank,
+    stats_agreement,
+    stats_sequential,
+    composed,
 )
-from .curation import (  # noqa: F401
-    AUX_ORACLES,
-    AUX_QUERIES,
-    ORACLE_ASOF_UNION,
-    ORACLE_ATTRIBUTION,
-    ORACLE_BIGRAM_LM,
-    ORACLE_BPE_STEP,
-    ORACLE_CARDINALITY,
-    ORACLE_CORPUS_SHUFFLE,
-    ORACLE_CORPUS_SHUFFLE_FAST,
-    ORACLE_CUBE,
-    ORACLE_DIM_STATS,
-    ORACLE_DOC_CHUNKS,
-    ORACLE_DSIR,
-    ORACLE_FUNNEL,
-    ORACLE_FUNNEL_CHART,
-    ORACLE_FUNNEL_WINDOWED,
-    ORACLE_FUZZY,
-    ORACLE_GROUP_OLS,
-    ORACLE_HASH_SPLIT_FAST,
-    ORACLE_LM_SCORE,
-    ORACLE_MAD,
-    ORACLE_PIT,
-    ORACLE_PIVOT,
-    ORACLE_QUANTIZE,
-    ORACLE_RESAMPLE,
-    ORACLE_RETENTION,
-    ORACLE_SCD2,
-    ORACLE_SLIDING,
-    ORACLE_SNAPSHOT_DIFF,
-    ORACLE_STREAM_JOIN,
-    ORACLE_TOKEN_BUDGET,
-    ORACLE_TRAILING_RANGE,
-    ORACLE_TUMBLING_BASE,
-    ORACLE_VOCAB_COVERAGE,
-    _CAP_PER_DOMAIN,
-    _CHUNK_LEN,
-    _CHUNK_STRIDE,
-    _DSIR_QUANTILE,
-    _EPOCH_SALT,
-    _FUNNEL_SPAN,
-    _FUNNEL_STEPS,
-    _INC_SPLIT_MOD,
-    _INC_THRESHOLD,
-    _MAX_EPOCHS,
-    _MIX_SALT,
-    _MIX_WEIGHTS,
-    _PIPE_CONTAM_K,
-    _PROFILE_COLS,
-    _RESAMPLE_STEP,
-    _RETENTION_BUCKET_DAYS,
-    _SCRUB_MIN_DOCS,
-    _SCRUB_N,
-    _SEMDEDUP_K,
-    _SEMDEDUP_THRESHOLD,
-    _TOKEN_BUDGET,
-    _Z_BITS,
-    _curation_pipeline_oracle,
-    _domain_cap_oracle,
-    _incremental_oracle,
-    _ivf_refine_oracle,
-    _leakage_split_oracle,
-    _materialize_epochs_oracle,
-    _pii_oracle,
-    _profile_oracle,
-    _quality_deciles_oracle,
-    _repeated_ngram_oracle,
-    _semantic_dedup_oracle,
-    _stream_plan_join,
-    _target_mix_oracle,
-    _zorder_oracle,
-    q_asof_union_join,
-    q_attribution,
-    q_bigram_lm_score,
-    q_bpe_step,
-    q_cohort_retention,
-    q_corpus_cardinality,
-    q_corpus_shuffle,
-    q_corpus_shuffle_fast,
-    q_cube_agg,
-    q_curation_pipeline,
-    q_doc_chunks,
-    q_domain_cap,
-    q_dsir_select,
-    q_embedding_dim_stats,
-    q_embedding_quantize,
-    q_funnel_chart,
-    q_funnel_steps,
-    q_funnel_windowed,
-    q_fuzzy_name_pairs,
-    q_group_ols,
-    q_hash_split_fast,
-    q_incremental_dedup,
-    q_incremental_dedup_amortized,
-    q_ivf_refine,
-    q_leakage_safe_split,
-    q_mad_outlier_filter,
-    q_materialize_epochs,
-    q_pii_redaction,
-    q_pivot_wide,
-    q_point_in_time_join,
-    q_profile_columns,
-    q_quality_deciles,
-    q_repeated_ngram_removal,
-    q_resample_ffill,
-    q_scd2_merge,
-    q_semantic_dedup,
-    q_sliding_window,
-    q_snapshot_diff,
-    q_streaming_join,
-    q_target_mix,
-    q_token_budget_epochs,
-    q_trailing_range_agg,
-    q_unigram_lm_score,
-    q_vocab_coverage,
-    q_zorder_code,
-)
-from .retrieval import (  # noqa: F401
-    ORACLE_ASSOCIATION,
-    ORACLE_BENFORD,
-    ORACLE_CDC_APPLY,
-    ORACLE_CHI_SQUARE,
-    ORACLE_COHORT_LTV,
-    ORACLE_COPURCHASE,
-    ORACLE_CUSUM,
-    ORACLE_DAILY_OVERVIEW,
-    ORACLE_EMBEDDING_DRIFT,
-    ORACLE_EMB_COV,
-    ORACLE_FULFILLMENT,
-    ORACLE_GINI,
-    ORACLE_HARD_NEGATIVES,
-    ORACLE_HISTOGRAM,
-    ORACLE_INVERTED_INDEX,
-    ORACLE_KEY_SKEW,
-    ORACLE_KS_DRIFT,
-    ORACLE_MANN_WHITNEY,
-    ORACLE_OHLC,
-    ORACLE_PARETO,
-    ORACLE_PER_SOURCE_KS,
-    ORACLE_PMI,
-    ORACLE_POP,
-    ORACLE_RAU,
-    ORACLE_RETRIEVAL_QUALITY,
-    ORACLE_RFM,
-    ORACLE_ROLLUP_MERGE,
-    ORACLE_SEASONALITY,
-    ORACLE_SOURCE_KL,
-    ORACLE_SOURCE_OVERLAP,
-    ORACLE_SPECTRUM,
-    ORACLE_TEMPERATURE_MIX,
-    ORACLE_TOKEN_ENTROPY,
-    ORACLE_TRANSITION,
-    ORACLE_TWAP,
-    ORACLE_URL_STATS,
-    ORACLE_WELCH,
-    ORACLE_WINSORIZE,
-    STREAMING_PLAN_BUILDERS,
-    _BM25_B,
-    _BM25_K1,
-    _BM25_QUERY,
-    _CMS_TOPK,
-    _COPURCHASE_MAX_BASKET,
-    _COPURCHASE_MIN_SHARED,
-    _CORR_COLS,
-    _HIST_BINS,
-    _INDEX_MIN_DF,
-    _INDEX_N,
-    _KL_ALPHA,
-    _MODEL_BIAS,
-    _MODEL_WEIGHTS,
-    _NOVELTY_N,
-    _OHLC_BUCKET_S,
-    _PASSAGE_LEN,
-    _PMI_MIN_COUNT,
-    _PR_DAMPING,
-    _PR_ITERS,
-    _PR_SWEEP_DECIMALS,
-    _RAU_WINDOW,
-    _ROLLUP_CUTOFF,
-    _RRF_K,
-    _RRF_TOPN,
-    _SPECTRUM_MAX_R,
-    _TDS_THRESHOLD,
-    _TEMP_MIX_BUDGET,
-    _TEMP_MIX_T,
-    _TWAP_BUCKET_S,
-    _WPS_K,
-    _WPS_SALT,
-    _ann_recall_oracle,
-    _bm25_oracle,
-    _calibration_oracle,
-    _cms_oracle,
-    _corr_oracle,
-    _dup_matrix_oracle,
-    _duplicate_passages_oracle,
-    _hybrid_oracle,
-    _language_confusion_oracle,
-    _model_filter_oracle,
-    _novelty_oracle,
-    _pagerank_oracle,
-    _pr_sweep_oracle,
-    _roc_auc_oracle,
-    _stream_plan_ohlc,
-    _stream_plan_session,
-    _tfidf_sim_oracle,
-    _triangle_oracle,
-    _weighted_sample_oracle,
-    q_ann_recall,
-    q_association_rules,
-    q_benford,
-    q_bm25_score,
-    q_calibration_bins,
-    q_cdc_apply,
-    q_chi_square,
-    q_cms_heavy_hitters,
-    q_cohort_ltv,
-    q_copurchase_pairs,
-    q_corr_matrix,
-    q_cusum_drift,
-    q_dup_matrix_by_source,
-    q_duplicate_passages,
-    q_embedding_covariance,
-    q_embedding_label_drift,
-    q_event_seasonality,
-    q_events_daily_overview,
-    q_frequency_spectrum,
-    q_fulfillment_latency,
-    q_gini_tokens,
-    q_hard_negatives,
-    q_histogram,
-    q_hybrid_retrieval,
-    q_inverted_index,
-    q_key_skew_profile,
-    q_ks_drift,
-    q_language_confusion,
-    q_mann_whitney,
-    q_model_quality_filter,
-    q_novelty_score,
-    q_ohlc_bucket,
-    q_pagerank,
-    q_per_source_ks,
-    q_period_over_period,
-    q_pmi_collocations,
-    q_pr_threshold_sweep,
-    q_quality_deciles_distributed,
-    q_retrieval_quality,
-    q_revenue_pareto,
-    q_rfm_segments,
-    q_roc_auc,
-    q_roc_auc_distributed,
-    q_rolling_active_users,
-    q_rollup_merge,
-    q_source_kl,
-    q_source_overlap,
-    q_streaming_ohlc,
-    q_streaming_session,
-    q_temperature_mix,
-    q_tfidf_doc_similarity,
-    q_token_entropy,
-    q_transition_matrix,
-    q_triangle_count,
-    q_twap,
-    q_url_stats,
-    q_weighted_sample,
-    q_welch_ttest,
-    q_winsorize,
-)
-from .graphs import (  # noqa: F401
-    ORACLE_ADAMIC_ADAR,
-    ORACLE_ALSO_BOUGHT,
-    ORACLE_AUDIENCE_OVERLAP,
-    ORACLE_BEST_CHANGEPOINT,
-    ORACLE_CLUSTERING_COEFF,
-    ORACLE_COMMON_PATHS,
-    ORACLE_CONVERSION_LATENCY,
-    ORACLE_CONVERSION_ZTEST,
-    ORACLE_CUPED,
-    ORACLE_DIFF_IN_DIFF,
-    ORACLE_DOC_KEYWORDS,
-    ORACLE_ENTITY_RESOLUTION_SN,
-    ORACLE_EWMA,
-    ORACLE_FK_INTEGRITY,
-    ORACLE_GEO_NEAREST,
-    ORACLE_GROUP_SAMPLE,
-    ORACLE_INTERARRIVAL,
-    ORACLE_KAPLAN_MEIER,
-    ORACLE_K_ANONYMITY,
-    ORACLE_LEAD_LAG_CORR,
-    ORACLE_LINEAR_ATTRIBUTION,
-    ORACLE_LOG_RANK,
-    ORACLE_MERGE_INTERVALS,
-    ORACLE_MUTUAL_TOPK,
-    ORACLE_NEIGHBOR_JACCARD,
-    ORACLE_NEW_VS_RETURNING,
-    ORACLE_PRICE_ELASTICITY,
-    ORACLE_PRICE_VOLUME_MIX,
-    ORACLE_PSI_DRIFT,
-    ORACLE_RESAMPLE_INTERPOLATE,
-    ORACLE_RETENTION_HALFLIFE,
-    ORACLE_ROLLING_CORR,
-    ORACLE_SAFETY_STOCK,
-    ORACLE_SEASONAL_ANOMALY,
-    ORACLE_SEASONAL_BACKTEST,
-    ORACLE_SEQUENCE_MATCH,
-    ORACLE_SHARE_OF_PARENT,
-    ORACLE_SKYLINE,
-    ORACLE_SORTED_NEIGHBORHOOD,
-    ORACLE_SPATIAL_CLUSTERS,
-    ORACLE_STICKINESS,
-    ORACLE_STREAKS,
-    ORACLE_SUPPLIER_RELIABILITY,
-    ORACLE_TERM_KEYNESS,
-    ORACLE_WEEKLY_DECOMPOSITION,
-    ORACLE_WEIGHTED_MEDIAN,
-    ORACLE_ZIPF_SLOPE,
-    _ALSO_BOUGHT_K,
-    _ANOM_Z,
-    _GEO_CELL_DEG,
-    _GEO_CLUSTER_CELL_DEG,
-    _GEO_CLUSTER_RADIUS,
-    _GEO_RADIUS_KM,
-    _HALFLIFE_MAX_AGE,
-    _KEYNESS_A,
-    _KEYNESS_B,
-    _LEAD_LAG_MAX,
-    _PPR_DAMPING,
-    _PPR_ITERS,
-    _PVM_Y1,
-    _PVM_Y2,
-    _SAFETY_LEAD_DAYS,
-    _SAFETY_Z,
-    _SN_MAX_DIST,
-    _SN_WINDOW,
-    _WILSON_Z,
-    _ZIPF_HEAD,
-    _bfs_oracle,
-    _canonical_by_size_oracle,
-    _entity_resolution_oracle,
-    _geo_coords,
-    _kcore_oracle,
-    _label_spreading_oracle,
-    _ppr_oracle,
-    _shortest_paths_oracle,
-    _stream_plan_sequence_match,
-    _stream_plan_sequence_match_only,
-    q_adamic_adar,
-    q_also_bought_topk,
-    q_audience_overlap,
-    q_best_changepoint,
-    q_bfs_hops,
-    q_clustering_coeff,
-    q_common_paths,
-    q_conversion_latency,
-    q_conversion_ztest,
-    q_cuped,
-    q_dedup_canonical_by_size,
-    q_diff_in_diff,
-    q_doc_keywords,
-    q_entity_resolution,
-    q_entity_resolution_sn,
-    q_ewma,
-    q_fk_integrity,
-    q_geo_nearest,
-    q_group_sample,
-    q_interarrival,
-    q_k_anonymity,
-    q_kaplan_meier,
-    q_kcore,
-    q_label_spreading,
-    q_lead_lag_corr,
-    q_linear_attribution,
-    q_log_rank,
-    q_merge_intervals,
-    q_mutual_topk,
-    q_neighbor_jaccard,
-    q_new_vs_returning,
-    q_personalized_pagerank,
-    q_price_elasticity,
-    q_price_volume_mix,
-    q_psi_drift,
-    q_resample_interpolate,
-    q_retention_halflife,
-    q_rolling_corr,
-    q_safety_stock,
-    q_seasonal_anomaly,
-    q_seasonal_backtest,
-    q_sequence_match,
-    q_share_of_parent,
-    q_shortest_paths,
-    q_skyline,
-    q_sorted_neighborhood,
-    q_spatial_clusters,
-    q_stickiness,
-    q_streaks,
-    q_streaming_sequence_match,
-    q_supplier_reliability,
-    q_term_keyness,
-    q_weekly_decomposition,
-    q_weighted_median,
-    q_zipf_slope,
-)
-from .business import (  # noqa: F401
-    ORACLE_ACF,
-    ORACLE_BLOOM_SEMI_JOIN,
-    ORACLE_CONTAINMENT_DEDUP,
-    ORACLE_CUBE_SHARES,
-    ORACLE_GOLDEN_RECORD,
-    ORACLE_HHI,
-    ORACLE_HLL_AUDIENCE_ALGEBRA,
-    ORACLE_HLL_DISTINCT,
-    ORACLE_HOLT_TREND,
-    ORACLE_ITEM_SIMILARITY,
-    ORACLE_JOIN_SIZE_ESTIMATE,
-    ORACLE_LORENZ,
-    ORACLE_L_DIVERSITY,
-    ORACLE_MAX_DRAWDOWN,
-    ORACLE_NEGATIVE_SAMPLING,
-    ORACLE_PARETO_ABC,
-    ORACLE_QUANTILE_NORMALIZE,
-    ORACLE_RFM_DISTRIBUTED,
-    ORACLE_ROBUST_ZSCORE,
-    ORACLE_SALTED_HOT_AGG,
-    ORACLE_SEQUENCE_GAPS,
-    ORACLE_THEIL,
-    ORACLE_THEIL_SEN,
-    _ABC_A_CUT,
-    _ABC_B_CUT,
-    _ACF_MAX_LAG,
-    _BOOT_B,
-    _CF_TOP_K,
-    _CS_DEPTH,
-    _CS_WIDTH,
-    _HITS_ITERS,
-    _HLL_ALG_A,
-    _HLL_ALG_B,
-    _HLL_ALG_MIN,
-    _PCA_ITERS,
-    _PCA_TOPK,
-    _RZ_CUT,
-    _SQL_PRED_A,
-    _SQL_PRED_B,
-    _countsketch_cells_sql,
-    _hits_oracle,
-    _hll_scalar_sql,
-    _pca_oracle,
-    _poisson_bootstrap_oracle,
-    q_acf_daily,
-    q_bloom_semi_join,
-    q_containment_dedup,
-    q_cube_shares,
-    q_golden_record,
-    q_hhi_concentration,
-    q_hits_scores,
-    q_hll_audience_algebra,
-    q_hll_distinct,
-    q_holt_trend,
-    q_item_similarity_cf,
-    q_join_size_estimate,
-    q_l_diversity,
-    q_lorenz_curve,
-    q_max_drawdown,
-    q_negative_sampling,
-    q_pareto_abc,
-    q_pca_top_component,
-    q_poisson_bootstrap,
-    q_quantile_normalize,
-    q_rfm_segments_distributed,
-    q_robust_zscore,
-    q_salted_hot_agg,
-    q_sequence_gaps,
-    q_theil_inequality,
-    q_theil_sen,
-)
-from .stats_rank import (  # noqa: F401
-    ORACLE_ANOVA,
-    ORACLE_ASSORTATIVITY,
-    ORACLE_BOLLINGER,
-    ORACLE_BOM,
-    ORACLE_CONFORMAL,
-    ORACLE_CUM_GAINS,
-    ORACLE_EB_RATES,
-    ORACLE_EXPECTATION_AUDIT,
-    ORACLE_FORECAST_ACCURACY,
-    ORACLE_INFO_GAIN,
-    ORACLE_JARQUE_BERA,
-    ORACLE_KENDALL,
-    ORACLE_KRUSKAL,
-    ORACLE_LEVENE,
-    ORACLE_MELT,
-    ORACLE_MUTUAL_INFO,
-    ORACLE_OLS2,
-    ORACLE_PARTIAL_CORR,
-    ORACLE_PRICE_INDEX,
-    ORACLE_PRORATE,
-    ORACLE_QINI,
-    ORACLE_RATE_ZTEST,
-    ORACLE_READABILITY,
-    ORACLE_RMST,
-    ORACLE_ROLLING_SLOPE,
-    ORACLE_RSI,
-    ORACLE_RUNS_TEST,
-    ORACLE_SEMANTIC_OUTLIER,
-    ORACLE_SENTENCE_CHUNKS,
-    ORACLE_SPEARMAN,
-    ORACLE_SRM,
-    ORACLE_TARGET_ENCODE,
-    ORACLE_TIME_DECAY,
-    ORACLE_TOPK_OTHERS,
-    ORACLE_T_CLOSENESS,
-    ORACLE_VWAP,
-    ORACLE_WEIGHTED_ESS,
-    ORACLE_XYZ,
-    _BOM_DEPTH,
-    _BOM_ROOTS,
-    _DPS_EPS,
-    _DPS_HI,
-    _DPS_LO,
-    _DPS_SALT,
-    _DP_EPS,
-    _DP_SALT,
-    _EXPECTATIONS,
-    _MMR_K,
-    _MMR_LAM,
-    _MMR_TOPN,
-    _PSEUDO_SALT,
-    _RMST_TAU,
-    _TDA_HALFLIFE,
-    _bom_edges,
-    _dp_oracle,
-    _dp_sum_oracle,
-    _harmonic_oracle,
-    _mmr_oracle,
-    _multiple_testing_oracle,
-    _pseudonymize_oracle,
-    _sql_upper_tail,
-    q_anova_f,
-    q_bollinger_bands,
-    q_bom_rollup,
-    q_conformal_interval,
-    q_cumulative_gains,
-    q_degree_assortativity,
-    q_dp_noisy_counts,
-    q_dp_noisy_sum,
-    q_empirical_bayes_rates,
-    q_expectation_audit,
-    q_feature_info_gain,
-    q_forecast_accuracy,
-    q_harmonic_centrality,
-    q_jarque_bera,
-    q_kendall_tau,
-    q_kruskal_wallis,
-    q_levene_variance,
-    q_melt_metrics,
-    q_mmr_rerank,
-    q_multiple_testing,
-    q_mutual_information,
-    q_ols2_trend,
-    q_partial_corr,
-    q_price_index,
-    q_prorate_order_lines,
-    q_pseudonymize_keys,
-    q_qini_curve,
-    q_rate_ztest_sweep,
-    q_readability,
-    q_rmst_survival,
-    q_rolling_slope,
-    q_rsi_indicator,
-    q_runs_test,
-    q_semantic_outlier,
-    q_sentence_chunks,
-    q_spearman_corr,
-    q_srm_check,
-    q_t_closeness,
-    q_target_encode,
-    q_time_decay_attribution,
-    q_topk_others,
-    q_vwap,
-    q_weighted_mean_ess,
-    q_xyz_classification,
-)
-from .stats_agreement import (  # noqa: F401
-    ORACLE_BURSTINESS,
-    ORACLE_CAPTURE_RECAPTURE,
-    ORACLE_CHISQ_GOF,
-    ORACLE_CLASSIFICATION_LOSS,
-    ORACLE_COHENS_D,
-    ORACLE_COHENS_KAPPA,
-    ORACLE_CONTROL_CHART,
-    ORACLE_COOCCURRENCE_LIFT,
-    ORACLE_COVARIATE_BALANCE,
-    ORACLE_CRAMERS_V,
-    ORACLE_CROSTON,
-    ORACLE_DECISION_STUMP,
-    ORACLE_DURBIN_WATSON,
-    ORACLE_ECE,
-    ORACLE_FIXED_EFFECTS,
-    ORACLE_FLEISS,
-    ORACLE_HEAPS_LAW,
-    ORACLE_MANN_KENDALL,
-    ORACLE_MCNEMAR,
-    ORACLE_MSPRT,
-    ORACLE_NELSON_AALEN,
-    ORACLE_ODDS_RATIO,
-    ORACLE_PAGE_HINKLEY,
-    ORACLE_RELATIVE_RISK,
-    ORACLE_ROCCHIO,
-    ORACLE_SILHOUETTE,
-    ORACLE_TAIL_RISK,
-    ORACLE_TRIMMED_MEAN,
-    ORACLE_UNSEEN_MASS,
-    ORACLE_WOE_IV,
-    _BURST_MIN_EVENTS,
-    _CD_A,
-    _CD_B,
-    _CROSTON_MAX_PART,
-    _DUCK_CENTROIDS,
-    _DUCK_EUCLID,
-    _MSPRT_TAU,
-    _PH_DELTA,
-    _PH_THRESHOLD,
-    _RBO_K,
-    _RBO_P,
-    _TRIM,
-    _TR_Q,
-    _duck_ent,
-    _rbo_oracle,
-    q_burstiness,
-    q_capture_recapture,
-    q_centroid_silhouette,
-    q_chisq_gof,
-    q_classification_loss,
-    q_cohens_d,
-    q_cohens_kappa,
-    q_control_chart,
-    q_cooccurrence_lift,
-    q_covariate_balance,
-    q_cramers_v,
-    q_croston,
-    q_decision_stump,
-    q_durbin_watson,
-    q_ece,
-    q_fixed_effects,
-    q_fleiss_kappa,
-    q_heaps_law,
-    q_mann_kendall,
-    q_mcnemar,
-    q_msprt,
-    q_nelson_aalen,
-    q_odds_ratio,
-    q_page_hinkley,
-    q_rbo_overlap,
-    q_relative_risk,
-    q_rocchio_assign,
-    q_tail_risk,
-    q_trimmed_mean,
-    q_unseen_mass,
-    q_woe_iv,
-)
-from .stats_sequential import (  # noqa: F401
-    ORACLE_ABC_XYZ,
-    ORACLE_BEHAVIOR_ENTROPY,
-    ORACLE_CLIFFS_DELTA,
-    ORACLE_COCHRAN_Q,
-    ORACLE_EWMA_CHART,
-    ORACLE_FD_AUDIT,
-    ORACLE_FRIEDMAN,
-    ORACLE_HISTOGRAM2D,
-    ORACLE_LOCAL_PEAKS,
-    ORACLE_LOSO_VALUE,
-    ORACLE_MARKOV_NEXT,
-    ORACLE_PROFIT_CURVE,
-    ORACLE_QTE,
-    ORACLE_RATIO_METRIC,
-    ORACLE_WINNOW_OVERLAP,
-    _CQ_T,
-    _EWCC_L,
-    _FR_T,
-    _H2D_XBINS,
-    _H2D_YBINS,
-    _LOSO_EVAL,
-    _MARKOV_CHANNELS,
-    _MARKOV_ITER,
-    _PC_FN,
-    _PC_FP,
-    _PC_TP,
-    _PEAK_NEIGHBORS,
-    _PEAK_SIGMA,
-    _PP_MDE,
-    _WIN_K,
-    _WIN_MAXDF,
-    _WIN_MINSH,
-    _WIN_SOURCES,
-    _WIN_W,
-    _WK_CATS,
-    _WK_PRICE_CUTS,
-    _holm_oracle,
-    _markov_oracle,
-    _ph_series_stream_dir,
-    _power_plan_oracle,
-    _stream_plan_page_hinkley,
-    _wkappa_oracle,
-    q_ab_power_plan,
-    q_abc_xyz_matrix,
-    q_behavior_entropy,
-    q_cliffs_delta,
-    q_cochran_q,
-    q_ewma_control_chart,
-    q_fd_audit,
-    q_friedman,
-    q_histogram2d,
-    q_holm_sweep,
-    q_local_peaks,
-    q_loso_value,
-    q_markov_attribution,
-    q_markov_next_accuracy,
-    q_profit_curve,
-    q_qte,
-    q_ratio_metric_ci,
-    q_streaming_page_hinkley,
-    q_weighted_kappa,
-    q_winnow_overlap,
-)
-# composed.py registers into the registries defined above; imported
-# LAST so every family's own registration asserts have already run.
-from .composed import (  # noqa: F401
-    ORACLE_STREAMING_SHARD_FEED,
-    q_streaming_shard_feed,
-)
+from .catalog import AUX_ORACLES, AUX_QUERIES, ORACLES, QUERIES, STREAMING_PLAN_BUILDERS
+
+__all__ = ["QUERIES", "AUX_QUERIES", "AUX_ORACLES", "STREAMING_PLAN_BUILDERS", "oracles"]
+
+
+def oracles() -> dict[str, str]:
+    """The driver queries' oracles, keyed like ``QUERIES``."""
+    return dict(ORACLES)
+
+
+# The driver records at most 50 rows, and the streaming plan audit needs
+# a builder for every streaming query.
+assert len(QUERIES) == 50, f"registry must stay at 50 entries, got {len(QUERIES)}"
+assert set(STREAMING_PLAN_BUILDERS) == {
+    n for n in AUX_QUERIES if n.startswith("streaming_")
+}, "every streaming AUX query needs a pre-sink plan builder for the audit"

@@ -1,27 +1,20 @@
 """Query catalog — business/ops analytics.
 
-Split from the former monolithic queries.py (round 11); the
-registry dicts are defined once (QUERIES/_EXTENSION_ORACLES in
-.core, AUX_QUERIES/AUX_ORACLES in .curation) and mutated by the
-registration statements each family module keeps.
+Each query is registered with its DuckDB oracle by one
+``catalog.register`` call below its definition.
 """
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..scope import checkpoint
-from ..sources.registry import load_table, rebalance, register_temp_views
+from ..sources.registry import load_table, rebalance
 
+from .catalog import register
 from .core import (
     dedup,
     text,
-)
-from .curation import (
-    AUX_ORACLES,
-    AUX_QUERIES,
 )
 
 # ---------------------------------------------------------------------------
@@ -549,40 +542,16 @@ SELECT pa AS partkey, pb AS similar_part, n_shared, cosine, rank FROM (
 """
 
 
-AUX_QUERIES.update(
-    {
-        "theil_inequality": q_theil_inequality,
-        "hhi_concentration": q_hhi_concentration,
-        "pareto_abc": q_pareto_abc,
-        "robust_zscore": q_robust_zscore,
-        "acf_daily": q_acf_daily,
-        "poisson_bootstrap": q_poisson_bootstrap,
-        "holt_trend": q_holt_trend,
-        "cube_shares": q_cube_shares,
-        "hits_scores": q_hits_scores,
-        "item_similarity_cf": q_item_similarity_cf,
-    }
-)
-
-AUX_ORACLES.update(
-    {
-        "theil_inequality": ORACLE_THEIL,
-        "hhi_concentration": ORACLE_HHI,
-        "pareto_abc": ORACLE_PARETO_ABC,
-        "robust_zscore": ORACLE_ROBUST_ZSCORE,
-        "acf_daily": ORACLE_ACF,
-        "poisson_bootstrap": _poisson_bootstrap_oracle(),
-        "holt_trend": ORACLE_HOLT_TREND,
-        "cube_shares": ORACLE_CUBE_SHARES,
-        "hits_scores": _hits_oracle(),
-        "item_similarity_cf": ORACLE_ITEM_SIMILARITY,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("theil_inequality", q_theil_inequality, ORACLE_THEIL)
+register("hhi_concentration", q_hhi_concentration, ORACLE_HHI)
+register("pareto_abc", q_pareto_abc, ORACLE_PARETO_ABC)
+register("robust_zscore", q_robust_zscore, ORACLE_ROBUST_ZSCORE)
+register("acf_daily", q_acf_daily, ORACLE_ACF)
+register("poisson_bootstrap", q_poisson_bootstrap, _poisson_bootstrap_oracle())
+register("holt_trend", q_holt_trend, ORACLE_HOLT_TREND)
+register("cube_shares", q_cube_shares, ORACLE_CUBE_SHARES)
+register("hits_scores", q_hits_scores, _hits_oracle())
+register("item_similarity_cf", q_item_similarity_cf, ORACLE_ITEM_SIMILARITY)
 
 
 # ---------------------------------------------------------------------------
@@ -873,32 +842,13 @@ FROM r GROUP BY grp
 """
 
 
-AUX_QUERIES.update(
-    {
-        "theil_sen": q_theil_sen,
-        "lorenz_curve": q_lorenz_curve,
-        "containment_dedup": q_containment_dedup,
-        "negative_sampling": q_negative_sampling,
-        "rfm_segments_distributed": q_rfm_segments_distributed,
-        "sequence_gaps": q_sequence_gaps,
-    }
-)
-
-AUX_ORACLES.update(
-    {
-        "theil_sen": ORACLE_THEIL_SEN,
-        "lorenz_curve": ORACLE_LORENZ,
-        "containment_dedup": ORACLE_CONTAINMENT_DEDUP,
-        "negative_sampling": ORACLE_NEGATIVE_SAMPLING,
-        "rfm_segments_distributed": ORACLE_RFM_DISTRIBUTED,
-        "sequence_gaps": ORACLE_SEQUENCE_GAPS,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("theil_sen", q_theil_sen, ORACLE_THEIL_SEN)
+register("lorenz_curve", q_lorenz_curve, ORACLE_LORENZ)
+register("containment_dedup", q_containment_dedup, ORACLE_CONTAINMENT_DEDUP)
+register("negative_sampling", q_negative_sampling, ORACLE_NEGATIVE_SAMPLING)
+register("rfm_segments_distributed", q_rfm_segments_distributed,
+         ORACLE_RFM_DISTRIBUTED)
+register("sequence_gaps", q_sequence_gaps, ORACLE_SEQUENCE_GAPS)
 
 
 def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1039,24 +989,8 @@ GROUP BY 1
 """
 
 
-AUX_QUERIES.update(
-    {
-        "hll_distinct": q_hll_distinct,
-        "golden_record": q_golden_record,
-    }
-)
-
-AUX_ORACLES.update(
-    {
-        "hll_distinct": ORACLE_HLL_DISTINCT,
-        "golden_record": ORACLE_GOLDEN_RECORD,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("hll_distinct", q_hll_distinct, ORACLE_HLL_DISTINCT)
+register("golden_record", q_golden_record, ORACLE_GOLDEN_RECORD)
 
 
 def q_bloom_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1201,26 +1135,9 @@ ORDER BY 1
 """
 
 
-AUX_QUERIES.update(
-    {
-        "bloom_semi_join": q_bloom_semi_join,
-        "max_drawdown": q_max_drawdown,
-        "salted_hot_agg": q_salted_hot_agg,
-    }
-)
-
-AUX_ORACLES.update(
-    {
-        "bloom_semi_join": ORACLE_BLOOM_SEMI_JOIN,
-        "max_drawdown": ORACLE_MAX_DRAWDOWN,
-        "salted_hot_agg": ORACLE_SALTED_HOT_AGG,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("bloom_semi_join", q_bloom_semi_join, ORACLE_BLOOM_SEMI_JOIN)
+register("max_drawdown", q_max_drawdown, ORACLE_MAX_DRAWDOWN)
+register("salted_hot_agg", q_salted_hot_agg, ORACLE_SALTED_HOT_AGG)
 
 
 # ---------------------------------------------------------------------------
@@ -1479,26 +1396,10 @@ LIMIT {topk}""".format(n=iters, topk=_PCA_TOPK)
     return "".join(parts)
 
 
-AUX_QUERIES.update(
-    {
-        "hll_audience_algebra": q_hll_audience_algebra,
-        "quantile_normalize": q_quantile_normalize,
-        "pca_top_component": q_pca_top_component,
-    }
-)
-
-AUX_ORACLES.update(
-    {
-        "hll_audience_algebra": ORACLE_HLL_AUDIENCE_ALGEBRA,
-        "quantile_normalize": ORACLE_QUANTILE_NORMALIZE,
-        "pca_top_component": _pca_oracle(),
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("hll_audience_algebra", q_hll_audience_algebra,
+         ORACLE_HLL_AUDIENCE_ALGEBRA)
+register("quantile_normalize", q_quantile_normalize, ORACLE_QUANTILE_NORMALIZE)
+register("pca_top_component", q_pca_top_component, _pca_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -1650,22 +1551,7 @@ ORDER BY 1, 2
 """
 
 
-AUX_QUERIES.update(
-    {
-        "join_size_estimate": q_join_size_estimate,
-        "l_diversity": q_l_diversity,
-    }
-)
+register("join_size_estimate", q_join_size_estimate, ORACLE_JOIN_SIZE_ESTIMATE)
+register("l_diversity", q_l_diversity, ORACLE_L_DIVERSITY)
 
-AUX_ORACLES.update(
-    {
-        "join_size_estimate": ORACLE_JOIN_SIZE_ESTIMATE,
-        "l_diversity": ORACLE_L_DIVERSITY,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
 

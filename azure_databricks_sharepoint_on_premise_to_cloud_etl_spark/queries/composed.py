@@ -13,10 +13,8 @@ per-source drift health panel, the real-codec multimodal
 encode→decode round-trip, hybrid-RRF→MMR diverse retrieval, and the
 bronze CSV ingest replay (sources + sinks under the hash gate).
 
-Imported LAST by queries/__init__.py: it registers into the AUX
-registries (defined in .curation) and the streaming-plan-builder
-registry (defined in .retrieval), so every earlier module's
-registration asserts have already run.
+Imported last by queries/__init__.py, so its queries follow every
+other family's in the registries' order.
 """
 
 from __future__ import annotations
@@ -26,9 +24,8 @@ from pyspark.sql import functions as F
 
 from ..scope import checkpoint, concurrently
 
+from .catalog import register
 from .core import _stream_events
-from .curation import AUX_ORACLES, AUX_QUERIES
-from .retrieval import STREAMING_PLAN_BUILDERS
 
 
 # --- round-12 exhibit 3: streaming shard feed (chained stateful ops)
@@ -147,17 +144,8 @@ HAVING window_start + INTERVAL 1 HOUR <= wm.w
 """
 
 
-AUX_QUERIES["streaming_shard_feed"] = q_streaming_shard_feed
-AUX_ORACLES["streaming_shard_feed"] = ORACLE_STREAMING_SHARD_FEED
-STREAMING_PLAN_BUILDERS["streaming_shard_feed"] = _stream_plan_shard_feed
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
-assert set(STREAMING_PLAN_BUILDERS) == {
-    n for n in AUX_QUERIES if n.startswith("streaming_")
-}, "every streaming AUX query needs a pre-sink plan builder for the audit"
+register("streaming_shard_feed", q_streaming_shard_feed,
+         ORACLE_STREAMING_SHARD_FEED, plan=_stream_plan_shard_feed)
 
 
 # --- round-12 exhibit 4: CDC diff -> apply round-trip
@@ -274,13 +262,7 @@ GROUP BY seg, ops.n_inserts, ops.n_updates, ops.n_deletes
 """
 
 
-AUX_QUERIES["cdc_roundtrip"] = q_cdc_roundtrip
-AUX_ORACLES["cdc_roundtrip"] = _cdc_roundtrip_oracle()
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("cdc_roundtrip", q_cdc_roundtrip, _cdc_roundtrip_oracle())
 
 
 # --- round-12 exhibit 5: source health report (drift panel)
@@ -424,13 +406,7 @@ JOIN nov USING (source) JOIN dup USING (source)
 """
 
 
-AUX_QUERIES["source_health"] = q_source_health
-AUX_ORACLES["source_health"] = _source_health_oracle()
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("source_health", q_source_health, _source_health_oracle())
 
 
 # --- round-12 exhibit 6: multimodal encode->decode round-trip
@@ -534,13 +510,8 @@ FROM documents
 """
 
 
-AUX_QUERIES["multimodal_roundtrip"] = q_multimodal_roundtrip
-AUX_ORACLES["multimodal_roundtrip"] = ORACLE_MULTIMODAL_ROUNDTRIP
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("multimodal_roundtrip", q_multimodal_roundtrip,
+         ORACLE_MULTIMODAL_ROUNDTRIP)
 
 
 # --- round-12 exhibit 7: diverse retrieval (hybrid RRF -> MMR)
@@ -693,13 +664,7 @@ def _diverse_retrieval_oracle() -> str:
     return _mmr_unroll(parts, _DIV_K, _MMR_LAM)
 
 
-AUX_QUERIES["diverse_retrieval"] = q_diverse_retrieval
-AUX_ORACLES["diverse_retrieval"] = _diverse_retrieval_oracle()
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("diverse_retrieval", q_diverse_retrieval, _diverse_retrieval_oracle())
 
 
 # --- round-12 exhibit 8: bronze CSV ingest replay (sources + sinks
@@ -842,13 +807,7 @@ HAVING count(*) > 0
 """
 
 
-AUX_QUERIES["bronze_ingest_replay"] = q_bronze_ingest_replay
-AUX_ORACLES["bronze_ingest_replay"] = ORACLE_BRONZE_INGEST
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("bronze_ingest_replay", q_bronze_ingest_replay, ORACLE_BRONZE_INGEST)
 
 
 # --- round-13 exhibit: STREAMING bronze ingest (the Auto-Loader-shaped
@@ -994,14 +953,8 @@ def q_streaming_bronze_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _census_manifest(spark.read.parquet(bronze))
 
 
-AUX_QUERIES["streaming_bronze_ingest"] = q_streaming_bronze_ingest
-AUX_ORACLES["streaming_bronze_ingest"] = ORACLE_BRONZE_INGEST
-STREAMING_PLAN_BUILDERS["streaming_bronze_ingest"] = _stream_plan_bronze_ingest
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("streaming_bronze_ingest", q_streaming_bronze_ingest,
+         ORACLE_BRONZE_INGEST, plan=_stream_plan_bronze_ingest)
 
 
 # --- round-13 exhibit: crawl-refresh operational loop (r12 verdict
@@ -1451,13 +1404,7 @@ FROM manifest m, ops, nhealthy, dd
 """
 
 
-AUX_QUERIES["crawl_refresh_loop"] = q_crawl_refresh_loop
-AUX_ORACLES["crawl_refresh_loop"] = _crawl_refresh_oracle()
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("crawl_refresh_loop", q_crawl_refresh_loop, _crawl_refresh_oracle())
 
 
 # --- round-13 exhibit 3: maintenance cycle (M1-M4 under the hash
@@ -1581,13 +1528,7 @@ GROUP BY run_id, tot.kept
 """
 
 
-AUX_QUERIES["maintenance_cycle"] = q_maintenance_cycle
-AUX_ORACLES["maintenance_cycle"] = ORACLE_MAINTENANCE_CYCLE
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("maintenance_cycle", q_maintenance_cycle, ORACLE_MAINTENANCE_CYCLE)
 
 
 # --- round-13 exhibit 4: REST workload round-trip (S5 + S4 + K5 +
@@ -1798,13 +1739,8 @@ GROUP BY d, z
 """
 
 
-AUX_QUERIES["rest_workload_roundtrip"] = q_rest_workload_roundtrip
-AUX_ORACLES["rest_workload_roundtrip"] = ORACLE_REST_WORKLOAD
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("rest_workload_roundtrip", q_rest_workload_roundtrip,
+         ORACLE_REST_WORKLOAD)
 
 
 # --- round-13 exhibit 5: SharePoint mapping-refresh gate (S6 + S7 +
@@ -1964,13 +1900,8 @@ GROUP BY f
 """
 
 
-AUX_QUERIES["mapping_refresh_gate"] = q_mapping_refresh_gate
-AUX_ORACLES["mapping_refresh_gate"] = ORACLE_MAPPING_REFRESH_GATE
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("mapping_refresh_gate", q_mapping_refresh_gate,
+         ORACLE_MAPPING_REFRESH_GATE)
 
 
 # --- round-13 exhibit 6: alerting round-trip (K6 + R4 under the hash
@@ -2054,10 +1985,5 @@ FROM nation WHERE n_nationkey % 5 = 0
 """
 
 
-AUX_QUERIES["alerting_roundtrip"] = q_alerting_roundtrip
-AUX_ORACLES["alerting_roundtrip"] = ORACLE_ALERTING
+register("alerting_roundtrip", q_alerting_roundtrip, ORACLE_ALERTING)
 
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)

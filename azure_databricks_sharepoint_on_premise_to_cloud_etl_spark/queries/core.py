@@ -16,8 +16,6 @@ Conventions:
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -33,8 +31,7 @@ from ..operators import (
 )
 from ..scope import persist
 from ..sources.registry import load_table, rebalance, register_temp_views
-
-QueryFn = Callable[[SparkSession, str], DataFrame]
+from .catalog import register
 
 # ---------------------------------------------------------------------------
 # Shared-dialect SQL (run verbatim in Spark SQL and DuckDB)
@@ -1274,80 +1271,53 @@ FROM documents
 
 
 # ---------------------------------------------------------------------------
-# Catalog
+# Driver queries
 # ---------------------------------------------------------------------------
 
-# The driver's correctness gate captures at most 50 rows; the registry
-# is kept at EXACTLY 50 oracle-bearing entries so every operator gets a
-# verdict.  Bench-only and folded variants (fast-hash LSH, simhash
-# signatures, the solo earliest/drop_na/running_sum/time_reanchor/
-# actual_plan_label/streaming forms) live in AUX_QUERIES below —
-# pytest-verified against the same DuckDB oracles, just not burning a
-# driver slot.
-QUERIES: dict[str, QueryFn] = {
-    "flagship_census_count": q_flagship_census_count,
-    "pricing_summary": q_pricing_summary,
-    "filter_project": q_filter_project,
-    "top1_latest_order": q_top1_latest_order,
-    "next_event_lead": q_next_event_lead,
-    "anti_join": q_anti_join,
-    "semi_join": q_semi_join,
-    "union_distinct": q_union_distinct,
-    "watermark_filter": q_watermark_filter,
-    "latest_snapshot": q_latest_snapshot,
-    "latest_batch": q_latest_batch,
-    "hierarchical_fallback": q_hierarchical_fallback,
-    "rolling_window_expand": q_rolling_window_expand,
-    "interval_containment": q_interval_containment,
-    "tumbling_window": q_tumbling_window,
-    "sessionize": q_sessionize,
-    "json_extract": q_json_extract,
-    "nested_explode": q_nested_explode,
-    "exact_dedup": q_exact_dedup,
-    "minhash_lsh_pairs": q_minhash_lsh_pairs,
-    "ngram_jaccard": q_ngram_jaccard,
-    "embedding_near_dup": q_embedding_near_dup,
-    "cosine_topk": q_cosine_topk,
-    "language_id": q_language_id,
-    "quality_score": q_quality_score,
-    "token_count": q_token_count,
-    "fingerprint": q_fingerprint,
-    "multimodal_meta": q_multimodal_meta,
-}
+# The driver's correctness gate captures at most 50 rows; the driver
+# registry is kept at EXACTLY 50 oracle-bearing entries so every
+# operator gets a verdict.  Bench-only and folded variants (fast-hash
+# LSH, simhash signatures, the solo earliest/drop_na/running_sum/
+# time_reanchor/actual_plan_label/streaming forms) are AUX queries —
+# verified against the same DuckDB oracles, just not burning a driver
+# slot.
 
-
-def oracles() -> dict[str, str]:
-    return {
-        "flagship_census_count": FLAGSHIP_SQL,
-        "pricing_summary": ORACLE_PRICING,
-        "filter_project": ORACLE_FILTER_PROJECT,
-        "top1_latest_order": ORACLE_TOP1,
-        "next_event_lead": ORACLE_LEAD,
-        "anti_join": ORACLE_ANTI,
-        "semi_join": ORACLE_SEMI,
-        "union_distinct": ORACLE_UNION,
-        "watermark_filter": ORACLE_WATERMARK,
-        "latest_snapshot": ORACLE_LATEST_SNAPSHOT,
-        "latest_batch": ORACLE_LATEST_BATCH,
-        "hierarchical_fallback": ORACLE_HIERARCHICAL,
-        "rolling_window_expand": ORACLE_ROLLING,
-        "interval_containment": ORACLE_CONTAINMENT,
-        "tumbling_window": ORACLE_TUMBLING,
-        "sessionize": ORACLE_SESSIONIZE,
-        "json_extract": ORACLE_JSON,
-        "nested_explode": ORACLE_NESTED,
-        "exact_dedup": ORACLE_EXACT_DEDUP,
-        "minhash_lsh_pairs": _minhash_oracle(),
-        "ngram_jaccard": ORACLE_JACCARD,
-        "embedding_near_dup": ORACLE_NEAR_DUP,
-        "cosine_topk": ORACLE_COSINE_TOPK,
-        "language_id": _langid_oracle(),
-        "quality_score": _quality_oracle(),
-        "token_count": ORACLE_TOKEN_COUNT,
-        "fingerprint": _fingerprint_oracle(),
-        "multimodal_meta": ORACLE_MULTIMODAL,
-        **_EXTENSION_ORACLES,
-    }
+register("flagship_census_count", q_flagship_census_count,
+         FLAGSHIP_SQL, driver=True)
+register("pricing_summary", q_pricing_summary, ORACLE_PRICING, driver=True)
+register("filter_project", q_filter_project,
+         ORACLE_FILTER_PROJECT, driver=True)
+register("top1_latest_order", q_top1_latest_order, ORACLE_TOP1, driver=True)
+register("next_event_lead", q_next_event_lead, ORACLE_LEAD, driver=True)
+register("anti_join", q_anti_join, ORACLE_ANTI, driver=True)
+register("semi_join", q_semi_join, ORACLE_SEMI, driver=True)
+register("union_distinct", q_union_distinct, ORACLE_UNION, driver=True)
+register("watermark_filter", q_watermark_filter, ORACLE_WATERMARK, driver=True)
+register("latest_snapshot", q_latest_snapshot,
+         ORACLE_LATEST_SNAPSHOT, driver=True)
+register("latest_batch", q_latest_batch, ORACLE_LATEST_BATCH, driver=True)
+register("hierarchical_fallback", q_hierarchical_fallback,
+         ORACLE_HIERARCHICAL, driver=True)
+register("rolling_window_expand", q_rolling_window_expand,
+         ORACLE_ROLLING, driver=True)
+register("interval_containment", q_interval_containment,
+         ORACLE_CONTAINMENT, driver=True)
+register("tumbling_window", q_tumbling_window, ORACLE_TUMBLING, driver=True)
+register("sessionize", q_sessionize, ORACLE_SESSIONIZE, driver=True)
+register("json_extract", q_json_extract, ORACLE_JSON, driver=True)
+register("nested_explode", q_nested_explode, ORACLE_NESTED, driver=True)
+register("exact_dedup", q_exact_dedup, ORACLE_EXACT_DEDUP, driver=True)
+register("minhash_lsh_pairs", q_minhash_lsh_pairs,
+         _minhash_oracle(), driver=True)
+register("ngram_jaccard", q_ngram_jaccard, ORACLE_JACCARD, driver=True)
+register("embedding_near_dup", q_embedding_near_dup,
+         ORACLE_NEAR_DUP, driver=True)
+register("cosine_topk", q_cosine_topk, ORACLE_COSINE_TOPK, driver=True)
+register("language_id", q_language_id, _langid_oracle(), driver=True)
+register("quality_score", q_quality_score, _quality_oracle(), driver=True)
+register("token_count", q_token_count, ORACLE_TOKEN_COUNT, driver=True)
+register("fingerprint", q_fingerprint, _fingerprint_oracle(), driver=True)
+register("multimodal_meta", q_multimodal_meta, ORACLE_MULTIMODAL, driver=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1667,27 +1637,16 @@ SELECT bigram, count(*) AS n FROM bigrams GROUP BY bigram HAVING count(*) >= 20
 """
 
 
-QUERIES.update(
-    {
-        "join_3way": q_join_3way,
-        "coalesce_fallback": q_coalesce_fallback,
-        "except_intersect": q_except_intersect,
-        "scalar_functions": q_scalar_functions,
-        "rollup_agg": q_rollup_agg,
-        "asof_boundary_join": q_asof_boundary_join,
-        "bigram_freq": q_bigram_freq,
-    }
-)
-
-_EXTENSION_ORACLES = {
-    "join_3way": ORACLE_JOIN_3WAY,
-    "coalesce_fallback": ORACLE_COALESCE,
-    "except_intersect": ORACLE_EXCEPT_INTERSECT,
-    "scalar_functions": ORACLE_SCALAR_FUNCTIONS,
-    "rollup_agg": ORACLE_ROLLUP,
-    "asof_boundary_join": ORACLE_ASOF,
-    "bigram_freq": ORACLE_BIGRAM,
-}
+register("join_3way", q_join_3way, ORACLE_JOIN_3WAY, driver=True)
+register("coalesce_fallback", q_coalesce_fallback,
+         ORACLE_COALESCE, driver=True)
+register("except_intersect", q_except_intersect,
+         ORACLE_EXCEPT_INTERSECT, driver=True)
+register("scalar_functions", q_scalar_functions,
+         ORACLE_SCALAR_FUNCTIONS, driver=True)
+register("rollup_agg", q_rollup_agg, ORACLE_ROLLUP, driver=True)
+register("asof_boundary_join", q_asof_boundary_join, ORACLE_ASOF, driver=True)
+register("bigram_freq", q_bigram_freq, ORACLE_BIGRAM, driver=True)
 
 
 def q_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1707,9 +1666,9 @@ def q_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stream_plan_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-sink streaming plan for q_streaming_tumbling (registered in
-    STREAMING_PLAN_BUILDERS so the streaming plan audit can inspect the
-    stateful plan without draining it)."""
+    """Pre-sink streaming plan for q_streaming_tumbling (registered as
+    its ``plan`` so the streaming plan audit can inspect the stateful
+    plan without draining it)."""
     events, ts_was_ntz = _stream_events(spark, sf_dir)
     # Watermarks require TIMESTAMP (LTZ); the fixture surfaces as
     # TIMESTAMP_NTZ.  With the session timezone pinned UTC the cast is
@@ -1791,7 +1750,7 @@ def _stream_dir_for(sf_dir: str, table: str, copies: int = 1) -> str:
     return d
 
 
-# streaming_tumbling is pytest-verified (AUX below) rather than a
+# streaming_tumbling is an AUX query (registered in curation.py), not a
 # driver row: it shares its oracle with the batch tumbling_window
 # entry, and the registry is capped at the driver's 50-row capture.
 
@@ -2142,22 +2101,12 @@ WHERE round((CAST(t.tf AS DOUBLE) / dl.doc_len)
 """
 
 
-QUERIES.update(
-    {
-        "dedup_components": q_dedup_components,
-        "percentiles": q_percentiles,
-        "percentiles_approx": q_percentiles_approx,
-        "tfidf_top_terms": q_tfidf_top_terms,
-    }
-)
-_EXTENSION_ORACLES.update(
-    {
-        "dedup_components": _components_oracle(),
-        "percentiles": ORACLE_PERCENTILES,
-        "percentiles_approx": ORACLE_PERCENTILES_APPROX,
-        "tfidf_top_terms": ORACLE_TFIDF,
-    }
-)
+register("dedup_components", q_dedup_components,
+         _components_oracle(), driver=True)
+register("percentiles", q_percentiles, ORACLE_PERCENTILES, driver=True)
+register("percentiles_approx", q_percentiles_approx,
+         ORACLE_PERCENTILES_APPROX, driver=True)
+register("tfidf_top_terms", q_tfidf_top_terms, ORACLE_TFIDF, driver=True)
 
 
 def q_cosine_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2255,8 +2204,7 @@ GROUP BY 1, 2, 3
 """
 
 
-QUERIES["cosine_topk_ann"] = q_cosine_topk_ann
-_EXTENSION_ORACLES["cosine_topk_ann"] = _ann_oracle()
+register("cosine_topk_ann", q_cosine_topk_ann, _ann_oracle(), driver=True)
 
 
 def q_agg_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2282,8 +2230,7 @@ SELECT o_orderstatus,
 FROM orders GROUP BY o_orderstatus
 """
 
-QUERIES["agg_collect"] = q_agg_collect
-_EXTENSION_ORACLES["agg_collect"] = ORACLE_AGG_COLLECT
+register("agg_collect", q_agg_collect, ORACLE_AGG_COLLECT, driver=True)
 
 
 # ---------------------------------------------------------------------------
@@ -2611,26 +2558,16 @@ FROM documents d LEFT JOIN hits h ON d.doc_id = h.doc_id
 """
 
 
-QUERIES.update(
-    {
-        "stable_sample": q_stable_sample,
-        "stratified_sample": q_stratified_sample,
-        "pack_sequences": q_pack_sequences,
-        "quality_quantile_filter": q_quality_quantile_filter,
-        "repetition_ratio": q_repetition_ratio,
-        "contamination": q_contamination,
-    }
-)
-_EXTENSION_ORACLES.update(
-    {
-        "stable_sample": ORACLE_STABLE_SAMPLE,
-        "stratified_sample": _stratified_oracle(),
-        "pack_sequences": ORACLE_PACK,
-        "quality_quantile_filter": _quality_quantile_oracle(),
-        "repetition_ratio": _repetition_oracle(),
-        "contamination": _contamination_oracle(),
-    }
-)
+register("stable_sample", q_stable_sample, ORACLE_STABLE_SAMPLE, driver=True)
+register("stratified_sample", q_stratified_sample,
+         _stratified_oracle(), driver=True)
+register("pack_sequences", q_pack_sequences, ORACLE_PACK, driver=True)
+register("quality_quantile_filter", q_quality_quantile_filter,
+         _quality_quantile_oracle(), driver=True)
+register("repetition_ratio", q_repetition_ratio,
+         _repetition_oracle(), driver=True)
+register("contamination", q_contamination,
+         _contamination_oracle(), driver=True)
 
 
 def q_minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2691,8 +2628,8 @@ def _minhash_sig_sql() -> str:
     return head.replace("WITH ", "WITH ", 1) + "\nSELECT * FROM sig"
 
 
-QUERIES["minhash_jaccard_estimate"] = q_minhash_jaccard_estimate
-_EXTENSION_ORACLES["minhash_jaccard_estimate"] = _minhash_estimate_oracle()
+register("minhash_jaccard_estimate", q_minhash_jaccard_estimate,
+         _minhash_estimate_oracle(), driver=True)
 
 
 def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2735,8 +2672,8 @@ SELECT component, doc_id AS kept_doc_id, quality FROM (
 """
 
 
-QUERIES["dedup_keep_best"] = q_dedup_keep_best
-_EXTENSION_ORACLES["dedup_keep_best"] = _keep_best_oracle()
+register("dedup_keep_best", q_dedup_keep_best,
+         _keep_best_oracle(), driver=True)
 
 
 def q_simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2769,6 +2706,6 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= 2
 """
 
 
-QUERIES["simhash_near_pairs"] = q_simhash_near_pairs
-_EXTENSION_ORACLES["simhash_near_pairs"] = _simhash_pairs_oracle()
+register("simhash_near_pairs", q_simhash_near_pairs,
+         _simhash_pairs_oracle(), driver=True)
 

@@ -1,20 +1,17 @@
 """Query catalog — dedup, similarity, sampling, packing, SCD/temporal curation.
 
-Split from the former monolithic queries.py (round 11); the
-registry dicts are defined once (QUERIES/_EXTENSION_ORACLES in
-.core, AUX_QUERIES/AUX_ORACLES in .curation) and mutated by the
-registration statements each family module keeps.
+Each query is registered with its DuckDB oracle by one
+``catalog.register`` call below its definition.
 """
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..scope import checkpoint, concurrently, persist, release
-from ..sources.registry import load_table, rebalance, register_temp_views
+from ..sources.registry import load_table, rebalance
 
+from .catalog import register
 from .core import (
     ORACLE_ACTUAL_PLAN,
     ORACLE_DROP_NA,
@@ -26,8 +23,6 @@ from .core import (
     ORACLE_STREAM_DEDUP,
     ORACLE_STREAM_ENRICH,
     ORACLE_TIME_REANCHOR,
-    QUERIES,
-    QueryFn,
     _CONTAM_EVAL_IDS,
     _DUCK_COSINE,
     _DUCK_NORM,
@@ -43,8 +38,11 @@ from .core import (
     _quality_oracle,
     _simhash_oracle,
     _stream_events,
+    _stream_plan_dedup,
+    _stream_plan_enrich,
+    _stream_plan_sliding,
+    _stream_plan_tumbling,
     dedup,
-    oracles,
     q_actual_plan_label,
     q_cosine_topk_ivf,
     q_cosine_topk_lsh,
@@ -68,12 +66,12 @@ from .core import (
 )
 
 # ---------------------------------------------------------------------------
-# AUX registry: oracle-verified forms that do NOT occupy one of the
+# AUX queries: oracle-verified forms that do NOT occupy one of the
 # driver's 50 correctness slots.  Their coverage is folded into a
-# registry entry (see each note) or they are bench-only variants; the
-# pytest suite (tests/test_aux_queries.py) runs every AUX entry against
-# its DuckDB oracle with the same digest the driver uses, so they keep
-# a hard correctness signal.
+# driver query (see each note) or they are bench-only variants;
+# tools/aux_correctness.py and tests/test_aux_queries.py run every AUX
+# query against its DuckDB oracle with the same digest the driver uses,
+# so they keep a hard correctness signal.
 # ---------------------------------------------------------------------------
 
 # streaming_tumbling emits the pre-reanchor tumbling schema; keep its
@@ -923,123 +921,81 @@ FROM clustered c LEFT JOIN dropped d ON c.vec_id = d.vec_id
 """
 
 
-AUX_QUERIES: dict[str, QueryFn] = {
-    # folded into top1_latest_order (which='earliest')
-    "earliest_per_group": q_earliest_per_group,
-    # folded into scalar_functions (open_status/real_pri + na.drop)
-    "drop_na": q_drop_na,
-    # frame-spec surface; sessionize's cumulative sum is the same
-    # rowsBetween window in a green driver row
-    "running_sum": q_running_sum,
-    # folded into tumbling_window (hour_str/hour_ts columns)
-    "time_reanchor": q_time_reanchor,
-    # folded into interval_containment (method='case')
-    "actual_plan_label": q_actual_plan_label,
-    # same oracle as tumbling_window's bucketing; real readStream path
-    "streaming_tumbling": q_streaming_tumbling,
-    # signature computation is transitively verified by
-    # simhash_near_pairs (pairs+hamming require correct signatures)
-    "simhash": q_simhash,
-    # folded into cosine_topk_ann (method='lsh'/'ivf')
-    "cosine_topk_lsh": q_cosine_topk_lsh,
-    "cosine_topk_ivf": q_cosine_topk_ivf,
-    # bench-only fast-hash variant: deliberately oracle-less (DuckDB
-    # has no xxhash64); plan shape identical to minhash_lsh_pairs
-    "minhash_lsh_pairs_fast": q_minhash_lsh_pairs_fast,
-    # portable=False production gates, hash-verified through the same
-    # xxh64 DuckDB twin (round-7: fast paths get digest discipline)
-    "stable_sample_fast": q_stable_sample_fast,
-    "stratified_sample_fast": q_stratified_sample_fast,
-    # round-9: the last two md5 gates promoted to xxhash64 fast paths
-    "corpus_shuffle_fast": q_corpus_shuffle_fast,
-    "hash_split_fast": q_hash_split_fast,
-    # bench-attribution variant: the window-cumsum stage alone, so
-    # BENCH can split the fused pack_sequences row per variant
-    "pack_sequences_native": q_pack_sequences_native,
-    # round-5 training-pipeline additions (post-50-cap, so AUX-housed;
-    # full oracle parity via tools/aux_correctness.py)
-    "unigram_lm_score": q_unigram_lm_score,
-    "corpus_shuffle": q_corpus_shuffle,
-    "vocab_coverage": q_vocab_coverage,
-    "target_mix": q_target_mix,
-    "sliding_window": q_sliding_window,
-    "pii_redaction": q_pii_redaction,
-    "ivf_refine": q_ivf_refine,
-    "embedding_quantize": q_embedding_quantize,
-    "doc_chunks": q_doc_chunks,
-    # SemDeDup: cluster-then-dedup-within-cluster over embeddings
-    "semantic_dedup": q_semantic_dedup,
-    # DSIR: unigram log-likelihood-ratio importance selection
-    "dsir_select": q_dsir_select,
-    # MassiveText/RefinedWeb boilerplate scrub
-    "repeated_ngram_removal": q_repeated_ngram_removal,
-    # BPE tokenizer-training step (iterate by re-feeding output)
-    "bpe_step": q_bpe_step,
-    # the full curation pipeline as one composed lazy plan
-    "curation_pipeline": q_curation_pipeline,
-    # per-domain quota capping in stable hash order
-    "domain_cap": q_domain_cap,
-    # near-dup-cluster-keyed train/val/test assignment
-    "leakage_safe_split": q_leakage_safe_split,
-    # real streaming-state dedup against duplicated input; batch oracle
-    "streaming_dedup": q_streaming_dedup,
-    # sliding-window stream; same oracle as the batch sliding_window
-    "streaming_sliding": q_streaming_sliding,
-    # stream-static broadcast enrichment join; batch join oracle
-    "streaming_enrich": q_streaming_enrich,
-}
-
-AUX_ORACLES: dict[str, str] = {
-    "earliest_per_group": ORACLE_EARLIEST,
-    "drop_na": ORACLE_DROP_NA,
-    "running_sum": ORACLE_RUNNING_SUM,
-    "time_reanchor": ORACLE_TIME_REANCHOR,
-    "actual_plan_label": ORACLE_ACTUAL_PLAN,
-    "streaming_tumbling": ORACLE_TUMBLING_BASE,
-    "simhash": _simhash_oracle(),
-    "cosine_topk_lsh": _lsh_oracle(),
-    "cosine_topk_ivf": _ivf_oracle(),
-    "pack_sequences_native": ORACLE_PACK_NATIVE,
-    "unigram_lm_score": ORACLE_LM_SCORE,
-    "corpus_shuffle": ORACLE_CORPUS_SHUFFLE,
-    "vocab_coverage": ORACLE_VOCAB_COVERAGE,
-    "target_mix": _target_mix_oracle(),
-    "sliding_window": ORACLE_SLIDING,
-    "pii_redaction": _pii_oracle(),
-    "ivf_refine": _ivf_refine_oracle(),
-    "embedding_quantize": ORACLE_QUANTIZE,
-    "doc_chunks": ORACLE_DOC_CHUNKS,
-    "semantic_dedup": _semantic_dedup_oracle(),
-    "dsir_select": ORACLE_DSIR,
-    "repeated_ngram_removal": _repeated_ngram_oracle(),
-    "bpe_step": ORACLE_BPE_STEP,
-    "curation_pipeline": _curation_pipeline_oracle(),
-    "domain_cap": _domain_cap_oracle(),
-    "leakage_safe_split": _leakage_split_oracle(),
-    "streaming_dedup": ORACLE_STREAM_DEDUP,
-    "streaming_sliding": ORACLE_SLIDING,
-    "streaming_enrich": ORACLE_STREAM_ENRICH,
-    # requires tools.xxh64_oracle.register(con) on the DuckDB
-    # connection (the AUX harness does this) — a pure-python XXH64
-    # reproducing Spark's xxhash64 on strings, closing the one
-    # rows-only row of rounds 4-5
-    "minhash_lsh_pairs_fast": _minhash_oracle(
-        f"((spark_xxhash64(s) % {dedup.MINHASH_P}) + {dedup.MINHASH_P})"
-        f" % {dedup.MINHASH_P}"
-    ),
-    "stable_sample_fast": ORACLE_STABLE_SAMPLE_FAST,
-    "stratified_sample_fast": ORACLE_STRATIFIED_FAST,
-    "corpus_shuffle_fast": ORACLE_CORPUS_SHUFFLE_FAST,
-    "hash_split_fast": ORACLE_HASH_SPLIT_FAST,
-}
-
-# Contract guards: the driver records at most 50 rows and every row
-# must have an oracle — a regression here silently un-verifies queries.
-assert len(QUERIES) == 50, f"registry must stay at 50 entries, got {len(QUERIES)}"
-assert set(oracles()) == set(QUERIES), (
-    "every registry entry needs an oracle twin: "
-    f"{set(oracles()) ^ set(QUERIES)}"
-)
+# folded into top1_latest_order (which='earliest')
+register("earliest_per_group", q_earliest_per_group, ORACLE_EARLIEST)
+# folded into scalar_functions (open_status/real_pri + na.drop)
+register("drop_na", q_drop_na, ORACLE_DROP_NA)
+# frame-spec surface; sessionize's cumulative sum is the same
+# rowsBetween window in a green driver row
+register("running_sum", q_running_sum, ORACLE_RUNNING_SUM)
+# folded into tumbling_window (hour_str/hour_ts columns)
+register("time_reanchor", q_time_reanchor, ORACLE_TIME_REANCHOR)
+# folded into interval_containment (method='case')
+register("actual_plan_label", q_actual_plan_label, ORACLE_ACTUAL_PLAN)
+# same oracle as tumbling_window's bucketing; real readStream path
+register("streaming_tumbling", q_streaming_tumbling,
+         ORACLE_TUMBLING_BASE, plan=_stream_plan_tumbling)
+# signature computation is transitively verified by
+# simhash_near_pairs (pairs+hamming require correct signatures)
+register("simhash", q_simhash, _simhash_oracle())
+# folded into cosine_topk_ann (method='lsh'/'ivf')
+register("cosine_topk_lsh", q_cosine_topk_lsh, _lsh_oracle())
+register("cosine_topk_ivf", q_cosine_topk_ivf, _ivf_oracle())
+# bench-only fast-hash variant; plan shape identical to
+# minhash_lsh_pairs.  Its oracle needs tools.xxh64_oracle.register(con)
+# on the DuckDB connection (the AUX harness does this): a pure-python
+# XXH64 reproducing Spark's xxhash64 on strings
+register("minhash_lsh_pairs_fast", q_minhash_lsh_pairs_fast, _minhash_oracle(
+    f"((spark_xxhash64(s) % {dedup.MINHASH_P}) + {dedup.MINHASH_P})"
+    f" % {dedup.MINHASH_P}"
+))
+# portable=False production gates, hash-verified through the same
+# xxh64 DuckDB twin (round-7: fast paths get digest discipline)
+register("stable_sample_fast", q_stable_sample_fast, ORACLE_STABLE_SAMPLE_FAST)
+register("stratified_sample_fast", q_stratified_sample_fast,
+         ORACLE_STRATIFIED_FAST)
+# round-9: the last two md5 gates promoted to xxhash64 fast paths
+register("corpus_shuffle_fast", q_corpus_shuffle_fast,
+         ORACLE_CORPUS_SHUFFLE_FAST)
+register("hash_split_fast", q_hash_split_fast, ORACLE_HASH_SPLIT_FAST)
+# bench-attribution variant: the window-cumsum stage alone, so
+# BENCH can split the fused pack_sequences row per variant
+register("pack_sequences_native", q_pack_sequences_native, ORACLE_PACK_NATIVE)
+# round-5 training-pipeline additions (post-50-cap, so AUX-housed;
+# full oracle parity via tools/aux_correctness.py)
+register("unigram_lm_score", q_unigram_lm_score, ORACLE_LM_SCORE)
+register("corpus_shuffle", q_corpus_shuffle, ORACLE_CORPUS_SHUFFLE)
+register("vocab_coverage", q_vocab_coverage, ORACLE_VOCAB_COVERAGE)
+register("target_mix", q_target_mix, _target_mix_oracle())
+register("sliding_window", q_sliding_window, ORACLE_SLIDING)
+register("pii_redaction", q_pii_redaction, _pii_oracle())
+register("ivf_refine", q_ivf_refine, _ivf_refine_oracle())
+register("embedding_quantize", q_embedding_quantize, ORACLE_QUANTIZE)
+register("doc_chunks", q_doc_chunks, ORACLE_DOC_CHUNKS)
+# SemDeDup: cluster-then-dedup-within-cluster over embeddings
+register("semantic_dedup", q_semantic_dedup, _semantic_dedup_oracle())
+# DSIR: unigram log-likelihood-ratio importance selection
+register("dsir_select", q_dsir_select, ORACLE_DSIR)
+# MassiveText/RefinedWeb boilerplate scrub
+register("repeated_ngram_removal", q_repeated_ngram_removal,
+         _repeated_ngram_oracle())
+# BPE tokenizer-training step (iterate by re-feeding output)
+register("bpe_step", q_bpe_step, ORACLE_BPE_STEP)
+# the full curation pipeline as one composed lazy plan
+register("curation_pipeline", q_curation_pipeline, _curation_pipeline_oracle())
+# per-domain quota capping in stable hash order
+register("domain_cap", q_domain_cap, _domain_cap_oracle())
+# near-dup-cluster-keyed train/val/test assignment
+register("leakage_safe_split", q_leakage_safe_split, _leakage_split_oracle())
+# real streaming-state dedup against duplicated input; batch oracle
+register("streaming_dedup", q_streaming_dedup,
+         ORACLE_STREAM_DEDUP, plan=_stream_plan_dedup)
+# sliding-window stream; same oracle as the batch sliding_window
+register("streaming_sliding", q_streaming_sliding,
+         ORACLE_SLIDING, plan=_stream_plan_sliding)
+# stream-static broadcast enrichment join; batch join oracle
+register("streaming_enrich", q_streaming_enrich,
+         ORACLE_STREAM_ENRICH, plan=_stream_plan_enrich)
 
 
 # ---------------------------------------------------------------------------
@@ -1501,42 +1457,20 @@ GROUP BY 1
 """
 
 
-AUX_QUERIES.update(
-    {
-        # round-6: production-mode incremental dedup + relational
-        # reshape surface + mixing/robust-stats pipeline steps
-        "streaming_join": q_streaming_join,
-        "corpus_cardinality": q_corpus_cardinality,
-        "incremental_dedup": q_incremental_dedup,
-        "incremental_dedup_amortized": q_incremental_dedup_amortized,
-        "cube_agg": q_cube_agg,
-        "pivot_wide": q_pivot_wide,
-        "trailing_range_agg": q_trailing_range_agg,
-        "quality_deciles": q_quality_deciles,
-        "token_budget_epochs": q_token_budget_epochs,
-        "mad_outlier_filter": q_mad_outlier_filter,
-    }
-)
-
-AUX_ORACLES.update(
-    {
-        "streaming_join": ORACLE_STREAM_JOIN,
-        "corpus_cardinality": ORACLE_CARDINALITY,
-        "incremental_dedup": _incremental_oracle(),
-        "incremental_dedup_amortized": _incremental_oracle(),
-        "cube_agg": ORACLE_CUBE,
-        "pivot_wide": ORACLE_PIVOT,
-        "trailing_range_agg": ORACLE_TRAILING_RANGE,
-        "quality_deciles": _quality_deciles_oracle(),
-        "token_budget_epochs": ORACLE_TOKEN_BUDGET,
-        "mad_outlier_filter": ORACLE_MAD,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+# round-6: production-mode incremental dedup + relational
+# reshape surface + mixing/robust-stats pipeline steps
+register("streaming_join", q_streaming_join,
+         ORACLE_STREAM_JOIN, plan=_stream_plan_join)
+register("corpus_cardinality", q_corpus_cardinality, ORACLE_CARDINALITY)
+register("incremental_dedup", q_incremental_dedup, _incremental_oracle())
+register("incremental_dedup_amortized", q_incremental_dedup_amortized,
+         _incremental_oracle())
+register("cube_agg", q_cube_agg, ORACLE_CUBE)
+register("pivot_wide", q_pivot_wide, ORACLE_PIVOT)
+register("trailing_range_agg", q_trailing_range_agg, ORACLE_TRAILING_RANGE)
+register("quality_deciles", q_quality_deciles, _quality_deciles_oracle())
+register("token_budget_epochs", q_token_budget_epochs, ORACLE_TOKEN_BUDGET)
+register("mad_outlier_filter", q_mad_outlier_filter, ORACLE_MAD)
 
 
 _EPOCH_SALT = 17
@@ -1595,13 +1529,8 @@ WHERE epoch < floor(epochs)
 """
 
 
-AUX_QUERIES["materialize_epochs"] = q_materialize_epochs
-AUX_ORACLES["materialize_epochs"] = _materialize_epochs_oracle()
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("materialize_epochs", q_materialize_epochs,
+         _materialize_epochs_oracle())
 
 
 _Z_BITS = 16
@@ -1654,13 +1583,7 @@ SELECT event_id, {terms} AS zcode FROM qz
 """
 
 
-AUX_QUERIES["zorder_code"] = q_zorder_code
-AUX_ORACLES["zorder_code"] = _zorder_oracle()
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("zorder_code", q_zorder_code, _zorder_oracle())
 
 
 def q_asof_union_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1707,13 +1630,7 @@ QUALIFY row_number() OVER (PARTITION BY p.event_id
 """
 
 
-AUX_QUERIES["asof_union_join"] = q_asof_union_join
-AUX_ORACLES["asof_union_join"] = ORACLE_ASOF_UNION
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("asof_union_join", q_asof_union_join, ORACLE_ASOF_UNION)
 
 
 _RESAMPLE_STEP = 6 * 3600
@@ -1758,13 +1675,7 @@ QUALIFY row_number() OVER (PARTITION BY g.user_id, g.ts
 """
 
 
-AUX_QUERIES["resample_ffill"] = q_resample_ffill
-AUX_ORACLES["resample_ffill"] = ORACLE_RESAMPLE
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("resample_ffill", q_resample_ffill, ORACLE_RESAMPLE)
 
 
 _FUNNEL_STEPS = ["click", "signup", "purchase"]
@@ -1865,25 +1776,9 @@ GROUP BY 1, 2
 """
 
 
-AUX_QUERIES.update(
-    {
-        "funnel_steps": q_funnel_steps,
-        "funnel_chart": q_funnel_chart,
-        "cohort_retention": q_cohort_retention,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "funnel_steps": ORACLE_FUNNEL,
-        "funnel_chart": ORACLE_FUNNEL_CHART,
-        "cohort_retention": ORACLE_RETENTION,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("funnel_steps", q_funnel_steps, ORACLE_FUNNEL)
+register("funnel_chart", q_funnel_chart, ORACLE_FUNNEL_CHART)
+register("cohort_retention", q_cohort_retention, ORACLE_RETENTION)
 
 
 def q_fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1916,13 +1811,7 @@ WHERE levenshtein(name_a, name_b) <= 2
 """
 
 
-AUX_QUERIES["fuzzy_name_pairs"] = q_fuzzy_name_pairs
-AUX_ORACLES["fuzzy_name_pairs"] = ORACLE_FUZZY
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("fuzzy_name_pairs", q_fuzzy_name_pairs, ORACLE_FUZZY)
 
 
 def q_embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1948,13 +1837,7 @@ GROUP BY 1
 """
 
 
-AUX_QUERIES["embedding_dim_stats"] = q_embedding_dim_stats
-AUX_ORACLES["embedding_dim_stats"] = ORACLE_DIM_STATS
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("embedding_dim_stats", q_embedding_dim_stats, ORACLE_DIM_STATS)
 
 
 _PROFILE_COLS = [
@@ -1994,13 +1877,7 @@ FROM orders""")
     return "\nUNION ALL\n".join(parts)
 
 
-AUX_QUERIES["profile_columns"] = q_profile_columns
-AUX_ORACLES["profile_columns"] = _profile_oracle()
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("profile_columns", q_profile_columns, _profile_oracle())
 
 
 _FUNNEL_SPAN = 7 * 86400
@@ -2051,13 +1928,7 @@ LEFT JOIN t3 ON t1.user_id = t3.user_id
 """
 
 
-AUX_QUERIES["funnel_windowed"] = q_funnel_windowed
-AUX_ORACLES["funnel_windowed"] = ORACLE_FUNNEL_WINDOWED
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("funnel_windowed", q_funnel_windowed, ORACLE_FUNNEL_WINDOWED)
 
 
 def q_scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2135,13 +2006,7 @@ FROM j WHERE (has_cur AND has_upd AND dseg IS DISTINCT FROM useg)
 """
 
 
-AUX_QUERIES["scd2_merge"] = q_scd2_merge
-AUX_ORACLES["scd2_merge"] = ORACLE_SCD2
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("scd2_merge", q_scd2_merge, ORACLE_SCD2)
 
 
 def q_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2207,13 +2072,7 @@ SELECT seg, count(*) AS n_orders FROM m GROUP BY 1
 """
 
 
-AUX_QUERIES["point_in_time_join"] = q_point_in_time_join
-AUX_ORACLES["point_in_time_join"] = ORACLE_PIT
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("point_in_time_join", q_point_in_time_join, ORACLE_PIT)
 
 
 def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2285,13 +2144,7 @@ WHERE NOT ho OR NOT hn
 """
 
 
-AUX_QUERIES["snapshot_diff"] = q_snapshot_diff
-AUX_ORACLES["snapshot_diff"] = ORACLE_SNAPSHOT_DIFF
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("snapshot_diff", q_snapshot_diff, ORACLE_SNAPSHOT_DIFF)
 
 
 def q_group_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2317,13 +2170,7 @@ GROUP BY 1
 """
 
 
-AUX_QUERIES["group_ols"] = q_group_ols
-AUX_ORACLES["group_ols"] = ORACLE_GROUP_OLS
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("group_ols", q_group_ols, ORACLE_GROUP_OLS)
 
 
 def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2357,13 +2204,7 @@ FROM m GROUP BY 1
 """
 
 
-AUX_QUERIES["attribution"] = q_attribution
-AUX_ORACLES["attribution"] = ORACLE_ATTRIBUTION
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("attribution", q_attribution, ORACLE_ATTRIBUTION)
 
 
 def q_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2402,14 +2243,7 @@ GROUP BY 1
 """
 
 
-AUX_QUERIES["bigram_lm_score"] = q_bigram_lm_score
-AUX_ORACLES["bigram_lm_score"] = ORACLE_BIGRAM_LM
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
-
+register("bigram_lm_score", q_bigram_lm_score, ORACLE_BIGRAM_LM)
 
 
 # --- round-11 widening batch 39: dedup savings accounting, LSH
@@ -2539,23 +2373,8 @@ ORDER BY 1
 """
 
 
-AUX_QUERIES.update(
-    {
-        "dedup_savings": q_dedup_savings,
-        "lsh_threshold_sweep": q_lsh_threshold_sweep,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "dedup_savings": _dedup_savings_oracle(),
-        "lsh_threshold_sweep": _lsh_sweep_oracle(),
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("dedup_savings", q_dedup_savings, _dedup_savings_oracle())
+register("lsh_threshold_sweep", q_lsh_threshold_sweep, _lsh_sweep_oracle())
 
 
 # --- round-11 widening batch 40b: duplicate-vs-quality cross-tab
@@ -2644,13 +2463,7 @@ FROM staged GROUP BY 1, 2
 """
 
 
-AUX_QUERIES["dup_quality_crosstab"] = q_dup_quality_crosstab
-AUX_ORACLES["dup_quality_crosstab"] = _dup_quality_oracle()
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("dup_quality_crosstab", q_dup_quality_crosstab, _dup_quality_oracle())
 
 
 # --- round-11 widening batch 50a: composed annotation-budget pipeline
@@ -2747,13 +2560,7 @@ FROM ranked
 """
 
 
-AUX_QUERIES["annotation_budget"] = q_annotation_budget
-AUX_ORACLES["annotation_budget"] = _annotation_budget_oracle()
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("annotation_budget", q_annotation_budget, _annotation_budget_oracle())
 
 
 # --- round-12 composition exhibit: incremental-ingest training-shard
@@ -2981,13 +2788,8 @@ FROM packed GROUP BY 1, 2
 """
 
 
-AUX_QUERIES["training_shard_pipeline"] = q_training_shard_pipeline
-AUX_ORACLES["training_shard_pipeline"] = _training_shard_oracle()
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("training_shard_pipeline", q_training_shard_pipeline,
+         _training_shard_oracle())
 
 
 # --- round-12 composition exhibit 2: eval-safe split plan
@@ -3105,10 +2907,6 @@ GROUP BY 1, 2
 """
 
 
-AUX_QUERIES["eval_safe_split_plan"] = q_eval_safe_split_plan
-AUX_ORACLES["eval_safe_split_plan"] = _eval_safe_split_oracle()
+register("eval_safe_split_plan", q_eval_safe_split_plan,
+         _eval_safe_split_oracle())
 
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)

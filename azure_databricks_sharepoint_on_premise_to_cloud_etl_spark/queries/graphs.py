@@ -1,19 +1,16 @@
 """Query catalog — graph, entity resolution, experimentation.
 
-Split from the former monolithic queries.py (round 11); the
-registry dicts are defined once (QUERIES/_EXTENSION_ORACLES in
-.core, AUX_QUERIES/AUX_ORACLES in .curation) and mutated by the
-registration statements each family module keeps.
+Each query is registered with its DuckDB oracle by one
+``catalog.register`` call below its definition.
 """
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.registry import load_table, rebalance, register_temp_views
+from ..sources.registry import load_table, rebalance
 
+from .catalog import register
 from .core import (
     _DUCK_COSINE,
     _MINHASH_BANDS,
@@ -29,12 +26,7 @@ from .core import (
     windows,
 )
 from .curation import (
-    AUX_ORACLES,
-    AUX_QUERIES,
     ORACLE_FUZZY,
-)
-from .retrieval import (
-    STREAMING_PLAN_BUILDERS,
 )
 
 # ---------------------------------------------------------------------------
@@ -305,26 +297,15 @@ FROM ranked WHERE rn = 1 AND n_docs > 1
 """
 
 
-AUX_QUERIES["kcore"] = q_kcore
-AUX_ORACLES["kcore"] = _kcore_oracle()
-AUX_QUERIES["bfs_hops"] = q_bfs_hops
-AUX_ORACLES["bfs_hops"] = _bfs_oracle()
-AUX_QUERIES["ewma"] = q_ewma
-AUX_ORACLES["ewma"] = ORACLE_EWMA
-AUX_QUERIES["linear_attribution"] = q_linear_attribution
-AUX_ORACLES["linear_attribution"] = ORACLE_LINEAR_ATTRIBUTION
+register("kcore", q_kcore, _kcore_oracle())
+register("bfs_hops", q_bfs_hops, _bfs_oracle())
+register("ewma", q_ewma, ORACLE_EWMA)
+register("linear_attribution", q_linear_attribution, ORACLE_LINEAR_ATTRIBUTION)
 # key matches the function it maps to — the driver registry owns the
-# key "dedup_keep_best" (queries/core.py q_dedup_keep_best); reusing it
-# here would make the AUX artifact row read as verifying the wrong
-# query (r10 shadowing class, enforced disjoint by
-# tests/test_aux_queries.py::test_registry_integrity)
-AUX_QUERIES["dedup_canonical_by_size"] = q_dedup_canonical_by_size
-AUX_ORACLES["dedup_canonical_by_size"] = _canonical_by_size_oracle()
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+# key "dedup_keep_best" (queries/core.py q_dedup_keep_best); register
+# rejects a name already present in either registry
+register("dedup_canonical_by_size", q_dedup_canonical_by_size,
+         _canonical_by_size_oracle())
 
 
 def q_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -377,13 +358,7 @@ def _shortest_paths_oracle(max_hops: int = 4) -> str:
     return "WITH " + ",\n".join(parts) + f"\nSELECT node, cost FROM d{max_hops}"
 
 
-AUX_QUERIES["shortest_paths"] = q_shortest_paths
-AUX_ORACLES["shortest_paths"] = _shortest_paths_oracle()
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("shortest_paths", q_shortest_paths, _shortest_paths_oracle())
 
 
 def q_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -421,8 +396,7 @@ SELECT user_id,
 FROM runs GROUP BY user_id
 """
 
-AUX_QUERIES["streaks"] = q_streaks
-AUX_ORACLES["streaks"] = ORACLE_STREAKS
+register("streaks", q_streaks, ORACLE_STREAKS)
 
 
 def q_label_spreading(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -480,13 +454,7 @@ def _label_spreading_oracle(rounds: int = 3) -> str:
     return "WITH " + ",\n".join(parts) + f"\nSELECT node, label FROM l{rounds}"
 
 
-AUX_QUERIES["label_spreading"] = q_label_spreading
-AUX_ORACLES["label_spreading"] = _label_spreading_oracle()
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("label_spreading", q_label_spreading, _label_spreading_oracle())
 
 
 def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -516,8 +484,7 @@ m AS (
 SELECT ship_date, price FROM m WHERE pm IS NULL OR price < pm
 """
 
-AUX_QUERIES["skyline"] = q_skyline
-AUX_ORACLES["skyline"] = ORACLE_SKYLINE
+register("skyline", q_skyline, ORACLE_SKYLINE)
 
 
 def q_merge_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -570,13 +537,7 @@ SELECT user_id, count(*) AS n_spans,
 FROM m GROUP BY user_id
 """
 
-AUX_QUERIES["merge_intervals"] = q_merge_intervals
-AUX_ORACLES["merge_intervals"] = ORACLE_MERGE_INTERVALS
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("merge_intervals", q_merge_intervals, ORACLE_MERGE_INTERVALS)
 
 
 def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -611,8 +572,7 @@ SELECT l_returnflag, min(v) AS wmedian_price
 FROM c WHERE 2 * cum >= tot GROUP BY 1
 """
 
-AUX_QUERIES["weighted_median"] = q_weighted_median
-AUX_ORACLES["weighted_median"] = ORACLE_WEIGHTED_MEDIAN
+register("weighted_median", q_weighted_median, ORACLE_WEIGHTED_MEDIAN)
 
 
 def q_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -677,13 +637,7 @@ SELECT arm, n, my AS mean_y,
 FROM p
 """
 
-AUX_QUERIES["cuped"] = q_cuped
-AUX_ORACLES["cuped"] = ORACLE_CUPED
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("cuped", q_cuped, ORACLE_CUPED)
 
 
 def q_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -702,8 +656,7 @@ SELECT c_nationkey, c_mktsegment, count(*) AS n
 FROM customer GROUP BY 1, 2 HAVING count(*) < 10
 """
 
-AUX_QUERIES["k_anonymity"] = q_k_anonymity
-AUX_ORACLES["k_anonymity"] = ORACLE_K_ANONYMITY
+register("k_anonymity", q_k_anonymity, ORACLE_K_ANONYMITY)
 
 
 def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -749,13 +702,7 @@ SELECT bin, n_base, n_cmp,
 FROM b
 """
 
-AUX_QUERIES["psi_drift"] = q_psi_drift
-AUX_ORACLES["psi_drift"] = ORACLE_PSI_DRIFT
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("psi_drift", q_psi_drift, ORACLE_PSI_DRIFT)
 
 
 def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -869,13 +816,7 @@ FROM comp c JOIN part n ON n.p_partkey = c.entity_id
 """
 
 
-AUX_QUERIES["entity_resolution"] = q_entity_resolution
-AUX_ORACLES["entity_resolution"] = _entity_resolution_oracle()
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("entity_resolution", q_entity_resolution, _entity_resolution_oracle())
 
 
 _PPR_ITERS = 3
@@ -942,13 +883,7 @@ SELECT node, round(r, 6) AS score FROM {prev}
 """
 
 
-AUX_QUERIES["personalized_pagerank"] = q_personalized_pagerank
-AUX_ORACLES["personalized_pagerank"] = _ppr_oracle()
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("personalized_pagerank", q_personalized_pagerank, _ppr_oracle())
 
 
 def q_common_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -986,13 +921,7 @@ r AS (
 SELECT path, n_occurrences FROM r WHERE rk <= 20
 """
 
-AUX_QUERIES["common_paths"] = q_common_paths
-AUX_ORACLES["common_paths"] = ORACLE_COMMON_PATHS
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("common_paths", q_common_paths, ORACLE_COMMON_PATHS)
 
 
 def q_group_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1021,8 +950,7 @@ r AS (
 SELECT doc_id, source FROM r WHERE rk <= 5
 """
 
-AUX_QUERIES["group_sample"] = q_group_sample
-AUX_ORACLES["group_sample"] = ORACLE_GROUP_SAMPLE
+register("group_sample", q_group_sample, ORACLE_GROUP_SAMPLE)
 
 
 def q_seasonal_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1057,13 +985,7 @@ SELECT event_type, count(*) AS n_days,
 FROM j GROUP BY 1
 """
 
-AUX_QUERIES["seasonal_backtest"] = q_seasonal_backtest
-AUX_ORACLES["seasonal_backtest"] = ORACLE_SEASONAL_BACKTEST
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("seasonal_backtest", q_seasonal_backtest, ORACLE_SEASONAL_BACKTEST)
 
 
 def q_sequence_match(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1107,13 +1029,7 @@ WHERE event_type = 'purchase' AND last_first IS NOT NULL
 GROUP BY 1
 """
 
-AUX_QUERIES["sequence_match"] = q_sequence_match
-AUX_ORACLES["sequence_match"] = ORACLE_SEQUENCE_MATCH
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("sequence_match", q_sequence_match, ORACLE_SEQUENCE_MATCH)
 
 
 def q_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1171,13 +1087,7 @@ JOIN deg da ON da.u = c.a
 JOIN deg db ON db.u = c.b
 """
 
-AUX_QUERIES["neighbor_jaccard"] = q_neighbor_jaccard
-AUX_ORACLES["neighbor_jaccard"] = ORACLE_NEIGHBOR_JACCARD
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("neighbor_jaccard", q_neighbor_jaccard, ORACLE_NEIGHBOR_JACCARD)
 
 
 def q_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1228,8 +1138,7 @@ JOIN deg d ON d.u = x.v
 GROUP BY 1, 2
 """
 
-AUX_QUERIES["adamic_adar"] = q_adamic_adar
-AUX_ORACLES["adamic_adar"] = ORACLE_ADAMIC_ADAR
+register("adamic_adar", q_adamic_adar, ORACLE_ADAMIC_ADAR)
 
 
 def q_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1285,8 +1194,7 @@ SELECT d.node, d.deg,
 FROM deg d LEFT JOIN tri_n t USING (node)
 """
 
-AUX_QUERIES["clustering_coeff"] = q_clustering_coeff
-AUX_ORACLES["clustering_coeff"] = ORACLE_CLUSTERING_COEFF
+register("clustering_coeff", q_clustering_coeff, ORACLE_CLUSTERING_COEFF)
 
 
 def q_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1357,8 +1265,7 @@ SELECT duration, n_risk, n_events,
 FROM curved WHERE n_events > 0
 """
 
-AUX_QUERIES["kaplan_meier"] = q_kaplan_meier
-AUX_ORACLES["kaplan_meier"] = ORACLE_KAPLAN_MEIER
+register("kaplan_meier", q_kaplan_meier, ORACLE_KAPLAN_MEIER)
 
 
 def q_fk_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1437,13 +1344,7 @@ SELECT relation, n_rows, n_null_rows, n_keys, n_orphan_keys,
 FROM checks ORDER BY relation
 """
 
-AUX_QUERIES["fk_integrity"] = q_fk_integrity
-AUX_ORACLES["fk_integrity"] = ORACLE_FK_INTEGRITY
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("fk_integrity", q_fk_integrity, ORACLE_FK_INTEGRITY)
 
 
 def q_interarrival(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1483,8 +1384,7 @@ SELECT user_id, n_gaps,
 FROM agg WHERE n_gaps >= 5
 """
 
-AUX_QUERIES["interarrival"] = q_interarrival
-AUX_ORACLES["interarrival"] = ORACLE_INTERARRIVAL
+register("interarrival", q_interarrival, ORACLE_INTERARRIVAL)
 
 
 def q_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1534,8 +1434,7 @@ SELECT *,
 FROM cells
 """
 
-AUX_QUERIES["diff_in_diff"] = q_diff_in_diff
-AUX_ORACLES["diff_in_diff"] = ORACLE_DIFF_IN_DIFF
+register("diff_in_diff", q_diff_in_diff, ORACLE_DIFF_IN_DIFF)
 
 
 def q_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1570,8 +1469,7 @@ JOIN sizes sa ON sa.period = s.period
 JOIN sizes sb ON sb.period = s.period + 1
 """
 
-AUX_QUERIES["audience_overlap"] = q_audience_overlap
-AUX_ORACLES["audience_overlap"] = ORACLE_AUDIENCE_OVERLAP
+register("audience_overlap", q_audience_overlap, ORACLE_AUDIENCE_OVERLAP)
 
 
 _ZIPF_HEAD = 1000
@@ -1626,8 +1524,7 @@ SELECT round(regr_slope(ln(c), ln(r)), 6) AS slope,
 FROM ranked
 """
 
-AUX_QUERIES["zipf_slope"] = q_zipf_slope
-AUX_ORACLES["zipf_slope"] = ORACLE_ZIPF_SLOPE
+register("zipf_slope", q_zipf_slope, ORACLE_ZIPF_SLOPE)
 
 
 def q_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1699,13 +1596,7 @@ SELECT d, round(corr_val, 6) AS corr_n_aov FROM (
 ) WHERE n_days = 28 AND corr_val IS NOT NULL
 """
 
-AUX_QUERIES["rolling_corr"] = q_rolling_corr
-AUX_ORACLES["rolling_corr"] = ORACLE_ROLLING_CORR
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("rolling_corr", q_rolling_corr, ORACLE_ROLLING_CORR)
 
 
 def q_doc_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1747,8 +1638,7 @@ SELECT doc_id, term, tf, tfidf, rank FROM (
 ) WHERE rank <= 3 AND doc_id < 200
 """
 
-AUX_QUERIES["doc_keywords"] = q_doc_keywords
-AUX_ORACLES["doc_keywords"] = ORACLE_DOC_KEYWORDS
+register("doc_keywords", q_doc_keywords, ORACLE_DOC_KEYWORDS)
 
 
 def q_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1790,8 +1680,7 @@ SELECT p_brand,
 FROM obs GROUP BY 1
 """
 
-AUX_QUERIES["price_elasticity"] = q_price_elasticity
-AUX_ORACLES["price_elasticity"] = ORACLE_PRICE_ELASTICITY
+register("price_elasticity", q_price_elasticity, ORACLE_PRICE_ELASTICITY)
 
 
 _SAFETY_Z = 1.645  # 95% service level
@@ -1857,13 +1746,7 @@ SELECT suppkey, n_days, mean_daily_qty, sd_daily_qty,
 FROM moments
 """
 
-AUX_QUERIES["safety_stock"] = q_safety_stock
-AUX_ORACLES["safety_stock"] = ORACLE_SAFETY_STOCK
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("safety_stock", q_safety_stock, ORACLE_SAFETY_STOCK)
 
 
 _KEYNESS_A = "src0"
@@ -1917,8 +1800,7 @@ SELECT term, count_a, count_b, g2, overrep FROM (
 ) WHERE r <= 50
 """
 
-AUX_QUERIES["term_keyness"] = q_term_keyness
-AUX_ORACLES["term_keyness"] = ORACLE_TERM_KEYNESS
+register("term_keyness", q_term_keyness, ORACLE_TERM_KEYNESS)
 
 
 def q_mutual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1962,13 +1844,7 @@ SELECT f.q AS id_a, f.m AS id_b, f.cosine AS score_ab,
 FROM best f JOIN best r ON r.q = f.m AND r.m = f.q AND f.q < f.m
 """
 
-AUX_QUERIES["mutual_topk"] = q_mutual_topk
-AUX_ORACLES["mutual_topk"] = ORACLE_MUTUAL_TOPK
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("mutual_topk", q_mutual_topk, ORACLE_MUTUAL_TOPK)
 
 
 def q_log_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2052,8 +1928,7 @@ SELECT *,
 FROM agg
 """
 
-AUX_QUERIES["log_rank"] = q_log_rank
-AUX_ORACLES["log_rank"] = ORACLE_LOG_RANK
+register("log_rank", q_log_rank, ORACLE_LOG_RANK)
 
 
 _ANOM_Z = 2.0
@@ -2108,8 +1983,7 @@ FROM resid, sd
 WHERE sd > 0 AND abs(res) > {_ANOM_Z} * sd
 """
 
-AUX_QUERIES["seasonal_anomaly"] = q_seasonal_anomaly
-AUX_ORACLES["seasonal_anomaly"] = ORACLE_SEASONAL_ANOMALY
+register("seasonal_anomaly", q_seasonal_anomaly, ORACLE_SEASONAL_ANOMALY)
 
 
 def q_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2159,13 +2033,7 @@ FROM active JOIN first USING (user_id)
 GROUP BY 1
 """
 
-AUX_QUERIES["new_vs_returning"] = q_new_vs_returning
-AUX_ORACLES["new_vs_returning"] = ORACLE_NEW_VS_RETURNING
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("new_vs_returning", q_new_vs_returning, ORACLE_NEW_VS_RETURNING)
 
 
 def _stream_plan_sequence_match(
@@ -2227,15 +2095,6 @@ def q_streaming_sequence_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-AUX_QUERIES["streaming_sequence_match"] = q_streaming_sequence_match
-AUX_ORACLES["streaming_sequence_match"] = ORACLE_SEQUENCE_MATCH
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
-
-
 def _stream_plan_sequence_match_only(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2244,13 +2103,8 @@ def _stream_plan_sequence_match_only(
     return plan
 
 
-STREAMING_PLAN_BUILDERS["streaming_sequence_match"] = (
-    _stream_plan_sequence_match_only
-)
-
-assert set(STREAMING_PLAN_BUILDERS) == {
-    n for n in AUX_QUERIES if n.startswith("streaming_")
-}, "every streaming AUX query needs a pre-sink plan builder for the audit"
+register("streaming_sequence_match", q_streaming_sequence_match,
+         ORACLE_SEQUENCE_MATCH, plan=_stream_plan_sequence_match_only)
 
 
 def q_resample_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2313,8 +2167,8 @@ SELECT suppkey, d, qty,
 FROM staged
 """
 
-AUX_QUERIES["resample_interpolate"] = q_resample_interpolate
-AUX_ORACLES["resample_interpolate"] = ORACLE_RESAMPLE_INTERPOLATE
+register("resample_interpolate", q_resample_interpolate,
+         ORACLE_RESAMPLE_INTERPOLATE)
 
 
 _PVM_Y1, _PVM_Y2 = 1996, 1997
@@ -2381,8 +2235,7 @@ SELECT p_brand, rev1, rev2,
 FROM cells
 """
 
-AUX_QUERIES["price_volume_mix"] = q_price_volume_mix
-AUX_ORACLES["price_volume_mix"] = ORACLE_PRICE_VOLUME_MIX
+register("price_volume_mix", q_price_volume_mix, ORACLE_PRICE_VOLUME_MIX)
 
 
 def q_conversion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2439,8 +2292,7 @@ SELECT n_a, n_b, conv_a, conv_b, rate_a, rate_b,
 FROM rated
 """
 
-AUX_QUERIES["conversion_ztest"] = q_conversion_ztest
-AUX_ORACLES["conversion_ztest"] = ORACLE_CONVERSION_ZTEST
+register("conversion_ztest", q_conversion_ztest, ORACLE_CONVERSION_ZTEST)
 
 
 _HALFLIFE_MAX_AGE = 8
@@ -2530,13 +2382,7 @@ SELECT cohort_week, slope, r2, n_pairs,
 FROM fit WHERE n_pairs >= 4
 """
 
-AUX_QUERIES["retention_halflife"] = q_retention_halflife
-AUX_ORACLES["retention_halflife"] = ORACLE_RETENTION_HALFLIFE
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("retention_halflife", q_retention_halflife, ORACLE_RETENTION_HALFLIFE)
 
 
 _GEO_RADIUS_KM = 150.0
@@ -2612,13 +2458,7 @@ FROM (
 ) WHERE rn = 1
 """
 
-AUX_QUERIES["geo_nearest"] = q_geo_nearest
-AUX_ORACLES["geo_nearest"] = ORACLE_GEO_NEAREST
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("geo_nearest", q_geo_nearest, ORACLE_GEO_NEAREST)
 
 
 _LEAD_LAG_MAX = 7
@@ -2712,13 +2552,7 @@ SELECT lag, n_days,
 FROM agg
 """
 
-AUX_QUERIES["lead_lag_corr"] = q_lead_lag_corr
-AUX_ORACLES["lead_lag_corr"] = ORACLE_LEAD_LAG_CORR
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("lead_lag_corr", q_lead_lag_corr, ORACLE_LEAD_LAG_CORR)
 
 
 def q_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2747,13 +2581,8 @@ FROM ranked a JOIN ranked b
   ON b.pos > a.pos AND b.pos <= a.pos + 3
 """
 
-AUX_QUERIES["sorted_neighborhood"] = q_sorted_neighborhood
-AUX_ORACLES["sorted_neighborhood"] = ORACLE_SORTED_NEIGHBORHOOD
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("sorted_neighborhood", q_sorted_neighborhood,
+         ORACLE_SORTED_NEIGHBORHOOD)
 
 
 _GEO_CLUSTER_RADIUS = 300.0
@@ -2845,13 +2674,7 @@ FROM labeled
 GROUP BY 1 HAVING count(*) >= 2
 """
 
-AUX_QUERIES["spatial_clusters"] = q_spatial_clusters
-AUX_ORACLES["spatial_clusters"] = ORACLE_SPATIAL_CLUSTERS
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("spatial_clusters", q_spatial_clusters, ORACLE_SPATIAL_CLUSTERS)
 
 
 _SN_WINDOW = 5
@@ -2939,13 +2762,8 @@ SELECT c.p_partkey, c.entity_id, n.name AS canonical_name
 FROM comp c JOIN norm n ON n.id = c.entity_id
 """
 
-AUX_QUERIES["entity_resolution_sn"] = q_entity_resolution_sn
-AUX_ORACLES["entity_resolution_sn"] = ORACLE_ENTITY_RESOLUTION_SN
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("entity_resolution_sn", q_entity_resolution_sn,
+         ORACLE_ENTITY_RESOLUTION_SN)
 
 
 def q_best_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3020,8 +2838,7 @@ SELECT d, n_left, mean_left, mean_right, contrast FROM (
 ) WHERE r = 1
 """
 
-AUX_QUERIES["best_changepoint"] = q_best_changepoint
-AUX_ORACLES["best_changepoint"] = ORACLE_BEST_CHANGEPOINT
+register("best_changepoint", q_best_changepoint, ORACLE_BEST_CHANGEPOINT)
 
 
 def q_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3086,13 +2903,7 @@ SELECT round(quantile_cont(hours, 0.25), 6) AS p25,
 FROM lat
 """
 
-AUX_QUERIES["conversion_latency"] = q_conversion_latency
-AUX_ORACLES["conversion_latency"] = ORACLE_CONVERSION_LATENCY
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("conversion_latency", q_conversion_latency, ORACLE_CONVERSION_LATENCY)
 
 
 def q_weekly_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3160,8 +2971,8 @@ SELECT d, CAST(n AS BIGINT) AS n_events,
 FROM det JOIN centered USING (dow)
 """
 
-AUX_QUERIES["weekly_decomposition"] = q_weekly_decomposition
-AUX_ORACLES["weekly_decomposition"] = ORACLE_WEEKLY_DECOMPOSITION
+register("weekly_decomposition", q_weekly_decomposition,
+         ORACLE_WEEKLY_DECOMPOSITION)
 
 
 def q_share_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3219,8 +3030,7 @@ SELECT region, nation, revenue,
 FROM t
 """
 
-AUX_QUERIES["share_of_parent"] = q_share_of_parent
-AUX_ORACLES["share_of_parent"] = ORACLE_SHARE_OF_PARENT
+register("share_of_parent", q_share_of_parent, ORACLE_SHARE_OF_PARENT)
 
 
 def q_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3276,13 +3086,7 @@ SELECT m AS month, round(avg_dau, 6) AS avg_dau, mau,
 FROM dau JOIN mau USING (m)
 """
 
-AUX_QUERIES["stickiness"] = q_stickiness
-AUX_ORACLES["stickiness"] = ORACLE_STICKINESS
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("stickiness", q_stickiness, ORACLE_STICKINESS)
 
 
 _WILSON_Z = 1.959964
@@ -3349,8 +3153,8 @@ SELECT *, row_number() OVER (ORDER BY wilson_lb DESC, suppkey ASC)
 FROM scored
 """
 
-AUX_QUERIES["supplier_reliability"] = q_supplier_reliability
-AUX_ORACLES["supplier_reliability"] = ORACLE_SUPPLIER_RELIABILITY
+register("supplier_reliability", q_supplier_reliability,
+         ORACLE_SUPPLIER_RELIABILITY)
 
 
 _ALSO_BOUGHT_K = 3
@@ -3399,11 +3203,6 @@ SELECT pa AS partkey, pb AS also_bought, n_shared, rank FROM (
 ) WHERE rank <= {_ALSO_BOUGHT_K} AND pa < 200
 """
 
-AUX_QUERIES["also_bought_topk"] = q_also_bought_topk
-AUX_ORACLES["also_bought_topk"] = ORACLE_ALSO_BOUGHT
+register("also_bought_topk", q_also_bought_topk, ORACLE_ALSO_BOUGHT)
 
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
 

@@ -1,23 +1,19 @@
 """Query catalog — retrieval, streaming, behavioral, text analytics.
 
-Split from the former monolithic queries.py (round 11); the
-registry dicts are defined once (QUERIES/_EXTENSION_ORACLES in
-.core, AUX_QUERIES/AUX_ORACLES in .curation) and mutated by the
-registration statements each family module keeps.
+Each query is registered with its DuckDB oracle by one
+``catalog.register`` call below its definition.
 """
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.registry import load_table, rebalance, register_temp_views
+from ..sources.registry import load_table, rebalance
 
+from .catalog import register
 from .core import (
     ORACLE_COSINE_TOPK,
     ORACLE_SESSIONIZE,
-    QueryFn,
     _DUCK_COSINE,
     _LSH_DIM,
     _LSH_PLANES,
@@ -32,10 +28,6 @@ from .core import (
     _minhash_oracle,
     _quality_oracle,
     _stream_events,
-    _stream_plan_dedup,
-    _stream_plan_enrich,
-    _stream_plan_sliding,
-    _stream_plan_tumbling,
     dedup,
     intervals,
     sampling,
@@ -44,10 +36,7 @@ from .core import (
     text,
 )
 from .curation import (
-    AUX_ORACLES,
-    AUX_QUERIES,
     _quality_deciles_oracle,
-    _stream_plan_join,
 )
 
 # ---------------------------------------------------------------------------
@@ -260,30 +249,11 @@ GROUP BY 1, 2
 """
 
 
-AUX_QUERIES.update(
-    {
-        "novelty_score": q_novelty_score,
-        "inverted_index": q_inverted_index,
-        "cms_heavy_hitters": q_cms_heavy_hitters,
-        "triangle_count": q_triangle_count,
-        "embedding_covariance": q_embedding_covariance,
-    }
-)
-
-AUX_ORACLES.update(
-    {
-        "novelty_score": _novelty_oracle(),
-        "inverted_index": ORACLE_INVERTED_INDEX,
-        "cms_heavy_hitters": _cms_oracle(),
-        "triangle_count": _triangle_oracle(),
-        "embedding_covariance": ORACLE_EMB_COV,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("novelty_score", q_novelty_score, _novelty_oracle())
+register("inverted_index", q_inverted_index, ORACLE_INVERTED_INDEX)
+register("cms_heavy_hitters", q_cms_heavy_hitters, _cms_oracle())
+register("triangle_count", q_triangle_count, _triangle_oracle())
+register("embedding_covariance", q_embedding_covariance, ORACLE_EMB_COV)
 
 
 # ---------------------------------------------------------------------------
@@ -465,28 +435,10 @@ SELECT node, round(r, 6) AS rank FROM {prev}
 """
 
 
-AUX_QUERIES.update(
-    {
-        "weighted_sample": q_weighted_sample,
-        "chi_square": q_chi_square,
-        "ohlc_bucket": q_ohlc_bucket,
-        "pagerank": q_pagerank,
-    }
-)
-
-AUX_ORACLES.update(
-    {
-        "weighted_sample": _weighted_sample_oracle(),
-        "chi_square": ORACLE_CHI_SQUARE,
-        "ohlc_bucket": ORACLE_OHLC,
-        "pagerank": _pagerank_oracle(),
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("weighted_sample", q_weighted_sample, _weighted_sample_oracle())
+register("chi_square", q_chi_square, ORACLE_CHI_SQUARE)
+register("ohlc_bucket", q_ohlc_bucket, ORACLE_OHLC)
+register("pagerank", q_pagerank, _pagerank_oracle())
 
 
 def q_streaming_session(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -542,13 +494,8 @@ def _stream_plan_session(
     )
 
 
-AUX_QUERIES["streaming_session"] = q_streaming_session
-AUX_ORACLES["streaming_session"] = ORACLE_SESSIONIZE
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("streaming_session", q_streaming_session,
+         ORACLE_SESSIONIZE, plan=_stream_plan_session)
 
 
 # ---------------------------------------------------------------------------
@@ -712,26 +659,9 @@ GROUP BY 1
 """
 
 
-AUX_QUERIES.update(
-    {
-        "bm25_score": q_bm25_score,
-        "tfidf_doc_similarity": q_tfidf_doc_similarity,
-        "ann_recall": q_ann_recall,
-    }
-)
-
-AUX_ORACLES.update(
-    {
-        "bm25_score": _bm25_oracle(),
-        "tfidf_doc_similarity": _tfidf_sim_oracle(),
-        "ann_recall": _ann_recall_oracle(),
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("bm25_score", q_bm25_score, _bm25_oracle())
+register("tfidf_doc_similarity", q_tfidf_doc_similarity, _tfidf_sim_oracle())
+register("ann_recall", q_ann_recall, _ann_recall_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -840,26 +770,9 @@ JOIN uni u2 ON u2.t = bg.w2, tb, tu
 """
 
 
-AUX_QUERIES.update(
-    {
-        "token_entropy": q_token_entropy,
-        "source_kl": q_source_kl,
-        "pmi_collocations": q_pmi_collocations,
-    }
-)
-
-AUX_ORACLES.update(
-    {
-        "token_entropy": ORACLE_TOKEN_ENTROPY,
-        "source_kl": ORACLE_SOURCE_KL,
-        "pmi_collocations": ORACLE_PMI,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("token_entropy", q_token_entropy, ORACLE_TOKEN_ENTROPY)
+register("source_kl", q_source_kl, ORACLE_SOURCE_KL)
+register("pmi_collocations", q_pmi_collocations, ORACLE_PMI)
 
 
 # ---------------------------------------------------------------------------
@@ -959,26 +872,9 @@ FROM pairs
 """
 
 
-AUX_QUERIES.update(
-    {
-        "histogram": q_histogram,
-        "corr_matrix": q_corr_matrix,
-        "transition_matrix": q_transition_matrix,
-    }
-)
-
-AUX_ORACLES.update(
-    {
-        "histogram": ORACLE_HISTOGRAM,
-        "corr_matrix": _corr_oracle(),
-        "transition_matrix": ORACLE_TRANSITION,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("histogram", q_histogram, ORACLE_HISTOGRAM)
+register("corr_matrix", q_corr_matrix, _corr_oracle())
+register("transition_matrix", q_transition_matrix, ORACLE_TRANSITION)
 
 
 # ---------------------------------------------------------------------------
@@ -1133,28 +1029,10 @@ WINDOW w AS (PARTITION BY o_orderpriority ORDER BY month)
 """
 
 
-AUX_QUERIES.update(
-    {
-        "winsorize": q_winsorize,
-        "benford": q_benford,
-        "gini_tokens": q_gini_tokens,
-        "period_over_period": q_period_over_period,
-    }
-)
-
-AUX_ORACLES.update(
-    {
-        "winsorize": ORACLE_WINSORIZE,
-        "benford": ORACLE_BENFORD,
-        "gini_tokens": ORACLE_GINI,
-        "period_over_period": ORACLE_POP,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("winsorize", q_winsorize, ORACLE_WINSORIZE)
+register("benford", q_benford, ORACLE_BENFORD)
+register("gini_tokens", q_gini_tokens, ORACLE_GINI)
+register("period_over_period", q_period_over_period, ORACLE_POP)
 
 
 _RRF_K = 60
@@ -1259,13 +1137,7 @@ QUALIFY fused_rank <= 10
 """
 
 
-AUX_QUERIES["hybrid_retrieval"] = q_hybrid_retrieval
-AUX_ORACLES["hybrid_retrieval"] = _hybrid_oracle()
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("hybrid_retrieval", q_hybrid_retrieval, _hybrid_oracle())
 
 
 def q_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1305,13 +1177,7 @@ FROM tot, top, qs
 """
 
 
-AUX_QUERIES["key_skew_profile"] = q_key_skew_profile
-AUX_ORACLES["key_skew_profile"] = ORACLE_KEY_SKEW
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("key_skew_profile", q_key_skew_profile, ORACLE_KEY_SKEW)
 
 
 _RAU_WINDOW = 7
@@ -1347,13 +1213,7 @@ FROM wau LEFT JOIN dau ON dau.day = wau.day
 """
 
 
-AUX_QUERIES["rolling_active_users"] = q_rolling_active_users
-AUX_ORACLES["rolling_active_users"] = ORACLE_RAU
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("rolling_active_users", q_rolling_active_users, ORACLE_RAU)
 
 
 _COPURCHASE_MAX_BASKET = 40
@@ -1413,13 +1273,7 @@ HAVING count(*) >= {_COPURCHASE_MIN_SHARED}
 """
 
 
-AUX_QUERIES["copurchase_pairs"] = q_copurchase_pairs
-AUX_ORACLES["copurchase_pairs"] = ORACLE_COPURCHASE
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("copurchase_pairs", q_copurchase_pairs, ORACLE_COPURCHASE)
 
 
 _TWAP_BUCKET_S = 3600
@@ -1511,17 +1365,8 @@ GROUP BY 1
 """
 
 
-AUX_QUERIES.update(
-    {"twap": q_twap, "cusum_drift": q_cusum_drift}
-)
-AUX_ORACLES.update(
-    {"twap": ORACLE_TWAP, "cusum_drift": ORACLE_CUSUM}
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("twap", q_twap, ORACLE_TWAP)
+register("cusum_drift", q_cusum_drift, ORACLE_CUSUM)
 
 
 def q_events_daily_overview(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1620,13 +1465,8 @@ LEFT JOIN starts ON starts.day = vol.day
 """
 
 
-AUX_QUERIES["events_daily_overview"] = q_events_daily_overview
-AUX_ORACLES["events_daily_overview"] = ORACLE_DAILY_OVERVIEW
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("events_daily_overview", q_events_daily_overview,
+         ORACLE_DAILY_OVERVIEW)
 
 
 _PASSAGE_LEN = 16  # tokens per passage for exact passage-level dedup
@@ -1752,23 +1592,9 @@ GROUP BY 1
 """
 
 
-AUX_QUERIES.update(
-    {
-        "duplicate_passages": q_duplicate_passages,
-        "url_stats": q_url_stats,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "duplicate_passages": _duplicate_passages_oracle(),
-        "url_stats": ORACLE_URL_STATS,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("duplicate_passages", q_duplicate_passages,
+         _duplicate_passages_oracle())
+register("url_stats", q_url_stats, ORACLE_URL_STATS)
 
 
 def q_fulfillment_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1889,23 +1715,8 @@ FROM per_tier, t
 """
 
 
-AUX_QUERIES.update(
-    {
-        "fulfillment_latency": q_fulfillment_latency,
-        "revenue_pareto": q_revenue_pareto,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "fulfillment_latency": ORACLE_FULFILLMENT,
-        "revenue_pareto": ORACLE_PARETO,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("fulfillment_latency", q_fulfillment_latency, ORACLE_FULFILLMENT)
+register("revenue_pareto", q_revenue_pareto, ORACLE_PARETO)
 
 
 _MODEL_WEIGHTS = {
@@ -1975,13 +1786,8 @@ FROM feats
 """
 
 
-AUX_QUERIES["model_quality_filter"] = q_model_quality_filter
-AUX_ORACLES["model_quality_filter"] = _model_filter_oracle()
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("model_quality_filter", q_model_quality_filter,
+         _model_filter_oracle())
 
 
 def q_streaming_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2036,13 +1842,8 @@ def _stream_plan_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-AUX_QUERIES["streaming_ohlc"] = q_streaming_ohlc
-AUX_ORACLES["streaming_ohlc"] = ORACLE_OHLC
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("streaming_ohlc", q_streaming_ohlc,
+         ORACLE_OHLC, plan=_stream_plan_ohlc)
 
 
 def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2388,58 +2189,15 @@ GROUP BY na, nb
 """
 
 
-AUX_QUERIES.update(
-    {
-        "source_overlap": q_source_overlap,
-        "frequency_spectrum": q_frequency_spectrum,
-        # round-7 widening: mixing schedule + classifier calibration +
-        # distribution drift
-        "temperature_mix": q_temperature_mix,
-        "pr_threshold_sweep": q_pr_threshold_sweep,
-        "ks_drift": q_ks_drift,
-        "roc_auc": q_roc_auc,
-        "calibration_bins": q_calibration_bins,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "source_overlap": ORACLE_SOURCE_OVERLAP,
-        "frequency_spectrum": ORACLE_SPECTRUM,
-        "temperature_mix": ORACLE_TEMPERATURE_MIX,
-        "pr_threshold_sweep": _pr_sweep_oracle(),
-        "ks_drift": ORACLE_KS_DRIFT,
-        "roc_auc": _roc_auc_oracle(),
-        "calibration_bins": _calibration_oracle(),
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
-
-
-# ---------------------------------------------------------------------------
-# Streaming plan registry: every streaming AUX query's PRE-SINK
-# streaming DataFrame, buildable without draining — the surface the
-# streaming plan audit (tools/plan_audit.py::streaming_audit_flags,
-# tests/test_streaming_plan_audit.py) gates for unbounded state.
-# ---------------------------------------------------------------------------
-
-STREAMING_PLAN_BUILDERS: dict[str, QueryFn] = {
-    "streaming_tumbling": _stream_plan_tumbling,
-    "streaming_dedup": _stream_plan_dedup,
-    "streaming_sliding": _stream_plan_sliding,
-    "streaming_enrich": _stream_plan_enrich,
-    "streaming_join": _stream_plan_join,
-    "streaming_session": _stream_plan_session,
-    "streaming_ohlc": _stream_plan_ohlc,
-    # registered below once its builder is defined (file order):
-    # streaming_sequence_match
-}
-
-# The builders-vs-AUX parity assertion lives at the BOTTOM of this
-# module (late queries register after this point in file order).
+register("source_overlap", q_source_overlap, ORACLE_SOURCE_OVERLAP)
+register("frequency_spectrum", q_frequency_spectrum, ORACLE_SPECTRUM)
+# round-7 widening: mixing schedule + classifier calibration +
+# distribution drift
+register("temperature_mix", q_temperature_mix, ORACLE_TEMPERATURE_MIX)
+register("pr_threshold_sweep", q_pr_threshold_sweep, _pr_sweep_oracle())
+register("ks_drift", q_ks_drift, ORACLE_KS_DRIFT)
+register("roc_auc", q_roc_auc, _roc_auc_oracle())
+register("calibration_bins", q_calibration_bins, _calibration_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -2494,23 +2252,9 @@ def q_roc_auc_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stats.roc_auc_distributed(scored, "quality", "is_en")
 
 
-AUX_QUERIES.update(
-    {
-        "quality_deciles_distributed": q_quality_deciles_distributed,
-        "roc_auc_distributed": q_roc_auc_distributed,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "quality_deciles_distributed": _quality_deciles_oracle(),
-        "roc_auc_distributed": _roc_auc_oracle(),
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("quality_deciles_distributed", q_quality_deciles_distributed,
+         _quality_deciles_oracle())
+register("roc_auc_distributed", q_roc_auc_distributed, _roc_auc_oracle())
 
 
 # ---------------------------------------------------------------------------
@@ -2645,25 +2389,9 @@ JOIN item_n nc ON nc.p = d.consequent, tot t
 """
 
 
-AUX_QUERIES.update(
-    {
-        "welch_ttest": q_welch_ttest,
-        "mann_whitney": q_mann_whitney,
-        "association_rules": q_association_rules,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "welch_ttest": ORACLE_WELCH,
-        "mann_whitney": ORACLE_MANN_WHITNEY,
-        "association_rules": ORACLE_ASSOCIATION,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("welch_ttest", q_welch_ttest, ORACLE_WELCH)
+register("mann_whitney", q_mann_whitney, ORACLE_MANN_WHITNEY)
+register("association_rules", q_association_rules, ORACLE_ASSOCIATION)
 
 
 def q_embedding_label_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2746,23 +2474,9 @@ FROM tiled
 """
 
 
-AUX_QUERIES.update(
-    {
-        "embedding_label_drift": q_embedding_label_drift,
-        "rfm_segments": q_rfm_segments,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "embedding_label_drift": ORACLE_EMBEDDING_DRIFT,
-        "rfm_segments": ORACLE_RFM,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("embedding_label_drift", q_embedding_label_drift,
+         ORACLE_EMBEDDING_DRIFT)
+register("rfm_segments", q_rfm_segments, ORACLE_RFM)
 
 
 def q_language_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2854,23 +2568,9 @@ FROM rev r JOIN sizes s USING (cohort_start)
 """
 
 
-AUX_QUERIES.update(
-    {
-        "language_confusion": q_language_confusion,
-        "cohort_ltv": q_cohort_ltv,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "language_confusion": _language_confusion_oracle(),
-        "cohort_ltv": ORACLE_COHORT_LTV,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("language_confusion", q_language_confusion,
+         _language_confusion_oracle())
+register("cohort_ltv", q_cohort_ltv, ORACLE_COHORT_LTV)
 
 
 def q_dup_matrix_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2975,23 +2675,8 @@ FROM cells
 """
 
 
-AUX_QUERIES.update(
-    {
-        "dup_matrix_by_source": q_dup_matrix_by_source,
-        "event_seasonality": q_event_seasonality,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "dup_matrix_by_source": _dup_matrix_oracle(),
-        "event_seasonality": ORACLE_SEASONALITY,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("dup_matrix_by_source", q_dup_matrix_by_source, _dup_matrix_oracle())
+register("event_seasonality", q_event_seasonality, ORACLE_SEASONALITY)
 
 
 def q_per_source_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3047,8 +2732,7 @@ FROM ranked WHERE rn = 1
 """
 
 
-AUX_QUERIES["per_source_ks"] = q_per_source_ks
-AUX_ORACLES["per_source_ks"] = ORACLE_PER_SOURCE_KS
+register("per_source_ks", q_per_source_ks, ORACLE_PER_SOURCE_KS)
 
 
 # ---------------------------------------------------------------------------
@@ -3168,10 +2852,8 @@ FROM perq q JOIN nrel n USING (probe_id)
 """
 
 
-AUX_QUERIES["hard_negatives"] = q_hard_negatives
-AUX_ORACLES["hard_negatives"] = ORACLE_HARD_NEGATIVES
-AUX_QUERIES["retrieval_quality"] = q_retrieval_quality
-AUX_ORACLES["retrieval_quality"] = ORACLE_RETRIEVAL_QUALITY
+register("hard_negatives", q_hard_negatives, ORACLE_HARD_NEGATIVES)
+register("retrieval_quality", q_retrieval_quality, ORACLE_RETRIEVAL_QUALITY)
 
 
 # ---------------------------------------------------------------------------
@@ -3299,15 +2981,7 @@ GROUP BY 1, 2
 """
 
 
-AUX_QUERIES["cdc_apply"] = q_cdc_apply
-AUX_ORACLES["cdc_apply"] = ORACLE_CDC_APPLY
-AUX_QUERIES["rollup_merge"] = q_rollup_merge
-AUX_ORACLES["rollup_merge"] = ORACLE_ROLLUP_MERGE
+register("cdc_apply", q_cdc_apply, ORACLE_CDC_APPLY)
+register("rollup_merge", q_rollup_merge, ORACLE_ROLLUP_MERGE)
 
-
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
 

@@ -1,25 +1,18 @@
 """Query catalog — agreement, drift, effect sizes, panels (batches 20-27).
 
-Split from the former monolithic queries.py (round 11); the
-registry dicts are defined once (QUERIES/_EXTENSION_ORACLES in
-.core, AUX_QUERIES/AUX_ORACLES in .curation) and mutated by the
-registration statements each family module keeps.
+Each query is registered with its DuckDB oracle by one
+``catalog.register`` call below its definition.
 """
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.registry import load_table, rebalance, register_temp_views
+from ..sources.registry import load_table, rebalance
 
+from .catalog import register
 from .core import (
     _DUCK_COSINE,
-)
-from .curation import (
-    AUX_ORACLES,
-    AUX_QUERIES,
 )
 
 # --- round-10 widening batch 20: agreement, proper scoring, WOE/IV,
@@ -216,27 +209,11 @@ FROM m
 """
 
 
-AUX_QUERIES.update(
-    {
-        "cohens_kappa": q_cohens_kappa,
-        "classification_loss": q_classification_loss,
-        "woe_iv": q_woe_iv,
-        "mann_kendall": q_mann_kendall,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "cohens_kappa": ORACLE_COHENS_KAPPA,
-        "classification_loss": ORACLE_CLASSIFICATION_LOSS,
-        "woe_iv": ORACLE_WOE_IV,
-        "mann_kendall": ORACLE_MANN_KENDALL,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("cohens_kappa", q_cohens_kappa, ORACLE_COHENS_KAPPA)
+register("classification_loss", q_classification_loss,
+         ORACLE_CLASSIFICATION_LOSS)
+register("woe_iv", q_woe_iv, ORACLE_WOE_IV)
+register("mann_kendall", q_mann_kendall, ORACLE_MANN_KENDALL)
 
 
 # --- round-10 widening batch 21: sequential drift, hazard curve,
@@ -533,29 +510,11 @@ FROM staged
 """
 
 
-AUX_QUERIES.update(
-    {
-        "page_hinkley": q_page_hinkley,
-        "nelson_aalen": q_nelson_aalen,
-        "control_chart": q_control_chart,
-        "cramers_v": q_cramers_v,
-        "cohens_d": q_cohens_d,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "page_hinkley": ORACLE_PAGE_HINKLEY,
-        "nelson_aalen": ORACLE_NELSON_AALEN,
-        "control_chart": ORACLE_CONTROL_CHART,
-        "cramers_v": ORACLE_CRAMERS_V,
-        "cohens_d": ORACLE_COHENS_D,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("page_hinkley", q_page_hinkley, ORACLE_PAGE_HINKLEY)
+register("nelson_aalen", q_nelson_aalen, ORACLE_NELSON_AALEN)
+register("control_chart", q_control_chart, ORACLE_CONTROL_CHART)
+register("cramers_v", q_cramers_v, ORACLE_CRAMERS_V)
+register("cohens_d", q_cohens_d, ORACLE_COHENS_D)
 
 
 # --- round-10 widening batch 22: burstiness, GOF, calibration scalar,
@@ -768,27 +727,10 @@ FROM cum GROUP BY 1
 """
 
 
-AUX_QUERIES.update(
-    {
-        "burstiness": q_burstiness,
-        "chisq_gof": q_chisq_gof,
-        "ece_calibration": q_ece,
-        "rbo_overlap": q_rbo_overlap,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "burstiness": ORACLE_BURSTINESS,
-        "chisq_gof": ORACLE_CHISQ_GOF,
-        "ece_calibration": ORACLE_ECE,
-        "rbo_overlap": _rbo_oracle(),
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("burstiness", q_burstiness, ORACLE_BURSTINESS)
+register("chisq_gof", q_chisq_gof, ORACLE_CHISQ_GOF)
+register("ece_calibration", q_ece, ORACLE_ECE)
+register("rbo_overlap", q_rbo_overlap, _rbo_oracle())
 
 
 # --- round-10 widening batch 23: Croston, Rocchio audit, silhouette
@@ -942,25 +884,9 @@ FROM per_vec GROUP BY 1
 """
 
 
-AUX_QUERIES.update(
-    {
-        "croston_forecast": q_croston,
-        "rocchio_assign": q_rocchio_assign,
-        "centroid_silhouette": q_centroid_silhouette,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "croston_forecast": ORACLE_CROSTON,
-        "rocchio_assign": ORACLE_ROCCHIO,
-        "centroid_silhouette": ORACLE_SILHOUETTE,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("croston_forecast", q_croston, ORACLE_CROSTON)
+register("rocchio_assign", q_rocchio_assign, ORACLE_ROCCHIO)
+register("centroid_silhouette", q_centroid_silhouette, ORACLE_SILHOUETTE)
 
 
 # --- round-10 widening batch 24: population estimation, vocabulary
@@ -1156,27 +1082,10 @@ FROM staged
 """
 
 
-AUX_QUERIES.update(
-    {
-        "capture_recapture": q_capture_recapture,
-        "unseen_mass": q_unseen_mass,
-        "cooccurrence_lift": q_cooccurrence_lift,
-        "heaps_law": q_heaps_law,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "capture_recapture": ORACLE_CAPTURE_RECAPTURE,
-        "unseen_mass": ORACLE_UNSEEN_MASS,
-        "cooccurrence_lift": ORACLE_COOCCURRENCE_LIFT,
-        "heaps_law": ORACLE_HEAPS_LAW,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("capture_recapture", q_capture_recapture, ORACLE_CAPTURE_RECAPTURE)
+register("unseen_mass", q_unseen_mass, ORACLE_UNSEEN_MASS)
+register("cooccurrence_lift", q_cooccurrence_lift, ORACLE_COOCCURRENCE_LIFT)
+register("heaps_law", q_heaps_law, ORACLE_HEAPS_LAW)
 
 
 # --- round-10 widening batch 25: paired model tests, multi-rater
@@ -1379,27 +1288,10 @@ FROM ranked GROUP BY 1
 """
 
 
-AUX_QUERIES.update(
-    {
-        "mcnemar": q_mcnemar,
-        "fleiss_kappa": q_fleiss_kappa,
-        "durbin_watson": q_durbin_watson,
-        "trimmed_mean": q_trimmed_mean,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "mcnemar": ORACLE_MCNEMAR,
-        "fleiss_kappa": ORACLE_FLEISS,
-        "durbin_watson": ORACLE_DURBIN_WATSON,
-        "trimmed_mean": ORACLE_TRIMMED_MEAN,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("mcnemar", q_mcnemar, ORACLE_MCNEMAR)
+register("fleiss_kappa", q_fleiss_kappa, ORACLE_FLEISS)
+register("durbin_watson", q_durbin_watson, ORACLE_DURBIN_WATSON)
+register("trimmed_mean", q_trimmed_mean, ORACLE_TRIMMED_MEAN)
 
 
 # --- round-10 widening batch 26: 1-D stump, always-valid AB, odds
@@ -1644,27 +1536,10 @@ FROM rows_
 """
 
 
-AUX_QUERIES.update(
-    {
-        "decision_stump": q_decision_stump,
-        "msprt_ab": q_msprt,
-        "odds_ratio": q_odds_ratio,
-        "covariate_balance": q_covariate_balance,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "decision_stump": ORACLE_DECISION_STUMP,
-        "msprt_ab": ORACLE_MSPRT,
-        "odds_ratio": ORACLE_ODDS_RATIO,
-        "covariate_balance": ORACLE_COVARIATE_BALANCE,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("decision_stump", q_decision_stump, ORACLE_DECISION_STUMP)
+register("msprt_ab", q_msprt, ORACLE_MSPRT)
+register("odds_ratio", q_odds_ratio, ORACLE_ODDS_RATIO)
+register("covariate_balance", q_covariate_balance, ORACLE_COVARIATE_BALANCE)
 
 
 # --- round-10 widening batch 27: tail risk, panel FE, risk ratio
@@ -1836,23 +1711,8 @@ FROM staged
 """
 
 
-AUX_QUERIES.update(
-    {
-        "tail_risk": q_tail_risk,
-        "fixed_effects": q_fixed_effects,
-        "relative_risk": q_relative_risk,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "tail_risk": ORACLE_TAIL_RISK,
-        "fixed_effects": ORACLE_FIXED_EFFECTS,
-        "relative_risk": ORACLE_RELATIVE_RISK,
-    }
-)
+register("tail_risk", q_tail_risk, ORACLE_TAIL_RISK)
+register("fixed_effects", q_fixed_effects, ORACLE_FIXED_EFFECTS)
+register("relative_risk", q_relative_risk, ORACLE_RELATIVE_RISK)
 
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
 

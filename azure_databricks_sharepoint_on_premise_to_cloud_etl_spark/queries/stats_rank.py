@@ -1,25 +1,18 @@
 """Query catalog — rank stats, association, diagnostics, inference (batches 6-19).
 
-Split from the former monolithic queries.py (round 11); the
-registry dicts are defined once (QUERIES/_EXTENSION_ORACLES in
-.core, AUX_QUERIES/AUX_ORACLES in .curation) and mutated by the
-registration statements each family module keeps.
+Each query is registered with its DuckDB oracle by one
+``catalog.register`` call below its definition.
 """
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.registry import load_table, rebalance, register_temp_views
+from ..sources.registry import load_table, rebalance
 
+from .catalog import register
 from .core import (
     _duck_hash,
-)
-from .curation import (
-    AUX_ORACLES,
-    AUX_QUERIES,
 )
 from .graphs import (
     ORACLE_KAPLAN_MEIER,
@@ -319,29 +312,11 @@ FROM agg
 """
 
 
-AUX_QUERIES.update(
-    {
-        "spearman_corr": q_spearman_corr,
-        "anova_f": q_anova_f,
-        "kruskal_wallis": q_kruskal_wallis,
-        "t_closeness": q_t_closeness,
-        "vwap": q_vwap,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "spearman_corr": ORACLE_SPEARMAN,
-        "anova_f": ORACLE_ANOVA,
-        "kruskal_wallis": ORACLE_KRUSKAL,
-        "t_closeness": ORACLE_T_CLOSENESS,
-        "vwap": ORACLE_VWAP,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("spearman_corr", q_spearman_corr, ORACLE_SPEARMAN)
+register("anova_f", q_anova_f, ORACLE_ANOVA)
+register("kruskal_wallis", q_kruskal_wallis, ORACLE_KRUSKAL)
+register("t_closeness", q_t_closeness, ORACLE_T_CLOSENESS)
+register("vwap", q_vwap, ORACLE_VWAP)
 
 
 # --- round-10 widening batch 7: information-theoretic association ---
@@ -481,23 +456,8 @@ FROM per_feat p JOIN cond USING (f) JOIN lab USING (f)
 """
 
 
-AUX_QUERIES.update(
-    {
-        "mutual_information": q_mutual_information,
-        "feature_info_gain": q_feature_info_gain,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "mutual_information": ORACLE_MUTUAL_INFO,
-        "feature_info_gain": ORACLE_INFO_GAIN,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("mutual_information", q_mutual_information, ORACLE_MUTUAL_INFO)
+register("feature_info_gain", q_feature_info_gain, ORACLE_INFO_GAIN)
 
 
 # --- round-10 widening batch 8: concordance + shrinkage ranking ---
@@ -610,23 +570,8 @@ FROM rated CROSS JOIN prior
 """
 
 
-AUX_QUERIES.update(
-    {
-        "kendall_tau": q_kendall_tau,
-        "empirical_bayes_rates": q_empirical_bayes_rates,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "kendall_tau": ORACLE_KENDALL,
-        "empirical_bayes_rates": ORACLE_EB_RATES,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("kendall_tau", q_kendall_tau, ORACLE_KENDALL)
+register("empirical_bayes_rates", q_empirical_bayes_rates, ORACLE_EB_RATES)
 
 
 # --- round-10 widening batch 9: diagnostics + indicators + topology ---
@@ -1009,31 +954,12 @@ FROM tot CROSS JOIN nn
 """
 
 
-AUX_QUERIES.update(
-    {
-        "levene_variance": q_levene_variance,
-        "jarque_bera": q_jarque_bera,
-        "runs_test": q_runs_test,
-        "bollinger_bands": q_bollinger_bands,
-        "rsi_indicator": q_rsi_indicator,
-        "degree_assortativity": q_degree_assortativity,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "levene_variance": ORACLE_LEVENE,
-        "jarque_bera": ORACLE_JARQUE_BERA,
-        "runs_test": ORACLE_RUNS_TEST,
-        "bollinger_bands": ORACLE_BOLLINGER,
-        "rsi_indicator": ORACLE_RSI,
-        "degree_assortativity": ORACLE_ASSORTATIVITY,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("levene_variance", q_levene_variance, ORACLE_LEVENE)
+register("jarque_bera", q_jarque_bera, ORACLE_JARQUE_BERA)
+register("runs_test", q_runs_test, ORACLE_RUNS_TEST)
+register("bollinger_bands", q_bollinger_bands, ORACLE_BOLLINGER)
+register("rsi_indicator", q_rsi_indicator, ORACLE_RSI)
+register("degree_assortativity", q_degree_assortativity, ORACLE_ASSORTATIVITY)
 
 
 # --- round-10 widening batch 10: quality gates + feature/privacy ops ---
@@ -1281,29 +1207,11 @@ FROM unif
 """
 
 
-AUX_QUERIES.update(
-    {
-        "expectation_audit": q_expectation_audit,
-        "semantic_outlier": q_semantic_outlier,
-        "srm_check": q_srm_check,
-        "target_encode": q_target_encode,
-        "dp_noisy_counts": q_dp_noisy_counts,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "expectation_audit": ORACLE_EXPECTATION_AUDIT,
-        "semantic_outlier": ORACLE_SEMANTIC_OUTLIER,
-        "srm_check": ORACLE_SRM,
-        "target_encode": ORACLE_TARGET_ENCODE,
-        "dp_noisy_counts": _dp_oracle(),
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("expectation_audit", q_expectation_audit, ORACLE_EXPECTATION_AUDIT)
+register("semantic_outlier", q_semantic_outlier, ORACLE_SEMANTIC_OUTLIER)
+register("srm_check", q_srm_check, ORACLE_SRM)
+register("target_encode", q_target_encode, ORACLE_TARGET_ENCODE)
+register("dp_noisy_counts", q_dp_noisy_counts, _dp_oracle())
 
 
 # --- round-10 widening batch 11: multiple-testing inference ---
@@ -1445,23 +1353,8 @@ FROM ranked
 """
 
 
-AUX_QUERIES.update(
-    {
-        "rate_ztest_sweep": q_rate_ztest_sweep,
-        "multiple_testing": q_multiple_testing,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "rate_ztest_sweep": ORACLE_RATE_ZTEST,
-        "multiple_testing": _multiple_testing_oracle(),
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("rate_ztest_sweep", q_rate_ztest_sweep, ORACLE_RATE_ZTEST)
+register("multiple_testing", q_multiple_testing, _multiple_testing_oracle())
 
 
 # --- round-10 widening batch 12: centrality, trend, reshape ---
@@ -1628,25 +1521,9 @@ FROM wide
 """
 
 
-AUX_QUERIES.update(
-    {
-        "harmonic_centrality": q_harmonic_centrality,
-        "rolling_slope": q_rolling_slope,
-        "melt_metrics": q_melt_metrics,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "harmonic_centrality": _harmonic_oracle(),
-        "rolling_slope": ORACLE_ROLLING_SLOPE,
-        "melt_metrics": ORACLE_MELT,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("harmonic_centrality", q_harmonic_centrality, _harmonic_oracle())
+register("rolling_slope", q_rolling_slope, ORACLE_ROLLING_SLOPE)
+register("melt_metrics", q_melt_metrics, ORACLE_MELT)
 
 
 # --- round-10 widening batch 13: forecast scoring, lift, survey stats,
@@ -1893,27 +1770,10 @@ FROM s
 """
 
 
-AUX_QUERIES.update(
-    {
-        "forecast_accuracy": q_forecast_accuracy,
-        "cumulative_gains": q_cumulative_gains,
-        "weighted_mean_ess": q_weighted_mean_ess,
-        "readability": q_readability,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "forecast_accuracy": ORACLE_FORECAST_ACCURACY,
-        "cumulative_gains": ORACLE_CUM_GAINS,
-        "weighted_mean_ess": ORACLE_WEIGHTED_ESS,
-        "readability": ORACLE_READABILITY,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("forecast_accuracy", q_forecast_accuracy, ORACLE_FORECAST_ACCURACY)
+register("cumulative_gains", q_cumulative_gains, ORACLE_CUM_GAINS)
+register("weighted_mean_ess", q_weighted_mean_ess, ORACLE_WEIGHTED_ESS)
+register("readability", q_readability, ORACLE_READABILITY)
 
 
 # --- round-10 widening batch 14: hierarchy explosion, allocation,
@@ -2107,25 +1967,9 @@ GROUP BY l_returnflag
 """
 
 
-AUX_QUERIES.update(
-    {
-        "bom_rollup": q_bom_rollup,
-        "prorate_order_lines": q_prorate_order_lines,
-        "topk_others": q_topk_others,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "bom_rollup": ORACLE_BOM,
-        "prorate_order_lines": ORACLE_PRORATE,
-        "topk_others": ORACLE_TOPK_OTHERS,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("bom_rollup", q_bom_rollup, ORACLE_BOM)
+register("prorate_order_lines", q_prorate_order_lines, ORACLE_PRORATE)
+register("topk_others", q_topk_others, ORACLE_TOPK_OTHERS)
 
 
 # --- round-10 widening batch 15: conformal intervals, uplift curve ---
@@ -2270,23 +2114,8 @@ FROM cum
 """
 
 
-AUX_QUERIES.update(
-    {
-        "conformal_interval": q_conformal_interval,
-        "qini_curve": q_qini_curve,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "conformal_interval": ORACLE_CONFORMAL,
-        "qini_curve": ORACLE_QINI,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("conformal_interval", q_conformal_interval, ORACLE_CONFORMAL)
+register("qini_curve", q_qini_curve, ORACLE_QINI)
 
 
 # --- round-10 widening batch 16: price indices, demand variability ---
@@ -2413,23 +2242,8 @@ FROM cvd
 """
 
 
-AUX_QUERIES.update(
-    {
-        "price_index": q_price_index,
-        "xyz_classification": q_xyz_classification,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "price_index": ORACLE_PRICE_INDEX,
-        "xyz_classification": ORACLE_XYZ,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("price_index", q_price_index, ORACLE_PRICE_INDEX)
+register("xyz_classification", q_xyz_classification, ORACLE_XYZ)
 
 
 # --- round-10 widening batch 17: multiple regression, confounder
@@ -2653,25 +2467,9 @@ FROM per
 """
 
 
-AUX_QUERIES.update(
-    {
-        "ols2_trend": q_ols2_trend,
-        "partial_corr": q_partial_corr,
-        "rmst_survival": q_rmst_survival,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "ols2_trend": ORACLE_OLS2,
-        "partial_corr": ORACLE_PARTIAL_CORR,
-        "rmst_survival": ORACLE_RMST,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("ols2_trend", q_ols2_trend, ORACLE_OLS2)
+register("partial_corr", q_partial_corr, ORACLE_PARTIAL_CORR)
+register("rmst_survival", q_rmst_survival, ORACLE_RMST)
 
 
 # --- round-10 widening batch 18: sentence chunking, pseudonymization,
@@ -2805,25 +2603,9 @@ FROM unif
 """
 
 
-AUX_QUERIES.update(
-    {
-        "sentence_chunks": q_sentence_chunks,
-        "pseudonymize_keys": q_pseudonymize_keys,
-        "dp_noisy_sum": q_dp_noisy_sum,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "sentence_chunks": ORACLE_SENTENCE_CHUNKS,
-        "pseudonymize_keys": _pseudonymize_oracle(),
-        "dp_noisy_sum": _dp_sum_oracle(),
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("sentence_chunks", q_sentence_chunks, ORACLE_SENTENCE_CHUNKS)
+register("pseudonymize_keys", q_pseudonymize_keys, _pseudonymize_oracle())
+register("dp_noisy_sum", q_dp_noisy_sum, _dp_sum_oracle())
 
 
 # --- round-10 widening batch 19: recency attribution, MMR rerank ---
@@ -3035,21 +2817,7 @@ def _mmr_oracle() -> str:
     return _mmr_unroll(parts, _MMR_K, _MMR_LAM)
 
 
-AUX_QUERIES.update(
-    {
-        "time_decay_attribution": q_time_decay_attribution,
-        "mmr_rerank": q_mmr_rerank,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "time_decay_attribution": ORACLE_TIME_DECAY,
-        "mmr_rerank": _mmr_oracle(),
-    }
-)
+register("time_decay_attribution", q_time_decay_attribution, ORACLE_TIME_DECAY)
+register("mmr_rerank", q_mmr_rerank, _mmr_oracle())
 
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
 

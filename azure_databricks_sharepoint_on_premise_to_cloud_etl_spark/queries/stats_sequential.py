@@ -1,34 +1,19 @@
 """Query catalog — sequential monitors, attribution, k-paired tests (batches 28-37).
 
-Split from the former monolithic queries.py (round 11); the
-registry dicts are defined once (QUERIES/_EXTENSION_ORACLES in
-.core, AUX_QUERIES/AUX_ORACLES in .curation) and mutated by the
-registration statements each family module keeps.
+Each query is registered with its DuckDB oracle by one
+``catalog.register`` call below its definition.
 """
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.registry import (
-    load_table,
-    pin_read_confs,
-    rebalance,
-    register_temp_views,
-)
+from ..sources.registry import load_table, pin_read_confs, rebalance
 
+from .catalog import register
 from .business import (
     _ABC_A_CUT,
     _ABC_B_CUT,
-)
-from .curation import (
-    AUX_ORACLES,
-    AUX_QUERIES,
-)
-from .retrieval import (
-    STREAMING_PLAN_BUILDERS,
 )
 from .stats_agreement import (
     ORACLE_PAGE_HINKLEY,
@@ -102,19 +87,8 @@ def q_streaming_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-AUX_QUERIES["streaming_page_hinkley"] = q_streaming_page_hinkley
-AUX_ORACLES["streaming_page_hinkley"] = ORACLE_PAGE_HINKLEY
-STREAMING_PLAN_BUILDERS["streaming_page_hinkley"] = (
-    _stream_plan_page_hinkley
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
-assert set(STREAMING_PLAN_BUILDERS) == {
-    n for n in AUX_QUERIES if n.startswith("streaming_")
-}, "every streaming AUX query needs a pre-sink plan builder for the audit"
+register("streaming_page_hinkley", q_streaming_page_hinkley,
+         ORACLE_PAGE_HINKLEY, plan=_stream_plan_page_hinkley)
 
 
 # --- round-10 widening batch 29: behavioral entropy, Markov backtest,
@@ -321,27 +295,10 @@ FROM s2
 """
 
 
-AUX_QUERIES.update(
-    {
-        "behavior_entropy": q_behavior_entropy,
-        "markov_next_accuracy": q_markov_next_accuracy,
-        "local_peaks": q_local_peaks,
-        "ratio_metric_ci": q_ratio_metric_ci,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "behavior_entropy": ORACLE_BEHAVIOR_ENTROPY,
-        "markov_next_accuracy": ORACLE_MARKOV_NEXT,
-        "local_peaks": ORACLE_LOCAL_PEAKS,
-        "ratio_metric_ci": ORACLE_RATIO_METRIC,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("behavior_entropy", q_behavior_entropy, ORACLE_BEHAVIOR_ENTROPY)
+register("markov_next_accuracy", q_markov_next_accuracy, ORACLE_MARKOV_NEXT)
+register("local_peaks", q_local_peaks, ORACLE_LOCAL_PEAKS)
+register("ratio_metric_ci", q_ratio_metric_ci, ORACLE_RATIO_METRIC)
 
 
 # --- round-10 widening batch 30: Markov removal-effect attribution
@@ -512,13 +469,7 @@ nconv AS (
 """
 
 
-AUX_QUERIES["markov_attribution"] = q_markov_attribution
-AUX_ORACLES["markov_attribution"] = _markov_oracle()
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("markov_attribution", q_markov_attribution, _markov_oracle())
 
 
 # --- round-10 widening batch 31: FD audit, 2-D histogram, QTE
@@ -651,25 +602,9 @@ FROM pivoted
 """
 
 
-AUX_QUERIES.update(
-    {
-        "fd_audit": q_fd_audit,
-        "histogram2d": q_histogram2d,
-        "quantile_treatment_effect": q_qte,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "fd_audit": ORACLE_FD_AUDIT,
-        "histogram2d": ORACLE_HISTOGRAM2D,
-        "quantile_treatment_effect": ORACLE_QTE,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("fd_audit", q_fd_audit, ORACLE_FD_AUDIT)
+register("histogram2d", q_histogram2d, ORACLE_HISTOGRAM2D)
+register("quantile_treatment_effect", q_qte, ORACLE_QTE)
 
 
 # --- round-10 widening batch 32: profit threshold sweep, weighted
@@ -912,25 +847,9 @@ FROM cellgrid
 """
 
 
-AUX_QUERIES.update(
-    {
-        "profit_curve": q_profit_curve,
-        "weighted_kappa": q_weighted_kappa,
-        "abc_xyz_matrix": q_abc_xyz_matrix,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "profit_curve": ORACLE_PROFIT_CURVE,
-        "weighted_kappa": _wkappa_oracle(),
-        "abc_xyz_matrix": ORACLE_ABC_XYZ,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("profit_curve", q_profit_curve, ORACLE_PROFIT_CURVE)
+register("weighted_kappa", q_weighted_kappa, _wkappa_oracle())
+register("abc_xyz_matrix", q_abc_xyz_matrix, ORACLE_ABC_XYZ)
 
 
 # --- round-10 widening batch 33: winnowing (MOSS) fingerprint overlap
@@ -1012,13 +931,7 @@ HAVING count(*) >= {_WIN_MINSH}
 """
 
 
-AUX_QUERIES["winnow_overlap"] = q_winnow_overlap
-AUX_ORACLES["winnow_overlap"] = ORACLE_WINNOW_OVERLAP
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("winnow_overlap", q_winnow_overlap, ORACLE_WINNOW_OVERLAP)
 
 
 # --- round-10 widening batch 34: leave-one-source-out data valuation
@@ -1083,13 +996,7 @@ FROM scored
 """
 
 
-AUX_QUERIES["loso_source_value"] = q_loso_value
-AUX_ORACLES["loso_source_value"] = ORACLE_LOSO_VALUE
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("loso_source_value", q_loso_value, ORACLE_LOSO_VALUE)
 
 
 # --- round-10 widening batch 35: power planning, Holm step-down
@@ -1243,23 +1150,8 @@ FROM ranked
 """
 
 
-AUX_QUERIES.update(
-    {
-        "ab_power_plan": q_ab_power_plan,
-        "holm_sweep": q_holm_sweep,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "ab_power_plan": _power_plan_oracle(),
-        "holm_sweep": _holm_oracle(),
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("ab_power_plan", q_ab_power_plan, _power_plan_oracle())
+register("holm_sweep", q_holm_sweep, _holm_oracle())
 
 
 # --- round-10 widening batch 36: k-paired tests (Cochran Q, Friedman)
@@ -1422,23 +1314,8 @@ FROM n_row CROSS JOIN agg
 """
 
 
-AUX_QUERIES.update(
-    {
-        "cochran_q": q_cochran_q,
-        "friedman": q_friedman,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "cochran_q": ORACLE_COCHRAN_Q,
-        "friedman": ORACLE_FRIEDMAN,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("cochran_q", q_cochran_q, ORACLE_COCHRAN_Q)
+register("friedman", q_friedman, ORACLE_FRIEDMAN)
 
 
 # --- round-10 widening batch 37: Cliff's delta, EWMA control chart
@@ -1568,23 +1445,8 @@ FROM chart
 """
 
 
-AUX_QUERIES.update(
-    {
-        "cliffs_delta": q_cliffs_delta,
-        "ewma_control_chart": q_ewma_control_chart,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "cliffs_delta": ORACLE_CLIFFS_DELTA,
-        "ewma_control_chart": ORACLE_EWMA_CHART,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("cliffs_delta", q_cliffs_delta, ORACLE_CLIFFS_DELTA)
+register("ewma_control_chart", q_ewma_control_chart, ORACLE_EWMA_CHART)
 
 
 # --- round-11 widening batch 38: exact small-count inference, extreme
@@ -1787,25 +1649,9 @@ FROM staged
 """
 
 
-AUX_QUERIES.update(
-    {
-        "fisher_exact": q_fisher_exact,
-        "gumbel_return_levels": q_gumbel_levels,
-        "quantile_order_ci": q_quantile_ci,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "fisher_exact": ORACLE_FISHER,
-        "gumbel_return_levels": ORACLE_GUMBEL,
-        "quantile_order_ci": _quantile_ci_oracle(),
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("fisher_exact", q_fisher_exact, ORACLE_FISHER)
+register("gumbel_return_levels", q_gumbel_levels, ORACLE_GUMBEL)
+register("quantile_order_ci", q_quantile_ci, _quantile_ci_oracle())
 
 
 # --- round-11 widening batches 40-41: loso-driven mixture weights,
@@ -1994,27 +1840,11 @@ FROM bh
 """
 
 
-AUX_QUERIES.update(
-    {
-        "loso_mixture_weights": q_loso_mixture_weights,
-        "bartlett_variance": q_bartlett,
-        "icc_reliability": q_icc_reliability,
-        "by_sweep": q_by_sweep,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "loso_mixture_weights": _loso_mixture_oracle(),
-        "bartlett_variance": ORACLE_BARTLETT,
-        "icc_reliability": ORACLE_ICC,
-        "by_sweep": _by_oracle(),
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("loso_mixture_weights", q_loso_mixture_weights,
+         _loso_mixture_oracle())
+register("bartlett_variance", q_bartlett, ORACLE_BARTLETT)
+register("icc_reliability", q_icc_reliability, ORACLE_ICC)
+register("by_sweep", q_by_sweep, _by_oracle())
 
 
 # --- round-11 widening batch 42: queueing, stratified OR, Cronbach α
@@ -2180,25 +2010,9 @@ FROM tv CROSS JOIN iv
 """
 
 
-AUX_QUERIES.update(
-    {
-        "erlang_c": q_erlang_c,
-        "mh_odds_ratio": q_mh_odds,
-        "cronbach_alpha": q_cronbach,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "erlang_c": _erlang_oracle(),
-        "mh_odds_ratio": ORACLE_MH_ODDS,
-        "cronbach_alpha": ORACLE_CRONBACH,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("erlang_c", q_erlang_c, _erlang_oracle())
+register("mh_odds_ratio", q_mh_odds, ORACLE_MH_ODDS)
+register("cronbach_alpha", q_cronbach, ORACLE_CRONBACH)
 
 
 # --- round-11 widening batch 43: paired + whole-distribution
@@ -2334,23 +2148,8 @@ FROM staged
 """
 
 
-AUX_QUERIES.update(
-    {
-        "wilcoxon_signed_rank": q_wilcoxon,
-        "cramer_von_mises": q_cvm,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "wilcoxon_signed_rank": ORACLE_WILCOXON,
-        "cramer_von_mises": ORACLE_CVM,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("wilcoxon_signed_rank", q_wilcoxon, ORACLE_WILCOXON)
+register("cramer_von_mises", q_cvm, ORACLE_CVM)
 
 
 # --- round-11 widening batch 44: ordered-alternative trend test
@@ -2459,13 +2258,7 @@ FROM staged
 """
 
 
-AUX_QUERIES["jonckheere_terpstra"] = q_jonckheere
-AUX_ORACLES["jonckheere_terpstra"] = _jt_oracle()
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("jonckheere_terpstra", q_jonckheere, _jt_oracle())
 
 
 # --- round-11 widening batch 45: dose-response for proportions,
@@ -2595,23 +2388,8 @@ FROM staged
 """
 
 
-AUX_QUERIES.update(
-    {
-        "cochran_armitage": q_cochran_armitage,
-        "ordinal_association": q_ordinal_assoc,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "cochran_armitage": _ca_oracle(),
-        "ordinal_association": _oa_oracle(),
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("cochran_armitage", q_cochran_armitage, _ca_oracle())
+register("ordinal_association", q_ordinal_assoc, _oa_oracle())
 
 
 # --- round-11 widening batch 46: seasonality-safe trend, labeling
@@ -2738,23 +2516,8 @@ FROM ranked
 """
 
 
-AUX_QUERIES.update(
-    {
-        "seasonal_mann_kendall": q_seasonal_mk,
-        "neyman_allocation": q_neyman,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "seasonal_mann_kendall": ORACLE_SEASONAL_MK,
-        "neyman_allocation": ORACLE_NEYMAN,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("seasonal_mann_kendall", q_seasonal_mk, ORACLE_SEASONAL_MK)
+register("neyman_allocation", q_neyman, ORACLE_NEYMAN)
 
 
 # --- round-11 widening batch 47: VaR backtesting, Brier decomposition
@@ -2864,23 +2627,8 @@ FROM red
 """
 
 
-AUX_QUERIES.update(
-    {
-        "kupiec_pof": q_kupiec,
-        "brier_decomposition": q_brier_decomp,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "kupiec_pof": _kupiec_oracle(),
-        "brier_decomposition": ORACLE_BRIER_DECOMP,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("kupiec_pof", q_kupiec, _kupiec_oracle())
+register("brier_decomposition", q_brier_decomp, ORACLE_BRIER_DECOMP)
 
 
 # --- round-11 widening batch 48: Bradley–Terry preference strengths
@@ -3041,13 +2789,7 @@ JOIN it{_BT_ITERS} ON it{_BT_ITERS}.it = items.it
     return head + "".join(steps) + tail
 
 
-AUX_QUERIES["bradley_terry"] = q_bradley_terry
-AUX_ORACLES["bradley_terry"] = _bt_oracle()
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("bradley_terry", q_bradley_terry, _bt_oracle())
 
 
 # --- round-11 widening batch 49: Weibull reliability fit, Chao1
@@ -3167,23 +2909,8 @@ FROM staged
 """
 
 
-AUX_QUERIES.update(
-    {
-        "weibull_fit": q_weibull_fit,
-        "chao1_richness": q_chao1,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "weibull_fit": ORACLE_WEIBULL,
-        "chao1_richness": ORACLE_CHAO1,
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("weibull_fit", q_weibull_fit, ORACLE_WEIBULL)
+register("chao1_richness", q_chao1, ORACLE_CHAO1)
 
 
 # --- round-11 widening batch 50b: Storey q-values
@@ -3224,13 +2951,7 @@ FROM bh CROSS JOIN pi
 """
 
 
-AUX_QUERIES["storey_qvalue"] = q_storey_sweep
-AUX_ORACLES["storey_qvalue"] = _storey_oracle()
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("storey_qvalue", q_storey_sweep, _storey_oracle())
 
 
 # --- round-11 widening batch 51: Mood's median, Page's L
@@ -3353,23 +3074,8 @@ FROM staged
 """
 
 
-AUX_QUERIES.update(
-    {
-        "moods_median": q_moods_median,
-        "page_trend": q_page_trend,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "moods_median": ORACLE_MOODS,
-        "page_trend": _page_oracle(),
-    }
-)
-
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)
+register("moods_median", q_moods_median, ORACLE_MOODS)
+register("page_trend", q_page_trend, _page_oracle())
 
 
 # --- round-11 widening batch 52: G-test, Cohen's h
@@ -3471,20 +3177,6 @@ FROM staged
 """
 
 
-AUX_QUERIES.update(
-    {
-        "g_test": q_g_test,
-        "cohens_h": q_cohens_h,
-    }
-)
-AUX_ORACLES.update(
-    {
-        "g_test": ORACLE_G_TEST,
-        "cohens_h": ORACLE_COHENS_H,
-    }
-)
+register("g_test", q_g_test, ORACLE_G_TEST)
+register("cohens_h", q_cohens_h, ORACLE_COHENS_H)
 
-assert set(AUX_ORACLES) == set(AUX_QUERIES), (
-    "every AUX entry needs an oracle twin: "
-    f"{set(AUX_ORACLES) ^ set(AUX_QUERIES)}"
-)

@@ -20,6 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession  # noqa: E402
 
 from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark import queries as q  # noqa: E402
+from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.queries.core import q_flagship_census_count  # noqa: E402
 from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.scope import Scope  # noqa: E402
 
 
@@ -37,7 +38,7 @@ def main() -> None:
     print(f"== fixtures: {sf_dir}\n")
 
     print("== relational core: flagship census count (top 5 rows)")
-    q.q_flagship_census_count(spark, sf_dir).show(5, truncate=False)
+    q_flagship_census_count(spark, sf_dir).show(5, truncate=False)
 
     print("== relational core: pricing summary")
     q.QUERIES["pricing_summary"](spark, sf_dir).show(truncate=False)

@@ -5,7 +5,9 @@ import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "tools"))
 
 
 @pytest.fixture(scope="session")
@@ -20,6 +22,45 @@ def spark():
 
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+@pytest.fixture(scope="session")
+def oracle_db():
+    """``oracle_db(sf_dir)``: one DuckDB oracle connection per scale
+    factor (tools/verify_local.oracle_connection), shared by the suite."""
+    from verify_local import oracle_connection
+
+    cons = {}
+
+    def at(sf_dir: str):
+        if sf_dir not in cons:
+            cons[sf_dir] = oracle_connection(sf_dir)
+        return cons[sf_dir]
+
+    yield at
+    for con in cons.values():
+        con.close()
+
+
+def assert_oracle_parity(spark, con, fn, oracle: str, sf_dir: str) -> None:
+    """Run ``fn`` on Spark and ``oracle`` on ``con``; fail with
+    tools/verify_local.parity_problems' findings, the driver's gate."""
+    from verify_local import parity_problems
+
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.scope import Scope
+
+    # the scope frees what the query checkpoints or persists; clearing
+    # the cache keeps one query's cached plans out of the next (and out
+    # of how later tests' plans print)
+    with Scope():
+        sdf = fn(spark, sf_dir)
+        scols = sdf.columns
+        srows = [tuple(r) for r in sdf.collect()]
+    spark.catalog.clearCache()
+    res = con.execute(oracle)
+    dcols = [d[0] for d in res.description]
+    problems = parity_problems(scols, srows, dcols, res.fetchall())
+    assert not problems, "; ".join(problems)
 
 
 # --- driver-window test tiers (r13 verdict item 2) -------------------

@@ -8,12 +8,14 @@ the moment a registry key is added without regenerating.
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
 from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark import queries as q
 
-DOC = "/root/repo/docs/OPERATORS.md"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+DOC = os.path.join(ROOT, "docs", "OPERATORS.md")
 
 
 def test_every_registry_key_in_operators_md():
@@ -33,7 +35,7 @@ def test_generated_index_is_current():
     """Byte-exact check: the committed generated section equals what
     the generator produces from the live registries."""
     r = subprocess.run(
-        [sys.executable, "/root/repo/tools/gen_operators_md.py", "--check"],
+        [sys.executable, os.path.join(ROOT, "tools", "gen_operators_md.py"), "--check"],
         capture_output=True,
         text=True,
     )

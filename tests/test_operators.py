@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import datetime as dt
+import time
 
 from pyspark.sql import functions as F
 
@@ -306,7 +307,7 @@ def test_flagship_cache_is_session_scoped(spark):
     cross-unpersist each other's cached census fact (the r3/r4
     module-global bug): after session B runs the flagship, session A's
     cached fact must still be materialized."""
-    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark import queries as q
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.queries import core as q
 
     sf = "/root/testdata/sf0.001"
     a_rows = sorted(map(tuple, q.q_flagship_census_count(spark, sf).collect()))
@@ -375,35 +376,53 @@ def test_scope_bounds_repeated_connected_components(spark):
     )
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.scope import (
         Scope,
+        checkpoint,
         release,
     )
 
     sc = spark.sparkContext
 
-    def stored() -> int:
-        return len(sc._jsc.sc().getRDDStorageInfo())
+    # RDD ids, not a count: other tests' frames leave storage
+    # asynchronously (Spark's cleaner, non-blocking unpersist), which
+    # moves a count while this test runs
+    def stored() -> set[int]:
+        return {info.id() for info in sc._jsc.sc().getRDDStorageInfo()}
+
+    def freed(ids: set[int]) -> bool:
+        # a scope's release is non-blocking: give the executors a moment
+        deadline = time.monotonic() + 30
+        while stored() & ids and time.monotonic() < deadline:
+            time.sleep(0.1)
+        return not stored() & ids
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(20)], "id_a LONG, id_b LONG"
     )
     nodes = spark.createDataFrame([(i,) for i in range(21)], "doc_id LONG")
+    # checkpointed outside any scope, so only release frees it: a
+    # release that frees the wrong frame would drop it
+    before = stored()
+    sentinel = checkpoint(spark.range(5))
+    kept = stored() - before
+    assert kept
 
-    counts = []
     for _ in range(3):
         before = stored()
         with Scope():
             out = connected_components(edges, nodes, driver_finish_edges=0)
             assert {r["component"] for r in out.collect()} == {0}
-            assert stored() > before  # the final generation backs the result
-        counts.append(stored())
+            made = stored() - before
+            assert made  # the final generation backs the result
+        # each scope frees what its call stored — no per-call growth
+        # (the unscoped form keeps one final generation per call)
+        assert freed(made)
         release(out)  # already freed by the scope: a safe no-op
-        assert stored() == counts[-1]
-    # after each scope, storage returns to the same level — no
-    # per-call growth (the unscoped form grows by 1 per call)
-    assert counts[2] <= counts[0]
+        assert kept <= stored()
     # a frame backed by no materialisation: safe no-op
     release(edges)
-    assert stored() == counts[-1]
+    assert kept <= stored()
+    release(sentinel)
+    assert freed(kept)
 
 
 def test_connected_components_driver_finish_matches_distributed(spark):

@@ -230,7 +230,7 @@ def test_curation_pipeline_each_stage_acts(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark import queries as q
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.queries import curation as q
 
     good = ("the and is in to of it for on as this that with you "
             "are be have from one all words " * 3).strip()

@@ -7,6 +7,7 @@ import datetime as dt
 import pytest
 
 from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.funnels import (
+    _markov_cells_and_converters,
     markov_attribution,
     markov_journey_edges,
 )
@@ -158,13 +159,15 @@ def test_attribution_null_ts_converter_counts_in_n_conv(spark):
         (2, None, "buy", 4),
     ]
     df = spark.createDataFrame(rows, _SCHEMA)
-    cells = markov_journey_edges(df, "u", "ts", "ch", "buy", "eid")
+    cells, n_converters = _markov_cells_and_converters(
+        df, "u", "ts", "ch", "buy", "eid"
+    )
     by = {(r["src"], r["dst"]): r["n_edges"] for r in cells.collect()}
     # edge classification unchanged: u=2 ends in __NULL__
     assert by[("A", "__CONV__")] == 1
     assert by[("A", "__NULL__")] == 1
     # but the distinct-converter count sees both
-    assert cells._n_converters == 2
+    assert n_converters == 2
     att = {
         r["channel"]: r
         for r in markov_attribution(
@@ -185,9 +188,11 @@ def test_attribution_null_entity_conversions_ignored(spark):
         (None, _ts(0), "buy", 3),
     ]
     df = spark.createDataFrame(rows, _SCHEMA)
-    cells = markov_journey_edges(df, "u", "ts", "ch", "buy", "eid")
+    cells, n_converters = _markov_cells_and_converters(
+        df, "u", "ts", "ch", "buy", "eid"
+    )
     by = {(r["src"], r["dst"]): r["n_edges"] for r in cells.collect()}
     assert by[("__START__", "A")] == 1
     assert by[("A", "__CONV__")] == 1
     assert ("__START__", "__CONV__") not in by
-    assert cells._n_converters == 1
+    assert n_converters == 1

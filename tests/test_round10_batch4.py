@@ -144,7 +144,7 @@ def test_streaming_hll_maintenance_equals_batch(spark, tmp_path):
     the appended registers must equal the sketch built over the whole
     table in one pass — the mergeability contract through real
     Structured Streaming, the HLL twin of the CMS maintenance test."""
-    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark import queries as q
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.queries import core as q
 
     sf_dir = "/root/testdata/sf0.001"
     out = str(tmp_path / "registers")

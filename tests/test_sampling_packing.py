@@ -165,7 +165,7 @@ def test_doc_chunks_boundaries(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark import queries as q
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.queries import curation as q
 
     docs = {
         1: " ".join(f"w{i}" for i in range(64)),    # exactly one window

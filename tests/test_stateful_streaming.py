@@ -169,14 +169,19 @@ def test_watermarked_state_plateaus_across_batches(spark, tmp_path):
     accumulating the whole stream (the no-watermark planted case
     below shows what failure looks like).  This turns the streaming
     plan-audit's static argument into a measured property."""
-    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark import queries as q
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.queries.core import (
+        _stream_plan_dedup,
+        _stream_plan_sliding,
+    )
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.queries.curation import _stream_plan_join
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.queries.retrieval import _stream_plan_session
 
     d, _n = _sliced_events_dir(tmp_path)
     cases = [
-        ("dedup", q._stream_plan_dedup),
-        ("sliding", q._stream_plan_sliding),
-        ("session", q._stream_plan_session),
-        ("join", q._stream_plan_join),
+        ("dedup", _stream_plan_dedup),
+        ("sliding", _stream_plan_sliding),
+        ("session", _stream_plan_session),
+        ("join", _stream_plan_join),
     ]
     for name, builder in cases:
         plan = builder(spark, "/root/testdata/sf0.001",
@@ -205,7 +210,7 @@ def test_unwatermarked_state_grows_monotonically(spark, tmp_path):
     harness)."""
     from pyspark.sql import functions as F
 
-    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark import queries as q
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.queries import core as q
 
     d, n = _sliced_events_dir(tmp_path)
     events, _ = q._stream_events(
@@ -237,7 +242,7 @@ def test_streaming_sequence_match_across_batches(spark, tmp_path):
     anchor in batch k completing in batch k+1 only works if the
     state store carried (last_first, last_excl) across the
     boundary."""
-    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark import queries as q
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.queries import graphs as q
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators import funnels
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.sources.registry import load_table
     from pyspark.sql import functions as F

@@ -569,7 +569,7 @@ def test_streaming_cms_maintenance_equals_batch(spark, tmp_path):
     the appended cells must equal the sketch built over the whole
     table in one batch pass — the mergeability contract, exercised
     through real Structured Streaming."""
-    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark import queries as q
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.queries import core as q
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.sources.registry import load_table
 
     sf_dir = "/root/testdata/sf0.001"

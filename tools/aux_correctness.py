@@ -20,17 +20,17 @@ Usage: python tools/aux_correctness.py [sf_dir]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-from verify_local import table_digest  # noqa: E402  (same dir)
+from verify_local import oracle_connection, table_digest  # noqa: E402  (same dir)
 
 
 def main() -> int:
-    import duckdb
-
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark import queries as q
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.session import get_spark
 
@@ -52,23 +52,7 @@ def main() -> int:
     except Exception:  # noqa: BLE001 — best-effort
         pass
 
-    # Spark-compatible xxhash64 for the fast-MinHash oracle (DuckDB
-    # has no native xxhash64; see tools/xxh64_oracle.py)
-    from xxh64_oracle import register as register_xxh64
-
-    def fresh_con():
-        c = duckdb.connect()
-        register_xxh64(c)
-        for t in (
-            "region nation customer supplier part orders lineitem "
-            "events documents embeddings"
-        ).split():
-            c.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-            )
-        return c
-
-    con = fresh_con()
+    con = oracle_connection(sf_dir)
 
     out: dict[str, dict] = {}
     failures = []
@@ -118,7 +102,7 @@ def main() -> int:
                 # transient FD pressure: drop every cached handle and
                 # retry once on a fresh connection
                 con.close()
-                con = fresh_con()
+                con = oracle_connection(sf_dir)
                 res = con.execute(q.AUX_ORACLES[name])
             dcols = [d[0] for d in res.description]
             drows = res.fetchall()
@@ -145,7 +129,7 @@ def main() -> int:
         out[name] = rec
 
     if not only:
-        with open("/root/repo/AUX_CORRECTNESS.json", "w") as f:
+        with open(os.path.join(ROOT, "AUX_CORRECTNESS.json"), "w") as f:
             json.dump(out, f, indent=1, sort_keys=True)
     print(
         f"\n{len(failures)} failures: {failures}"

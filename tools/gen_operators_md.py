@@ -17,12 +17,14 @@ Usage: python tools/gen_operators_md.py          # rewrites in place
 from __future__ import annotations
 
 import inspect
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-DOC = "/root/repo/docs/OPERATORS.md"
+DOC = os.path.join(ROOT, "docs", "OPERATORS.md")
 BEGIN = "<!-- BEGIN GENERATED QUERY INDEX (tools/gen_operators_md.py) -->"
 END = "<!-- END GENERATED QUERY INDEX -->"
 

@@ -42,7 +42,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 HEAVY = [
     "minhash_lsh_pairs",
@@ -653,7 +654,8 @@ def _curation_stages():
     stage's marginal cost at each factor."""
     from pyspark.sql import functions as F
 
-    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark import queries as q
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.queries.core import _CONTAM_EVAL_IDS
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.queries.curation import _PIPE_CONTAM_K
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators import (
         dedup,
         text,
@@ -693,8 +695,8 @@ def _curation_stages():
         d = rebalance(load_table(spark, sf_dir, "documents"))
         return text.contamination_flags(
             d,
-            d.filter(F.col("doc_id") < q._CONTAM_EVAL_IDS),
-            k=q._PIPE_CONTAM_K,
+            d.filter(F.col("doc_id") < _CONTAM_EVAL_IDS),
+            k=_PIPE_CONTAM_K,
         )
 
     def tfidf_stage_candidates(spark, sf_dir):
@@ -919,7 +921,7 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--base", default="/root/testdata/sf0.1")
     ap.add_argument("--factors", default="3,10")
-    ap.add_argument("--out", default="/root/repo/SCALE_SF1.json")
+    ap.add_argument("--out", default=os.path.join(ROOT, "SCALE_SF1.json"))
     ap.add_argument("--root", default="/tmp/spark_graft_scale")
     ap.add_argument(
         "--only",

@@ -40,7 +40,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 HOT_FRACTION = 10  # every 10th row's key remapped -> hot key owns ~10%
@@ -117,7 +118,7 @@ def main() -> int:
     ap.add_argument("--base", default="/root/testdata/sf0.1")
     ap.add_argument("--factor", type=int, default=3)
     ap.add_argument("--root", default="/tmp/spark_graft_scale")
-    ap.add_argument("--out", default="/root/repo/SCALE_SF1.json")
+    ap.add_argument("--out", default=os.path.join(ROOT, "SCALE_SF1.json"))
     args = ap.parse_args()
 
     from pyspark.sql import functions as F
