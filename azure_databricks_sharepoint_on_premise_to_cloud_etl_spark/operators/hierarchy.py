@@ -7,10 +7,11 @@ We keep those union-of-joins semantics (SURVEY 7.5 risk 1 pins the NEW
 variant: union all levels then distinct, no per-level filtering) but
 with native prefix expressions instead of the reference's Python UDFs.
 
-Scale: the zone/dim side is small -> broadcast all three joins; the
-fact side is scanned once per level.  For a truly large dim, switch to
-the exploded-prefix-key single join (``fallback_join_exploded``):
-one shuffle join on a single composite key instead of three passes.
+``hierarchical_fallback_join`` is that union written out: three
+broadcast joins, the fact side scanned once per level.  It is the
+reference form the tests check against.  ``fallback_join_exploded``
+returns the same rows from one scan and one equi-join on the exploded
+candidate keys; the census plan and the registry query use it.
 """
 
 from __future__ import annotations

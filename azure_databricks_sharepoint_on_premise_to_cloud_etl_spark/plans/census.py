@@ -10,6 +10,10 @@ audit append -> alerts.
 Differences by design (all SURVEY build-plan items):
 - the per-date driver loop becomes one partitioned DataFrame pass;
 - zone expansion is explode(sequence(...)) not a Python double loop;
+- the three-level zone match is one exploded-key broadcast join, not
+  three joins and a union;
+- the labeled plan runs once per POST: the audit append writes the
+  rows that were posted (``sinks.rest_sink.post_then_audit``);
 - the processed-file set-difference is a left_anti join;
 - clock/run_id/user/transport/mailer are injected for determinism.
 """
@@ -24,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import overnight_corrected_end
-from ..operators.hierarchy import hierarchical_fallback_join
+from ..operators.hierarchy import fallback_join_exploded
 from ..operators.intervals import actual_plan_label, rolling_window_expand
 from ..operators.snapshots import (
     high_watermark_filter,
@@ -147,9 +151,10 @@ def label_census_against_zones(
     counts: DataFrame, planned_zones: DataFrame
 ) -> DataFrame:
     """Hierarchical zone match + ACTUAL/PLAN labeling
-    (code/ukg_open_census.py:710-730): union of exact/prefix joins,
-    then interval classification of each census timestamp."""
-    matched = hierarchical_fallback_join(
+    (code/ukg_open_census.py:710-730): each count meets the zones
+    defined at its exact location or its 4- or 5-segment prefix, then
+    each census timestamp is classified against the zone interval."""
+    matched = fallback_join_exploded(
         counts,
         planned_zones.select(
             F.col("location").alias("zone_loc"),

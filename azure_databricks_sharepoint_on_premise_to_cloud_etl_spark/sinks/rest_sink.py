@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.batching import BatchReport, run_batched_with_retry
-from ..scope import checkpoint
+from ..scope import checkpoint, release
 
 # transport(url, json_body) -> (status_code, response_text)
 Transport = Callable[[str, str], tuple[int, str]]
@@ -74,11 +74,20 @@ def post_then_audit(
     batch_size: int = 20,
 ) -> PostResult:
     """R6 ordering (code/ukg_open_census.py:754-763): POST first; the
-    audit write runs only if every batch ultimately succeeded."""
-    result = post_rows(df, url, transport, batch_size)
-    if result.report.ok:
-        write_audit(df)
-    return result
+    audit write runs only if every batch ultimately succeeded.
+
+    ``df`` is materialised once; the POST and ``write_audit`` read that
+    materialisation, so the audit holds exactly the rows that were
+    posted, even when ``df``'s sources change in between.  It is freed
+    before returning."""
+    posted = checkpoint(df)
+    try:
+        result = post_rows(posted, url, transport, batch_size)
+        if result.report.ok:
+            write_audit(posted)
+        return result
+    finally:
+        release(posted)
 
 
 def post_rows_distributed(
@@ -154,8 +163,15 @@ def post_then_audit_distributed(
 ) -> DataFrame:
     """R6 success-gated persistence at volume: distributed POST first;
     the audit write runs only when the ledger shows zero persistent
-    failures.  Returns the ledger so callers can alert on failures."""
-    ledger = post_rows_distributed(df, url, transport, batch_size)
-    if ledger.filter(F.col("failed_row").isNotNull()).isEmpty():
-        write_audit(df)
-    return ledger
+    failures.  Returns the ledger so callers can alert on failures.
+
+    As in :func:`post_then_audit`, ``df`` is materialised once and both
+    the POST and ``write_audit`` read that materialisation."""
+    posted = checkpoint(df)
+    try:
+        ledger = post_rows_distributed(posted, url, transport, batch_size)
+        if ledger.filter(F.col("failed_row").isNotNull()).isEmpty():
+            write_audit(posted)
+        return ledger
+    finally:
+        release(posted)

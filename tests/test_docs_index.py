@@ -9,6 +9,7 @@ the moment a registry key is added without regenerating.
 from __future__ import annotations
 
 import os
+import re
 import subprocess
 import sys
 
@@ -40,3 +41,14 @@ def test_generated_index_is_current():
         text=True,
     )
     assert r.returncode == 0, r.stderr or r.stdout
+
+
+def test_cited_test_files_exist():
+    """Every test file the index cites (``pytest `X.py` ``) is a file
+    under tests/."""
+    doc = open(DOC).read()
+    cited = set(re.findall(r"`(?:tests/)?(test_\w+\.py)`", doc))
+    missing = sorted(
+        f for f in cited if not os.path.isfile(os.path.join(ROOT, "tests", f))
+    )
+    assert cited and not missing, f"docs/OPERATORS.md cites missing test files: {missing}"

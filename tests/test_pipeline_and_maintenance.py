@@ -104,6 +104,40 @@ def test_full_pipeline_with_post_and_audit(spark, tmp_path):
     assert spark.read.parquet(audit_path).count() == len(rows)
 
 
+def test_census_post_and_audit_evaluate_the_labeled_plan_once(spark, tmp_path):
+    """POST + audit cost one evaluation of the labeled plan plus a
+    read of its materialisation each: at most three jobs beyond
+    collecting the labeled frame alone."""
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # job events reach the status tracker through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def run(**post):
+        return census.run_census_pipeline(
+            spark, _census(spark), _mapping(spark), _zones(spark), posted=None,
+            run_id=writers.make_run_id(NOW), now=NOW, **post,
+        )
+
+    alone = jobs(
+        "census-labeled-alone",
+        lambda: run(post_url=None, transport=None, audit_path=None).labeled.collect(),
+    )
+    posted = jobs(
+        "census-post-and-audit",
+        lambda: run(post_url="http://ukg/api", transport=lambda u, b: (201, "created"),
+                    audit_path=str(tmp_path / "audit")),
+    )
+    assert posted <= alone + 3, (posted, alone)
+
+
 def test_compact_reduces_files(spark, tmp_path):
     path = str(tmp_path / "tbl")
     for i in range(5):

@@ -394,3 +394,59 @@ def test_incremental_dedup_statuses_partition_the_increment(spark, texts):
         assert (r["match_id"] is None) == (r["status"] == "novel")
         if r["status"] == "exact_dup":
             assert norm[r["doc_id"]] == norm[r["match_id"]]
+
+
+# ---- hierarchical zone match: exploded single join vs the union reference ----
+
+# a two-letter segment alphabet makes prefixes collide; the empty path
+# and NULL ride along (prefix_path(NULL) is "", so a NULL path meets a
+# "" zone through its prefix keys in both forms)
+zone_paths = st.one_of(
+    st.none(), st.lists(st.sampled_from("ab"), max_size=6).map("/".join)
+)
+
+
+@st.composite
+def facts_and_zones(draw):
+    facts = draw(st.lists(zone_paths, max_size=8))
+    known = [p for p in facts if p is not None]
+    prefixes = (
+        st.tuples(st.sampled_from(known), st.integers(0, 6)).map(
+            lambda pk: "/".join(pk[0].split("/")[: pk[1]])
+        )
+        if known
+        else zone_paths
+    )
+    zones = draw(
+        st.lists(st.tuples(st.one_of(zone_paths, prefixes), st.integers(0, 2)), max_size=8)
+    )
+    return facts, zones
+
+
+@settings(max_examples=8, deadline=None)
+@given(facts_and_zones())
+# fewer than 4 segments: exact, 4- and 5-prefix keys coincide
+@example(case=(["a/b", "b"], [("a/b", 0), ("b", 1)]))
+# the exact path equals its own 4-segment prefix
+@example(case=(["a/b/a/b"], [("a/b/a/b", 0)]))
+# one fact matching at the exact, 5- and 4-segment levels at once
+@example(case=(["a/b/a/b/a/b"], [("a/b/a/b/a/b", 0), ("a/b/a/b/a", 1), ("a/b/a/b", 2)]))
+# NULL paths on both sides; repeated fact rows
+@example(case=([None, "a", None, "a"], [("", 0), ("a", 1), (None, 2)]))
+def test_fallback_join_exploded_matches_union_reference(spark, case):
+    """The census plan labels counts with ``fallback_join_exploded``;
+    it must return the same rows, in the same columns, as the
+    union-of-joins reference ``hierarchical_fallback_join``."""
+    from collections import Counter
+
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators import hierarchy
+
+    facts_rows, zone_rows = case
+    facts = spark.createDataFrame(
+        [(i % 3, p) for i, p in enumerate(facts_rows)], "k INT, loc STRING"
+    )
+    zones = spark.createDataFrame(zone_rows, "zone STRING, z INT")
+    ref = hierarchy.hierarchical_fallback_join(facts, zones, "loc", "zone")
+    got = hierarchy.fallback_join_exploded(facts, zones, "loc", "zone")
+    assert got.columns == ref.columns
+    assert Counter(map(tuple, got.collect())) == Counter(map(tuple, ref.collect()))

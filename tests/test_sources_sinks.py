@@ -3,6 +3,7 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
+import uuid
 
 from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.sinks import notify, writers
 from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.sinks.rest_sink import (
@@ -181,6 +182,49 @@ def test_post_success_gated_audit(spark, tmp_path):
                           batch_size=2)
     # R6: no audit write when any batch ultimately failed
     assert not res.report.ok and wrote == []
+
+
+def test_audit_holds_exactly_the_posted_rows(spark, tmp_path):
+    """R6: the audit is written from the rows that were POSTed, not from
+    a second evaluation of the input.  The transport appends a row to
+    the source table (rewriting its one parquet file) during the POST;
+    the appended row must not reach the audit."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.sinks.rest_sink import (
+        post_then_audit_distributed,
+    )
+
+    def write_source(path, values):
+        pq.write_table(pa.table({"v": pa.array(values, pa.int32())}), path)
+
+    for form in ("driver", "distributed"):
+        src_dir = tmp_path / form / "src"
+        posts = tmp_path / form / "posts"
+        src_dir.mkdir(parents=True)
+        posts.mkdir()
+        src, posts_dir = str(src_dir / "part-0.parquet"), str(posts)
+        audit_path = str(tmp_path / form / "audit")
+        write_source(src, [1, 2, 3])
+
+        # the distributed form calls it in Python workers: evidence goes to disk
+        def transport(url, body):
+            write_source(src, [1, 2, 3, 99])
+            with open(os.path.join(posts_dir, uuid.uuid4().hex), "w") as f:
+                f.write(body)
+            return 200, "ok"
+
+        df = spark.read.parquet(str(src_dir))
+        write_audit = lambda d: d.write.parquet(audit_path)  # noqa: E731
+        if form == "driver":
+            assert post_then_audit(df, "http://x", transport, write_audit).ok
+        else:
+            post_then_audit_distributed(df, "http://x", transport, write_audit)
+        posted = sorted(r["v"] for p in posts.iterdir() for r in json.loads(p.read_text()))
+        audited = sorted(r["v"] for r in spark.read.parquet(audit_path).collect())
+        assert posted == [1, 2, 3], form
+        assert audited == posted, form
 
 
 def test_excel_magic_bytes_never_misparse_as_csv(spark):
