@@ -9,10 +9,15 @@ ONE DataFrame with an explicit schema and the walk is explode +
 getField — fully distributed, no Python in the loop, linear not
 driver-bound.  This is the 'highly normalized schema' ingest of
 README.md:2 done in-plane.
+
+The fetched documents are already on the driver, so their frame is a
+JVM-local relation built from an Arrow table: scans of it start no
+Python worker.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -57,11 +62,18 @@ def json_documents_df(
 ) -> DataFrame:
     """S4 with a declared schema: one row per JSON document string.
 
-    Replaces ``spark.read.json(sc.parallelize([response.text]))``
-    (code/ukg_open_census_old.py:96) — from_json with an explicit
-    schema is deterministic and skips the inference scan.
+    The reference infers a schema with
+    ``spark.read.json(sc.parallelize([response.text]))``
+    (code/ukg_open_census_old.py:96); from_json with an explicit
+    schema is deterministic and skips the inference scan.  The strings
+    go to the JVM once as an Arrow table and the frame is a
+    ``LocalRelation``, so no Python worker runs on any scan (a list of
+    tuples would plan a Python-backed RDD, one worker task per
+    partition per scan).
     """
-    df = spark.createDataFrame([(d,) for d in documents], "raw STRING")
+    df = spark.createDataFrame(
+        pa.table({"raw": pa.array(documents, pa.string())}), "raw STRING"
+    )
     return df.select(F.from_json(F.col("raw"), schema).alias("doc"))
 
 

@@ -138,6 +138,70 @@ def test_census_post_and_audit_evaluate_the_labeled_plan_once(spark, tmp_path):
     assert posted <= alone + 3, (posted, alone)
 
 
+def test_repeated_increment_compiles_no_new_code(spark, tmp_path):
+    """The generated-code cache holds an ETL increment's working set
+    across a relational query pass: the same increment again (same run
+    id, clock and inputs, fresh output directories) finds its classes
+    still compiled.  With Spark's default of 100 entries the query pass
+    evicts them and the increment recompiles them all.
+
+    AQE numbers whole-stage classes in stage-completion order, so a
+    rerun of one plan may name a few classes anew; the bound allows
+    for that."""
+    import json
+
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.plans import workload
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.queries import QUERIES
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.scope import Scope
+
+    from conftest import SF_DIR
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "RWBFILE_230412150000.csv").write_text(
+        "pat_enc_csn_id,pat_mrn_id,encntr_dept_id,arrival_dttm,admsn_dttm,"
+        "dschrg_dttm,bed_reqst_to_bed_asgnd\n"
+        "101,m1,10,2023-04-12 14:00:00,2023-04-12 14:30:00,,12\n"
+        "102,m2,12,2023-04-12 13:00:00,,,\n"
+    )
+    doc = json.dumps({"data": {"children": [{
+        "key": {"SCHEDULE_COVERAGE_SCHEDULED_COUNT": "12",
+                "SCHEDULE_WORKLOAD_PLANNED_COUNT": "10"},
+        "coreEntityKey": {"ORG": {"id": "7", "qualifier": "org/e/ny/cc1/u1/d1"},
+                          "DAY": {"id": "2023-04-12"},
+                          "SCH_ZONE": {"id": "3", "qualifier": "Days"}},
+        "attributes": [{"key": "SCH_WORKLOAD_PLANNED_COUNT_DATE",
+                        "value": "4/12/2023"}],
+    }]}})
+    run_id = writers.make_run_id(NOW)
+
+    def increment(out):
+        census.ingest_census(spark, str(landing), str(out / "bronze"), run_id, now=NOW)
+        workload.ingest_workload(
+            spark, "http://ukg/api", lambda url, body: (200, doc),
+            ["org/e/ny/cc1/u1/d1"], "2023-04-12", "2023-04-12",
+            str(out / "master"), str(out / "child"), run_id, now=NOW,
+        )
+        run = census.run_census_pipeline(
+            spark, spark.read.parquet(str(out / "bronze")), _mapping(spark),
+            _zones(spark), posted=None, post_url="http://ukg/api",
+            transport=lambda url, body: (201, "created"),
+            audit_path=str(out / "audit"), run_id=run_id, now=NOW,
+        )
+        assert run.post_result is not None and run.post_result.ok
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    increment(tmp_path / "first")
+    for name in ("flagship_census_count", "pricing_summary", "anti_join",
+                 "sessionize", "exact_dedup"):
+        with Scope():
+            QUERIES[name](spark, SF_DIR).collect()
+    before = compiles.getCount()
+    increment(tmp_path / "second")
+    added = compiles.getCount() - before
+    assert added <= 8, added
+
+
 def test_compact_reduces_files(spark, tmp_path):
     path = str(tmp_path / "tbl")
     for i in range(5):

@@ -128,6 +128,79 @@ def test_json_zones_normalization(spark):
     assert {r["zone_name"] for r in zones.collect()} == {"Days", "Nights"}
 
 
+def test_json_documents_frame_is_jvm_local(spark):
+    """The documents reach the JVM once: the frame's only leaf is a
+    LocalRelation, never a Python-backed LogicalRDD."""
+    doc_df = json_source.json_documents_df(spark, ["{}", "[]"], json_source.WORKLOAD_SCHEMA)
+    leaves = doc_df._jdf.queryExecution().analyzed().collectLeaves()
+    names = [leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())]
+    assert names == ["LocalRelation"]
+
+
+def _workload_doc(i, qualifier):
+    return json.dumps({"data": {"children": [{
+        "key": {"SCHEDULE_COVERAGE_SCHEDULED_COUNT": str(i),
+                "SCHEDULE_WORKLOAD_PLANNED_COUNT": str(i + 1)},
+        "coreEntityKey": {"ORG": {"id": str(1000 + i), "qualifier": qualifier},
+                          "DAY": {"id": "2023-04-12"},
+                          "SCH_ZONE": {"id": "3", "qualifier": "Días"}},
+        "attributes": [{"key": "SCH_WORKLOAD_PLANNED_COUNT_JOB", "value": "RN"},
+                       {"key": "SCH_WORKLOAD_PLANNED_COUNT_DATE", "value": "4/12/2023"}],
+    }]}}, ensure_ascii=False)
+
+
+def _staffing_doc(i, name):
+    item = {"item": {"id": 1, "qualifier": "RN"},
+            "scheduleZone": {"id": 3, "qualifier": "Días"},
+            "column": {"id": 9, "qualifier": "C"},
+            "columnNumber": 1, "staffingCount": i}
+    ranges = [{"lowRange": 0.0, "highRange": 5.5, "staffingMatrixItems": [item]}]
+    return json.dumps([{"id": i, "name": name, "description": "d",
+                        "staffingMatrixRanges": ranges}], ensure_ascii=False)
+
+
+def test_json_documents_normalize_as_the_list_built_frame(spark):
+    """Normalizing the Arrow-built frame gives the rows a frame built
+    from a list of tuples gave: empty input, non-ASCII text, malformed
+    documents (a NULL struct) and more documents than partitions."""
+    from pyspark.sql import functions as F
+
+    def list_built(docs, schema):
+        df = spark.createDataFrame([(d,) for d in docs], "raw STRING")
+        return df.select(F.from_json(F.col("raw"), schema).alias("doc"))
+
+    def rows(df):
+        return sorted(df.collect(), key=repr)
+
+    many = spark.sparkContext.defaultParallelism + 3
+    cases = {
+        "empty": ([], []),
+        "non_ascii": ([_workload_doc(1, "Org/Zürich/病院")],
+                      [_staffing_doc(1, "Unidad de cuidados intensivos ñ")]),
+        "malformed": (["{not json", _workload_doc(2, "Org/a")],
+                      ["[{", _staffing_doc(2, "ICU")]),
+        "many": ([_workload_doc(i, f"Org/{i}") for i in range(many)],
+                 [_staffing_doc(i, f"M{i}") for i in range(many)]),
+    }
+    for case, (workload_docs, staffing_docs) in cases.items():
+        for docs, schema, normalize in (
+            (workload_docs, json_source.WORKLOAD_SCHEMA, json_source.normalize_workload),
+            (staffing_docs, json_source.STAFFING_SCHEMA, json_source.normalize_staffing),
+        ):
+            got = json_source.json_documents_df(spark, docs, schema)
+            want = list_built(docs, schema)
+            assert got.schema == want.schema, case
+            assert rows(got) == rows(want), case
+            for g, w in zip(normalize(got), normalize(want)):
+                assert rows(g) == rows(w), case
+    bad = json_source.json_documents_df(spark, ["[{"], json_source.STAFFING_SCHEMA)
+    assert bad.first()["doc"] is None
+    many_master, _ = json_source.normalize_workload(
+        json_source.json_documents_df(spark, cases["many"][0], json_source.WORKLOAD_SCHEMA)
+    )
+    assert many_master.count() == many
+
+
 def test_cleanser_bare_newlines_and_quotes(tmp_path):
     raw = 'h1,h2\r\nval1,"with,comma"\r\nbroken\nline,x\r\n'.encode()
     src = tmp_path / "in.csv"

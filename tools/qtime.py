@@ -7,8 +7,10 @@ Usage:
 
 Per query: builds the DataFrame, runs one warm-up materialization, then
 ``reps`` timed materializations (same ``sum(xxhash64(*))`` action as
-bench.py so numbers are comparable), prints min/median/max.  With
-``--plan`` also writes ``OUTDIR/<name>_<suffix>.txt`` containing
+bench.py so numbers are comparable), prints min/median/max and the
+Janino compiles of each timed rep (the ``CodegenMetrics`` compile-count
+delta; a warm rep whose classes all sit in the codegen cache reads 0).
+With ``--plan`` also writes ``OUTDIR/<name>_<suffix>.txt`` containing
 ``explain('formatted')``.
 """
 
@@ -46,6 +48,7 @@ def main() -> None:
 
     spark = get_spark("qtime")
     spark.sparkContext.setLogLevel("ERROR")
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     load_table(spark, args.sf, "lineitem").count()  # warm FS + JVM
 
     def materialize(df) -> int:
@@ -75,13 +78,15 @@ def main() -> None:
             t0 = time.time()
             n = materialize(df)
             cold = time.time() - t0
-        runs = []
+        runs, compiled = [], []
         for _ in range(args.reps):
             t0 = time.time()
+            c0 = compiles.getCount()
             with Scope():
                 df = fn(spark, args.sf)
                 n = materialize(df)
                 runs.append(time.time() - t0)
+            compiled.append(compiles.getCount() - c0)
         if args.plan and args.final:
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
@@ -96,7 +101,7 @@ def main() -> None:
             f"{name}: median {statistics.median(runs):.3f}s "
             f"min {runs[0]:.3f} max {runs[-1]:.3f} "
             f"(cold {cold:.2f}s, {n} rows, reps {args.reps}, "
-            f"load {os.getloadavg()[0]:.1f})",
+            f"compiles {compiled}, load {os.getloadavg()[0]:.1f})",
             flush=True,
         )
 
