@@ -30,7 +30,7 @@ from ..operators import (
     windows,
 )
 from ..scope import persist
-from ..sources.registry import load_table, rebalance, register_temp_views
+from ..sources.registry import load_table, rebalance
 from .catalog import register
 
 # ---------------------------------------------------------------------------
@@ -67,107 +67,52 @@ GROUP BY f.c_nationkey, f.o_orderdate
 """
 
 
-_FLAGSHIP_FACT_SQL = """
-SELECT DISTINCT o.o_orderkey, o.o_custkey, o.o_orderpriority, o.o_orderdate,
-                d.c_nationkey
-FROM orders o
-INNER JOIN (
-    SELECT DISTINCT c_custkey, c_mktsegment, c_nationkey
-    FROM customer
-    WHERE upper(c_mktsegment) = 'BUILDING'
-      AND c_nationkey <= (SELECT max(n_nationkey) FROM nation WHERE n_regionkey <= 1)
-) d ON CAST(o.o_custkey AS INT) = CAST(d.c_custkey AS INT)
-WHERE o.o_orderdate > (SELECT max(l_shipdate) FROM lineitem
-                       WHERE l_shipdate < TIMESTAMP '1998-01-01')
+# One scan of each table: the fact is grouped by (nation, date, priority
+# digit) below the max-priority filter, so the max is taken over that
+# small aggregate instead of over a second evaluation of the fact.
+# Within the max digit each (nation, date) has exactly one row, so its
+# ``n`` is the census count.  A NULL priority never equals the max (the
+# original's join drops it too), and ``count`` skips NULL order keys in
+# both forms.  ``FLAGSHIP_SQL`` above stays the DuckDB oracle.
+_FLAGSHIP_ONE_SCAN_SQL = """
+WITH fact AS (
+    SELECT DISTINCT o.o_orderkey, o.o_custkey, o.o_orderpriority, o.o_orderdate,
+                    d.c_nationkey
+    FROM {orders} o
+    INNER JOIN (
+        SELECT DISTINCT c_custkey, c_mktsegment, c_nationkey
+        FROM {customer}
+        WHERE upper(c_mktsegment) = 'BUILDING'
+          AND c_nationkey <= (SELECT max(n_nationkey) FROM {nation} WHERE n_regionkey <= 1)
+    ) d ON CAST(o.o_custkey AS INT) = CAST(d.c_custkey AS INT)
+    WHERE o.o_orderdate > (SELECT max(l_shipdate) FROM {lineitem}
+                           WHERE l_shipdate < TIMESTAMP '1998-01-01')
+),
+agg AS (
+    SELECT c_nationkey, o_orderdate,
+           CAST(substr(o_orderpriority, 1, 1) AS BIGINT) AS p,
+           count(o_orderkey) AS n
+    FROM fact
+    GROUP BY c_nationkey, o_orderdate, CAST(substr(o_orderpriority, 1, 1) AS BIGINT)
+)
+SELECT c_nationkey, o_orderdate AS run_tsp, n AS census_cnt
+FROM (SELECT *, max(p) OVER () AS max_p FROM agg)
+WHERE p = max_p
 """
-
-_FLAGSHIP_FINAL_SQL = """
-SELECT f.c_nationkey, f.o_orderdate AS run_tsp, count(f.o_orderkey) AS census_cnt
-FROM __census_fact f
-JOIN (SELECT max(CAST(substr(o_orderpriority, 1, 1) AS BIGINT)) AS max_pri
-      FROM __census_fact) ltst
-  ON CAST(substr(f.o_orderpriority, 1, 1) AS BIGINT) = ltst.max_pri
-GROUP BY f.c_nationkey, f.o_orderdate
-"""
-
-
-# Previous invocation's cached fact, keyed PER SparkSession.  A
-# module-global slot here would make two concurrent sessions in one
-# process unpersist each other's cache.  The VALUE is the JVM
-# DataFrame handle, not the Python DataFrame: a PySpark DataFrame
-# strongly references its session (df._session), so storing it in a
-# WeakKeyDictionary keyed by that session would create a value->key
-# cycle pinning every entry.  Caveat, measured: PySpark 4.1 pins every
-# SparkSession internally (a bare newSession() is never collected even
-# after del + gc.collect()), so the weak machinery and the
-# per-generation finalize below are best-effort backstops — a process
-# that churns sessions must call release_flagship_cache(session)
-# explicitly, or the JVM-side cached fact lives until the SparkContext
-# stops.
-import weakref
-
-# session -> one-element mutable holder [current jdf or None].  The
-# session's SINGLE finalizer closes over the holder, not any jdf, so
-# re-caching re-points the holder instead of stacking a new finalizer
-# (and a strong jdf reference) per flagship call — a long-lived
-# session that re-runs the flagship keeps exactly one finalizer and
-# only the CURRENT generation's JVM handle alive.
-_flagship_fact_cache: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
-def _unpersist_jdf(jdf) -> None:
-    try:
-        jdf.unpersist(False)
-    except Exception:
-        pass  # e.g. its SparkContext is already stopped
-
-
-def _unpersist_holder(holder: list) -> None:
-    jdf, holder[0] = holder[0], None
-    if jdf is not None:
-        _unpersist_jdf(jdf)
-
-
-def release_flagship_cache(spark: SparkSession) -> bool:
-    """Free the cached census fact held for ``spark``.  Call when a
-    session is done with flagship queries (long-lived multi-session
-    processes especially — PySpark pins session objects, so GC alone
-    never reclaims the JVM-side cache).  Idempotent; returns True if
-    an entry was released.  The holder stays registered (its finalizer
-    is already armed on the session) — it is simply emptied, so a
-    later flagship call re-fills it without arming a second
-    finalizer."""
-    holder = _flagship_fact_cache.get(spark)
-    if holder is None or holder[0] is None:
-        return False
-    _unpersist_holder(holder)
-    return True
 
 
 def q_flagship_census_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The fact CTE feeds both the max-priority scalar and the final
-    join; Spark SQL re-computes CTE subtrees, which at 100 TB means a
-    second full scan+join.  Cache the fact once behind a temp view —
-    the reference lacked exactly this reuse point (SURVEY section 4,
-    'caching absent').  The previous invocation's cached fact is
-    unpersisted before re-caching so repeated calls in one long-lived
-    session don't leak cache entries; the holder is keyed by session
-    so concurrent sessions never cross-unpersist, and a finalizer
-    unpersists the last generation when its session is collected."""
-    register_temp_views(spark, sf_dir, ("customer", "nation", "orders", "lineitem"))
-    holder = _flagship_fact_cache.get(spark)
-    if holder is None:
-        holder = [None]
-        _flagship_fact_cache[spark] = holder
-        # the ONLY finalize registration for this session — later
-        # generations re-point holder[0] rather than re-registering
-        weakref.finalize(spark, _unpersist_holder, holder)
-    elif holder[0] is not None:
-        _unpersist_jdf(holder[0])
-    fact = spark.sql(_FLAGSHIP_FACT_SQL).cache()
-    holder[0] = fact._jdf
-    fact.createOrReplaceTempView("__census_fact")
-    return spark.sql(_FLAGSHIP_FINAL_SQL)
+    """Census count per (nation, date) at the top priority digit, in one
+    scan: a partial aggregation pushed below the max-priority filter
+    (the VLDB 2021 Synapse optimizer paper's pre-aggregation).  Nothing
+    is cached and no named view is registered; the four tables reach
+    the SQL as ``spark.sql`` keyword frames, whose generated views
+    PySpark drops once the query is analysed."""
+    tables = ("customer", "nation", "orders", "lineitem")
+    return spark.sql(
+        _FLAGSHIP_ONE_SCAN_SQL,
+        **{t: load_table(spark, sf_dir, t) for t in tables},
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -82,12 +82,13 @@ def export_latest_snapshot(
     spark: SparkSession, table_path: str, out_path: str, version_col: str = "run_id"
 ) -> None:
     """K4 (code/ukg_delta_to_parquet.py:9-13): overwrite-export rows of
-    the max run_id.  The max is a scalar subquery — no driver value."""
-    df = spark.read.parquet(table_path)
-    df.createOrReplaceTempView("__export_src")
+    the max run_id.  The max is a scalar subquery — no driver value.
+    The source reaches the SQL as a ``spark.sql`` keyword frame, so no
+    named view is left in the session."""
     spark.sql(
-        f"SELECT * FROM __export_src WHERE {version_col} = "
-        f"(SELECT max({version_col}) FROM __export_src)"
+        f"SELECT * FROM {{src}} WHERE {version_col} = "
+        f"(SELECT max({version_col}) FROM {{src}})",
+        src=spark.read.parquet(table_path),
     ).write.mode("overwrite").parquet(out_path)
 
 

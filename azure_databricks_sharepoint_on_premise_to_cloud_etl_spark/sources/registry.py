@@ -5,6 +5,20 @@ Replaces the reference's metastore table scans (S3:
 code/ukg_open_census.py:55) with a thin parquet-directory registry.
 Tables load lazily; filters/projections push down to the parquet scan
 (Catalyst handles PushedFilters / ReadSchema — verified in tests).
+
+Each path's schema is inferred once.  Inference reads parquet footers
+in a Spark job (~90 ms per call on a 4-vCPU host, the largest fixed
+cost of a ``load_table`` call), so the inferred ``StructType`` is
+memoised per path, stamped with ``os.stat(path)``'s
+``(st_mtime_ns, st_size)``.  A path rewritten in place (a new file, or
+files added to or removed from a directory) gets a new stamp and is
+inferred again; one entry is kept per path, so the memo is bounded by
+the number of paths read.  Only inference is skipped: Spark still lists
+the path's files on every call, so a file appended to a directory
+dataset is read by the next call.  The memo holds schemas, not
+DataFrames or session state.  The stamp cannot tell apart two rewrites
+that leave the size equal within one filesystem timestamp tick, nor a
+file inside a directory edited in place; parquet writers do neither.
 """
 
 from __future__ import annotations
@@ -12,19 +26,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-
-TPCH_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+from pyspark.sql.types import StructType
 
 
 def pin_read_confs(spark: SparkSession) -> None:
@@ -45,15 +47,37 @@ def pin_read_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+# path -> ((st_mtime_ns, st_size), inferred schema).  Two threads may
+# both miss and infer one path; they store equal schemas, so no lock.
+_SCHEMAS: dict[str, tuple[tuple[int, int], StructType]] = {}
+
+
+def _parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark infers for ``path``, inferred once per stamp.
+    Inference runs under the confs :func:`pin_read_confs` pins, so a
+    TIMESTAMP(NANOS) column is memoised as ``bigint``."""
+    st = os.stat(path)
+    stamp = (st.st_mtime_ns, st.st_size)
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    _SCHEMAS[path] = (stamp, schema)
+    return schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one table (S3 analog). Lazy; no action triggered.
 
-    Pins the read confs (:func:`pin_read_confs`); the events table's
-    nanos column is converted to a microsecond TimestampType (floor
-    division — matches DuckDB's ns->us truncation).
+    Pins the read confs (:func:`pin_read_confs`) and reads with the
+    path's memoised schema (module docstring), so a repeated call runs
+    no footer-inference job but still lists the files.  The events
+    table's nanos column is converted to a microsecond TimestampType
+    (floor division — matches DuckDB's ns->us truncation).
     """
     pin_read_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(_parquet_schema(spark, path)).parquet(path)
     if name == "events":
         df = decode_event_ts(df)
     return df
@@ -97,13 +121,3 @@ def rebalance(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
         return df.repartition(target)
     return df
 
-
-def register_temp_views(
-    spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TPCH_TABLES
-) -> None:
-    """Register tables as temp views so ``spark.sql`` queries can
-    reference them by bare name (mirrors the reference's metastore
-    usage, e.g. code/ukg_open_census.py:334-349).  Pass the subset a
-    query actually touches — registration reads parquet footers."""
-    for name in tables:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -654,8 +654,8 @@ def main() -> None:
         except Exception as e:  # one broken query must not zero the record
             errors[name] = str(e).split("\n")[0][:200]
             print(f"# {name}: FAILED {errors[name]}", file=sys.stderr)
-        # queries may cache intermediates (flagship fact, hierarchy
-        # facts); drop them so storage doesn't accumulate across the suite
+        # queries may cache intermediates (hierarchy facts); drop them
+        # so storage doesn't accumulate across the suite
         spark.catalog.clearCache()
 
     m = re.search(r"sf([0-9.]+)", sf_dir)

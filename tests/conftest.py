@@ -42,6 +42,23 @@ def oracle_db():
         con.close()
 
 
+def count_jobs(spark, fn) -> int:
+    """Run ``fn()`` and return how many Spark jobs it started: its jobs
+    carry a fresh job group, counted by the status tracker once the
+    listener bus has delivered their events."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def assert_oracle_parity(spark, con, fn, oracle: str, sf_dir: str) -> None:
     """Run ``fn`` on Spark and ``oracle`` on ``con``; fail with
     tools/verify_local.parity_problems' findings, the driver's gate."""

@@ -38,6 +38,11 @@ def _census(spark):
     )
 
 
+# perfbench's relational_mix workload: one query per operator family
+RELATIONAL_MIX = ("flagship_census_count", "pricing_summary", "anti_join",
+                  "sessionize", "exact_dedup")
+
+
 def _zones(spark):
     return spark.createDataFrame(
         [
@@ -108,17 +113,7 @@ def test_census_post_and_audit_evaluate_the_labeled_plan_once(spark, tmp_path):
     """POST + audit cost one evaluation of the labeled plan plus a
     read of its materialisation each: at most three jobs beyond
     collecting the labeled frame alone."""
-    sc = spark.sparkContext
-
-    def jobs(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        # job events reach the status tracker through the listener bus
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+    from conftest import count_jobs
 
     def run(**post):
         return census.run_census_pipeline(
@@ -126,12 +121,12 @@ def test_census_post_and_audit_evaluate_the_labeled_plan_once(spark, tmp_path):
             run_id=writers.make_run_id(NOW), now=NOW, **post,
         )
 
-    alone = jobs(
-        "census-labeled-alone",
+    alone = count_jobs(
+        spark,
         lambda: run(post_url=None, transport=None, audit_path=None).labeled.collect(),
     )
-    posted = jobs(
-        "census-post-and-audit",
+    posted = count_jobs(
+        spark,
         lambda: run(post_url="http://ukg/api", transport=lambda u, b: (201, "created"),
                     audit_path=str(tmp_path / "audit")),
     )
@@ -192,14 +187,35 @@ def test_repeated_increment_compiles_no_new_code(spark, tmp_path):
 
     compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     increment(tmp_path / "first")
-    for name in ("flagship_census_count", "pricing_summary", "anti_join",
-                 "sessionize", "exact_dedup"):
+    for name in RELATIONAL_MIX:
         with Scope():
             QUERIES[name](spark, SF_DIR).collect()
     before = compiles.getCount()
     increment(tmp_path / "second")
     added = compiles.getCount() - before
     assert added <= 8, added
+
+
+def test_relational_pass_job_count(spark):
+    """A warm pass of the five relational-mix queries at sf0.001 starts
+    exactly this many Spark jobs.  The count is a property of the plans
+    (subqueries, broadcasts, AQE stages, schema inference), not of the
+    host, so any change to it is a plan change to explain.
+
+    Before the flagship ran in one scan and ``load_table`` memoised
+    schemas, a pass started 33 jobs."""
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.queries import QUERIES
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.scope import Scope
+
+    from conftest import SF_DIR, count_jobs
+
+    def relational_pass():
+        for name in RELATIONAL_MIX:
+            with Scope():
+                QUERIES[name](spark, SF_DIR).collect()
+
+    relational_pass()  # warm-up: schemas memoised, plans compiled
+    assert count_jobs(spark, relational_pass) == 21
 
 
 def test_compact_reduces_files(spark, tmp_path):

@@ -177,8 +177,9 @@ def test_scope_tracks_every_leg_under_thread_churn(spark):
 def test_package_never_writes_session_state():
     """Only session.py builds session config, and only
     ``sources.registry.pin_read_confs`` pins read confs at runtime: no
-    operator may flip a session conf or swap the checkpoint dir under
-    concurrent work sharing the session."""
+    operator may flip a session conf, swap the checkpoint dir or name a
+    temp view under concurrent work sharing the session (SQL text takes
+    its frames as ``spark.sql`` keyword arguments instead)."""
     allowed = {
         os.path.join("sources", "registry.py"): "def pin_read_confs",
     }
@@ -192,7 +193,11 @@ def test_package_never_writes_session_state():
             if rel == "session.py":
                 continue
             src = open(path).read()
-            for m in re.finditer(r"conf\.set\(|setCheckpointDir\(", src):
+            for m in re.finditer(
+                r"conf\.set\(|setCheckpointDir\("
+                r"|createOrReplaceTempView\(|createTempView\(|createGlobalTempView\(",
+                src,
+            ):
                 owner = src.rfind("\ndef ", 0, m.start())
                 fn = src[owner + 1 : src.find("(", owner)] if owner >= 0 else ""
                 if allowed.get(rel) != fn:

@@ -471,3 +471,64 @@ def test_schema_evolution_merge_on_read(spark, tmp_path):
     assert {"a", "b"} <= set(merged.columns)
     rows = {r["a"]: r["b"] for r in merged.collect()}
     assert rows == {1: None, 2: "x"}
+
+
+def test_load_table_infers_each_schema_once(spark, tmp_path):
+    """A second ``load_table`` of an unchanged path reads with the
+    memoised schema and starts no Spark job (inference is one job per
+    call otherwise)."""
+    from conftest import count_jobs
+
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.sources.registry import (
+        load_table,
+    )
+
+    spark.range(5).write.parquet(str(tmp_path / "t.parquet"))
+    first = load_table(spark, str(tmp_path), "t")
+    assert count_jobs(spark, lambda: load_table(spark, str(tmp_path), "t")) == 0
+    assert load_table(spark, str(tmp_path), "t").schema == first.schema
+
+
+def test_load_table_sees_appended_and_rewritten_paths(spark, tmp_path):
+    """Listing still runs on every call: a file appended to a directory
+    dataset between two calls is read, and a path rewritten with other
+    columns is read with its new schema."""
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.sources.registry import (
+        load_table,
+    )
+
+    path = str(tmp_path / "t.parquet")
+    spark.range(3).write.parquet(path)
+    assert load_table(spark, str(tmp_path), "t").count() == 3
+    spark.range(10, 14).write.mode("append").parquet(path)
+    assert sorted(r["id"] for r in load_table(spark, str(tmp_path), "t").collect()) == [
+        0, 1, 2, 10, 11, 12, 13,
+    ]
+    spark.createDataFrame([("a", 1.5)], "k STRING, v DOUBLE").write.mode(
+        "overwrite"
+    ).parquet(path)
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.dtypes == [("k", "string"), ("v", "double")]
+    assert [tuple(r) for r in df.collect()] == [("a", 1.5)]
+
+
+def test_load_table_events_decode_on_memoised_schema(spark, tmp_path):
+    """An events table stored as parquet TIMESTAMP(NANOS) is memoised
+    as ``bigint`` and still decodes to ``timestamp`` (ns floored to
+    us) on a repeated call."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.sources import registry
+
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(
+        pa.table({"ts": pa.array([1_681_313_400_000_001_999], pa.timestamp("ns"))}), path
+    )
+    first = registry.load_table(spark, str(tmp_path), "events")
+    assert registry._SCHEMAS[path][1]["ts"].dataType.simpleString() == "bigint"
+    again = registry.load_table(spark, str(tmp_path), "events")
+    assert dict(first.dtypes)["ts"] == dict(again.dtypes)["ts"] == "timestamp"
+    want = dt.datetime(2023, 4, 12, 15, 30, 0, 1, tzinfo=dt.timezone.utc)
+    got = again.selectExpr("unix_micros(ts) AS us").collect()[0]["us"]
+    assert got == int(want.timestamp()) * 1_000_000 + 1
