@@ -10,13 +10,16 @@ Each path's schema is inferred once.  Inference reads parquet footers
 in a Spark job (~90 ms per call on a 4-vCPU host, the largest fixed
 cost of a ``load_table`` call), so the inferred ``StructType`` is
 memoised per path, stamped with ``os.stat(path)``'s
-``(st_mtime_ns, st_size)``.  A path rewritten in place (a new file, or
-files added to or removed from a directory) gets a new stamp and is
-inferred again; one entry is kept per path, so the memo is bounded by
-the number of paths read.  Only inference is skipped: Spark still lists
-the path's files on every call, so a file appended to a directory
-dataset is read by the next call.  The memo holds schemas, not
-DataFrames or session state.  The stamp cannot tell apart two rewrites
+``(st_mtime_ns, st_size)`` and with the calling session's values of the
+confs that change what inference returns (``_INFERENCE_CONFS``; the
+read confs :func:`pin_read_confs` sets are equal in every session).  A
+path rewritten in place (a new file, or files added to or removed from
+a directory), or read from a session with other inference confs, gets
+a new stamp and is inferred again; one entry is kept per path, so the
+memo is bounded by the number of paths read.  Only inference is
+skipped: Spark still lists the path's files on every call, so a file
+appended to a directory dataset is read by the next call.  The memo
+holds schemas, not DataFrames.  The stamp cannot tell apart two rewrites
 that leave the size equal within one filesystem timestamp tick, nor a
 file inside a directory edited in place; parquet writers do neither.
 """
@@ -47,9 +50,19 @@ def pin_read_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
-# path -> ((st_mtime_ns, st_size), inferred schema).  Two threads may
-# both miss and infer one path; they store equal schemas, so no lock.
-_SCHEMAS: dict[str, tuple[tuple[int, int], StructType]] = {}
+# Session confs that change the schema parquet inference returns.
+_INFERENCE_CONFS = (
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# path -> ((st_mtime_ns, st_size, *conf values), inferred schema).  Two
+# threads may both miss and infer one path; they store equal schemas,
+# so no lock.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
 
 
 def _parquet_schema(spark: SparkSession, path: str) -> StructType:
@@ -57,7 +70,8 @@ def _parquet_schema(spark: SparkSession, path: str) -> StructType:
     Inference runs under the confs :func:`pin_read_confs` pins, so a
     TIMESTAMP(NANOS) column is memoised as ``bigint``."""
     st = os.stat(path)
-    stamp = (st.st_mtime_ns, st.st_size)
+    confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+    stamp = (st.st_mtime_ns, st.st_size, *confs)
     hit = _SCHEMAS.get(path)
     if hit is not None and hit[0] == stamp:
         return hit[1]

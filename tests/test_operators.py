@@ -304,11 +304,10 @@ def test_connected_components_releases_generations(spark):
 
 def test_flagship_leaves_session_state_alone(spark):
     """The flagship neither names a view nor caches: a user's temp view
-    called ``orders`` survives a call unchanged, the call adds no
-    persisted RDD (Spark's cleaner may free earlier tests' blocks
-    meanwhile, so the list can only shrink), and two threads running it
-    on one session over different scale factors each get the
-    single-threaded answer."""
+    called ``orders`` survives a call unchanged, the calls store no RDD
+    and free none they do not own (a sentinel checkpointed here
+    survives them), and two threads running it on one session over
+    different scale factors each get the single-threaded answer."""
     import functools
     import os
     import threading
@@ -318,7 +317,11 @@ def test_flagship_leaves_session_state_alone(spark):
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.queries.core import (
         q_flagship_census_count,
     )
-    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.scope import concurrently
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.scope import (
+        checkpoint,
+        concurrently,
+        release,
+    )
 
     sc = spark.sparkContext
     sfs = (SF_DIR, os.path.join(os.path.dirname(SF_DIR), "sf0.01"))
@@ -326,14 +329,23 @@ def test_flagship_leaves_session_state_alone(spark):
     def run(sf):
         return sorted(map(tuple, q_flagship_census_count(spark, sf).collect()))
 
+    # RDD ids, not the whole list: Spark's cleaner frees earlier tests'
+    # blocks asynchronously, so the list may lose ids this test does
+    # not own while it runs
     def stored():
         return {info.id() for info in sc._jsc.sc().getRDDStorageInfo()}
 
+    before = stored()
+    sentinel = checkpoint(spark.range(5))
+    kept = stored() - before
+    assert kept
+    before = stored()
+
     spark.range(1).createOrReplaceTempView("orders")
     try:
-        before = stored()
         alone = {sf: run(sf) for sf in sfs}
-        assert stored() <= before
+        assert stored() - before == set()
+        assert kept <= stored()
         assert spark.table("orders").columns == ["id"]
         assert [r["id"] for r in spark.table("orders").collect()] == [0]
     finally:
@@ -347,6 +359,9 @@ def test_flagship_leaves_session_state_alone(spark):
 
     legs = [functools.partial(together, sf) for sf in sfs]
     assert concurrently(*legs) == [alone[sf] for sf in sfs]
+    assert stored() - before == set()
+    assert kept <= stored()
+    release(sentinel)
 
 
 def test_scope_bounds_repeated_connected_components(spark):
@@ -448,7 +463,7 @@ def test_connected_components_driver_finish_matches_distributed(spark):
         driver = connected_components(edges, nodes)  # default: driver path
         got_driver = {(r["doc_id"], r["component"]) for r in driver.collect()}
         # the union-find finish holds no checkpoint generation
-        assert stored() <= before
+        assert stored() == before
         dist = connected_components(edges, nodes, driver_finish_edges=0)
         got_dist = {(r["doc_id"], r["component"]) for r in dist.collect()}
         # the distributed result is backed by real state ...

@@ -512,6 +512,29 @@ def test_load_table_sees_appended_and_rewritten_paths(spark, tmp_path):
     assert [tuple(r) for r in df.collect()] == [("a", 1.5)]
 
 
+def test_load_table_reinfers_under_other_inference_confs(spark, tmp_path):
+    """The memo is keyed on the session's inference confs: a second
+    session sharing the SparkContext with ``binaryAsString`` on reads a
+    parquet BINARY column as ``string``, not through the first
+    session's ``binary`` schema, and the first session still reads
+    ``binary``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.sources.registry import (
+        load_table,
+    )
+
+    pq.write_table(pa.table({"b": pa.array([b"x"], pa.binary())}), str(tmp_path / "t.parquet"))
+    assert load_table(spark, str(tmp_path), "t").dtypes == [("b", "binary")]
+    other = spark.newSession()
+    other.conf.set("spark.sql.parquet.binaryAsString", "true")
+    df = load_table(other, str(tmp_path), "t")
+    assert df.dtypes == [("b", "string")]
+    assert [r["b"] for r in df.collect()] == ["x"]
+    assert load_table(spark, str(tmp_path), "t").dtypes == [("b", "binary")]
+
+
 def test_load_table_events_decode_on_memoised_schema(spark, tmp_path):
     """An events table stored as parquet TIMESTAMP(NANOS) is memoised
     as ``bigint`` and still decodes to ``timestamp`` (ns floored to
