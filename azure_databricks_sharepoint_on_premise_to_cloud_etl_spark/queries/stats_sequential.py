@@ -30,9 +30,9 @@ from .stats_rank import (
 
 def _ph_series_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the DAY-grain per-type event-count series as a
-    MICROS-timestamp parquet dir for the file stream (the raw fixture
-    is TIMESTAMP(NANOS), which the pinned ``nanosAsLong`` conf would
-    surface as long and break the declared stream schema)."""
+    parquet dir for the file stream, whose declared schema needs a
+    real timestamp ``t`` (a TIMESTAMP(NANOS) column would surface as
+    long under the pinned ``nanosAsLong`` conf)."""
     import os
     import tempfile
 

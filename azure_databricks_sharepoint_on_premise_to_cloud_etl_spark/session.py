@@ -4,7 +4,8 @@ The reference inherits its session from Databricks (no explicit config
 anywhere in /root/reference).  We pin the handful of settings that
 matter for correctness (session timezone, Arrow) and for scale (AQE,
 skew-join handling, shuffle partitions) so the same code runs on
-local[32] tests and a 1000-executor cluster without edits.
+local-mode tests (``SPARK_GRAFT_CPUS`` cores: 8, or ``nproc``) and a
+1000-executor cluster without edits.
 """
 
 from __future__ import annotations
@@ -17,6 +18,13 @@ from pyspark.sql import SparkSession
 # and production on one code path.
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+# C2 (Tier-4) compile thresholds at 3x the JDK 17 defaults
+# (5000 / 600 / 15000 / 40000); see get_spark.
+JIT_POLICY = (
+    "-XX:Tier4InvocationThreshold=15000 -XX:Tier4MinInvocationThreshold=2000 "
+    "-XX:Tier4CompileThreshold=45000 -XX:Tier4BackEdgeThreshold=120000"
+)
 
 
 def get_spark(app_name: str = "azure-databricks-sharepoint-etl-spark") -> SparkSession:
@@ -38,6 +46,32 @@ def get_spark(app_name: str = "azure-databricks-sharepoint-etl-spark") -> SparkS
       again and a warm increment recompiled 44-54 of them.  At 1000 it
       compiles only the 14 whose bodies inline per-run literals.
       Classes average 2.6 KB of bytecode and 7 KB of source: ~10 MB.
+    - ``JIT_POLICY`` as ``spark.driver.defaultJavaOptions``: C2 compile
+      thresholds at 3x, so planner, Janino and serialization methods
+      that only get lukewarm in a short job stay in C1 code, while hot
+      data-path loops still cross the raised thresholds within
+      milliseconds.  At the defaults the C2 threads took 49.6% of a
+      whole ETL run's CPU (executor tasks 10.7%) and 12.1 of the 18.8
+      CPU-s of one timed increment; at 3x they took 4.7 of 15.7.
+      Spark prepends ``defaultJavaOptions`` to ``extraJavaOptions``, so
+      a caller's ``extraJavaOptions`` still applies; a caller's own
+      ``spark.driver.defaultJavaOptions`` (say a ``--conf`` in
+      ``PYSPARK_SUBMIT_ARGS``) replaces the policy.  Like the codegen
+      cache size it takes effect only when this call starts the JVM.
+      In local mode the driver JVM runs the tasks too; cluster
+      executors keep the JVM defaults (unmeasured).
+      Measured and rejected (4 vCPU):
+      - C1 only (``-XX:TieredStopAtLevel=1``): ETL ``cpu_s`` -42%, but
+        sustained sf0.1 rows 2.3-3.5x slower.
+      - C2 thresholds x10, and ``-XX:CompileThresholdScaling=4``: the
+        slowest ``simhash_near_pairs`` samples (14.1-14.6 s against
+        11.3-13.9 s at the defaults).
+      - ``-XX:Tier4LoadFeedback=1``: no ETL effect (18.7, 20.3 CPU-s
+        against 19.4-22.2 at the defaults).
+      - C2 thresholds x4 with one C2 thread (``-XX:CICompilerCount=2``):
+        ETL ``cpu_s`` 13.8-14.2 against 16.4-19.6 at the defaults, but
+        sf0.1 ``dedup_components`` 5.00 s and ``diverse_retrieval``
+        3.70 s median against 4.40 s and 2.90 s (4 alternating runs).
     """
     builder = (
         SparkSession.builder.appName(app_name)
@@ -48,9 +82,11 @@ def get_spark(app_name: str = "azure-databricks-sharepoint-etl-spark") -> SparkS
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.codegen.cache.maxEntries", "1000")
-        # The driver testdata's events table carries parquet
-        # TIMESTAMP(NANOS) which vanilla Spark rejects; read as long
-        # and convert in the registry (sources/registry.py).
+        .config("spark.driver.defaultJavaOptions", JIT_POLICY)
+        # An events table written with parquet TIMESTAMP(NANOS) (the
+        # driver testdata's is TIMESTAMP(MICROS)) is rejected by vanilla
+        # Spark; read it as long and convert in the registry
+        # (sources/registry.py).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Small local parquet files: don't let tiny splits fan out.
         .config("spark.sql.files.maxPartitionBytes", "128m")

@@ -39,9 +39,10 @@ def pin_read_confs(spark: SparkSession) -> None:
     caller-provided SparkSession, not just sessions from session.py.  This is the package's only runtime conf
     write:
 
-    - ``spark.sql.legacy.parquet.nanosAsLong``: the events table stores
-      parquet TIMESTAMP(NANOS), which vanilla Spark rejects; as a long
-      of nanos it is decoded by :func:`decode_event_ts`;
+    - ``spark.sql.legacy.parquet.nanosAsLong``: an events table written
+      with parquet TIMESTAMP(NANOS) is rejected by vanilla Spark; as a
+      long of nanos it is decoded by :func:`decode_event_ts` (the
+      driver testdata stores TIMESTAMP(MICROS), which passes through);
     - ``spark.sql.session.timeZone=UTC``: a non-UTC session shifts
       every collected timestamp relative to the (timezone-naive)
       DuckDB oracle.
@@ -68,7 +69,8 @@ _SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
 def _parquet_schema(spark: SparkSession, path: str) -> StructType:
     """The schema Spark infers for ``path``, inferred once per stamp.
     Inference runs under the confs :func:`pin_read_confs` pins, so a
-    TIMESTAMP(NANOS) column is memoised as ``bigint``."""
+    TIMESTAMP(NANOS) column, where a file has one, is memoised as
+    ``bigint``."""
     st = os.stat(path)
     confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
     stamp = (st.st_mtime_ns, st.st_size, *confs)
@@ -86,8 +88,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Pins the read confs (:func:`pin_read_confs`) and reads with the
     path's memoised schema (module docstring), so a repeated call runs
     no footer-inference job but still lists the files.  The events
-    table's nanos column is converted to a microsecond TimestampType
-    (floor division — matches DuckDB's ns->us truncation).
+    table's ``ts`` leaves as a microsecond TimestampType
+    (:func:`decode_event_ts`).
     """
     pin_read_confs(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
@@ -99,11 +101,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def decode_event_ts(df: DataFrame) -> DataFrame:
     """Normalize the events ``ts`` column to TimestampType regardless
-    of the fixture's physical parquet type.  Under
-    ``nanosAsLong=true`` a TIMESTAMP(NANOS) column surfaces as a long
-    of nanos (converted here via floor division, matching DuckDB's
-    ns->us truncation); a TIMESTAMP(MICROS) column arrives as a real
-    timestamp and passes through untouched.  Both the batch registry
+    of the fixture's physical parquet type (the driver testdata's is
+    TIMESTAMP(MICROS)).  Under ``nanosAsLong=true`` a TIMESTAMP(NANOS)
+    column surfaces as a long of nanos (converted here via floor
+    division, matching DuckDB's ns->us truncation); a TIMESTAMP(MICROS)
+    column arrives as a real timestamp and passes through untouched.
+    Both the batch registry
     and the streaming queries MUST route through this one conditional
     — a hard-coded decode silently shifts epochs when the fixture's
     dtype changes (the round-4 streaming_tumbling bug)."""

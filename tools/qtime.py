@@ -7,9 +7,12 @@ Usage:
 
 Per query: builds the DataFrame, runs one warm-up materialization, then
 ``reps`` timed materializations (same ``sum(xxhash64(*))`` action as
-bench.py so numbers are comparable), prints min/median/max and the
+bench.py so numbers are comparable), prints min/median/max, the
 Janino compiles of each timed rep (the ``CodegenMetrics`` compile-count
-delta; a warm rep whose classes all sit in the codegen cache reads 0).
+delta; a warm rep whose classes all sit in the codegen cache reads 0)
+and its JIT milliseconds (the delta of the JVM's total compilation
+time, summed over its compiler threads, so it can exceed the rep's
+wall time), which tells a slower rep's compile time from its run time.
 With ``--plan`` also writes ``OUTDIR/<name>_<suffix>.txt`` containing
 ``explain('formatted')``.
 """
@@ -49,6 +52,7 @@ def main() -> None:
     spark = get_spark("qtime")
     spark.sparkContext.setLogLevel("ERROR")
     compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    jit = spark._jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
     load_table(spark, args.sf, "lineitem").count()  # warm FS + JVM
 
     def materialize(df) -> int:
@@ -78,15 +82,16 @@ def main() -> None:
             t0 = time.time()
             n = materialize(df)
             cold = time.time() - t0
-        runs, compiled = [], []
+        runs, compiled, jit_ms = [], [], []
         for _ in range(args.reps):
             t0 = time.time()
-            c0 = compiles.getCount()
+            c0, j0 = compiles.getCount(), jit.getTotalCompilationTime()
             with Scope():
                 df = fn(spark, args.sf)
                 n = materialize(df)
                 runs.append(time.time() - t0)
             compiled.append(compiles.getCount() - c0)
+            jit_ms.append(jit.getTotalCompilationTime() - j0)
         if args.plan and args.final:
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
@@ -101,7 +106,8 @@ def main() -> None:
             f"{name}: median {statistics.median(runs):.3f}s "
             f"min {runs[0]:.3f} max {runs[-1]:.3f} "
             f"(cold {cold:.2f}s, {n} rows, reps {args.reps}, "
-            f"compiles {compiled}, load {os.getloadavg()[0]:.1f})",
+            f"compiles {compiled}, jit_ms {jit_ms}, "
+            f"load {os.getloadavg()[0]:.1f})",
             flush=True,
         )
 
