@@ -233,53 +233,3 @@ def drain_scd2_upsert(
         .start()
     )
     q.awaitTermination()
-
-
-def drain_quality_gated(
-    stream_df: DataFrame,
-    expectations: list[dict],
-    good_path: str,
-    quarantine_path: str,
-    checkpoint_dir: str,
-    audit_path: str | None = None,
-) -> None:
-    """AvailableNow drain with a PER-MICRO-BATCH expectation gate —
-    the streaming twin of ``profiling.expectation_audit``: each batch
-    is audited against the declarative suite; batches that pass every
-    expectation append to ``good_path``, failing batches are routed
-    WHOLE to ``quarantine_path`` (atomic per-batch routing — a batch
-    with one poisoned row is a batch to investigate, not to half-
-    ingest), and the per-expectation audit rows (stamped with the
-    batch id) optionally append to ``audit_path``.
-
-    Routing through foreachBatch keeps checkpoint recovery: a crashed
-    job resumes at the failed batch and re-audits it, so no batch is
-    ever ingested unaudited.  The audit itself is ONE aggregate over
-    the micro-batch (expectation_audit's contract), so the gate adds
-    one pass per batch, not one pass per expectation.
-    """
-    from ..operators.profiling import expectation_audit
-    from pyspark.sql import functions as F
-
-    def gate(batch_df: DataFrame, batch_id: int) -> None:
-        audit = expectation_audit(batch_df, expectations)
-        rows = audit.collect()  # suite-sized (one row per expectation)
-        if audit_path is not None:
-            audit.sparkSession.createDataFrame(
-                rows, audit.schema
-            ).withColumn("batch_id", F.lit(batch_id)).write.mode(
-                "append"
-            ).parquet(audit_path)
-        if all(r["passed"] for r in rows):
-            batch_df.write.mode("append").parquet(good_path)
-        else:
-            batch_df.write.mode("append").parquet(quarantine_path)
-
-    q = (
-        stream_df.writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(gate)
-        .outputMode("append")
-        .start()
-    )
-    q.awaitTermination()

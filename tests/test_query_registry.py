@@ -87,3 +87,17 @@ def test_every_query_function_is_registered():
             and (mod.__name__, name) not in registered
         ]
     assert not missing, f"query functions not in QUERIES or AUX_QUERIES: {missing}"
+
+
+def test_bench_rows_resolve_in_the_registries():
+    """bench.py catches per-row exceptions, so a renamed query would
+    silently drop out of its timed rows and its 42-row basis."""
+    import bench
+
+    rows = bench.BENCH_QUERIES
+    assert len(rows) == len(set(rows)), "a bench row is listed twice"
+    unknown = [n for n in rows if n not in q.QUERIES and n not in q.AUX_QUERIES]
+    assert not unknown, f"bench rows in neither registry: {unknown}"
+    assert bench.COMPARABLE_BASIS <= set(rows)
+    assert len(bench.COMPARABLE_BASIS) == 42
+    assert set(q.QUERIES) - set(rows) == {"ngram_jaccard", "embedding_near_dup"}

@@ -1,8 +1,8 @@
 """The materialisation scope (``scope.py``): every checkpoint and
 persist made inside ``with Scope():`` is freed when the scope exits,
 on success and on failure, including work done on the legs of
-``concurrently``.  Each test measures the SparkContext's persisted-RDD
-count before the scope and requires the same count after it.
+``concurrently``.  Each test counts the persisted RDDs it created
+itself before the scope and requires the same count after it.
 """
 
 from __future__ import annotations
@@ -27,8 +27,22 @@ PKG = os.path.join(
 )
 
 
+_first_rdd_id = 0
+
+
+@pytest.fixture(autouse=True)
+def _count_from_here(spark):
+    """Count only RDDs the running test creates: the GC-driven cleaner
+    may free blocks that earlier tests left behind at any moment."""
+    global _first_rdd_id
+    _first_rdd_id = spark.sparkContext._jsc.sc().newRddId()
+
+
 def _stored(spark) -> int:
-    return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+    return sum(
+        1 for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        if info.id() > _first_rdd_id
+    )
 
 
 def test_scope_frees_checkpoints_and_persists_on_success(spark):

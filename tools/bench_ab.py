@@ -1,19 +1,33 @@
-"""Compare two bench JSON records (same-day code A/B): per-query
-ratios on the common basis, flagged rows beyond 1.25x + spread."""
+"""Compare two bench records (same-day code A/B): per-query ratios on
+the common basis, flagged rows beyond 1.25x + spread.
+
+Usage: python tools/bench_ab.py A B
+
+A and B are each a ``BENCH_SELF.json`` or a saved ``bench.py`` stdout
+(whose first line is the full record).  Rows whose ``[rows, xor_hash]``
+output differs between A and B are listed and left out of every ratio:
+a time is only compared for identical output.
+"""
 import json
 import sys
 
 
 def load(p):
     with open(p) as fh:
-        return json.loads(fh.readline())
+        text = fh.read()
+    try:
+        return json.loads(text)
+    except json.JSONDecodeError:  # bench.py stdout: full record first
+        return json.loads(text.splitlines()[0])
 
 
 def main(a_path, b_path):
     a, b = load(a_path), load(b_path)
     qa, qb = a["queries"], b["queries"]
     sa, sb = a.get("noise_spread_sec", {}), b.get("noise_spread_sec", {})
-    common = sorted(set(qa) & set(qb))
+    oa, ob = a.get("outputs", {}), b.get("outputs", {})
+    differ = sorted(n for n in set(oa) & set(ob) if oa[n] != ob[n])
+    common = sorted(set(qa) & set(qb) - set(differ))
     ratios = []
     flagged = []
     for n in common:
@@ -29,7 +43,12 @@ def main(a_path, b_path):
     ta = sum(qa[n] for n in common)
     tb = sum(qb[n] for n in common)
     print(f"common rows: {len(common)}")
-    print(f"A total {ta:.2f}s (load {a.get('host_loadavg_1m')}), "
+    if not (oa and ob):
+        print("outputs not compared: a record has no per-row outputs")
+    print(f"\noutputs differ ({len(differ)}, left out of the ratios):")
+    for n in differ:
+        print(f"  {n}: {oa[n]} -> {ob[n]}")
+    print(f"\nA total {ta:.2f}s (load {a.get('host_loadavg_1m')}), "
           f"B total {tb:.2f}s (load {b.get('host_loadavg_1m')})")
     print(f"B/A total ratio {tb/ta:.3f}, per-query median {med:.3f}")
     print("\nflagged (B > 1.25*A + spread):")

@@ -40,7 +40,6 @@ import json
 import math
 import os
 import sys
-import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -942,21 +941,12 @@ def main() -> int:
         heavy = [n for n in only if n in set(HEAVY) | set(stages)]
         disjoint = [n for n in only if n in disjoint]
 
-    from pyspark.sql import functions as F
-
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark import queries as q
-    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.scope import Scope
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.session import get_spark
+    from qtime import timed_reps
 
     spark = get_spark("scale-rehearsal")
     spark.sparkContext.setLogLevel("ERROR")
-
-    def materialize(df) -> int:
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64(*[F.col(c) for c in df.columns])).alias("h"),
-        ).collect()[0]
-        return row["n"]
 
     points: list[tuple[int, str]] = [(1, args.base)] if heavy else []
     for f in factors if heavy else []:
@@ -976,13 +966,8 @@ def main() -> int:
         for dname in disjoint:
             name = dname.split("@")[0]
             fn = q.QUERIES.get(name) or q.AUX_QUERIES[name]
-            with Scope():
-                materialize(fn(spark, sf_dir))
-            t0 = time.time()
-            with Scope():
-                rows = materialize(fn(spark, sf_dir))
-                dt = time.time() - t0
-            spark.catalog.clearCache()
+            t = timed_reps(spark, lambda: fn(spark, sf_dir), 1)
+            dt, rows = t.runs[0], t.rows
             results[dname]["times"][factor] = round(dt, 3)
             results[dname]["rows"][factor] = rows
             print(
@@ -993,15 +978,10 @@ def main() -> int:
     for factor, sf_dir in points:
         for name in heavy:
             fn = q.QUERIES.get(name) or q.AUX_QUERIES.get(name) or stages[name]
-            # cold warm-up, then one timed run (these are long; the
-            # signal is the cross-scale RATIO, not the absolute value)
-            with Scope():
-                materialize(fn(spark, sf_dir))
-            t0 = time.time()
-            with Scope():
-                rows = materialize(fn(spark, sf_dir))
-                dt = time.time() - t0
-            spark.catalog.clearCache()
+            # one timed run after the cold one: these are long, and the
+            # signal is the cross-scale RATIO, not the absolute value
+            t = timed_reps(spark, lambda: fn(spark, sf_dir), 1)
+            dt, rows = t.runs[0], t.rows
             results[name]["times"][factor] = round(dt, 3)
             results[name]["rows"][factor] = rows
             print(

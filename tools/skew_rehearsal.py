@@ -38,7 +38,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -125,12 +124,12 @@ def main() -> int:
 
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark import queries as q
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.skew import salted_agg
-    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.scope import Scope
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.sources.registry import (
         load_table,
         rebalance,
     )
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.session import get_spark
+    from qtime import timed_reps
 
     spark = get_spark("skew-rehearsal")
     spark.sparkContext.setLogLevel("ERROR")
@@ -139,35 +138,19 @@ def main() -> int:
     uniform_dir = os.path.join(args.root, f"x{args.factor}")
 
     def timed(fn, reps: int = 2) -> float:
-        """warm-up + best-of-(reps) wall time for a DataFrame builder"""
-        best = None
-        for _ in range(reps + 1):
-            t0 = time.time()
-            with Scope():
-                fn().agg(F.count(F.lit(1))).collect()
-                dt = time.time() - t0
-            spark.catalog.clearCache()
-            if best is None or dt < best:
-                best = dt
-        return round(best, 3)
+        """best of ``reps`` timed runs after a cold one, for a
+        DataFrame builder"""
+        return round(min(timed_reps(spark, fn, reps).runs), 3)
 
-    def timed_pair(fn_a, fn_b, reps: int = 3) -> tuple[float, float]:
+    def timed_pair(fn_a, fn_b, rounds: int = 3) -> tuple[float, float]:
         """Interleaved A/B timing (A,B,A,B,...) with per-side min —
         the pairwise claim survives a noisy shared host that a
         sequential measurement does not."""
-        best_a = best_b = None
-        for _ in range(reps):
-            for which, fn in (("a", fn_a), ("b", fn_b)):
-                t0 = time.time()
-                with Scope():
-                    fn().agg(F.count(F.lit(1))).collect()
-                    dt = time.time() - t0
-                spark.catalog.clearCache()
-                if which == "a":
-                    best_a = dt if best_a is None else min(best_a, dt)
-                else:
-                    best_b = dt if best_b is None else min(best_b, dt)
-        return round(best_a, 3), round(best_b, 3)
+        a, b = [], []
+        for _ in range(rounds):
+            a += timed_reps(spark, fn_a, 1).runs
+            b += timed_reps(spark, fn_b, 1).runs
+        return round(min(a), 3), round(min(b), 3)
 
     results: dict[str, dict] = {}
 
@@ -337,28 +320,13 @@ def main() -> int:
         spark.conf.set(
             "spark.sql.adaptive.advisoryPartitionSizeInBytes", "256KB"
         )
-        # timed() materializes via .agg(count) - Catalyst would PRUNE
-        # the expensive max(h) aggregate and time the bare join; this
-        # leg must collect the 1-row result itself so the reduce-side
-        # work actually runs
-        def timed_collect(fn, reps: int = 2) -> float:
-            best = None
-            for _ in range(reps + 1):
-                t0 = time.time()
-                fn().collect()
-                dt = time.time() - t0
-                spark.catalog.clearCache()
-                if best is None or dt < best:
-                    best = dt
-            return round(best, 3)
-
         spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-        t50_on = timed_collect(hot50_join)
+        t50_on = timed(hot50_join)
         df = hot50_join()
         df.collect()
         saw50 = "skew=true" in df._jdf.queryExecution().executedPlan().toString()
         spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-        t50_off = timed_collect(hot50_join)
+        t50_off = timed(hot50_join)
     finally:
         for k, v in prev.items():
             if v is None:
