@@ -11,7 +11,7 @@ is the right level; the data plane never loops.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable, Sequence
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -39,43 +39,21 @@ def run_batched_with_retry(
     items: Sequence[Any],
     action: Callable[[list[Any]], Any],
     batch_size: int,
-    error_batch_size: int = 1,
 ) -> BatchReport:
     """Apply ``action`` per batch; on failure, re-try that batch's
-    elements in ``error_batch_size`` chunks (the reference's
-    shrink-to-1 policy); persistent failures are recorded and skipped,
-    never raised (R3 skip-and-log)."""
+    elements one at a time (the reference's shrink-to-1 policy);
+    persistent failures are recorded and skipped, never raised (R3
+    skip-and-log)."""
     report = BatchReport()
     for batch in generate_batches(items, batch_size):
         try:
             action(batch)
             report.succeeded.extend(batch)
         except Exception:
-            for retry_batch in generate_batches(batch, error_batch_size):
+            for x in batch:
                 try:
-                    action(retry_batch)
-                    report.succeeded.extend(retry_batch)
+                    action([x])
+                    report.succeeded.append(x)
                 except Exception as e:  # noqa: BLE001 - ledger, not crash
-                    report.failed.extend((x, str(e)) for x in retry_batch)
+                    report.failed.append((x, str(e)))
     return report
-
-
-def foreach_partition_batched(
-    df, action: Callable[[list[dict]], None], batch_size: int = 100
-) -> None:
-    """Scale path for side-effecting sinks (K5 at volume): fan the
-    batched action out per partition instead of collecting to the
-    driver.  ``action`` must be serializable and idempotent (a
-    partition can be retried by Spark)."""
-
-    def run_partition(rows: Iterable) -> None:
-        buf: list[dict] = []
-        for row in rows:
-            buf.append(row.asDict())
-            if len(buf) >= batch_size:
-                action(buf)
-                buf = []
-        if buf:
-            action(buf)
-
-    df.foreachPartition(run_partition)

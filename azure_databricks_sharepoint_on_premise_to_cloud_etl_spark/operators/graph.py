@@ -47,6 +47,10 @@ from pyspark.sql import functions as F
 
 from ..scope import checkpoint, release
 
+# connected_components finishes on the driver (union-find) when the
+# symmetrized edge table has at most this many rows
+DRIVER_FINISH_EDGES = 1_000_000
+
 
 def _strip_inherited_stats(df: DataFrame) -> DataFrame:
     """Rewrap a checkpointed DataFrame so it stops inheriting the
@@ -139,8 +143,6 @@ def connected_components(
     node_col: str = "doc_id",
     max_iterations: int = 25,
     reliable: bool = False,
-    fused_levels: int = 1,
-    driver_finish_edges: int = 1_000_000,
 ) -> DataFrame:
     """Label every node with the minimum node id reachable from it.
 
@@ -153,19 +155,16 @@ def connected_components(
     it means something is genuinely wrong; silent wrong components
     (split dup-clusters) are never returned.
 
-    ``fused_levels`` fuses that many extra pointer-jump + edge-hop
-    compression levels into each round's checkpoint job (broadcast-
-    join cost per level).  Levels trade per-round work for round
-    count; 1 measured best in local mode (3 levels cut rounds 6 → 4
-    at sf0.1 but tripled per-round cost — net loss), more can pay on a
-    cluster where the per-round barrier is expensive relative to
-    broadcast joins.
+    Each round fuses ONE extra pointer-jump + edge-hop level into its
+    checkpoint job (broadcast-join cost).  One level measured best in
+    local mode: three cut rounds 6 → 4 at sf0.1 but tripled the
+    per-round cost, a net loss.
 
-    ``driver_finish_edges`` selects the SMALL-GRAPH regime: the
+    ``DRIVER_FINISH_EDGES`` selects the SMALL-GRAPH regime: the
     symmetrized-distinct edge count rides the edge-table checkpoint
     job as an Observation (free), and when the WHOLE candidate graph
-    is driver-small (≤ threshold symmetrized rows, default 1M ≈
-    500k undirected edges ≈ tens of MB of longs) the components are
+    is driver-small (≤ 1M symmetrized rows ≈ 500k undirected edges ≈
+    tens of MB of longs) the components are
     computed by collecting the edge list and running union-find
     (path compression + union by size) on the driver instead of
     paying ~6 distributed rounds — each a full job barrier (~0.5 s
@@ -177,8 +176,8 @@ def connected_components(
     not throughput-bound.  Graphs above the threshold run the
     distributed delta-frontier loop unchanged — at 100 TB with
     billions of candidate pairs that is the path that executes.
-    Pass ``0`` to force the distributed loop (tests do, to exercise
-    it on small fixtures).
+    Tests set the constant to 0 to exercise that loop on small
+    fixtures.
     """
 
     def snapshot(df: DataFrame) -> tuple[DataFrame, int]:
@@ -222,7 +221,7 @@ def connected_components(
         observe=F.count(F.lit(1)).alias("__n_sym"),
         reliable=reliable,
     )
-    if int(m["__n_sym"] or 0) <= driver_finish_edges:
+    if int(m["__n_sym"] or 0) <= DRIVER_FINISH_EDGES:
         # SMALL-GRAPH regime: the whole candidate graph fits on the
         # driver — finish with union-find instead of distributed rounds
         # (see docstring).  One collect of the materialized checkpoint,
@@ -328,54 +327,41 @@ def connected_components(
                 F.col("component").alias("old"),
                 nc.alias("mid"),
             )
-            # 4+5 (and 6+7, ...): fused in-round pointer jumps + edge
-            #    hops.  Each LEVEL adopts the label of your NEW label
-            #    if that label itself improved at the previous level
-            #    (pointer jump), and lets neighbors of just-improved
-            #    nodes adopt the improvement immediately (edge hop) —
-            #    all fused into the SAME checkpoint job.  The jump map
-            #    at every level is only the just-improved nodes, a
-            #    broadcast; its subtree appears on both sides so the
-            #    planner emits one BroadcastExchange + ReusedExchange
-            #    per level.  Levels trade plan depth (cheap broadcast
-            #    joins) for ROUNDS (each a fixed checkpoint-job floor,
-            #    measured ~0.55 s in local mode regardless of frontier
-            #    size) — 2 levels measured rounds 10 → 6 (r7), 4
-            #    levels 6 → 4 (r8) at sf0.1.
-            cur = mid  # columns: node, old, {prev}=label after level k-1
-            prev = "mid"
-            for lvl in range(2, fused_levels + 2):
-                jn, jc, nb = f"j_n{lvl}", f"j_c{lvl}", f"nbr{lvl}"
-                an = f"a{lvl}"
-                # improved at the PREVIOUS level (vs round start for
-                # level 2 — level-1 improvers were never delivered):
-                base = "old" if lvl == 2 else f"l{lvl - 1}"
-                jmap = cur.filter(F.col(prev) < F.col(base)).select(
-                    F.col("node").alias(jn), F.col(prev).alias(jc)
-                )
-                delta_l = (
-                    sym.join(jmap, sym["b"] == jmap[jn])
-                    .groupBy(F.col("a").alias(an))
-                    .agg(F.min(jc).alias(nb))
-                )
-                stepped = cur.join(
-                    jmap, cur[prev] == jmap[jn], "left"
-                ).join(delta_l, cur["node"] == delta_l[an], "left")
-                nc_l = F.least(
-                    F.col(prev),
-                    F.coalesce(F.col(jc), F.col(prev)),
-                    F.coalesce(F.col(nb), F.col(prev)),
-                )
-                keep = ["node", "old"] + (
-                    [F.col(prev).alias(f"l{lvl}")] if lvl < fused_levels + 1 else []
-                )
-                nxt = f"v{lvl}"
-                cur = stepped.select(*keep, nc_l.alias(nxt))
-                prev = nxt
-            round_plan = cur.select(
+            # 4+5: fused in-round pointer jump + edge hop.  Nodes that
+            #    improved this round form the jump map (a broadcast):
+            #    a node whose NEW label improved adopts that label's
+            #    label (pointer jump), and neighbors of improved nodes
+            #    adopt the improvement at once (edge hop) — in the SAME
+            #    checkpoint job.  The map's subtree appears on both
+            #    sides, so the planner emits one BroadcastExchange +
+            #    ReusedExchange.  The level trades cheap broadcast
+            #    joins for ROUNDS (each a fixed checkpoint-job floor,
+            #    measured ~0.55 s in local mode): it cut rounds 10 → 6
+            #    at sf0.1.
+            jmap = mid.filter(F.col("mid") < F.col("old")).select(
+                F.col("node").alias("j_n"), F.col("mid").alias("j_c")
+            )
+            delta_j = (
+                sym.join(jmap, sym["b"] == jmap["j_n"])
+                .groupBy(F.col("a").alias("j_a"))
+                .agg(F.min("j_c").alias("j_nbr"))
+            )
+            stepped = mid.join(jmap, mid["mid"] == jmap["j_n"], "left").join(
+                delta_j, mid["node"] == delta_j["j_a"], "left"
+            )
+            jumped = stepped.select(
                 "node",
-                F.col(prev).alias("component"),
-                (F.col(prev) < F.col("old")).alias("changed"),
+                "old",
+                F.least(
+                    F.col("mid"),
+                    F.coalesce(F.col("j_c"), F.col("mid")),
+                    F.coalesce(F.col("j_nbr"), F.col("mid")),
+                ).alias("new"),
+            )
+            round_plan = jumped.select(
+                "node",
+                F.col("new").alias("component"),
+                (F.col("new") < F.col("old")).alias("changed"),
             )
             new_labels, n_changed = snapshot(round_plan)
             # convergence = empty frontier: nothing changed, so nothing
@@ -1170,8 +1156,6 @@ def contract_edges(
     edges: DataFrame,
     src_col: str = "id_a",
     dst_col: str = "id_b",
-    passes: int = 2,
-    fan_in: int = 8,
 ) -> DataFrame:
     """Partition-local spanning-forest contraction — the standard
     pre-pass for connected components over DENSE pair graphs (a
@@ -1194,13 +1178,13 @@ def contract_edges(
     depends on partitioning — components (min-label) are invariant
     to that choice, which is the only contract downstream CC needs.
 
-    ``passes`` chains contraction levels, each repartitioning the
-    surviving forest ``fan_in``× narrower first (the tree-reduce
-    shape): one pass bounds output at Σ per-partition (V−1) — with P
-    partitions that can still be ~P·V — while a second pass over
-    P/fan_in partitions collapses the overlap between the partial
-    forests.  Two passes take the sf0.1 ER graph 5.5M → 639k → ~80k,
-    under ``connected_components``' driver-finish gate.
+    Two contraction passes, the second over the surviving forest
+    repartitioned 8× narrower (the tree-reduce shape): one pass bounds
+    output at Σ per-partition (V−1) — with P partitions that can still
+    be ~P·V — while the second pass over P/8 partitions collapses the
+    overlap between the partial forests.  The two passes take the
+    sf0.1 ER graph 5.5M → 639k → ~80k, under ``connected_components``'
+    driver-finish gate.
 
     MEASURED local[32] trade-off (sf0.1 fuzzy ER graph, round 9):
     the two passes cost ~6.5 s of Arrow transfer + Python union-find
@@ -1242,13 +1226,9 @@ def contract_edges(
                 yield pd.DataFrame({src_col: keep_a, dst_col: keep_b})
 
     out = edges.select(src_col, dst_col)
-    n_parts = max(out.rdd.getNumPartitions(), 1)
-    for level in range(passes):
-        if level > 0:
-            n_parts = max(1, n_parts // fan_in)
-            out = out.repartition(n_parts)
-        out = out.mapInPandas(per_partition, schema=schema)
-    return out
+    narrow = max(1, out.rdd.getNumPartitions() // 8)
+    forest = out.mapInPandas(per_partition, schema=schema)
+    return forest.repartition(narrow).mapInPandas(per_partition, schema=schema)
 
 
 def hits(

@@ -62,17 +62,15 @@ def fallback_join_exploded(
     fact_path_col: str,
     dim_path_col: str,
     levels: tuple[int, ...] = (4, 5),
-    broadcast_dims: bool = True,
 ) -> DataFrame:
     """Same semantics as :func:`hierarchical_fallback_join` as ONE join:
     explode each fact into its candidate keys (exact + each prefix),
     equi-join once on the candidate key, distinct.
 
-    One pass over facts instead of N join passes.  ``broadcast_dims``
-    (default: zone tables are dimension-sized) pins the broadcast-hash
-    strategy — dims built from aggregates have no stats, and Catalyst
-    would otherwise fall back to a sort-merge join; pass False for a
-    genuinely large dim side to get the shuffle join.
+    One pass over facts instead of N join passes.  The dims side is
+    always broadcast: zone tables are dimension-sized, and dims built
+    from aggregates have no stats, so Catalyst would otherwise fall
+    back to a sort-merge join.
     """
     cands = F.array_distinct(
         F.array(
@@ -81,9 +79,7 @@ def fallback_join_exploded(
         )
     )
     exploded = facts.withColumn("__cand", F.explode(cands))
-    d = dims.withColumnRenamed(dim_path_col, "__cand")
-    if broadcast_dims:
-        d = F.broadcast(d)
+    d = F.broadcast(dims.withColumnRenamed(dim_path_col, "__cand"))
     return exploded.join(d, "__cand", "inner").drop("__cand").distinct()
 
 

@@ -72,10 +72,7 @@ def interval_containment_join_bucketed(
     ts_col: str,
     start_col: str,
     end_col: str,
-    bucket_unit: str = "day",
-    bucket_step: str = "INTERVAL 1 DAY",
     how: str = "inner",
-    broadcast_intervals: bool = True,
 ) -> DataFrame:
     """Event-in-window join with a TIME-BUCKETED equi key — the
     scale form of :func:`interval_containment_join`.
@@ -88,7 +85,7 @@ def interval_containment_join_bucketed(
     linear data, superconstant join work).  Bucketing the time axis
     restores a selective equi key:
 
-    1. each interval explodes into the ``bucket_unit`` buckets it
+    1. each interval explodes into the day buckets it
        covers (``sequence(trunc(start), trunc(end), step)`` — bounded
        by interval length / bucket size, 1 for the reference's intra-
        day zones);
@@ -101,11 +98,8 @@ def interval_containment_join_bucketed(
     Each qualifying (event, interval) pair emerges exactly once — the
     event's bucket is a single value and appears once in the
     interval's bucket sequence — so results are identical to the
-    plain form, including under ``how='left'``.  Set
-    ``broadcast_intervals=False`` when the exploded interval side is
-    not dimension-sized; the join then shuffles on the (key, bucket)
-    axis, which is also the skew-safe shape (hot keys spread across
-    buckets).
+    plain form, including under ``how='left'``.  The exploded
+    interval side is broadcast: zone tables are dimension-sized.
 
     Inverted intervals (``end < start`` — common dirty data) are
     dropped before the explode: ``sequence()`` with a positive step
@@ -115,22 +109,20 @@ def interval_containment_join_bucketed(
     match semantics (under ``how='left'`` an event can only pair with
     a valid interval either way).
     """
-    ib = intervals.where(
-        F.col(end_col) >= F.col(start_col)
-    ).withColumn(
-        "__bucket",
-        F.explode(
-            F.sequence(
-                F.date_trunc(bucket_unit, F.col(start_col)),
-                F.date_trunc(bucket_unit, F.col(end_col)),
-                F.expr(bucket_step),
-            )
-        ),
+    ib = F.broadcast(
+        intervals.where(F.col(end_col) >= F.col(start_col)).withColumn(
+            "__bucket",
+            F.explode(
+                F.sequence(
+                    F.date_trunc("day", F.col(start_col)),
+                    F.date_trunc("day", F.col(end_col)),
+                    F.expr("INTERVAL 1 DAY"),
+                )
+            ),
+        )
     )
-    if broadcast_intervals:
-        ib = F.broadcast(ib)
     cond = [events[c] == ib[c] for c in on]
-    cond.append(F.date_trunc(bucket_unit, events[ts_col]) == ib["__bucket"])
+    cond.append(F.date_trunc("day", events[ts_col]) == ib["__bucket"])
     cond.append(events[ts_col].between(ib[start_col], ib[end_col]))
     joined = events.join(ib, cond, how)
     for c in on:

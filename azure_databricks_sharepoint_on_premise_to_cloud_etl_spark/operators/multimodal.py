@@ -934,15 +934,3 @@ def sample_frames(
 
     return df.select(id_col, payload_col).mapInPandas(run, schema=FRAMES_SCHEMA)
 
-
-def decode_image_stub(payload: bytes):  # pragma: no cover - documented stub
-    """Decode entry point for formats beyond BMP/JPEG (PNG/WebP/...) —
-    not implementable in this container (no PIL/opencv).  Raises by
-    design; BMP and sequential JPEG have REAL pure-Python decoders
-    (:func:`decode_bmp`, :func:`decode_jpeg`); see module docstring."""
-    raise NotImplementedError(
-        "PNG/WebP decode requires PIL/opencv which are not available in "
-        "the test container; BMP and sequential-DCT JPEG are decoded "
-        "natively (decode_bmp / decode_jpeg), other formats are "
-        "exercised via extract_meta's deterministic fake decoder"
-    )

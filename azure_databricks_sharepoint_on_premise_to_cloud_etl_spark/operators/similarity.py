@@ -982,7 +982,11 @@ def mmr_rerank(
         # bit for bit: Spark round(x, 6) on DOUBLE is
         # BigDecimal.valueOf(x).setScale(6, HALF_UP) — Decimal(repr(x))
         # parses the same shortest decimal Double.toString produces,
-        # so quantize(HALF_UP) yields the same double.  Ordering
+        # so quantize(HALF_UP) yields the same double.  That holds on
+        # JDK 19+; before that (JDK 17 included) Double.toString can
+        # emit non-shortest digits, so a HALF_UP tie exactly at the 7th decimal
+        # could round differently here than in the JVM (not seen at
+        # sf0.001/0.01/0.1).  Ordering
         # replicates desc_nulls_last with Spark's NaN-greatest
         # semantics; ties break by id ascending (__c asc).
         import math

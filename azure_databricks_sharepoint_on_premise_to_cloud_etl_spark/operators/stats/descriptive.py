@@ -648,7 +648,6 @@ def roc_auc_distributed(
     df: DataFrame,
     score_col: str,
     label_col: str,
-    partitions: int = 32,
 ) -> DataFrame:
     """:func:`roc_auc` with the cumulative-rank window replaced by the
     distributed two-phase prefix sum (``windows.global_cumsum``) —
@@ -676,9 +675,7 @@ def roc_auc_distributed(
         )
         .withColumn("__t", F.col("__a") + F.col("__b"))
     )
-    cum = global_cumsum(
-        buckets, [F.col("__v").asc()], {"__t": "__c"}, partitions=partitions
-    )
+    cum = global_cumsum(buckets, [F.col("__v").asc()], {"__t": "__c"})
     totals = buckets.agg(
         F.sum("__a").alias("__na"), F.sum("__b").alias("__nb")
     )
@@ -1698,7 +1695,6 @@ def abc_classification(
     value_col: str,
     a_cut: float = 0.8,
     b_cut: float = 0.95,
-    partitions: int = 32,
     value_round: int = 2,
 ) -> DataFrame:
     """Pareto / ABC inventory classification: rank keys by value
@@ -1730,9 +1726,7 @@ def abc_classification(
         F.round(F.col(value_col).cast("double"), value_round).alias("value"),
     )
     order = [F.col("value").desc(), F.col("key").asc()]
-    run = global_cumsum(
-        vals, order, {"value": "__cum"}, partitions=partitions
-    )
+    run = global_cumsum(vals, order, {"value": "__cum"})
     total = vals.agg(F.sum("value").alias("__total"))
     out = run.crossJoin(F.broadcast(total))
     share = F.when(
@@ -2056,7 +2050,6 @@ def lorenz_deciles(
     key_col: str,
     value_col: str,
     k: int = 10,
-    partitions: int = 32,
     value_round: int = 2,
 ) -> DataFrame:
     """Lorenz-curve decile table: rank members by value ASCENDING,
@@ -2085,7 +2078,6 @@ def lorenz_deciles(
         [F.col("__v").asc(), F.col("__k").asc()],
         k,
         tile_col="tile",
-        partitions=partitions,
     )
     per_tile = tiled.groupBy("tile").agg(
         F.count(F.lit(1)).alias("n_members"),

@@ -797,7 +797,6 @@ def tfidf_doc_similarity(
     n: int = 2,
     min_df: int = 2,
     threshold: float = 0.5,
-    prefix_filter: bool = False,
     max_df_cap: int = 500,
 ) -> DataFrame:
     """Sparse document-document cosine similarity over tf-idf-weighted
@@ -830,6 +829,13 @@ def tfidf_doc_similarity(
     Weights/norms are computed over the banded vocabulary (document
     that restriction; scores are relative to it).  Returns
     (id_a, id_b, cosine) for pairs at or above ``threshold``.
+
+    Candidates are every banded-term match; there is no AllPairs
+    prefix-filtered path.  At the 0.5 threshold the query uses, that
+    path returned the same pairs but measured 3.3 s → 45 s at sf0.1:
+    with half of each vector's mass kept in the index, candidates
+    barely shrink, and its exact verify re-joins every candidate
+    pair's terms.
     """
     toks = F.col("__toks")
     grams = F.transform(
@@ -896,80 +902,17 @@ def tfidf_doc_similarity(
         .withColumn("__norm", norm_w),
         StorageLevel.MEMORY_AND_DISK,
     )
-    if not prefix_filter:
-        a = w.select(
-            F.col(id_col).alias("id_a"), "__t",
-            F.col("__w").alias("__wa"), F.col("__norm").alias("__na"),
-        )
-        b = w.select(
-            F.col(id_col).alias("id_b"), "__t",
-            F.col("__w").alias("__wb"), F.col("__norm").alias("__nb"),
-        )
-        return (
-            a.join(b, "__t")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b")
-            .agg(
-                F.round(
-                    F.sum(F.col("__wa") * F.col("__wb"))
-                    / (F.max("__na") * F.max("__nb")),
-                    6,
-                ).alias("cosine")
-            )
-            .filter(F.col("cosine") >= threshold)
-        )
-
-    # Prefix-filtered form (AllPairs-style, the published sparse-join
-    # pruning): each doc partitions its terms into INDEX terms and a
-    # low-weight SUFFIX whose normalized norm² stays < threshold.  A
-    # qualifying pair must share at least one index term of one side:
-    # if every shared term sat in both suffixes, cos ≤ ‖suf_a‖·‖suf_b‖
-    # < √t·√t = t — so joining index postings against the full posting
-    # table (instead of full × full) is candidate-COMPLETE while
-    # skipping the shared-common-term fan-out the df cap alone leaves.
-    # Selection is per-doc greedy smallest-weight-first: ascending
-    # cumulative Σ(w/‖d‖)² stays suffix while < t; the window is per
-    # doc over its (banded) terms — bounded, never corpus-wide.
-    #
-    # MEASURED AND OFF BY DEFAULT at this operator's t=0.5 regime:
-    # result-identical to the band form (pytest pins it) but 3.3 s →
-    # 45 s at sf0.1 — with half the vector mass required in the index,
-    # candidates barely shrink while the exact verify pays a per-pair ×
-    # per-term re-join the direct term-join form never does.  The
-    # pruning's payoff regime is high thresholds (t ≥ ~0.9, suffixes
-    # hold ~81% of mass) over near-duplicate corpora; callers there
-    # pass prefix_filter=True.
-    nu2 = (F.col("__w") / F.col("__norm")) * (F.col("__w") / F.col("__norm"))
-    doc_w = Window.partitionBy(id_col).orderBy(
-        F.col("__w").asc(), F.col("__t").asc()
-    ).rowsBetween(Window.unboundedPreceding, 0)
-    flagged = w.withColumn("__cum", F.sum(nu2).over(doc_w))
-    idx = flagged.filter(F.col("__cum") >= F.lit(float(threshold)))
-    pa = idx.select(F.col(id_col).alias("id_a"), "__t")
-    pb = w.select(F.col(id_col).alias("id_b"), "__t")
-    cands = (
-        pa.join(pb, "__t")
-        .filter(F.col("id_a") != F.col("id_b"))
-        .select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
-        )
-        .distinct()
-    )
-    # candidate-confined exact verify: re-join both full vectors by id
-    # (the LSH-verify shape) — cost ∝ candidates × doc terms, with
-    # candidates already near the final pair count
-    va = w.select(
+    a = w.select(
         F.col(id_col).alias("id_a"), "__t",
         F.col("__w").alias("__wa"), F.col("__norm").alias("__na"),
     )
-    vb = w.select(
+    b = w.select(
         F.col(id_col).alias("id_b"), "__t",
         F.col("__w").alias("__wb"), F.col("__norm").alias("__nb"),
     )
     return (
-        cands.join(va, "id_a")
-        .join(vb, ["id_b", "__t"])
+        a.join(b, "__t")
+        .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(
             F.round(
@@ -1318,7 +1261,6 @@ def unigram_sampling_table(
     text_col: str = "text",
     power: float = 0.75,
     round_to: int = 6,
-    partitions: int = 32,
 ) -> DataFrame:
     """word2vec-style negative-sampling table: corpus term frequencies
     raised to ``power`` (0.75 flattens the Zipf head so frequent words
@@ -1348,9 +1290,7 @@ def unigram_sampling_table(
         "__w", F.round(F.pow(F.col("tf").cast("double"), power), round_to)
     )
     order = [F.col("tf").desc(), F.col("word").asc()]
-    run = global_cumsum(
-        weighted, order, {"__w": "__cum"}, partitions=partitions
-    )
+    run = global_cumsum(weighted, order, {"__w": "__cum"})
     total = weighted.agg(F.sum("__w").alias("__total"))
     return run.crossJoin(F.broadcast(total)).select(
         "word",

@@ -117,7 +117,6 @@ def global_cumsum(
     df: DataFrame,
     order: list[Column],
     values: dict[str, str],
-    partitions: int = 32,
 ) -> DataFrame:
     """Distributed exact running totals over a GLOBAL order — the
     scale path for cumulative analytics that would otherwise need an
@@ -137,9 +136,14 @@ def global_cumsum(
        key tuple to exactly one partition).
     2. Per-partition running totals via a window PARTITIONED on the
        partition id — every task sorts and scans only its own slice.
-    3. Per-partition grand totals collapse to ``partitions`` rows; the
-       offset for partition *i* is the (tiny, bounded-by-partitions)
-       cumulative of totals before *i*, broadcast back and added.
+    3. Per-partition grand totals collapse to one row per partition;
+       the offset for partition *i* is the (tiny, bounded-by-
+       partitions) cumulative of totals before *i*, broadcast back and
+       added.
+
+    The range shuffle has as many partitions as the frame's session
+    ``spark.sql.shuffle.partitions`` (32 in ``session.get_spark``),
+    passed explicitly so AQE does not coalesce the slices.
 
     Two full shuffles (range + hash on the partition id) instead of
     the single-partition window's one — but every stage is parallel,
@@ -165,7 +169,8 @@ def global_cumsum(
     each result inside a ``with Scope():``, which unpersists it.
     """
     srcs = list(values)
-    part = df.repartitionByRange(partitions, *order)
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    part = df.repartitionByRange(n, *order)
     staged = persist(part.withColumn("__pid", F.spark_partition_id()))
     w_local = (
         Window.partitionBy("__pid")
@@ -208,7 +213,6 @@ def global_rank(
     df: DataFrame,
     order: list[Column],
     rank_col: str = "rank",
-    partitions: int = 32,
 ) -> DataFrame:
     """Distributed exact dense row numbering (1-based ``row_number``)
     over a GLOBAL total order, without the single-task unpartitioned
@@ -216,9 +220,7 @@ def global_rank(
     a total order (include a tiebreaker) for deterministic ranks.
     """
     staged = df.withColumn("__one", F.lit(1).cast("long"))
-    summed = global_cumsum(
-        staged, order, {"__one": rank_col}, partitions=partitions
-    )
+    summed = global_cumsum(staged, order, {"__one": rank_col})
     return summed.drop("__one")
 
 
@@ -228,7 +230,6 @@ def global_ntile_pct(
     k: int,
     tile_col: str = "tile",
     pct_col: str = "pct_rank",
-    partitions: int = 32,
 ) -> DataFrame:
     """Distributed exact ``ntile(k)`` + ``percent_rank()`` over a
     global total order — same results as the SQL window functions
@@ -236,7 +237,7 @@ def global_ntile_pct(
     built from :func:`global_rank` plus one broadcast scalar, so no
     stage ever runs single-task.  ``order`` must be a total order.
     """
-    ranked = global_rank(df, order, rank_col="__r", partitions=partitions)
+    ranked = global_rank(df, order, rank_col="__r")
     n_tbl = ranked.agg(F.count(F.lit(1)).alias("__n"))
     q = F.floor(F.col("__n") / k)
     r = F.col("__n") % k
@@ -506,7 +507,6 @@ def skyline_2d(
     df: DataFrame,
     x_col: str,
     y_col: str,
-    partitions: int = 32,
 ) -> DataFrame:
     """2-D Pareto frontier (skyline), both dimensions MINIMIZED: the
     distinct ``(x, y)`` points not dominated by any other point
@@ -524,8 +524,9 @@ def skyline_2d(
     That turns skyline into a global prefix-min, which distributes by
     the ``global_cumsum`` recipe: range-partition on the sort key,
     per-slice window prefix-min (each task scans only its slice),
-    per-partition mins collapse to ``partitions`` rows whose running
-    min broadcasts back as each slice's offset.  No single-task
+    per-partition mins collapse to one row per partition whose running
+    min broadcasts back as each slice's offset (as many slices as
+    ``global_cumsum`` takes).  No single-task
     window, no quadratic dominance join; the staged frame is persisted
     so both branches share one range shuffle (see global_cumsum's
     determinism note).
@@ -535,8 +536,9 @@ def skyline_2d(
         .filter(F.col("__x").isNotNull() & F.col("__y").isNotNull())
         .distinct()
     )
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     staged = persist(
-        pts.repartitionByRange(partitions, F.col("__x").asc(), F.col("__y").asc())
+        pts.repartitionByRange(n, F.col("__x").asc(), F.col("__y").asc())
         .withColumn("__pid", F.spark_partition_id())
     )
     w_local = (

@@ -264,7 +264,11 @@ def q_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _poisson_bootstrap_oracle() -> str:
-    from ..operators.stats import _LEHMER_A, _LEHMER_M, _POISSON1_CDF
+    from ..operators.stats.descriptive import (
+        _LEHMER_A,
+        _LEHMER_M,
+        _POISSON1_CDF,
+    )
 
     u = (
         f"(({_LEHMER_A} * (({_LEHMER_A} * (({_LEHMER_A} * "

@@ -556,7 +556,7 @@ _TDS_THRESHOLD = 0.5
 def q_tfidf_doc_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lexical near-dup / related-doc pairs: cosine over tf-idf
     bigram vectors, candidates from a df-banded term-keyed posting
-    self-join (prefix-filtered so head terms never fan out)."""
+    self-join (the df ceiling keeps head terms from fanning out)."""
     d = rebalance(load_table(spark, sf_dir, "documents"))
     return text.tfidf_doc_similarity(d, threshold=_TDS_THRESHOLD)
 

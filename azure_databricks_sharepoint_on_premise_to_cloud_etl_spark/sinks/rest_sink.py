@@ -7,8 +7,8 @@ ordering with a pluggable ``transport`` (tests inject a fake; real
 deployments pass ``requests.post``), and the same shrink-to-1 retry.
 
 Control-plane-sized posts run on the driver (as the reference does);
-volume posts go through ``operators.batching.foreach_partition_batched``
-so executors fan out the HTTP calls.
+volume posts (``post_rows_distributed``) run per partition through
+``mapInPandas``, so executors fan out the HTTP calls.
 """
 
 from __future__ import annotations
@@ -45,7 +45,6 @@ def post_rows(
     url: str,
     transport: Transport,
     batch_size: int = 20,
-    error_batch_size: int = 1,
 ) -> PostResult:
     """POST the DataFrame's rows as JSON arrays in batches (K5).
 
@@ -62,7 +61,7 @@ def post_rows(
         if not 200 <= status < 300:
             raise RuntimeError(f"POST {url} -> {status}: {body[:200]}")
 
-    report = run_batched_with_retry(rows, action, batch_size, error_batch_size)
+    report = run_batched_with_retry(rows, action, batch_size)
     return PostResult(report=report, responses=responses)
 
 
@@ -95,7 +94,6 @@ def post_rows_distributed(
     url: str,
     transport: Transport,
     batch_size: int = 100,
-    error_batch_size: int = 1,
 ) -> DataFrame:
     """Volume path for K5: every partition serializes its own rows to
     JSON batches and POSTs executor-side (mapInPandas fan-out — the
@@ -127,9 +125,7 @@ def post_rows_distributed(
                 if not 200 <= status < 300:
                     raise RuntimeError(f"POST {url} -> {status}: {body[:200]}")
 
-            report = run_batched_with_retry(
-                rows, action, batch_size, error_batch_size
-            )
+            report = run_batched_with_retry(rows, action, batch_size)
             yield pd.DataFrame(
                 {
                     "n_posted": [len(report.succeeded)],

@@ -117,8 +117,9 @@ def decode_event_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-def rebalance(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
-    """Spread a narrow compute-heavy stage across all cores.
+def rebalance(df: DataFrame) -> DataFrame:
+    """Spread a narrow compute-heavy stage across all cores: repartition
+    to ``defaultParallelism`` when the scan has fewer input files.
 
     At production scale input splits provide parallelism for free; the
     small test fixtures arrive as ONE parquet file -> one partition, so
@@ -128,8 +129,7 @@ def rebalance(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     df.rdd.getNumPartitions(), which forces RDD conversion and costs
     ~1s of plan translation per call.
     """
-    spark = df.sparkSession
-    target = min_partitions or spark.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
         width = len(df.inputFiles())
     except Exception:

@@ -52,7 +52,6 @@ def fetch_documents(
     date_start: str,
     date_end: str,
     batch_size: int = 1,
-    error_batch_size: int = 1,
 ) -> tuple[list[str], "BatchReport"]:
     """Driver-side batched fetch (S5) with the reference's full
     reliability semantics: a failed batch re-tries element-by-element
@@ -71,9 +70,7 @@ def fetch_documents(
             raise RuntimeError(f"POST {url} -> {status}: {text[:200]}")
         docs.append(text)
 
-    report = run_batched_with_retry(
-        list(qualifiers), action, batch_size, error_batch_size
-    )
+    report = run_batched_with_retry(list(qualifiers), action, batch_size)
     return docs, report
 
 

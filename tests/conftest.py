@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -40,6 +41,19 @@ def oracle_db():
     yield at
     for con in cons.values():
         con.close()
+
+
+@contextmanager
+def shuffle_partitions(spark, n: int):
+    """Set the session's ``spark.sql.shuffle.partitions`` to ``n`` for
+    the block, then restore it."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
 
 
 def count_jobs(spark, fn) -> int:

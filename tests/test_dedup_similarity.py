@@ -174,13 +174,6 @@ def test_multimodal_meta_roundtrip(spark):
     assert out[1]["channels"] == 3
 
 
-def test_multimodal_decode_stub_raises():
-    import pytest
-
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image_stub(b"\x89PNG")
-
-
 def test_resize_and_frame_sample_plumbing(spark):
     from pyspark.sql import functions as F2
 

@@ -1,45 +1,13 @@
 from __future__ import annotations
 
 import json
-import os
 
-from pyspark.sql import functions as F
-
-from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.batching import (
-    foreach_partition_batched,
-)
 from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.sources import rest_source
 
 # NB: the executor-shipped callables below are CLOSURES, not
 # module-level functions — cloudpickle serializes closures by value,
 # while module-level functions pickle by reference and the Python
 # workers cannot import a pytest test module.
-
-
-def test_foreach_partition_batched_side_effects(spark, tmp_path):
-    """K5 volume path: the batched action runs on executors, once per
-    <=batch_size chunk per partition, covering every row exactly once."""
-    marker_dir = str(tmp_path / "markers")
-    os.makedirs(marker_dir)
-
-    def record_batch(batch: list[dict]) -> None:
-        import json as _json
-        import tempfile as _tempfile
-
-        fd, _ = _tempfile.mkstemp(
-            prefix=f"batch_{len(batch)}_", suffix=".json", dir=marker_dir
-        )
-        with os.fdopen(fd, "w") as f:
-            _json.dump(batch, f)
-
-    df = spark.range(0, 37).select(F.col("id")).repartition(4)
-    foreach_partition_batched(df, record_batch, batch_size=5)
-    seen = []
-    for fn in os.listdir(marker_dir):
-        with open(os.path.join(marker_dir, fn)) as f:
-            seen.extend(r["id"] for r in json.load(f))
-    assert sorted(seen) == list(range(37))
-    assert all(int(fn.split("_")[1]) <= 5 for fn in os.listdir(marker_dir))
 
 
 def test_fetch_distributed_maps_partitions(spark):

@@ -11,6 +11,7 @@ parallel (range repartition -> per-slice window -> broadcast offsets).
 from __future__ import annotations
 
 import random
+import re
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -19,6 +20,7 @@ from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators import 
     stats,
     windows,
 )
+from conftest import shuffle_partitions
 
 
 def _synthetic(spark, n=500, seed=7):
@@ -40,15 +42,25 @@ def test_global_cumsum_matches_window(spark):
         r["id"]: r["c"]
         for r in df.select("id", F.sum("v").over(w).alias("c")).collect()
     }
-    got = {
-        r["id"]: r["c"]
-        for r in windows.global_cumsum(
-            df, order, {"v": "c"}, partitions=8
-        ).collect()
-    }
+    with shuffle_partitions(spark, 8):
+        out = windows.global_cumsum(df, order, {"v": "c"})
+    got = {r["id"]: r["c"] for r in out.collect()}
     assert got.keys() == expect.keys()
     for k in expect:
         assert abs(got[k] - expect[k]) < 1e-9, k
+
+
+def test_global_cumsum_range_shuffle_follows_session(spark):
+    """The range shuffle has as many slices as the session's
+    ``spark.sql.shuffle.partitions``."""
+    df = _synthetic(spark)
+    with shuffle_partitions(spark, 5):
+        out = windows.global_cumsum(
+            df, [F.col("v").asc(), F.col("id").asc()], {"v": "c"}
+        )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    slices = re.findall(r"rangepartitioning\(.*?, (\d+)\)", plan)
+    assert slices and set(slices) == {"5"}, plan
 
 
 def test_global_cumsum_releases_staged_cache(spark):
@@ -64,12 +76,12 @@ def test_global_cumsum_releases_staged_cache(spark):
     df = _synthetic(spark, n=200)
     order = [F.col("v").asc(), F.col("id").asc()]
     for fn in (
-        lambda: windows.global_cumsum(df, order, {"v": "c"}, partitions=4),
-        lambda: windows.global_rank(df, order, partitions=4),
-        lambda: windows.global_ntile_pct(df, order, 4, partitions=4),
+        lambda: windows.global_cumsum(df, order, {"v": "c"}),
+        lambda: windows.global_rank(df, order),
+        lambda: windows.global_ntile_pct(df, order, 4),
     ):
         before = stored()
-        with Scope():
+        with shuffle_partitions(spark, 4), Scope():
             out = fn()
             out.collect()
             assert stored() > before  # the staged frame is cached
@@ -85,10 +97,9 @@ def test_global_rank_matches_row_number(spark):
             "id", F.row_number().over(Window.orderBy(*order)).alias("rn")
         ).collect()
     }
-    got = {
-        r["id"]: r["rank"]
-        for r in windows.global_rank(df, order, partitions=8).collect()
-    }
+    with shuffle_partitions(spark, 8):
+        out = windows.global_rank(df, order)
+    got = {r["id"]: r["rank"] for r in out.collect()}
     assert got == expect
 
 
@@ -106,11 +117,10 @@ def test_global_ntile_pct_matches_sql_semantics(spark):
             F.percent_rank().over(w).alias("p"),
         ).collect()
     }
+    with shuffle_partitions(spark, 8):
+        out = windows.global_ntile_pct(df, order, 10)
     got = {
-        r["id"]: (r["tile"], round(r["pct_rank"], 9))
-        for r in windows.global_ntile_pct(
-            df, order, 10, partitions=8
-        ).collect()
+        r["id"]: (r["tile"], round(r["pct_rank"], 9)) for r in out.collect()
     }
     assert got == expect
 
@@ -119,10 +129,9 @@ def test_global_ntile_fewer_rows_than_tiles(spark):
     # n < k: every row its own tile, pct_rank well-defined (n=1 -> 0.0)
     df = spark.createDataFrame([(1, 5.0), (2, 3.0), (3, 9.0)], "id LONG, v DOUBLE")
     order = [F.col("v").asc(), F.col("id").asc()]
-    out = {
-        r["id"]: (r["tile"], r["pct_rank"])
-        for r in windows.global_ntile_pct(df, order, 10, partitions=4).collect()
-    }
+    with shuffle_partitions(spark, 4):
+        tiled = windows.global_ntile_pct(df, order, 10)
+    out = {r["id"]: (r["tile"], r["pct_rank"]) for r in tiled.collect()}
     assert out == {2: (1, 0.0), 1: (2, 0.5), 3: (3, 1.0)}
     one = windows.global_ntile_pct(
         spark.createDataFrame([(1, 5.0)], "id LONG, v DOUBLE"), order, 10
@@ -133,7 +142,8 @@ def test_global_ntile_fewer_rows_than_tiles(spark):
 def test_roc_auc_distributed_matches_window_form(spark):
     df = _synthetic(spark, n=800, seed=11)
     a = stats.roc_auc(df, "v", "y").collect()[0]
-    b = stats.roc_auc_distributed(df, "v", "y", partitions=8).collect()[0]
+    with shuffle_partitions(spark, 8):
+        b = stats.roc_auc_distributed(df, "v", "y").collect()[0]
     assert (a["n_pos"], a["n_neg"], a["auc"]) == (
         b["n_pos"],
         b["n_neg"],
@@ -147,8 +157,8 @@ def test_global_rank_big_table_window_is_partitioned(spark):
     input: the only unpartitioned window runs over the
     partitions-sized totals table."""
     df = _synthetic(spark)
-    plan = windows.global_rank(
-        df, [F.col("v").asc(), F.col("id").asc()], partitions=8
-    )._jdf.queryExecution().executedPlan().toString()
+    with shuffle_partitions(spark, 8):
+        ranked = windows.global_rank(df, [F.col("v").asc(), F.col("id").asc()])
+    plan = ranked._jdf.queryExecution().executedPlan().toString()
     # rows flow through a range exchange, proving the per-slice layout
     assert "rangepartitioning" in plan.lower()

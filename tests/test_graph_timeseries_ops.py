@@ -23,6 +23,7 @@ from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.graph i
 )
 from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.windows import ewma_smooth
 from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.scope import Scope
+from conftest import shuffle_partitions
 
 
 # ---------------------------------------------------------------- k-core
@@ -361,7 +362,7 @@ def test_skyline_2d_dominance_ties_and_duplicates(spark):
 
 
 def test_skyline_2d_cross_partition_prefix_min(spark):
-    """With partitions=3 the prefix min must flow ACROSS range
+    """With 3 shuffle partitions the prefix min must flow ACROSS range
     partitions: a strictly improving staircase keeps every point; a
     flat tail after the global min keeps none of the tail."""
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.windows import (
@@ -371,8 +372,8 @@ def test_skyline_2d_cross_partition_prefix_min(spark):
     stairs = [(i, 100 - i) for i in range(0, 50)]          # all frontier
     tail = [(100 + i, 51 + i) for i in range(0, 50)]       # all dominated
     df = spark.createDataFrame(stairs + tail, ["x", "y"])
-    with Scope():
-        out = skyline_2d(df, "x", "y", partitions=3)
+    with shuffle_partitions(spark, 3), Scope():
+        out = skyline_2d(df, "x", "y")
         got = {(r["x"], r["y"]) for r in out.collect()}
     assert got == set(stairs)
 

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators import (
     batching,
+    graph,
     hierarchy,
     intervals,
     snapshots,
@@ -238,7 +239,7 @@ def test_union_by_name_resists_column_reorder(spark):
     assert {(r["id"], r["v"]) for r in out} == {(1, "x"), (2, "y")}
 
 
-def test_connected_components_long_chain(spark):
+def test_connected_components_long_chain(spark, monkeypatch):
     """A 25-node chain: plain propagation needs 24 rounds; pointer
     jumping must converge well inside the iteration bound and label the
     whole chain with the min id."""
@@ -250,11 +251,12 @@ def test_connected_components_long_chain(spark):
         [(i, i + 1) for i in range(24)], "id_a LONG, id_b LONG"
     )
     nodes = spark.createDataFrame([(i,) for i in range(25)], "doc_id LONG")
-    out = connected_components(edges, nodes, driver_finish_edges=0)
+    monkeypatch.setattr(graph, "DRIVER_FINISH_EDGES", 0)
+    out = connected_components(edges, nodes)
     assert {r["component"] for r in out.collect()} == {0}
 
 
-def test_connected_components_reliable_checkpoint(spark, tmp_path):
+def test_connected_components_reliable_checkpoint(spark, tmp_path, monkeypatch):
     """Reliable mode: same answer via reliable df.checkpoint()
     (survives executor loss at scale), and checkpoint files actually
     land in the SparkContext's checkpoint dir."""
@@ -271,16 +273,15 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
     )
     cpdir = tmp_path / "cc_ckpt"
     spark.sparkContext.setCheckpointDir(str(cpdir))
+    monkeypatch.setattr(graph, "DRIVER_FINISH_EDGES", 0)
     with Scope():
-        out = connected_components(
-            edges, nodes, reliable=True, driver_finish_edges=0
-        )
+        out = connected_components(edges, nodes, reliable=True)
         got = {(r["doc_id"], r["component"]) for r in out.collect()}
         assert any(p.is_file() for p in cpdir.rglob("*"))  # files were written
     assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (99, 99)}
 
 
-def test_connected_components_releases_generations(spark):
+def test_connected_components_releases_generations(spark, monkeypatch):
     """The localCheckpoint path must not accumulate one persisted RDD
     per iteration: after the run, at most the final generation (plus
     any pre-existing blocks) may remain persisted."""
@@ -294,7 +295,8 @@ def test_connected_components_releases_generations(spark):
         [(i, i + 1) for i in range(40)], "id_a LONG, id_b LONG"
     )
     nodes = spark.createDataFrame([(i,) for i in range(41)], "doc_id LONG")
-    out = connected_components(edges, nodes, driver_finish_edges=0)
+    monkeypatch.setattr(graph, "DRIVER_FINISH_EDGES", 0)
+    out = connected_components(edges, nodes)
     assert {r["component"] for r in out.collect()} == {0}
     after = len(sc._jsc.sc().getRDDStorageInfo())
     # a 41-node chain runs ~6 pointer-jump rounds; without release the
@@ -364,7 +366,7 @@ def test_flagship_leaves_session_state_alone(spark):
     release(sentinel)
 
 
-def test_scope_bounds_repeated_connected_components(spark):
+def test_scope_bounds_repeated_connected_components(spark, monkeypatch):
     """A long-lived session calling connected_components repeatedly
     must not accumulate one final-generation RDD per call: with each
     call consumed inside a Scope, persisted-RDD count stays flat."""
@@ -403,10 +405,11 @@ def test_scope_bounds_repeated_connected_components(spark):
     kept = stored() - before
     assert kept
 
+    monkeypatch.setattr(graph, "DRIVER_FINISH_EDGES", 0)
     for _ in range(3):
         before = stored()
         with Scope():
-            out = connected_components(edges, nodes, driver_finish_edges=0)
+            out = connected_components(edges, nodes)
             assert {r["component"] for r in out.collect()} == {0}
             made = stored() - before
             assert made  # the final generation backs the result
@@ -422,7 +425,9 @@ def test_scope_bounds_repeated_connected_components(spark):
     assert freed(kept)
 
 
-def test_connected_components_driver_finish_matches_distributed(spark):
+def test_connected_components_driver_finish_matches_distributed(
+    spark, monkeypatch
+):
     """The small-graph driver-finish regime (union-find over the
     collected edge list) must produce EXACTLY the labels the
     distributed delta-frontier loop produces — same min-label
@@ -464,7 +469,8 @@ def test_connected_components_driver_finish_matches_distributed(spark):
         got_driver = {(r["doc_id"], r["component"]) for r in driver.collect()}
         # the union-find finish holds no checkpoint generation
         assert stored() == before
-        dist = connected_components(edges, nodes, driver_finish_edges=0)
+        monkeypatch.setattr(graph, "DRIVER_FINISH_EDGES", 0)
+        dist = connected_components(edges, nodes)
         got_dist = {(r["doc_id"], r["component"]) for r in dist.collect()}
         # the distributed result is backed by real state ...
         assert stored() > before

@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark import scope
+from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators import graph
 from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.graph import (
     _strip_inherited_stats,
     connected_components,
@@ -91,7 +92,7 @@ def test_scope_frees_first_leg_when_second_leg_raises(spark, monkeypatch):
     assert _stored(spark) == before
 
 
-def test_scope_deletes_reliable_checkpoint_files(spark, tmp_path):
+def test_scope_deletes_reliable_checkpoint_files(spark, tmp_path, monkeypatch):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "id_a LONG, id_b LONG"
     )
@@ -101,11 +102,10 @@ def test_scope_deletes_reliable_checkpoint_files(spark, tmp_path):
     def files() -> list:
         return [p for p in tmp_path.rglob("*") if p.is_file()]
 
+    monkeypatch.setattr(graph, "DRIVER_FINISH_EDGES", 0)
     before = _stored(spark)
     with Scope():
-        out = connected_components(
-            edges, nodes, reliable=True, driver_finish_edges=0
-        )
+        out = connected_components(edges, nodes, reliable=True)
         assert {r["component"] for r in out.collect()} == {0}
         assert files()  # the final generation lives under the dir
     assert files() == []

@@ -868,22 +868,6 @@ def test_roc_auc_hand_computed(spark):
     assert (out["n_pos"], out["n_neg"], out["auc"]) == (2, 2, 0.75)
 
 
-def test_tfidf_prefix_filter_result_identical(spark):
-    """The AllPairs-style prefix-filtered candidate path must return
-    exactly the band-form pairs (completeness: a pair whose shared
-    terms all sit in both low-mass suffixes has cos < t)."""
-    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.scope import Scope
-    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.sources.registry import load_table, rebalance
-
-    d = rebalance(load_table(spark, "/root/testdata/sf0.001", "documents"))
-    with Scope():
-        old = text.tfidf_doc_similarity(d, prefix_filter=False)
-        new = text.tfidf_doc_similarity(d, prefix_filter=True)
-        so = {(r["id_a"], r["id_b"], r["cosine"]) for r in old.collect()}
-        sn = {(r["id_a"], r["id_b"], r["cosine"]) for r in new.collect()}
-    assert so == sn and len(so) > 0
-
-
 def test_calibration_bins_hand_computed(spark):
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators.stats import calibration_bins
 

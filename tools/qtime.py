@@ -10,8 +10,8 @@ untimed cold run, then ``reps`` timed runs).  ``bench.py``,
 ``tools/scale_rehearsal.py`` and ``tools/skew_rehearsal.py`` call them.
 
 Per query: one cold materialization, then ``reps`` timed ones; prints
-min/median/max, the Janino compiles of each timed rep (the
-``CodegenMetrics`` compile-count delta; a warm rep whose classes all
+min/median/max, the output's rows and xor hash, the Janino compiles of
+each timed rep (the ``CodegenMetrics`` compile-count delta; a warm rep whose classes all
 sit in the codegen cache reads 0) and its JIT milliseconds (the delta
 of the JVM's total compilation time, summed over its compiler threads,
 so it can exceed the rep's wall time), which tells a slower rep's
@@ -152,8 +152,8 @@ def main() -> None:
         print(
             f"{name}: median {statistics.median(runs):.3f}s "
             f"min {runs[0]:.3f} max {runs[-1]:.3f} "
-            f"(cold {t.cold:.2f}s, {t.rows} rows, reps {args.reps}, "
-            f"compiles {t.compiles}, jit_ms {t.jit_ms}, "
+            f"(cold {t.cold:.2f}s, {t.rows} rows, xor {t.xor_hash}, "
+            f"reps {args.reps}, compiles {t.compiles}, jit_ms {t.jit_ms}, "
             f"load {os.getloadavg()[0]:.1f})",
             flush=True,
         )

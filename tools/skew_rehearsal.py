@@ -27,7 +27,9 @@ event rows, one customer ~10% of all orders, one (nation, segment)
   distinct-collapsed); measured to document it, not to fix it.
 
 Results merge into SCALE_SF1.json under ``skew_*`` keys with the
-uniform-x3 comparison time alongside.
+uniform-x3 comparison time alongside.  An AQE leg whose plan shows no
+skew split is warned about on stderr and listed under
+``_skew_meta.warnings`` (and ``warnings`` in the printed JSON line).
 
 Usage: python tools/skew_rehearsal.py [--base /root/testdata/sf0.1]
 """
@@ -153,6 +155,15 @@ def main() -> int:
         return round(min(a), 3), round(min(b), 3)
 
     results: dict[str, dict] = {}
+    warnings: list[str] = []
+
+    def warn_unsplit(leg: str, split: bool) -> None:
+        """An AQE leg whose executed plan shows no skew split compares
+        two unsplit joins; say so rather than record it silently."""
+        if not split:
+            msg = f"{leg}: no skew=true in the executed plan, the join ran unsplit"
+            print(f"WARNING: {msg}", file=sys.stderr)
+            warnings.append(msg)
 
     # -- 1. salted vs plain aggregation on the hot key ------------------
     ev = load_table(spark, skew_dir, "events")
@@ -269,6 +280,7 @@ def main() -> int:
         f"# skew join: aqe_on={t_on}s aqe_off={t_off}s split={saw_skew_split}",
         file=sys.stderr,
     )
+    warn_unsplit("skew_join_aqe", saw_skew_split)
 
     # -- 2b. the payoff demonstration the 10%-hot fixture cannot give ---
     # With a 10% hot key, local[32] wall-clock payoff is structurally
@@ -351,6 +363,7 @@ def main() -> int:
         f"split={saw50}",
         file=sys.stderr,
     )
+    warn_unsplit("skew_join_aqe_hot50", saw50)
 
     # -- 3. copurchase under a hot customer -----------------------------
     t_skewed, t_uniform = timed_pair(
@@ -399,10 +412,11 @@ def main() -> int:
         "fixture": f"x{args.factor} with hot keys (share 1/{HOT_FRACTION})",
         "hot_keys": "min user_id (events), min o_custkey (orders), "
         "(nation 0, BUILDING) for customers",
+        "warnings": warnings,
     }
     with open(args.out, "w") as fh:
         json.dump(record, fh, indent=1, sort_keys=True)
-    print(json.dumps(results))
+    print(json.dumps({**results, "warnings": warnings}))
     return 0
 
 
