@@ -4,8 +4,8 @@ The reference inherits its session from Databricks (no explicit config
 anywhere in /root/reference).  We pin the handful of settings that
 matter for correctness (session timezone, Arrow) and for scale (AQE,
 skew-join handling, shuffle partitions) so the same code runs on
-local-mode tests (``SPARK_GRAFT_CPUS`` cores: 8, or ``nproc``) and a
-1000-executor cluster without edits.
+local-mode tests (``SPARK_GRAFT_CPUS`` cores, default the cores this
+process may run on) and a 1000-executor cluster without edits.
 """
 
 from __future__ import annotations
@@ -14,10 +14,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-# At 100 TB these two are cluster-tuned; the env override keeps tests
-# and production on one code path.
-DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# Local-mode cores: ``SPARK_GRAFT_CPUS`` (perfbench and bench.py set
+# it), else the cores this process may run on.  Read once, at import.
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 
 # The JVM's JIT policy for short jobs; see get_spark.  C2 (Tier-4)
 # compile thresholds at 3x the JDK 17 defaults (5000 / 600 / 15000 /
@@ -100,7 +99,8 @@ def get_spark(app_name: str = "azure-databricks-sharepoint-etl-spark") -> SparkS
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", DEFAULT_SHUFFLE_PARTITIONS)
+        # one fixed count; AQE coalesces the small partitions
+        .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

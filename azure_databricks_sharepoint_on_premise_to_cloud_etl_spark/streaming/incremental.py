@@ -95,27 +95,9 @@ def drain_available_now(
 
 def run_to_memory_sink(
     stream_df: DataFrame, name: str, checkpoint_dir: str, output_mode: str = "complete"
-) -> None:
-    """Test helper: drain the stream into an in-memory table."""
-    q = (
-        stream_df.writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def drain_with_progress(
-    stream_df: DataFrame,
-    name: str,
-    checkpoint_dir: str,
-    output_mode: str = "append",
 ) -> list:
-    """Drain a stream with Trigger.AvailableNow into a memory sink and
-    return the per-micro-batch progress records
+    """Drain the stream with Trigger.AvailableNow into an in-memory
+    table and return its per-micro-batch progress records
     (``StreamingQuery.recentProgress``).  The state gate reads
     ``stateOperators[].numRowsTotal`` / ``numRowsRemoved`` from these
     to assert EMPIRICALLY that watermarked state plateaus across

@@ -103,7 +103,7 @@ def test_streaming_ph_state_survives_micro_batches(spark, tmp_path):
     )
     out = streaming_page_hinkley(stream, delta=PH_DELTA, threshold=PH_THRESHOLD)
     ckpt = str(tmp_path / "ph4_ckpt")
-    progs = incremental.drain_with_progress(
+    progs = incremental.run_to_memory_sink(
         out, "ph_four", ckpt, output_mode="append"
     )
     assert sum(1 for p in progs if p["numInputRows"] > 0) >= 4

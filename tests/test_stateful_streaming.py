@@ -187,7 +187,7 @@ def test_watermarked_state_plateaus_across_batches(spark, tmp_path):
         plan = builder(spark, "/root/testdata/sf0.001",
                        stream_dir=d, max_files_per_trigger=1)
         ckpt = str(tmp_path / f"gate_{name}_ckpt")
-        progs = incremental.drain_with_progress(
+        progs = incremental.run_to_memory_sink(
             plan, f"gate_{name}", ckpt, output_mode="append"
         )
         series = _state_series(progs)
@@ -221,7 +221,7 @@ def test_unwatermarked_state_grows_monotonically(spark, tmp_path):
         ["event_id"]
     )
     ckpt = str(tmp_path / "nowm_ckpt")
-    progs = incremental.drain_with_progress(
+    progs = incremental.run_to_memory_sink(
         plan, "gate_nowm", ckpt, output_mode="append"
     )
     series = _state_series(progs)
@@ -253,7 +253,7 @@ def test_streaming_sequence_match_across_batches(spark, tmp_path):
         spark, sf, stream_dir=d, max_files_per_trigger=1
     )
     ckpt = str(tmp_path / "seqmatch_gate_ckpt")
-    progs = incremental.drain_with_progress(
+    progs = incremental.run_to_memory_sink(
         plan, "seqmatch_gate", ckpt, output_mode="update"
     )
     assert sum(1 for p in progs if p["numInputRows"] > 0) >= 4
