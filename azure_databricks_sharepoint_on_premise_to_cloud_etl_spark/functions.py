@@ -54,8 +54,10 @@ def portable_hash64(col: Column | str, seed: int = 0) -> Column:
     compute the *identical* value with
     ``CAST('0x' || substr(md5(seed||':'||x),1,15) AS BIGINT)``.
     Engine-native ``xxhash64`` is faster but not reproducible outside
-    Spark; swap via ``portable=False`` call sites if oracle parity is
-    not needed.
+    Spark.  Four operators take ``portable=False`` for an xxhash64 path,
+    each behind a registered ``*_fast`` query: ``dedup.minhash_signatures``
+    and ``sampling.stable_sample``, ``stratified_sample`` and
+    ``hash_split``; every other hash operator is md5-only.
     """
     c = F.col(col) if isinstance(col, str) else col
     salted = F.concat(F.lit(f"{seed}:"), c)
@@ -63,10 +65,12 @@ def portable_hash64(col: Column | str, seed: int = 0) -> Column:
 
 
 def fast_hash64(col: Column | str, seed: int = 0) -> Column:
-    """Engine-native 64-bit hash (``xxhash64``) — the production fast
-    path for MinHash/SimHash when cross-engine oracle parity is not
-    required (~3x cheaper than the md5-based :func:`portable_hash64`).
-    Same call shape so operators can switch on a ``portable`` flag.
+    """Engine-native 64-bit hash (``xxhash64``), ~3x cheaper than the
+    md5-based :func:`portable_hash64` and with the same call shape: the
+    ``portable=False`` side of ``sampling.stable_sample``,
+    ``stratified_sample`` and ``hash_split``.  Verifiable cross-engine
+    only against an oracle that implements Spark's xxhash64 chaining
+    (``tools/xxh64_oracle.py``).
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.xxhash64(c, F.lit(seed))
@@ -85,33 +89,28 @@ def normalize_text(col: Column | str) -> Column:
     return F.regexp_replace(F.trim(F.lower(c)), r"\s+", " ")
 
 
-def char_shingles(
-    col: Column | str, k: int = 5, *, pre_normalized: bool = False
-) -> Column:
-    """Distinct character k-grams of a string, as an array<string>.
+def char_shingles(col: Column | str, k: int = 5) -> Column:
+    """Distinct character k-grams of an ALREADY-NORMALISED string
+    column, as an array<string>.
 
     Built from native higher-order functions (no UDF): sequence over
-    offsets -> transform(substring) -> array_distinct.  Input is
-    lower-cased and whitespace-collapsed first so shingling is
-    format-insensitive.  Strings shorter than ``k`` yield a single
-    shingle (the whole string) so every document gets a signature.
+    offsets -> transform(substring) -> array_distinct.  Strings shorter
+    than ``k`` yield a single shingle (the whole string) so every
+    document gets a signature.
 
-    PERFORMANCE: expressions captured by a higher-order-function lambda
-    are re-evaluated PER ELEMENT — there is no common-subexpression
-    elimination inside lambda bodies, so the normalization regex here
-    would run once per shingle (~L times per document) instead of once
-    per row.  Hot paths should materialize
-    ``withColumn("__norm", normalize_text(text))`` first and call with
-    ``pre_normalized=True`` on the materialized column (an attribute
-    reference costs nothing per element); measured 2.3x on the whole
-    signature pipeline.  ``pre_normalized=False`` keeps the one-shot
-    convenience form for small inputs.
+    The caller normalises first: materialize
+    ``withColumn("__norm", normalize_text(text))`` and shingle that
+    column.  Expressions captured by a higher-order-function lambda are
+    re-evaluated PER ELEMENT (no common-subexpression elimination inside
+    lambda bodies), so normalising inside this call would run the regex
+    once per shingle instead of once per row — measured 2.3x on the
+    whole signature pipeline; an attribute reference costs nothing per
+    element.
     """
     c = F.col(col) if isinstance(col, str) else col
-    norm = c if pre_normalized else normalize_text(c)
-    n = F.greatest(F.length(norm) - F.lit(k - 1), F.lit(1))
+    n = F.greatest(F.length(c) - F.lit(k - 1), F.lit(1))
     return F.array_distinct(
-        F.transform(F.sequence(F.lit(1), n), lambda i: norm.substr(i, F.lit(k)))
+        F.transform(F.sequence(F.lit(1), n), lambda i: c.substr(i, F.lit(k)))
     )
 
 

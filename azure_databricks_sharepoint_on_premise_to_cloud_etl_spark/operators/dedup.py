@@ -5,8 +5,8 @@ Beyond the reference's own dedup surface (``distinct`` /
 adds the document-dedup family a 100 TB corpus pipeline needs: exact
 (hash-groupBy), MinHash+LSH, SimHash, and n-gram Jaccard.  All hashing
 uses ``portable_hash64`` (md5-based) so every stage is reproducible in
-DuckDB for oracle checks; production can swap ``xxhash64`` for speed
-without changing plan shape.
+DuckDB for oracle checks; ``minhash_signatures(portable=False)`` is the
+one xxhash64 swap, with the same plan shape.
 
 Scale design:
 - exact dedup: one hash-aggregate shuffle on a 60-bit digest, not the
@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 
 from ..functions import (
     char_shingles,
-    fast_hash64,
     normalize_text,
     portable_hash64,
     word_tokens,
@@ -85,19 +84,16 @@ def minhash_perm_params(num_hashes: int, seed: int = 7) -> list[tuple[int, int]]
     ]
 
 
-def _shingle_hash_fn(portable: bool):
-    """The per-shingle base hash (portable md5-derived vs native
-    xxhash64) shared by ``minhash_signatures`` and ``artifact_frame``."""
-    if portable:
-        def shingle_hash(s):
-            return (
-                F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
-                % MINHASH_P
-            )
-    else:
-        def shingle_hash(s):
-            return F.pmod(F.xxhash64(s), F.lit(MINHASH_P))
-    return shingle_hash
+def _portable_shingle_hash(s: F.Column) -> F.Column:
+    """The md5-derived per-shingle base hash, reduced mod 2^31-1."""
+    return (
+        F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long") % MINHASH_P
+    )
+
+
+def _fast_shingle_hash(s: F.Column) -> F.Column:
+    """``minhash_signatures(portable=False)``'s xxhash64 base hash."""
+    return F.pmod(F.xxhash64(s), F.lit(MINHASH_P))
 
 
 def _signature_cols(num_hashes: int, base_col: str = "__base") -> list[F.Column]:
@@ -146,8 +142,8 @@ def minhash_signatures(
     base = df.withColumn("__norm", normalize_text(text_col)).select(
         F.col(id_col),
         F.transform(
-            char_shingles("__norm", k, pre_normalized=True),
-            _shingle_hash_fn(portable),
+            char_shingles("__norm", k),
+            _portable_shingle_hash if portable else _fast_shingle_hash,
         ).alias("__base"),
     )
     return base.select(F.col(id_col), *_signature_cols(num_hashes))
@@ -242,7 +238,7 @@ def ngram_jaccard_pairs(
         df.withColumn("__norm", normalize_text(text_col))
         .select(
             F.col(id_col),
-            char_shingles("__norm", k, pre_normalized=True).alias("__sh"),
+            char_shingles("__norm", k).alias("__sh"),
         )
         .withColumn("__size", F.size("__sh"))
     )
@@ -289,7 +285,7 @@ def jaccard_verify_pairs(
     corpus squared."""
     sh = df.withColumn("__norm", normalize_text(text_col)).select(
         F.col(id_col),
-        char_shingles("__norm", k, pre_normalized=True).alias("__sh"),
+        char_shingles("__norm", k).alias("__sh"),
     )
     a = sh.select(F.col(id_col).alias("id_a"), F.col("__sh").alias("sh_a"))
     b = sh.select(F.col(id_col).alias("id_b"), F.col("__sh").alias("sh_b"))
@@ -308,24 +304,17 @@ def simhash(
     id_col: str = "doc_id",
     text_col: str = "text",
     bits: int = 32,
-    portable: bool = True,
 ) -> DataFrame:
     """SimHash fingerprint over word tokens (``bits``-bit, default 32).
 
     Per doc: hash each distinct token; bit i of the fingerprint is 1
     when the majority of token-hashes have bit i set.  Built from
     higher-order functions (transform/aggregate/filter) — narrow, no
-    UDF.  ``portable=True`` hashes with the md5 digest the DuckDB
-    oracle reproduces; ``portable=False`` uses engine-native
-    ``xxhash64`` masked to the low 60 bits (so ``1 << i`` bit tests
-    behave identically on the non-negative value).
+    UDF.  Tokens hash with the md5 digest the DuckDB oracle
+    reproduces.
     """
-    if portable:
-        def token_hash(t):
-            return F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")
-    else:
-        def token_hash(t):
-            return F.xxhash64(t).bitwiseAND(F.lit((1 << 60) - 1))
+    def token_hash(t):
+        return F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")
 
     toks = df.select(
         F.col(id_col), F.array_distinct(word_tokens(text_col)).alias("__toks")
@@ -599,8 +588,6 @@ def incremental_dedup(
     num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.5,
-    portable: bool = True,
-    ref_shingle_rows: int | None = None,
 ) -> DataFrame:
     """Dedupe a NEW batch against an existing REFERENCE corpus — the
     production mode of corpus dedup: the reference is already clean,
@@ -668,17 +655,13 @@ def incremental_dedup(
     # table read makes the candidate list cheap to materialize.
     return incremental_dedup_against(
         new_df,
-        corpus_artifacts(
-            ref_df, id_col, text_col, k, num_hashes, bands, portable
-        ),
+        corpus_artifacts(ref_df, id_col, text_col, k, num_hashes, bands),
         id_col=id_col,
         text_col=text_col,
         k=k,
         num_hashes=num_hashes,
         bands=bands,
         threshold=threshold,
-        portable=portable,
-        ref_shingle_rows=ref_shingle_rows,
     )
 
 
@@ -688,7 +671,6 @@ def artifact_frame(
     text_col: str = "text",
     k: int = 5,
     num_hashes: int = 16,
-    portable: bool = True,
 ) -> DataFrame:
     """ONE-pass wide dedup-artifact frame: ``(id, content_hash,
     content_len, shingles, sig_0..sig_{n-1})``.
@@ -704,10 +686,10 @@ def artifact_frame(
         F.col(id_col),
         portable_hash64(F.col("__norm")).alias("content_hash"),
         F.length("__norm").alias("content_len"),
-        char_shingles("__norm", k, pre_normalized=True).alias("shingles"),
+        char_shingles("__norm", k).alias("shingles"),
     )
     hashed = base.withColumn(
-        "__base", F.transform("shingles", _shingle_hash_fn(portable))
+        "__base", F.transform("shingles", _portable_shingle_hash)
     )
     return hashed.select(
         F.col(id_col),
@@ -742,7 +724,6 @@ def corpus_artifacts(
     k: int = 5,
     num_hashes: int = 16,
     bands: int = 4,
-    portable: bool = True,
 ) -> dict[str, DataFrame]:
     """The three narrow reference-side tables incremental dedup joins
     against: ``digests`` (id, content_hash, content_len — 16
@@ -757,7 +738,7 @@ def corpus_artifacts(
     form for ad-hoc use.  All three views derive from the one-pass
     ``artifact_frame``."""
     return _arts_from_wide(
-        artifact_frame(df, id_col, text_col, k, num_hashes, portable),
+        artifact_frame(df, id_col, text_col, k, num_hashes),
         id_col,
         num_hashes,
         bands,
@@ -803,8 +784,7 @@ def read_corpus_artifacts(spark, path: str) -> dict[str, DataFrame]:
 # hundreds of MB of deserialized arrays to the driver (measured
 # 24.4 s vs 7 s at x10's 37,500 ref docs), so both sides take
 # SHUFFLE_HASH.  The gate reads the ACTUAL ref-shingle row count —
-# one column-less count (Catalyst prunes the shingle projection), or
-# the caller-supplied figure when the artifacts already know it.
+# one column-less count (Catalyst prunes the shingle projection).
 _SHINGLE_BROADCAST_ROWS = 10_000
 
 # join-strategy count memo: {ref-shingle-plan semanticHash: row count}
@@ -820,8 +800,6 @@ def incremental_dedup_against(
     num_hashes: int = 16,
     bands: int = 4,
     threshold: float = 0.5,
-    portable: bool = True,
-    ref_shingle_rows: int | None = None,
 ) -> DataFrame:
     """`incremental_dedup` against PRECOMPUTED reference artifacts
     (see ``corpus_artifacts`` / ``read_corpus_artifacts``) — the
@@ -840,7 +818,7 @@ def incremental_dedup_against(
     from pyspark import StorageLevel
 
     wide = persist(
-        artifact_frame(new_df, id_col, text_col, k, num_hashes, portable),
+        artifact_frame(new_df, id_col, text_col, k, num_hashes),
         StorageLevel.MEMORY_AND_DISK,
     )
     new_arts = _arts_from_wide(wide, id_col, num_hashes, bands)
@@ -875,31 +853,29 @@ def incremental_dedup_against(
     sh_ref = ref["shingles"].select(
         F.col(id_col).alias("ref_id"), F.col("shingles").alias("sh_r")
     )
-    if ref_shingle_rows is None:
-        # column-less count: Catalyst prunes the shingle projection,
-        # so this never materializes arrays (ad-hoc mode) and reads
-        # only footer metadata (parquet-artifact mode).  The count is
-        # memoized per ref-plan semantic hash: the SAME reference
-        # corpus is checked against every incoming batch (and every
-        # bench rep), and re-running a ~1 s count job per batch for a
-        # value that only changes when the corpus changes is pure
-        # waste.  The memo only picks a JOIN STRATEGY — a stale count
-        # after a corpus rewrite can cost performance, never
-        # correctness — and falls back to counting if the internal
-        # semanticHash API is unavailable.
-        key = None
-        try:
-            key = ref["shingles"]._jdf.queryExecution().analyzed().semanticHash()
-        except Exception:
-            pass
-        if key is not None and key in _GATE_ROWS_MEMO:
-            ref_shingle_rows = _GATE_ROWS_MEMO[key]
-        else:
-            ref_shingle_rows = ref["shingles"].count()
-            if key is not None:
-                if len(_GATE_ROWS_MEMO) > 256:
-                    _GATE_ROWS_MEMO.clear()
-                _GATE_ROWS_MEMO[key] = ref_shingle_rows
+    # column-less count: Catalyst prunes the shingle projection, so
+    # this never materializes arrays (ad-hoc mode) and reads only
+    # footer metadata (parquet-artifact mode).  The count is memoized
+    # per ref-plan semantic hash: the SAME reference corpus is checked
+    # against every incoming batch (and every bench rep), and
+    # re-running a ~1 s count job per batch for a value that only
+    # changes when the corpus changes is pure waste.  The memo only
+    # picks a JOIN STRATEGY — a stale count after a corpus rewrite can
+    # cost performance, never correctness — and falls back to counting
+    # if the internal semanticHash API is unavailable.
+    key = None
+    try:
+        key = ref["shingles"]._jdf.queryExecution().analyzed().semanticHash()
+    except Exception:
+        pass
+    if key is not None and key in _GATE_ROWS_MEMO:
+        ref_shingle_rows = _GATE_ROWS_MEMO[key]
+    else:
+        ref_shingle_rows = ref["shingles"].count()
+        if key is not None:
+            if len(_GATE_ROWS_MEMO) > 256:
+                _GATE_ROWS_MEMO.clear()
+            _GATE_ROWS_MEMO[key] = ref_shingle_rows
     inter = F.size(F.array_intersect("sh_n", "sh_r"))
     union = F.size("sh_n") + F.size("sh_r") - inter
     if ref_shingle_rows <= _SHINGLE_BROADCAST_ROWS:

@@ -27,7 +27,7 @@ from ..functions import fast_hash64, portable_hash64
 _GATE = 1_000_000
 
 
-def _sample_gate(key: Column, salt: int, portable: bool) -> Column:
+def _sample_gate(key: Column, salt: int, portable: bool = True) -> Column:
     h = (
         portable_hash64(key, seed=salt)
         if portable
@@ -192,7 +192,6 @@ def target_mix(
     weights: dict[str, float],
     key_col: str = "doc_id",
     salt: int = 0,
-    portable: bool = True,
 ) -> DataFrame:
     """Down-sample each group to hit TARGET mix proportions.
 
@@ -235,7 +234,7 @@ def target_mix(
     # _sample_gate) so gates nest/correlate across both operators; the
     # threshold is floored to an integer so the comparison never rides
     # on the last bit of a double (the oracle floors identically)
-    gate = _sample_gate(F.col(key_col).cast("string"), salt, portable)
+    gate = _sample_gate(F.col(key_col).cast("string"), salt)
     return df.join(F.broadcast(rates), group_col).filter(
         gate < F.floor(F.col("__rate") * _GATE)
     )
@@ -248,7 +247,6 @@ def temperature_mix(
     budget_fraction: float = 0.5,
     key_col: str = "doc_id",
     salt: int = 0,
-    portable: bool = True,
 ) -> DataFrame:
     """Temperature-scaled domain mixing (the multilingual-sampling
     formulation, e.g. mBERT/XLM-R's ``p_g ∝ share_g^(1/T)``):
@@ -301,7 +299,7 @@ def temperature_mix(
     rates = powed.crossJoin(F.broadcast(norms)).select(
         group_col, rate.alias("__rate")
     )
-    gate = _sample_gate(F.col(key_col).cast("string"), salt, portable)
+    gate = _sample_gate(F.col(key_col).cast("string"), salt)
     return (
         df.join(F.broadcast(rates), group_col)
         .filter(gate < F.floor(F.col("__rate") * _GATE))
@@ -504,7 +502,6 @@ def materialize_epochs(
     id_col: str = "doc_id",
     epochs_col: str = "epochs",
     salt: int = 17,
-    portable: bool = True,
 ) -> DataFrame:
     """Execute a ``token_budget_epochs`` plan: emit each domain's rows
     ``floor(epochs)`` times as full passes plus one fractional pass
@@ -533,7 +530,7 @@ def materialize_epochs(
     key = F.concat(
         F.col(id_col).cast("string"), F.lit(":"), F.col("epoch").cast("string")
     )
-    gate = _sample_gate(key, salt, portable) < F.floor(frac * _GATE).cast("long")
+    gate = _sample_gate(key, salt) < F.floor(frac * _GATE).cast("long")
     return out.filter((F.col("epoch") < full) | gate).drop(epochs_col)
 
 
@@ -595,7 +592,6 @@ def group_sample(
     key_col: str,
     k: int,
     salt: int = 0,
-    portable: bool = True,
 ) -> DataFrame:
     """Deterministic exactly-k-per-group sample: within each group keep
     the ``k`` rows whose salted key hash ranks smallest (hash order,
@@ -608,16 +604,11 @@ def group_sample(
     pool.
 
     One shuffle on the group key, a group-local rank (never a global
-    sort), and the hash is engine-reproducible (portable md5 gate /
-    xxhash64 fast path — the stable_sample contract), so a SQL oracle
-    selects the identical rows.  ``key_col`` must be group-unique for
-    the tiebreak to be total.
+    sort), and the hash is the engine-reproducible md5 gate of
+    ``stable_sample``, so a SQL oracle selects the identical rows.
+    ``key_col`` must be group-unique for the tiebreak to be total.
     """
-    gate = (
-        portable_hash64(F.col(key_col).cast("string"), seed=salt)
-        if portable
-        else fast_hash64(F.col(key_col).cast("string"), seed=salt)
-    )
+    gate = portable_hash64(F.col(key_col).cast("string"), seed=salt)
     w = Window.partitionBy(*group_cols).orderBy(
         gate.asc(), F.col(key_col).asc()
     )

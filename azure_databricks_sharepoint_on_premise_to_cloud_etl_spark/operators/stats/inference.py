@@ -2820,14 +2820,13 @@ def weighted_kappa(
     rater_a_col: str,
     rater_b_col: str,
     categories: list[str],
-    quadratic: bool = True,
 ) -> DataFrame:
     """Weighted Cohen's kappa for ORDINAL labels (severity grades,
     star ratings, priority tiers): disagreeing by one step is better
     than disagreeing by five, which the plain :func:`cohens_kappa`
     cannot see.  ``κ_w = 1 − Σ v_ij·O_ij / Σ v_ij·E_ij`` with penalty
-    ``v_ij = ((i−j)/(k−1))²`` (quadratic, the default) or ``|i−j|/(k−1)``
-    (linear); category ORDER is declared by the caller.
+    ``v_ij = ((i−j)/(k−1))²`` (quadratic weights); category ORDER is
+    declared by the caller.
 
     Scale shape: the :func:`cramers_v` collapse — one contingency-cell
     aggregate, marginals as two k-row re-aggregations, and the
@@ -2854,7 +2853,7 @@ def weighted_kappa(
 
     def _penalty(i: Column, j: Column) -> Column:
         d = F.abs(i - j).cast("double") / (k - 1)
-        return d * d if quadratic else d
+        return d * d
 
     a = F.col(rater_a_col)
     b = F.col(rater_b_col)

@@ -174,9 +174,7 @@ def contamination_flags(
     eval_grams = (
         eval_set.withColumn("__norm", normalize_text(text_col))
         .select(
-            F.explode(char_shingles("__norm", k, pre_normalized=True)).alias(
-                "__g"
-            )
+            F.explode(char_shingles("__norm", k)).alias("__g")
         )
         .select(portable_hash64(F.col("__g")).alias("__gh"))
         .distinct()
@@ -185,9 +183,7 @@ def contamination_flags(
         corpus.withColumn("__norm", normalize_text(text_col))
         .select(
             F.col(id_col),
-            F.explode(char_shingles("__norm", k, pre_normalized=True)).alias(
-                "__g"
-            ),
+            F.explode(char_shingles("__norm", k)).alias("__g"),
         )
         .select(id_col, portable_hash64(F.col("__g")).alias("__gh"))
     )
@@ -215,7 +211,7 @@ def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     out_cols = df.columns
     gram_hashes = F.transform(
-        char_shingles("__norm", 8, pre_normalized=True),
+        char_shingles("__norm", 8),
         lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"),
     )
     return df.withColumn("__norm", normalize_text(text_col)).select(

@@ -875,7 +875,6 @@ def drain_bronze_stream(
     bronze_path: str,
     checkpoint_dir: str,
     run_id: int = 7,
-    idempotent: bool = False,
     fault: "Callable[[int], None] | None" = None,
 ) -> None:
     """foreachBatch landing: per micro-batch, anti-join the
@@ -885,18 +884,14 @@ def drain_bronze_stream(
     checkpoint ensures a second drain lands nothing twice (the pytest
     pins this).
 
-    Delivery contract: with ``idempotent=False`` (plain parquet
-    append) the landing is AT-LEAST-ONCE under mid-batch failure — a
-    crash after the append but before the checkpoint commits re-runs
-    that micro-batch on restart and appends its rows again.  With
-    ``idempotent=True`` each micro-batch OVERWRITES its own
-    batch-id-keyed partition directory
-    (``{bronze}/ingest_batch={id}``), so a replayed batch lands on
-    top of its previous attempt and the contract upgrades to
-    EXACTLY-ONCE — the parquet analog of Delta's
-    ``txnAppId``/``txnVersion`` idempotent writes, which a Databricks
-    deployment would use instead.  Both contracts are pinned by
-    fault-injection tests (tests/test_streaming_bronze_ingest.py).
+    Delivery contract: EXACTLY-ONCE under mid-batch failure.  Each
+    micro-batch OVERWRITES its own batch-id-keyed partition directory
+    (``{bronze}/ingest_batch={id}``), so a crash after the write but
+    before the checkpoint commits replays that batch on top of its
+    previous attempt instead of appending its rows again — the parquet
+    analog of Delta's ``txnAppId``/``txnVersion`` idempotent writes,
+    which a Databricks deployment would use instead.  Pinned by a
+    fault-injection test (tests/test_streaming_bronze_ingest.py).
 
     ``fault`` is a test seam: called with the batch id AFTER the
     write, INSIDE the foreachBatch body — raising there simulates the
@@ -904,18 +899,15 @@ def drain_bronze_stream(
     import datetime as _dt
 
     from ..operators.snapshots import unprocessed_only
-    from ..sinks.writers import append_versioned, with_audit_columns
+    from ..sinks.writers import with_audit_columns
 
     now = _dt.datetime(*_BRONZE_NOW_ARGS, tzinfo=_dt.timezone.utc)
 
     def _land(batch_df: DataFrame, batch_id: int) -> None:
         gated = unprocessed_only(batch_df, ledger, "file_nm")
-        if idempotent:
-            with_audit_columns(gated, run_id=run_id, now=now).write.mode(
-                "overwrite"
-            ).parquet(f"{bronze_path}/ingest_batch={batch_id}")
-        else:
-            append_versioned(gated, bronze_path, run_id=run_id, now=now)
+        with_audit_columns(gated, run_id=run_id, now=now).write.mode(
+            "overwrite"
+        ).parquet(f"{bronze_path}/ingest_batch={batch_id}")
         if fault is not None:
             fault(batch_id)
 
@@ -934,8 +926,8 @@ def q_streaming_bronze_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     analog of the landing path.  File-source CSV stream (the
     checkpoint is the new-file ledger) → watermark-bounded row-dedup
     → the shared typed-cast block → foreachBatch anti-join against
-    the ALREADY-PROCESSED ledger + ``append_versioned`` into bronze —
-    then the SAME per-file manifest as ``bronze_ingest_replay``, read
+    the ALREADY-PROCESSED ledger + an exactly-once batch-id-keyed
+    overwrite into bronze (``drain_bronze_stream``) — then the SAME per-file manifest as ``bronze_ingest_replay``, read
     back from the written parquet, under the SAME DuckDB oracle
     (ORACLE_BRONZE_INGEST): identical files, streamed landing,
     value-identical bronze required."""
@@ -946,10 +938,7 @@ def q_streaming_bronze_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = tempfile.mkdtemp(prefix="stream_bronze_ckpt_")
     typed = _stream_plan_bronze_ingest(spark, sf_dir, csv_dir=csv_dir)
     ledger = spark.createDataFrame([(_BRONZE_FILE1,)], "file_nm STRING")
-    # production-grade landing: batch-id-keyed overwrite, so the AUX
-    # row exercises the exactly-once form (the at-least-once append
-    # form is pinned separately by the fault-injection pytest)
-    drain_bronze_stream(typed, ledger, bronze, ckpt, idempotent=True)
+    drain_bronze_stream(typed, ledger, bronze, ckpt)
     return _census_manifest(spark.read.parquet(bronze))
 
 

@@ -1649,16 +1649,15 @@ def _stream_events(
     max_files_per_trigger: int | None = None,
 ) -> tuple[DataFrame, bool]:
     """Shared preamble for every events streaming query: pin the
-    session confs, sniff the fixture's physical schema via a batch
-    read, build the file-source stream, and decode ``ts`` through the
-    registry's dtype conditional.  ONE implementation on purpose —
+    session timezone, sniff the fixture's schema via a batch read and
+    build the file-source stream.  ONE implementation on purpose —
     the round-4 bug was a hard-coded decode drifting from the batch
     path, and three hand-synced copies would re-create that hazard.
     Returns (events, ts_was_ntz); callers that watermark must cast
     ts -> TIMESTAMP and cast window bounds back when ts_was_ntz."""
     import os
 
-    from ..sources.registry import decode_event_ts, pin_read_confs
+    from ..sources.registry import pin_read_confs
 
     pin_read_confs(spark)
     raw_schema = spark.read.parquet(
@@ -1671,12 +1670,11 @@ def _stream_events(
         # gate (tests/test_stateful_streaming.py) watches
         # stateOperators[].numRowsTotal across them
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.parquet(
+    events = reader.parquet(
         stream_dir
         if stream_dir is not None
         else _stream_dir_for(sf_dir, "events", copies=copies)
     )
-    events = decode_event_ts(raw)
     return events, dict(events.dtypes).get("ts") == "timestamp_ntz"
 
 

@@ -31,8 +31,7 @@ from .stats_rank import (
 def _ph_series_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the DAY-grain per-type event-count series as a
     parquet dir for the file stream, whose declared schema needs a
-    real timestamp ``t`` (a TIMESTAMP(NANOS) column would surface as
-    long under the pinned ``nanosAsLong`` conf)."""
+    real timestamp ``t``."""
     import os
     import tempfile
 

@@ -14,8 +14,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Local-mode cores: ``SPARK_GRAFT_CPUS`` (perfbench and bench.py set
-# it), else the cores this process may run on.  Read once, at import.
+# Local-mode cores: ``SPARK_GRAFT_CPUS`` (perfbench sets it), else the
+# cores this process may run on.  Read once, at import.
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 
 # The JVM's JIT policy for short jobs; see get_spark.  C2 (Tier-4)
@@ -107,11 +107,6 @@ def get_spark(app_name: str = "azure-databricks-sharepoint-etl-spark") -> SparkS
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.defaultJavaOptions", JIT_POLICY)
-        # An events table written with parquet TIMESTAMP(NANOS) (the
-        # driver testdata's is TIMESTAMP(MICROS)) is rejected by vanilla
-        # Spark; read it as long and convert in the registry
-        # (sources/registry.py).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Small local parquet files: don't let tiny splits fan out.
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

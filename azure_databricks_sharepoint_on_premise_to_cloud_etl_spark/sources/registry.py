@@ -12,7 +12,7 @@ cost of a ``load_table`` call), so the inferred ``StructType`` is
 memoised per path, stamped with ``os.stat(path)``'s
 ``(st_mtime_ns, st_size)`` and with the calling session's values of the
 confs that change what inference returns (``_INFERENCE_CONFS``; the
-read confs :func:`pin_read_confs` sets are equal in every session).  A
+timezone :func:`pin_read_confs` sets is equal in every session).  A
 path rewritten in place (a new file, or files added to or removed from
 a directory), or read from a session with other inference confs, gets
 a new stamp and is inferred again; one entry is kept per path, so the
@@ -33,21 +33,16 @@ from pyspark.sql.types import StructType
 
 
 def pin_read_confs(spark: SparkSession) -> None:
-    """Pin the two session confs every read of these tables relies on.
+    """Pin ``spark.sql.session.timeZone=UTC``, which every read of these
+    tables relies on: a non-UTC session shifts every collected timestamp
+    relative to the (timezone-naive) DuckDB oracle.
 
-    They are set at runtime so the engine works under ANY
-    caller-provided SparkSession, not just sessions from session.py.  This is the package's only runtime conf
-    write:
-
-    - ``spark.sql.legacy.parquet.nanosAsLong``: an events table written
-      with parquet TIMESTAMP(NANOS) is rejected by vanilla Spark; as a
-      long of nanos it is decoded by :func:`decode_event_ts` (the
-      driver testdata stores TIMESTAMP(MICROS), which passes through);
-    - ``spark.sql.session.timeZone=UTC``: a non-UTC session shifts
-      every collected timestamp relative to the (timezone-naive)
-      DuckDB oracle.
+    It is set at runtime so the engine works under ANY caller-provided
+    SparkSession, not just sessions from session.py.  This is the
+    package's only runtime conf write.  Timestamps are read as stored:
+    every fixture stores TIMESTAMP(MICROS), and a TIMESTAMP(NANOS)
+    column fails with Spark's own ``PARQUET_TYPE_ILLEGAL`` error.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
@@ -67,10 +62,7 @@ _SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
 
 
 def _parquet_schema(spark: SparkSession, path: str) -> StructType:
-    """The schema Spark infers for ``path``, inferred once per stamp.
-    Inference runs under the confs :func:`pin_read_confs` pins, so a
-    TIMESTAMP(NANOS) column, where a file has one, is memoised as
-    ``bigint``."""
+    """The schema Spark infers for ``path``, inferred once per stamp."""
     st = os.stat(path)
     confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
     stamp = (st.st_mtime_ns, st.st_size, *confs)
@@ -85,36 +77,13 @@ def _parquet_schema(spark: SparkSession, path: str) -> StructType:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one table (S3 analog). Lazy; no action triggered.
 
-    Pins the read confs (:func:`pin_read_confs`) and reads with the
-    path's memoised schema (module docstring), so a repeated call runs
-    no footer-inference job but still lists the files.  The events
-    table's ``ts`` leaves as a microsecond TimestampType
-    (:func:`decode_event_ts`).
+    Pins the session timezone (:func:`pin_read_confs`) and reads with
+    the path's memoised schema (module docstring), so a repeated call
+    runs no footer-inference job but still lists the files.
     """
     pin_read_confs(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.schema(_parquet_schema(spark, path)).parquet(path)
-    if name == "events":
-        df = decode_event_ts(df)
-    return df
-
-
-def decode_event_ts(df: DataFrame) -> DataFrame:
-    """Normalize the events ``ts`` column to TimestampType regardless
-    of the fixture's physical parquet type (the driver testdata's is
-    TIMESTAMP(MICROS)).  Under ``nanosAsLong=true`` a TIMESTAMP(NANOS)
-    column surfaces as a long of nanos (converted here via floor
-    division, matching DuckDB's ns->us truncation); a TIMESTAMP(MICROS)
-    column arrives as a real timestamp and passes through untouched.
-    Both the batch registry
-    and the streaming queries MUST route through this one conditional
-    — a hard-coded decode silently shifts epochs when the fixture's
-    dtype changes (the round-4 streaming_tumbling bug)."""
-    if dict(df.dtypes).get("ts") == "bigint":
-        from pyspark.sql import functions as F
-
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return df
+    return spark.read.schema(_parquet_schema(spark, path)).parquet(path)
 
 
 def rebalance(df: DataFrame) -> DataFrame:

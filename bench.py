@@ -1,5 +1,6 @@
 """Benchmark harness: run the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
+(default /root/testdata/sf0.1) on ``session.get_spark``'s local master
+(``SPARK_GRAFT_CPUS`` cores, else the host's) and print ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
@@ -397,10 +398,10 @@ COMPARABLE_BASIS = frozenset([
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    os.environ["SPARK_GRAFT_CPUS"] = cpus
-
-    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.session import get_spark
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.session import (
+        DEFAULT_CPUS,
+        get_spark,
+    )
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark import queries as q
 
     spark = get_spark("bench")
@@ -465,6 +466,7 @@ def main() -> None:
         "host_loadavg_1m": round(load1, 2) if load1 is not None else None,
         "host_loadavg_5m": round(load5, 2) if load5 is not None else None,
         "sf": sf,
+        "cpus": int(DEFAULT_CPUS),
         "note": (
             "since r3: percentiles is histogram-exact (was built-in "
             "percentile), percentiles_approx added; tumbling_window/"

@@ -20,6 +20,19 @@ def spark():
     yield s
 
 
+@pytest.fixture(autouse=True)
+def _test_scope():
+    """Run each test inside a ``Scope``, so what it checkpoints or
+    persists is freed when it ends instead of waiting for Spark's
+    GC-driven cleaner while a later test counts stored blocks.
+    Session- and module-scoped fixtures are set up before it, outside
+    the scope, and keep their materialisations."""
+    from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.scope import Scope
+
+    with Scope():
+        yield
+
+
 SF_DIR = "/root/testdata/sf0.001"
 
 

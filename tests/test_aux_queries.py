@@ -35,23 +35,21 @@ def test_fast_hash_lsh_plan_matches_portable(spark):
 
 
 def test_events_fixture_ts_dtype_pinned(spark):
-    """Pin the events fixture's physical ts type AND the decode
-    contract.  The round-4 streaming_tumbling bug was a hard-coded
-    INT64-nanos decode silently shifting every event to 1970 when the
-    fixture moved to timestamp[us].  If this test fails, the fixture's
-    dtype changed again: verify sources/registry.decode_event_ts still
-    covers the new physical type before touching anything else."""
+    """Pin the events fixture's physical ts type: timestamp[us], the
+    only one the registry reads (a TIMESTAMP(NANOS) table fails with
+    Spark's PARQUET_TYPE_ILLEGAL).  The round-4 streaming_tumbling bug
+    was a hard-coded INT64-nanos decode silently shifting every event
+    to 1970 when the fixture moved to timestamp[us]; the loaded column
+    must stay a real timestamp in the fixture's era."""
     import pyarrow.parquet as pq
 
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.sources.registry import load_table
 
     phys = pq.read_schema(f"{SF_DIR}/events.parquet").field("ts").type
-    assert str(phys) in ("timestamp[us]", "timestamp[ns]", "int64"), (
-        f"events.ts physical type changed to {phys}; "
-        "update decode_event_ts and this pin together"
+    assert str(phys) == "timestamp[us]", (
+        f"events.ts physical type changed to {phys}"
     )
-    # Whatever the physical type, the decoded column must be a real
-    # timestamp in the fixture's era (2024+), never the 1970 epoch.
+    # a real timestamp in the fixture's era (2024+), never the 1970 epoch
     ev = load_table(spark, SF_DIR, "events")
     assert dict(ev.dtypes)["ts"] in ("timestamp", "timestamp_ntz")
     from pyspark.sql import functions as F
@@ -59,7 +57,7 @@ def test_events_fixture_ts_dtype_pinned(spark):
     years = ev.select(F.year("ts").alias("y")).agg(
         F.min("y").alias("lo"), F.max("y").alias("hi")
     ).collect()[0]
-    assert years["lo"] >= 2000, f"decoded ts collapsed to epoch: {years}"
+    assert years["lo"] >= 2000, f"loaded ts collapsed to epoch: {years}"
 
 
 def test_xxh64_twin_matches_spark(spark):

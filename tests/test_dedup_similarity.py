@@ -48,17 +48,6 @@ def test_minhash_fast_path_recovers_near_dups(spark):
     assert (1, 2) in got
 
 
-def test_simhash_fast_path_close_fingerprints(spark):
-    # near-identical docs must have near-identical xxhash64 simhashes
-    docs = _docs(spark)
-    fps = {r["doc_id"]: r["simhash"] for r in
-           dedup.simhash(docs, portable=False).collect()}
-    assert all(v >= 0 for v in fps.values())  # masked to low 60 bits
-    assert fps[1] == fps[2]  # identical docs -> identical fingerprint
-    ham = bin(fps[1] ^ fps[5]).count("1")
-    assert ham <= 8  # 32 voted bits, docs differ by one token
-
-
 def test_jaccard_verify_filters_candidates(spark):
     docs = _docs(spark)
     sigs = dedup.minhash_signatures(docs)
@@ -724,11 +713,11 @@ def test_retrieval_metrics_drops_truthless_queries(spark):
     assert {r["probe_id"] for r in out} == {"A"}
 
 
-def test_incremental_dedup_verify_join_gate(spark):
-    """r9 verdict task 2: the verify join must BROADCAST the ref
-    shingle table below the row gate and SHUFFLE_HASH above it —
-    forced via the ref_shingle_rows override so the plan shape, not
-    the data size, is what's asserted."""
+def test_incremental_dedup_verify_join_gate(spark, monkeypatch):
+    """The verify join must BROADCAST the ref shingle table at or
+    below the row gate and SHUFFLE_HASH above it — the gate is moved
+    around the fixture's 40 ref rows so the plan shape, not the data
+    size, is what's asserted."""
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.operators import dedup
 
     ref = spark.createDataFrame(
@@ -743,15 +732,13 @@ def test_incremental_dedup_verify_join_gate(spark):
     )
     arts = dedup.corpus_artifacts(ref)
 
-    small = dedup.incremental_dedup_against(
-        new, arts, ref_shingle_rows=10
-    )
+    monkeypatch.setattr(dedup, "_SHINGLE_BROADCAST_ROWS", 40)
+    small = dedup.incremental_dedup_against(new, arts)
     plan_small = small._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan_small
 
-    big = dedup.incremental_dedup_against(
-        new, arts, ref_shingle_rows=10_000_000
-    )
+    monkeypatch.setattr(dedup, "_SHINGLE_BROADCAST_ROWS", 39)
+    big = dedup.incremental_dedup_against(new, arts)
     plan_big = big._jdf.queryExecution().executedPlan().toString()
     assert "ShuffledHashJoin" in plan_big
 

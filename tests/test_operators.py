@@ -398,8 +398,8 @@ def test_scope_bounds_repeated_connected_components(spark, monkeypatch):
         [(i, i + 1) for i in range(20)], "id_a LONG, id_b LONG"
     )
     nodes = spark.createDataFrame([(i,) for i in range(21)], "doc_id LONG")
-    # checkpointed outside any scope, so only release frees it: a
-    # release that frees the wrong frame would drop it
+    # checkpointed outside the loop's scopes, so only release frees it:
+    # a release that frees the wrong frame would drop it
     before = stored()
     sentinel = checkpoint(spark.range(5))
     kept = stored() - before

@@ -42,9 +42,8 @@ def _sliced_series_dir(spark, tmp_path, k=4):
     import pyarrow as pa
 
     t = pa.Table.from_pandas(pdf, preserve_index=False)
-    # write MICROS: pandas hands back timestamp[ns], and the session
-    # reads TIMESTAMP(NANOS) as long (nanosAsLong), which would break
-    # the declared stream schema
+    # write MICROS: pandas hands back timestamp[ns], and Spark rejects
+    # a TIMESTAMP(NANOS) column
     t = t.set_column(
         t.schema.get_field_index("t"), "t",
         t["t"].cast(pa.timestamp("us")),

@@ -535,23 +535,21 @@ def test_load_table_reinfers_under_other_inference_confs(spark, tmp_path):
     assert load_table(spark, str(tmp_path), "t").dtypes == [("b", "binary")]
 
 
-def test_load_table_events_decode_on_memoised_schema(spark, tmp_path):
-    """An events table stored as parquet TIMESTAMP(NANOS) is memoised
-    as ``bigint`` and still decodes to ``timestamp`` (ns floored to
-    us) on a repeated call."""
+def test_load_table_rejects_nanos_timestamps(spark, tmp_path):
+    """A table stored as parquet TIMESTAMP(NANOS) fails with Spark's own
+    PARQUET_TYPE_ILLEGAL error: no fixture stores nanos, and the
+    registry reads timestamps as stored."""
     import pyarrow as pa
     import pyarrow.parquet as pq
+    import pytest
+    from pyspark.errors import AnalysisException
 
     from azure_databricks_sharepoint_on_premise_to_cloud_etl_spark.sources import registry
 
-    path = str(tmp_path / "events.parquet")
     pq.write_table(
-        pa.table({"ts": pa.array([1_681_313_400_000_001_999], pa.timestamp("ns"))}), path
+        pa.table({"ts": pa.array([1_681_313_400_000_001_999], pa.timestamp("ns"))}),
+        str(tmp_path / "events.parquet"),
     )
-    first = registry.load_table(spark, str(tmp_path), "events")
-    assert registry._SCHEMAS[path][1]["ts"].dataType.simpleString() == "bigint"
-    again = registry.load_table(spark, str(tmp_path), "events")
-    assert dict(first.dtypes)["ts"] == dict(again.dtypes)["ts"] == "timestamp"
-    want = dt.datetime(2023, 4, 12, 15, 30, 0, 1, tzinfo=dt.timezone.utc)
-    got = again.selectExpr("unix_micros(ts) AS us").collect()[0]["us"]
-    assert got == int(want.timestamp()) * 1_000_000 + 1
+    with pytest.raises(AnalysisException) as err:
+        registry.load_table(spark, str(tmp_path), "events")
+    assert err.value.getCondition() == "PARQUET_TYPE_ILLEGAL"

@@ -1,7 +1,7 @@
 """Round-13 exhibit: the STREAMING twin of the bronze ingest landing
 path (queries/composed.py::q_streaming_bronze_ingest) — SURVEY T2's
 Auto-Loader analog: file-source CSV stream → watermark-bounded dedup
-ledger → foreachBatch anti-join + append_versioned.
+ledger → foreachBatch anti-join + batch-id-keyed overwrite.
 
 Oracle parity (row/column/hash vs ORACLE_BRONZE_INGEST, the SAME
 oracle as the batch replay) is covered by the AUX gate; these tests
@@ -142,7 +142,7 @@ def test_streaming_equals_batch_manifest(spark):
     assert batch and batch == stream
 
 
-def _crash_then_redrain(spark, csv_dir, bronze, ckpt, ledger, idempotent):
+def _crash_then_redrain(spark, csv_dir, bronze, ckpt, ledger):
     """Drive the crash-after-write-before-commit window: the fault
     seam raises INSIDE foreachBatch after the write of micro-batch 1
     — the first batch that actually lands rows (batch 0 is the
@@ -161,52 +161,23 @@ def _crash_then_redrain(spark, csv_dir, bronze, ckpt, ledger, idempotent):
         spark, sf_dir="unused", csv_dir=csv_dir, max_files_per_trigger=1
     )
     with pytest.raises(Exception, match="injected crash"):
-        drain_bronze_stream(
-            typed, ledger, bronze, ckpt, idempotent=idempotent, fault=fault
-        )
+        drain_bronze_stream(typed, ledger, bronze, ckpt, fault=fault)
     typed2 = _stream_plan_bronze_ingest(
         spark, sf_dir="unused", csv_dir=csv_dir, max_files_per_trigger=1
     )
-    drain_bronze_stream(typed2, ledger, bronze, ckpt, idempotent=idempotent)
+    drain_bronze_stream(typed2, ledger, bronze, ckpt)
     return spark.read.parquet(bronze)
-
-
-def test_append_landing_is_at_least_once_under_midbatch_crash(
-    spark, bronze_env
-):
-    """The documented contract of the plain-append landing: a crash
-    between the write and the checkpoint commit replays the batch and
-    DUPLICATES its rows — the honest statement the docstring makes,
-    proven rather than assumed."""
-    csv_dir, bronze, ckpt, ledger = bronze_env
-    written = _crash_then_redrain(
-        spark, csv_dir, bronze, ckpt, ledger, idempotent=False
-    )
-    dupes = (
-        written.groupBy(
-            "file_nm", "pat_mrn_id", "bed_reqst_to_bed_asgnd", "pat_enc_csn_id"
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > 1)
-        .count()
-    )
-    assert dupes > 0, (
-        "expected the replayed micro-batch to duplicate rows under the "
-        "non-idempotent append landing"
-    )
 
 
 def test_idempotent_landing_is_exactly_once_under_midbatch_crash(
     spark, bronze_env
 ):
-    """The batch-id-keyed overwrite landing upgrades the contract to
-    exactly-once: the replayed batch lands on top of its previous
-    attempt, so the same crash leaves NO duplicates and the final
-    content equals a clean drain's."""
+    """The batch-id-keyed overwrite landing is exactly-once: the
+    replayed batch lands on top of its previous attempt, so the crash
+    leaves NO duplicates and the final content equals a clean
+    drain's."""
     csv_dir, bronze, ckpt, ledger = bronze_env
-    written = _crash_then_redrain(
-        spark, csv_dir, bronze, ckpt, ledger, idempotent=True
-    )
+    written = _crash_then_redrain(spark, csv_dir, bronze, ckpt, ledger)
     dupes = (
         written.groupBy(
             "file_nm", "pat_mrn_id", "bed_reqst_to_bed_asgnd", "pat_enc_csn_id"
